@@ -180,7 +180,7 @@ class DedupConfig:
         if self.simhash_auto_chunks_from:
             # the flipped setting must itself be a valid pigeonhole
             # config, or the flip would crash mid-run on a big corpus
-            if not (0 <= self.hamming_radius < 8) or 64 % 8:
+            if not (0 <= self.hamming_radius < 8):
                 raise ValueError(
                     "simhash auto-flip targets simhash_chunks=8; "
                     "hamming_radius must be < 8"

@@ -42,7 +42,7 @@ merges them; the merge is reported explicitly in
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -261,7 +261,6 @@ def dedup_increment(
     base_docs: DataFrame | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    collect_stats: bool = False,
     tiers: tuple[str, ...] = ("exact", "minhash"),
 ) -> IncrementResult:
     """Dedup `new_docs` against `index` (and within themselves).
@@ -287,11 +286,12 @@ def dedup_increment(
     full run. Documented trade for running increments without
     base-corpus access.
 
-    `collect_stats=True` additionally records the LSH candidate
-    accounting (touched buckets, capped buckets, dropped pairs) in
-    `metrics["lsh_candidates"]` — the honest-skew observability the
-    full pipeline reports per run, at the cost of one extra aggregation
-    job per increment (off by default for throughput streams).
+    `metrics` always carries `n_new_docs`, and for each candidate tier
+    that runs its bucket accounting over the touched buckets
+    (`lsh_candidates`, `simhash_candidates`: n_buckets,
+    n_capped_buckets, n_candidate_edges, dropped_pairs) — the same
+    honest-skew accounting the full pipeline reports. It is observed by
+    the jobs that materialize the candidate pairs, so it costs no job.
     """
     cfg = cfg or DedupConfig()
     metrics: dict = {}
@@ -338,7 +338,12 @@ def dedup_increment(
     # --- ID contract: every new id above every base member id ----------
     bounds = (
         enriched.agg(F.min("doc_id").alias("lo"), F.count(F.lit(1)).alias("n"))
-        .crossJoin(index.agg(F.max("member_id").alias("hi")))
+        .crossJoin(
+            index.agg(
+                F.max("member_id").alias("hi"),
+                F.count(F.lit(1)).alias("n_index"),
+            )
+        )
         .crossJoin(
             # legacy-shape guards on a BOUNDED sample (r06): an index
             # whose signatures have a different width than cfg.num_perm
@@ -429,6 +434,7 @@ def dedup_increment(
     )
 
     near_frames: list[DataFrame] = []
+    accounting = {}  # tier -> Observation on its bucket ranking
 
     if "minhash" in tiers:
         # --- tier 2: MinHash-LSH, probe-shaped -------------------------
@@ -470,26 +476,10 @@ def dedup_increment(
             .select("doc_id", "band_key")
         )
         cand = bucket_pairs(
-            idx_members.union(new_members),
-            ["band_key"],
-            cap=cfg.bucket_pair_cap,
-            reuse_input=collect_stats,
+            idx_members.union(new_members), ["band_key"], cap=cfg.bucket_pair_cap
         )
+        accounting["lsh_candidates"] = cand.accounting
         lsh_pairs = cand.pairs.filter(F.col("b") >= lo)
-        if collect_stats:
-            # Materialize the pairs HERE, then collect the metrics and
-            # release the shared membership cache immediately. Owning
-            # the materialization decouples the cleanup from the
-            # downstream helper's internals (round-4 advice: the
-            # previous formulation unpersisted after minhash_near_edges
-            # on the assumption that its internal eager checkpoint had
-            # consumed the pairs — if that ever changed, the verify
-            # path would silently recompute the full band-explode
-            # subtree with the cache gone).
-            lsh_pairs = lsh_pairs.localCheckpoint(eager=True)
-            metrics["lsh_candidates"] = cand.metrics.collect()[0].asDict()
-            if cand.shared is not None:
-                cand.shared.unpersist()
 
         sigs = index.select(
             F.col("member_id").alias("doc_id"), "minhash"
@@ -523,11 +513,20 @@ def dedup_increment(
         # decision procedure to the full pipeline's simhash tier.
         from .operators.simhash import simhash_chunk_buckets, verify_hamming
 
+        # pigeonhole auto-flip at the size of the corpus the index and
+        # this batch make together — the full pipeline's rule, so the
+        # probe buckets like a full run over the same docs would
+        cfg_sim = replace(
+            cfg,
+            simhash_chunks=cfg.effective_simhash_chunks(
+                bounds["n_index"] + bounds["n"]
+            ),
+        )
         idx_sim = index.select(F.col("member_id").alias("doc_id"), "simhash")
-        new_sim_b = simhash_chunk_buckets(enriched, cfg)
+        new_sim_b = simhash_chunk_buckets(enriched, cfg_sim)
         touched_sim = new_sim_b.select("chunk_idx", "chunk_val").distinct()
         idx_sim_b = (
-            simhash_chunk_buckets(idx_sim, cfg)
+            simhash_chunk_buckets(idx_sim, cfg_sim)
             .join(touched_sim, ["chunk_idx", "chunk_val"], "left_semi")
             .select("doc_id", "chunk_idx", "chunk_val")
         )
@@ -535,20 +534,9 @@ def dedup_increment(
             idx_sim_b.union(new_sim_b.select("doc_id", "chunk_idx", "chunk_val")),
             ["chunk_idx", "chunk_val"],
             cap=cfg.bucket_pair_cap,
-            reuse_input=collect_stats,
         )
+        accounting["simhash_candidates"] = sim_cand.accounting
         sim_pairs = sim_cand.pairs.filter(F.col("b") >= lo)
-        if collect_stats:
-            # Same dropped-pair accounting contract as the LSH tier
-            # above: capped chunk buckets chain-link and DROP pairs,
-            # and that loss must be observable, never silent
-            # (operators/candidates.py invariant). Materialize the
-            # pairs first so the metrics collect and the downstream
-            # verify both reuse one band-explode pass.
-            sim_pairs = sim_pairs.localCheckpoint(eager=True)
-            metrics["simhash_candidates"] = sim_cand.metrics.collect()[0].asDict()
-            if sim_cand.shared is not None:
-                sim_cand.shared.unpersist()
         sim_frame = idx_sim.union(enriched.select("doc_id", "simhash"))
         near_frames.append(
             verify_hamming(sim_pairs, sim_frame, cfg).select("a", "b")
@@ -577,6 +565,8 @@ def dedup_increment(
         max_iterations=cfg.cc_max_iterations,
         checkpoint_mode=cfg.cc_checkpoint_mode,
     ).localCheckpoint(eager=True)
+    # the components run materialized every candidate frame above
+    metrics.update({k: o.get for k, o in accounting.items()})
 
     assignments = (
         enriched.select("doc_id")

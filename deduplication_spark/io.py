@@ -16,7 +16,9 @@ this sandbox (SURVEY.md M0). The interface is the part that matters:
   fails fast (compressor.c:246-252 validates the persisted header the
   same way).
 - ``lineage`` — per-stage rows (stage, status, rows_out, wall_ms) so an
-  operator can prove what was and wasn't recomputed.
+  operator can prove what was and wasn't recomputed. A `computed` record
+  also stores the stage's metrics, which a resume reports without
+  rerunning anything (``computed(name)``).
 """
 
 from __future__ import annotations
@@ -34,6 +36,21 @@ from .config import DedupConfig
 class ConfigMismatch(RuntimeError):
     """Resume attempted with a different dedup config (header-check analog,
     /root/reference/src/compressor.c:246-252)."""
+
+
+def _lineage_record(
+    stage: str, status: str, rows_out: int, wall_ms: int, metrics: dict | None
+) -> dict:
+    rec = {
+        "stage": stage,
+        "status": status,
+        "rows_out": rows_out,
+        "wall_ms": wall_ms,
+        "logged_at": time.time(),
+    }
+    if metrics is not None:
+        rec["metrics"] = metrics
+    return rec
 
 
 class StageStore:
@@ -92,10 +109,24 @@ class StageStore:
     def exists(self, name: str) -> bool:
         return os.path.exists(os.path.join(self.path(name), "_SUCCESS"))
 
+    def computed(self, name: str) -> dict | None:
+        """The metrics stored by the last `computed` lineage record of a
+        complete stage, or None when the stage must be (re)computed: no
+        snapshot, or a crash between the snapshot and its record."""
+        if not self.exists(name):
+            return None
+        recs = [
+            r for r in self.lineage()
+            if r["stage"] == name and r["status"] == "computed"
+        ]
+        return recs[-1].get("metrics") if recs else None
+
     def write(self, name: str, df: DataFrame) -> DataFrame:
         df.write.mode("overwrite").parquet(self.path(name))
         self._log_partitions(name)
-        return self.read(name)
+        # the schema just written is known: reading the snapshot back
+        # with it skips the schema-inference job a plain read runs
+        return self.spark.read.schema(df.schema).parquet(self.path(name))
 
     def _log_partitions(self, name: str) -> None:
         """Per-partition lineage (north_rule): one record per output
@@ -152,15 +183,14 @@ class StageStore:
 
     # -- lineage ---------------------------------------------------------
     def log_lineage(
-        self, stage: str, status: str, rows_out: int, wall_ms: int
+        self,
+        stage: str,
+        status: str,
+        rows_out: int,
+        wall_ms: int,
+        metrics: dict | None = None,
     ) -> None:
-        rec = {
-            "stage": stage,
-            "status": status,
-            "rows_out": rows_out,
-            "wall_ms": wall_ms,
-            "logged_at": time.time(),
-        }
+        rec = _lineage_record(stage, status, rows_out, wall_ms, metrics)
         self._append_line("lineage.jsonl", json.dumps(rec))
 
     def lineage(self) -> list[dict]:
@@ -181,8 +211,8 @@ class MemoryStore:
         self.cfg = cfg
         self._lineage: list[dict] = []
 
-    def exists(self, name: str) -> bool:
-        return False
+    def computed(self, name: str) -> dict | None:
+        return None
 
     def write(self, name: str, df: DataFrame) -> DataFrame:
         # .toDF re-alias after EVERY localCheckpoint: without it a
@@ -192,18 +222,16 @@ class MemoryStore:
         # its own checkpoints, hoisted to the shared store layer)
         return df.localCheckpoint(eager=True).toDF(*df.columns)
 
-    def read(self, name: str) -> DataFrame:  # pragma: no cover
-        raise KeyError(name)
-
-    def log_lineage(self, stage: str, status: str, rows_out: int, wall_ms: int) -> None:
+    def log_lineage(
+        self,
+        stage: str,
+        status: str,
+        rows_out: int,
+        wall_ms: int,
+        metrics: dict | None = None,
+    ) -> None:
         self._lineage.append(
-            {
-                "stage": stage,
-                "status": status,
-                "rows_out": rows_out,
-                "wall_ms": wall_ms,
-                "logged_at": time.time(),
-            }
+            _lineage_record(stage, status, rows_out, wall_ms, metrics)
         )
 
     def lineage(self) -> list[dict]:

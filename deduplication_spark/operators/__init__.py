@@ -12,21 +12,18 @@ from deduplication_spark.operators.exact import (
 from deduplication_spark.operators.minhash_lsh import (
     band_buckets,
     band_key_buckets,
-    lsh_candidates,
-    minhash_edges,
     minhash_near_edges,
     with_minhash,
     with_shingles,
 )
 from deduplication_spark.operators.multimodal import extract_features
-from deduplication_spark.operators.simhash import simhash_edges, with_simhash
+from deduplication_spark.operators.simhash import with_simhash
 from deduplication_spark.operators.similarity import (
     cosine_near_dup,
     cosine_topk,
     ivf_topk,
     lsh_topk,
 )
-from deduplication_spark.operators.substring import substring_edges
 
 __all__ = [
     "band_buckets",
@@ -39,12 +36,8 @@ __all__ = [
     "exact_assignments",
     "extract_features",
     "ivf_topk",
-    "lsh_candidates",
     "lsh_topk",
-    "minhash_edges",
     "minhash_near_edges",
-    "simhash_edges",
-    "substring_edges",
     "verify_jaccard",
     "with_content_hash",
     "with_content_key",

@@ -30,7 +30,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, Observation, Window
 from pyspark.sql import functions as F
 
 
@@ -51,10 +51,9 @@ def _all_pairs(arr):
 @dataclass
 class CandidateResult:
     pairs: DataFrame          # (a, b) with a < b, distinct
-    metrics: DataFrame        # (n_buckets, n_capped_buckets,
-                              #  n_candidate_edges, dropped_pairs)
-    shared: DataFrame | None = None  # persisted memberships (reuse_input=True);
-                                     # caller unpersists after both jobs ran
+    accounting: Observation   # n_buckets, n_capped_buckets,
+                              # n_candidate_edges, dropped_pairs — resolves
+                              # once a frame built on `pairs` is materialized
 
 
 def bucket_pairs(
@@ -62,19 +61,17 @@ def bucket_pairs(
     key_cols: list[str],
     id_col: str = "doc_id",
     cap: int = 200,
-    reuse_input: bool = False,
 ) -> CandidateResult:
     """(id, *key) bucket memberships -> distinct candidate pairs (a, b), a<b.
 
     `cap` bounds the all-pairs expansion per bucket; the overflow is
-    chain-linked (connectivity-preserving) and counted in metrics.
-
-    `reuse_input=True` persists the membership frame so the pairs job and
-    the metrics job evaluate the upstream derivation (CDC UDF pass / band
-    explode) exactly once — set it when both DataFrames will be acted on.
+    chain-linked (connectivity-preserving). The bucket accounting is an
+    Observation on the ranked frame (one row per bucket: its `_rn == 1`
+    member, carrying the bucket size `_m`), so it is computed by the job
+    that materializes the pairs — no job of its own. Read
+    `accounting.get` only after such a job has run; it blocks until then.
     """
-    if reuse_input:
-        bucketed = bucketed.persist()
+    _keep_deep_observations(bucketed.sparkSession)
     w = Window.partitionBy(*key_cols).orderBy(id_col)
     # bucket size alongside the rank: both window functions share one
     # partition+sort pass (same window spec, whole-partition frame for
@@ -83,11 +80,28 @@ def bucket_pairs(
     # singletons, so dropping them BEFORE the collect_list aggregation
     # removes almost all of its per-group array allocations (r06,
     # measured: bucket_pairs over 1.6M memberships 2.15 s -> see
-    # OPTIMIZATION_r06.md)
+    # OPTIMIZATION_r06.md). The chain predecessor rides the same pass.
     wm = w.rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    ranked = bucketed.select(id_col, *key_cols).withColumn(
-        "_rn", F.row_number().over(w)
-    ).withColumn("_m", F.count(F.lit(1)).over(wm))
+    first, m = F.col("_rn") == 1, F.col("_m")
+    kept = F.when(m <= cap, m * (m - 1) / 2).otherwise(
+        F.lit(cap) * (cap - 1) / 2 + (m - cap)
+    )
+    accounting = Observation()
+    ranked = (
+        bucketed.select(id_col, *key_cols)
+        .withColumn("_rn", F.row_number().over(w))
+        .withColumn("_m", F.count(F.lit(1)).over(wm))
+        .withColumn("_prev", F.lag(id_col).over(w))
+        .observe(
+            accounting,
+            F.count_if(first).alias("n_buckets"),
+            F.count_if(first & (m > cap)).alias("n_capped_buckets"),
+            _total(F.when(first, kept)).alias("n_candidate_edges"),
+            _total(F.when(first & (m > cap), m * (m - 1) / 2 - kept)).alias(
+                "dropped_pairs"
+            ),
+        )
+    )
 
     head = (
         ranked.filter((F.col("_m") >= 2) & (F.col("_rn") <= cap))
@@ -100,37 +114,39 @@ def bucket_pairs(
         .select(F.col("p.a").alias("a"), F.col("p.b").alias("b"))
     )
 
-    tail = (
-        ranked.withColumn("_prev", F.lag(id_col).over(w))
-        .filter(F.col("_rn") > cap)
-        .select(
-            F.least("_prev", id_col).alias("a"),
-            F.greatest("_prev", id_col).alias("b"),
-        )
+    tail = ranked.filter(F.col("_rn") > cap).select(
+        F.least("_prev", id_col).alias("a"),
+        F.greatest("_prev", id_col).alias("b"),
     )
 
     pairs = head_pairs.union(tail).filter(F.col("a") != F.col("b")).distinct()
+    return CandidateResult(pairs=pairs, accounting=accounting)
 
-    sizes = bucketed.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("m"))
-    metrics = sizes.agg(
-        F.count(F.lit(1)).alias("n_buckets"),
-        F.sum(F.when(F.col("m") > cap, 1).otherwise(0)).alias("n_capped_buckets"),
-        F.sum(
-            F.when(
-                F.col("m") <= cap, F.col("m") * (F.col("m") - 1) / 2
-            ).otherwise(F.lit(cap) * (cap - 1) / 2 + (F.col("m") - cap))
-        ).cast("long").alias("n_candidate_edges"),
-        F.sum(
-            F.when(
-                F.col("m") > cap,
-                F.col("m") * (F.col("m") - 1) / 2
-                - (F.lit(cap) * (cap - 1) / 2 + (F.col("m") - cap)),
-            ).otherwise(0)
-        ).cast("long").alias("dropped_pairs"),
-    )
-    return CandidateResult(
-        pairs=pairs, metrics=metrics, shared=bucketed if reuse_input else None
-    )
+
+_EMPTY_RELATION_RULE = (
+    "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
+)
+
+
+def _keep_deep_observations(spark) -> None:
+    """Exclude AQE's empty-relation propagation from the session.
+
+    When a shuffle stage comes back empty, that rule replaces the plan
+    above it with an empty relation, and in Spark 4.1 an Observation
+    inside the replaced stages never reports, though those stages ran:
+    a tier whose buckets are all singletons would lose its accounting
+    (`Observation.get` fails). An Observation at the root of the written
+    frame keeps its node, so only this one needs the rule off.
+    Idempotent."""
+    key = "spark.sql.adaptive.optimizer.excludedRules"
+    rules = [r for r in (spark.conf.get(key, "") or "").split(",") if r]
+    if _EMPTY_RELATION_RULE not in rules:
+        spark.conf.set(key, ",".join(rules + [_EMPTY_RELATION_RULE]))
+
+
+def _total(col):
+    """Sum as a long; 0 (not NULL) over no rows."""
+    return F.coalesce(F.sum(col).cast("long"), F.lit(0).cast("long"))
 
 
 def estimate_prefilter(

@@ -114,7 +114,7 @@ def connected_components(
             f"got {checkpoint_mode!r}"
         )
     if checkpoint_mode == "reliable":
-        if spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty():
+        if spark.sparkContext.getCheckpointDir() is None:
             raise ValueError(
                 "checkpoint_mode='reliable' requires "
                 "spark.sparkContext.setCheckpointDir(<fault-tolerant "

@@ -30,12 +30,7 @@ from pyspark.sql import functions as F
 from ..config import DedupConfig
 from ..functions.hashing import band_hash_col, band_key_col, make_minhash_udf
 from ..functions.text import shingle_hashes
-from .candidates import (
-    CandidateResult,
-    bucket_pairs,
-    estimate_prefilter,
-    verify_jaccard,
-)
+from .candidates import estimate_prefilter, verify_jaccard
 
 
 def with_shingles(
@@ -85,15 +80,6 @@ def band_key_buckets(
         F.explode(
             band_key_col("minhash", cfg.rows_per_band, cfg.bands, cfg.hash_seed)
         ).alias("band_key"),
-    )
-
-
-def lsh_candidates(
-    docs_with_minhash: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
-) -> CandidateResult:
-    buckets = band_key_buckets(docs_with_minhash, cfg, id_col)
-    return bucket_pairs(
-        buckets, ["band_key"], id_col=id_col, cap=cfg.bucket_pair_cap
     )
 
 
@@ -187,41 +173,3 @@ def minhash_near_edges(
     )
     return accepted.select("a", "b").union(verified.select("a", "b"))
 
-
-def minhash_edges(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    with_metrics: bool = True,
-) -> tuple[DataFrame, DataFrame | None]:
-    """End-to-end tier: returns (verified edges (a,b,jaccard), metrics),
-    both eagerly materialized (localCheckpoint).
-
-    `enriched` is persisted while the tier runs — it feeds the
-    candidate path AND both sides of the verify join, so without the
-    cache the corpus-wide shingle + MinHash UDF subtree would execute
-    up to 3x. The cache is released BEFORE returning (round-4 advice:
-    a lazy return kept the persist alive forever, accumulating cached
-    partitions across calls in a long-lived session); eager
-    materialization is what makes the early unpersist safe. Callers
-    that only want edges pass with_metrics=False, which skips the
-    candidate-accounting aggregation entirely (metrics is None) —
-    a lazy metrics frame cannot be returned, as it would recompute the
-    whole band-explode subtree after the cache is gone."""
-    enriched = with_minhash(
-        with_shingles(docs.select(id_col, text_col), cfg), cfg
-    ).persist()
-    try:
-        cand = lsh_candidates(enriched, cfg, id_col)
-        edges = verify_jaccard(
-            cand.pairs,
-            enriched.select(id_col, "shingles"),
-            id_col=id_col,
-            feature_col="shingles",
-            threshold=cfg.jaccard_verify_threshold,
-        ).localCheckpoint(eager=True)
-        metrics = cand.metrics.localCheckpoint(eager=True) if with_metrics else None
-    finally:
-        enriched.unpersist()
-    return edges, metrics

@@ -25,7 +25,6 @@ from pyspark.sql import functions as F
 
 from ..config import DedupConfig
 from ..functions.hashing import make_simhash_udf
-from .candidates import bucket_pairs
 
 
 def with_simhash(docs_with_shingles: DataFrame) -> DataFrame:
@@ -123,33 +122,3 @@ def verify_hamming(
         .select("a", "b", "hamming")
     )
 
-
-def simhash_edges(
-    docs_with_shingles: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    with_metrics: bool = True,
-) -> tuple[DataFrame, DataFrame | None]:
-    """End-to-end tier from a docs frame that already has `shingles`.
-
-    Returns (verified edges (a, b, hamming), candidate metrics), both
-    eagerly materialized. `enriched` is persisted while the tier runs
-    (it feeds the bucket path and BOTH sides of the Hamming join — the
-    SimHash UDF would otherwise evaluate up to 3x) and released BEFORE
-    returning — same persist-hygiene fix as minhash_edges. Pass
-    with_metrics=False to skip the candidate-accounting aggregation
-    (metrics is None); it cannot be returned lazily once the cache is
-    released."""
-    enriched = with_simhash(docs_with_shingles).persist()
-    try:
-        buckets = simhash_chunk_buckets(enriched, cfg, id_col)
-        cand = bucket_pairs(
-            buckets, ["chunk_idx", "chunk_val"], id_col=id_col, cap=cfg.bucket_pair_cap
-        )
-        edges = verify_hamming(
-            cand.pairs, enriched.select(id_col, "simhash"), cfg, id_col
-        ).localCheckpoint(eager=True)
-        metrics = cand.metrics.localCheckpoint(eager=True) if with_metrics else None
-    finally:
-        enriched.unpersist()
-    return edges, metrics

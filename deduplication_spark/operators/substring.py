@@ -149,18 +149,9 @@ def substring_candidates(
     cfg: DedupConfig,
     id_col: str = "doc_id",
     text_col: str = "text",
-    reuse_input: bool = False,
 ) -> CandidateResult:
-    """`reuse_input=True` persists the chunk memberships so the CDC UDF
-    pass runs once even when both pairs and metrics are acted on."""
     buckets = chunk_buckets(docs, cfg, id_col, text_col)
-    return bucket_pairs(
-        buckets,
-        ["chunk_fp"],
-        id_col=id_col,
-        cap=cfg.bucket_pair_cap,
-        reuse_input=reuse_input,
-    )
+    return bucket_pairs(buckets, ["chunk_fp"], id_col=id_col, cap=cfg.bucket_pair_cap)
 
 
 def verify_substring(
@@ -204,20 +195,3 @@ def verify_substring(
         .select("a", "b")
     )
 
-
-def substring_edges(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-    exclude_pairs: DataFrame | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """End-to-end tier. `exclude_pairs` (a, b) — candidates already found
-    by cheaper tiers — are anti-joined away before the (text-carrying)
-    verification join."""
-    cand = substring_candidates(docs, cfg, id_col, text_col)
-    pairs = cand.pairs
-    if exclude_pairs is not None:
-        pairs = pairs.join(exclude_pairs.select("a", "b"), ["a", "b"], "left_anti")
-    edges = verify_substring(pairs, docs, cfg, id_col, text_col)
-    return edges, cand.metrics

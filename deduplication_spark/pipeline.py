@@ -35,7 +35,7 @@ import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
@@ -52,6 +52,15 @@ ALL_TIERS = ("exact", "minhash", "simhash", "substring")
 
 @dataclass
 class DedupResult:
+    """One dedup() run.
+
+    `metrics` is complete on every run, at no Spark job of its own:
+    `{stage}_rows` for each stage, `{tier}_candidates` (n_buckets,
+    n_capped_buckets, n_candidate_edges, dropped_pairs) for each capped
+    tier, `n_docs`, `n_duplicates`, `n_canonical`, `dup_ratio`, plus
+    `{stage}_resumed` for each stage a StageStore run read back (which
+    reports the metrics its first computation stored)."""
+
     assignments: DataFrame   # (doc_id, cluster_id, is_canonical)
     clusters: DataFrame      # (cluster_id, size, n_duplicates)
     edges: DataFrame         # (a, b, tier)
@@ -61,28 +70,6 @@ class DedupResult:
                                        #  minhash[, simhash])
                                        # — feed increment.index_from_enriched
                                        # so index builds cost zero UDF passes
-
-
-def _stage(store, name: str, build, metrics: dict, count: bool = True) -> DataFrame:
-    """Run-or-resume one stage; returns the materialized DataFrame.
-
-    `count=False` skips the row-count job (driver latency matters: the
-    pipeline runs ~40 driver actions; see BENCH serial-time analysis).
-    """
-    t0 = time.time()
-    if store.exists(name):
-        df = store.read(name)
-        store.log_lineage(
-            name, "resumed", df.count() if count else -1, int((time.time() - t0) * 1000)
-        )
-        metrics[f"{name}_resumed"] = True
-        return df
-    df = store.write(name, build())
-    n = df.count() if count else -1
-    store.log_lineage(name, "computed", n, int((time.time() - t0) * 1000))
-    if count:
-        metrics[f"{name}_rows"] = n
-    return df
 
 
 def dedup(
@@ -95,9 +82,14 @@ def dedup(
     text_col: str = "text",
     collect_stats: bool = True,
 ) -> DedupResult:
-    """`collect_stats=False` drops the per-stage row counts and candidate
-    metrics aggregations (~15 driver actions) for throughput runs; the
-    result DataFrames are unaffected."""
+    """Cluster `docs` (id_col, text_col) into near-duplicate groups.
+
+    With `run_dir` every stage snapshots to a StageStore and a re-run
+    resumes; without it stages are local checkpoints. Both run the same
+    stages eagerly, and both report the full metrics (see DedupResult)
+    from Observations resolved by the stage writes themselves.
+    `collect_stats` is ignored: metrics are always on. It stays only so
+    existing callers that pass it keep working."""
     cfg = cfg or DedupConfig()
     if run_dir:
         # the TIER SET shapes every snapshot's content (edge frames,
@@ -111,6 +103,45 @@ def dedup(
     else:
         store = MemoryStore(spark, cfg)
     metrics: dict = {"tiers": list(tiers)}
+    _mx = threading.Lock()
+
+    def _stage(name: str, build, *aggs) -> DataFrame:
+        """Run-or-resume one stage; returns the materialized DataFrame.
+
+        build() returns the stage frame, or (frame, {metric: Observation})
+        for Observations deeper in its plan (bucket accounting). The row
+        count and `aggs` are observed on the frame handed to store.write,
+        so every Observation resolves when that write returns. A resumed
+        stage reports what its `computed` lineage record stored and runs
+        no job. Thread-safe: the Spark actions run concurrently, only the
+        store lookups and bookkeeping are serialized."""
+        t0 = time.time()
+        with _mx:
+            got = store.computed(name)
+        resumed = got is not None
+        if resumed:
+            df = store.read(name)
+        else:
+            out = build()
+            frame, observed = out if isinstance(out, tuple) else (out, {})
+            rows = Observation()
+            df = store.write(
+                name,
+                frame.observe(rows, F.count(F.lit(1)).alias(f"{name}_rows"), *aggs),
+            )
+            got = {**rows.get, **{k: o.get for k, o in observed.items()}}
+        with _mx:
+            store.log_lineage(
+                name,
+                "resumed" if resumed else "computed",
+                got[f"{name}_rows"],
+                int((time.time() - t0) * 1000),
+                None if resumed else got,
+            )
+            metrics.update(got)
+            if resumed:
+                metrics[f"{name}_resumed"] = True
+        return df
 
     # Explicit repartition before the UDF stages: a parquet scan of one
     # smallish file yields a handful of input splits, starving local[32]
@@ -166,54 +197,6 @@ def dedup(
     #  - exact / minhash / simhash are independent given `enriched` and
     #    run concurrently after it (JVM shuffle/join work overlapping
     #    the substring tier's Python work).
-    _mx = threading.Lock()
-
-    # Throughput fast path (r06, guide §2.4/§5): with a MemoryStore and
-    # collect_stats=False there is nothing to resume, so single-consumer
-    # intermediate checkpoints are pure barriers on the tier critical
-    # path. Measured A/B at sf1.0 (4 runs each, best): fully-lazy tiers
-    # fused into the CC input job = 12.7-13.2 s (WORSE — the eager
-    # per-tier materialization overlap is what keeps 32 cores fed);
-    # eager everything = 11.3-11.8 s; lazy CANDIDATE stages (each feeds
-    # exactly one verify stage that materializes immediately) + lazy
-    # `clusters` (consumed at most once, after dedup() returns) =
-    # 9.3 s best with the minhash chain ending ~0.6 s earlier. Frames
-    # with >1 consumer (enriched, the minhash screened frame,
-    # assignments) keep their checkpoints. StageStore runs are
-    # unchanged (the 9-stage snapshot/resume contract is pinned by
-    # q_pipeline_resume).
-    fast = run_dir is None and not collect_stats
-
-    def _lazy_stage(name: str, build) -> DataFrame:
-        t0 = time.time()
-        df = build()
-        with _mx:
-            store.log_lineage(
-                name, "computed", -1, int((time.time() - t0) * 1000)
-            )
-        return df
-
-    def _tstage(name: str, build) -> DataFrame:
-        """Thread-safe _stage: the Spark actions run concurrently, only
-        the metrics/lineage bookkeeping is serialized."""
-        t0 = time.time()
-        with _mx:
-            exists = store.exists(name)
-        if exists:
-            df = store.read(name)
-            n = df.count() if collect_stats else -1
-            with _mx:
-                store.log_lineage(name, "resumed", n, int((time.time() - t0) * 1000))
-                metrics[f"{name}_resumed"] = True
-            return df
-        df = store.write(name, build())
-        n = df.count() if collect_stats else -1
-        with _mx:
-            store.log_lineage(name, "computed", n, int((time.time() - t0) * 1000))
-            if collect_stats:
-                metrics[f"{name}_rows"] = n
-        return df
-
     def run_exact() -> DataFrame:
         def build_exact() -> DataFrame:
             # window min, not groupBy+collect_list: an exact-dup group can
@@ -237,48 +220,16 @@ def dedup(
                 .withColumn("tier", F.lit("exact"))
             )
 
-        return _tstage("edges_exact", build_exact)
-
-    def _cand_stage(name: str, make_cand) -> DataFrame:
-        """Candidate pairs as their own snapshot: make_cand() is invoked
-        at most once per run, so the bucket derivation (CDC UDF pass /
-        band explode) is declared once and both the pairs snapshot and
-        the metrics aggregation read from that single build. Downstream
-        (prefilter / verify) reads the materialized pairs, never
-        re-derives them; a resume restarts after candidate generation
-        and skips the metrics job entirely (the lineage log already
-        carries the original run's numbers)."""
-        with _mx:
-            resumed = store.exists(f"cand_{name}")
-        if resumed:
-            return _tstage(f"cand_{name}", lambda: None)  # read-back path
-        cand = make_cand()
-        if fast:
-            # the pairs frame has exactly one consumer (the verify
-            # stage, which materializes eagerly right away), so the
-            # intermediate checkpoint was a pure barrier on the tier's
-            # critical path — fuse candidate generation into the verify
-            # job and let the stage boundary show up there
-            return _lazy_stage(f"cand_{name}", lambda: cand.pairs)
-        pairs = _tstage(f"cand_{name}", lambda: cand.pairs)
-        if collect_stats:
-            m = cand.metrics.collect()[0].asDict()
-            with _mx:
-                metrics[f"{name}_candidates"] = m
-        if cand.shared is not None:
-            cand.shared.unpersist()
-        return pairs
+        return _stage("edges_exact", build_exact)
 
     def run_minhash() -> DataFrame:
-        mh_pairs = _cand_stage(
-            "minhash",
-            lambda: bucket_pairs(
-                band_key_buckets(enriched, cfg),
-                ["band_key"],
-                cap=cfg.bucket_pair_cap,
-                reuse_input=collect_stats,
-            ),
-        )
+        def build_cand() -> tuple:
+            cand = bucket_pairs(
+                band_key_buckets(enriched, cfg), ["band_key"], cap=cfg.bucket_pair_cap
+            )
+            return cand.pairs, {"minhash_candidates": cand.accounting}
+
+        mh_pairs = _stage("cand_minhash", build_cand)
 
         def build_minhash() -> DataFrame:
             # estimate-screen + borderline exact verification: the ONE
@@ -292,10 +243,10 @@ def dedup(
                 texts=base,
             ).withColumn("tier", F.lit("minhash"))
 
-        return _tstage("edges_minhash", build_minhash)
+        return _stage("edges_minhash", build_minhash)
 
     def run_simhash() -> DataFrame:
-        def build_simhash() -> DataFrame:
+        def build_simhash() -> tuple:
             # pigeonhole auto-flip (config rule, r05 verdict #4): at
             # >= simhash_auto_chunks_from docs the 16-bit single-chunk
             # buckets saturate; flip to the 8-chunk combinatorial keys.
@@ -304,51 +255,34 @@ def dedup(
             # no cap engages (both settings are exact covers at the
             # same radius; pytest-pinned).
             c_eff = cfg.effective_simhash_chunks(guard_future.result())
-            cfg_sim = (
-                replace(cfg, simhash_chunks=c_eff)
-                if c_eff != cfg.simhash_chunks
-                else cfg
-            )
             cand = bucket_pairs(
-                simhash_chunk_buckets(enriched, cfg_sim),
+                simhash_chunk_buckets(enriched, replace(cfg, simhash_chunks=c_eff)),
                 ["chunk_idx", "chunk_val"],
                 cap=cfg.bucket_pair_cap,
-                reuse_input=collect_stats,
             )
-            pairs = cand.pairs
-            if collect_stats:
-                # Same dropped-pair accounting contract as the minhash /
-                # substring tiers (via _cand_stage) and the increment's
-                # simhash tier: capped chunk buckets chain-link and DROP
-                # pairs, and that loss must be observable, never silent
-                # (operators/candidates.py invariant). Materialize the
-                # pairs first so the metrics collect and the Hamming
-                # verify share one bucket-derivation pass, then release
-                # the membership cache.
-                pairs = pairs.localCheckpoint(eager=True)
-                m = cand.metrics.collect()[0].asDict()
-                with _mx:
-                    metrics["simhash_candidates"] = m
-                if cand.shared is not None:
-                    cand.shared.unpersist()
+            # capped chunk buckets chain-link and DROP pairs, and that
+            # loss is reported like the other tiers' (candidates.py
+            # invariant): the accounting resolves in this stage's write
             verified = verify_hamming(
-                pairs, enriched.select("doc_id", "simhash"), cfg
+                cand.pairs, enriched.select("doc_id", "simhash"), cfg
             )
-            return verified.select("a", "b").withColumn("tier", F.lit("simhash"))
+            edges = verified.select("a", "b").withColumn("tier", F.lit("simhash"))
+            return edges, {"simhash_candidates": cand.accounting}
 
-        return _tstage("edges_simhash", build_simhash)
+        return _stage("edges_simhash", build_simhash)
 
     def run_substring_full() -> DataFrame:
-        ss_pairs = _cand_stage(
-            "substring",
-            lambda: substring_candidates(base, cfg, reuse_input=collect_stats),
-        )
+        def build_cand() -> tuple:
+            cand = substring_candidates(base, cfg)
+            return cand.pairs, {"substring_candidates": cand.accounting}
+
+        ss_pairs = _stage("cand_substring", build_cand)
 
         def build_substring() -> DataFrame:
             verified = verify_substring(ss_pairs, base, cfg)
             return verified.select("a", "b").withColumn("tier", F.lit("substring"))
 
-        return _tstage("edges_substring", build_substring)
+        return _stage("edges_substring", build_substring)
 
     # 5 workers: 4 tier chains + the (tiny) id-uniqueness guard probe,
     # so the guard never queues a tier behind it
@@ -359,19 +293,17 @@ def dedup(
 
         # enrichment runs on the main thread, overlapped by the substring
         # tier; the signature tiers start as soon as it lands
-        enriched = _stage(
-            store, "enriched", build_enriched, metrics, count=collect_stats
-        )
+        enriched = _stage("enriched", build_enriched)
 
         # ID-uniqueness contract (loud, round-4 verdict #3): duplicate
         # doc_ids would silently corrupt min-id election and gather
         # joins (two rows claim the same identity). One tiny id-only
-        # aggregation over the already-materialized enriched snapshot.
-        # r06 (round-5 ADVICE item 2): the guard now runs on EVERY
-        # path, including throughput runs — submitted to the tier pool
-        # so the probe overlaps tier work instead of serializing the
-        # critical path; its result is awaited with the tier futures
-        # below, so a violation still fails the run loudly.
+        # aggregation over the already-materialized enriched snapshot,
+        # submitted to the tier pool so the probe overlaps tier work
+        # instead of serializing the critical path; its result is
+        # awaited with the tier futures below, so a violation still
+        # fails the run loudly. (Observations cannot take its distinct
+        # count: observe rejects DISTINCT aggregates.)
         def _dup_id_guard() -> int:
             row = enriched.agg(
                 F.count(F.lit(1)).alias("n"),
@@ -429,7 +361,9 @@ def dedup(
         )
 
     assignments = _stage(
-        store, "assignments", build_assignments, metrics, count=collect_stats
+        "assignments",
+        build_assignments,
+        F.count_if(~F.col("is_canonical")).alias("n_duplicates"),
     )
 
     def build_clusters() -> DataFrame:
@@ -438,28 +372,17 @@ def dedup(
             (F.count(F.lit(1)) - 1).alias("n_duplicates"),
         )
 
-    # fast path: clusters derives from the already-checkpointed
-    # assignments with one cheap aggregation — computing it eagerly
-    # inside dedup() serialized an extra materialization pass onto the
-    # critical path for callers that may never read it
-    clusters = (
-        _lazy_stage("clusters", build_clusters)
-        if fast
-        else _stage(store, "clusters", build_clusters, metrics, count=collect_stats)
-    )
+    clusters = _stage("clusters", build_clusters)
 
-    metrics["config"] = cfg.to_json()
-    if collect_stats:
-        n_docs = metrics.get("assignments_rows") or assignments.count()
-        n_dup = assignments.filter(~F.col("is_canonical")).count()
-        metrics.update(
-            {
-                "n_docs": n_docs,
-                "n_duplicates": n_dup,
-                "n_canonical": n_docs - n_dup,
-                "dup_ratio": (n_dup / n_docs) if n_docs else 0.0,
-            }
-        )
+    n_docs, n_dup = metrics["assignments_rows"], metrics["n_duplicates"]
+    metrics.update(
+        {
+            "config": cfg.to_json(),
+            "n_docs": n_docs,
+            "n_canonical": n_docs - n_dup,
+            "dup_ratio": (n_dup / n_docs) if n_docs else 0.0,
+        }
+    )
     return DedupResult(
         assignments=assignments,
         clusters=clusters,

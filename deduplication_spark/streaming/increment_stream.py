@@ -144,7 +144,6 @@ def stream_dedup_increment(
     trigger: dict | None = None,
     id_col: str = "doc_id",
     text_col: str = "text",
-    collect_stats: bool = False,
     tiers: tuple[str, ...] = ("exact", "minhash"),
 ) -> StreamingQuery:
     """Start the streaming prober. Returns the StreamingQuery.
@@ -272,9 +271,6 @@ def stream_dedup_increment(
             base_docs=base_docs,
             id_col=id_col,
             text_col=text_col,
-            # per-batch candidate accounting (dropped pairs etc.) lands
-            # in state.batch_metrics[batch_id]["lsh_candidates"]
-            collect_stats=collect_stats,
             tiers=tiers,
         )
         if docs_dir is not None:
@@ -300,6 +296,8 @@ def stream_dedup_increment(
         else:
             state.index = inc.index.localCheckpoint(eager=True)
         state.last_batch = batch_id
+        # per-batch candidate accounting (dropped pairs etc.):
+        # state.batch_metrics[batch_id]["lsh_candidates"]
         state.batch_metrics[batch_id] = inc.metrics
 
     writer = stream.writeStream.foreachBatch(handle)

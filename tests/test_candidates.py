@@ -19,7 +19,8 @@ def test_small_bucket_all_pairs(spark):
     res = bucket_pairs(df, ["k"], cap=10)
     pairs = {(r["a"], r["b"]) for r in res.pairs.collect()}
     assert pairs == {(1, 2), (1, 3), (2, 3)}
-    m = res.metrics.collect()[0]
+    # the accounting resolves in the job that materialized the pairs
+    m = res.accounting.get
     assert m["n_buckets"] == 1 and m["dropped_pairs"] == 0
 
 
@@ -33,8 +34,12 @@ def test_capped_bucket_chains_but_stays_connected(spark):
     n_pairs = pairs.count()
     # head all-pairs C(10,2)=45 + 40 chain edges, never C(50,2)=1225
     assert n_pairs == 45 + 40
-    m = res.metrics.collect()[0]
+    # observed on the ranked frame that feeds both the head and the tail
+    # branch: one bucket, counted once
+    m = res.accounting.get
+    assert m["n_buckets"] == 1
     assert m["n_capped_buckets"] == 1
+    assert m["n_candidate_edges"] == 85
     assert m["dropped_pairs"] == 1225 - 85
     # connectivity preserved: one component spanning all 50
     comp = connected_components(

@@ -78,7 +78,6 @@ def cli_run(tmp_path_factory):
         "--input", docs_path,
         "--run-dir", run_dir,
         "--output", out_path,
-        "--no-stats",
         "--cores", "4",
     )
     assert r.returncode == 0, r.stderr[-3000:]

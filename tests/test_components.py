@@ -118,7 +118,7 @@ def test_cc_reliable_checkpoint_mode_identical(spark, tmp_path):
         for r in connected_components(df, checkpoint_mode="local").collect()
     )
 
-    had_dir = not spark.sparkContext._jsc.sc().getCheckpointDir().isEmpty()
+    had_dir = spark.sparkContext.getCheckpointDir() is not None
     if not had_dir:
         with pytest.raises(ValueError, match="setCheckpointDir"):
             connected_components(df, checkpoint_mode="reliable")

@@ -108,9 +108,8 @@ def test_min_doc_tokens_routes_to_exact_only(spark):
 def test_duplicate_doc_ids_fail_loudly(spark):
     """Round-5 contract decision: doc_id uniqueness is a validated
     precondition — cluster ids ARE doc ids, so a duplicated id would
-    silently merge unrelated rows. The default (collect_stats=True)
-    path raises; throughput runs (collect_stats=False) document the
-    precondition and skip the check."""
+    silently merge unrelated rows. Every dedup() call runs the guard
+    and raises."""
     df = spark.createDataFrame(
         pd.DataFrame(
             {"doc_id": [1, 1, 2], "text": ["doc a", "doc b", "doc c"]}
@@ -134,6 +133,14 @@ def test_empty_corpus_dedup(spark):
     assert res.assignments.count() == 0
     assert res.clusters.count() == 0
     assert res.assignments.columns == ["doc_id", "cluster_id", "is_canonical"]
+    # every metric resolves, to zero (no observed plan was pruned away)
+    m = res.metrics
+    assert m["n_docs"] == m["n_duplicates"] == m["n_canonical"] == 0
+    assert m["dup_ratio"] == 0.0
+    rows = {k: v for k, v in m.items() if k.endswith("_rows")}
+    assert len(rows) == 9 and set(rows.values()) == {0}
+    for tier in ("minhash", "simhash", "substring"):
+        assert set(m[f"{tier}_candidates"].values()) == {0}, tier
 
 
 def test_ten_megabyte_doc_flows_through_all_tiers(spark):

@@ -388,7 +388,6 @@ def test_simhash_increment_tier_catches_residual_pair(spark):
         cfg,
         base_docs=base_df,
         tiers=("exact", "minhash", "simhash"),
-        collect_stats=True,
     )
     got1 = {r["doc_id"]: r["cluster_id"] for r in inc1.assignments.collect()}
     assert got1 == {10: 1}
@@ -417,19 +416,15 @@ def test_simhash_increment_tier_catches_residual_pair(spark):
         dedup_increment(spark, new_df, index, cfg, tiers=("exact", "substring"))
 
 
-def test_increment_collect_stats_reports_candidate_accounting(
-    spark, split, inc_run
-):
-    """collect_stats=True surfaces the LSH candidate metrics (touched
-    buckets / capped buckets / dropped pairs) per increment — the same
-    honest-skew accounting the full pipeline reports."""
+def test_increment_reports_candidate_accounting(spark, split, inc_run):
+    """Every increment surfaces the LSH candidate metrics (touched
+    buckets / capped buckets / dropped pairs) — the same honest-skew
+    accounting the full pipeline reports."""
     base_df, new_df = split
     base_res, _ = inc_run
     cfg = DedupConfig()
     index = index_from_enriched(base_res.enriched, base_res.assignments, cfg=cfg)
-    inc = dedup_increment(
-        spark, new_df, index, cfg, base_docs=base_df, collect_stats=True
-    )
+    inc = dedup_increment(spark, new_df, index, cfg, base_docs=base_df)
     m = inc.metrics["lsh_candidates"]
     assert set(m) == {
         "n_buckets",
@@ -438,8 +433,40 @@ def test_increment_collect_stats_reports_candidate_accounting(
         "dropped_pairs",
     }
     assert m["n_buckets"] > 0 and m["dropped_pairs"] >= 0
-    # stats collection must not change the result
-    plain = dedup_increment(spark, new_df, index, cfg, base_docs=base_df)
+    # the fixture's index re-derives band keys from minhash (build_index)
+    # where this one stores them: same buckets, same accounting, same result
+    _, derived = inc_run
+    assert derived.metrics["lsh_candidates"] == m
     a = sorted(map(tuple, inc.assignments.collect()))
-    b = sorted(map(tuple, plain.assignments.collect()))
+    b = sorted(map(tuple, derived.assignments.collect()))
     assert a == b
+
+
+@pytest.mark.parametrize("flip_from,n_buckets", [(3, 56), (4, 4)])
+def test_increment_simhash_chunks_follow_corpus_size(spark, flip_from, n_buckets):
+    """The simhash probe applies the pigeonhole auto-flip at the size of
+    index + batch, like a full run over the same docs. A lone new doc
+    touches one bucket per chunk combination: C(8, 5) = 56 with the
+    8-chunk keys (2 indexed + 1 new >= 3), C(4, 1) = 4 below the flip."""
+    cfg = DedupConfig(simhash_auto_chunks_from=flip_from)
+    toks = [f"t1158x{i}" for i in range(45)]
+    doc_a = " ".join(toks)
+    doc_b = " ".join(toks[:14] + ["a1158"] + toks[15:])
+    base_df = spark.createDataFrame(
+        pd.DataFrame(
+            {
+                "doc_id": [1, 2],
+                "text": [doc_a, "completely unrelated filler document text here"],
+            }
+        )
+    )
+    base = dedup(spark, base_df, cfg)
+    index = index_from_enriched(base.enriched, base.assignments, cfg=cfg)
+    new_df = spark.createDataFrame(pd.DataFrame({"doc_id": [10], "text": [doc_b]}))
+    inc = dedup_increment(
+        spark, new_df, index, cfg, tiers=("exact", "minhash", "simhash")
+    )
+    assert inc.metrics["simhash_candidates"]["n_buckets"] == n_buckets
+    # both chunkings are exact covers at the same radius
+    got = {r["doc_id"]: r["cluster_id"] for r in inc.assignments.collect()}
+    assert got == {10: 1}

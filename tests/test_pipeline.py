@@ -78,10 +78,9 @@ def test_exact_tier_perfect(corpus, result):
 
 def test_every_capped_tier_reports_candidate_accounting(result):
     """Dropped-pair observability (operators/candidates.py invariant):
-    with collect_stats=True, EVERY tier whose bucket expansion is capped
-    must surface the bucket_pairs accounting — minhash and substring via
-    _cand_stage, simhash inline (it previously discarded the metrics
-    while the identical condition in the other tiers was reported)."""
+    EVERY tier whose bucket expansion is capped surfaces the
+    bucket_pairs accounting — minhash and substring from their
+    candidate stages, simhash from its edge stage."""
     res, _ = result
     for key in ("minhash_candidates", "substring_candidates", "simhash_candidates"):
         m = res.metrics[key]
@@ -99,6 +98,32 @@ def test_resume_reads_back_and_matches(spark, docs, result):
     a1 = sorted(map(tuple, res.assignments.collect()))
     a2 = sorted(map(tuple, res2.assignments.collect()))
     assert a1 == a2
+
+
+def test_metrics_same_in_every_mode(spark, docs, result):
+    """Metrics are always on: a run that passes the ignored
+    collect_stats=False, without a run_dir, reports exactly the keys
+    and values of the default StageStore run."""
+    res, _ = result
+    plain = dedup(spark, docs, DedupConfig(), collect_stats=False)
+    assert plain.metrics == res.metrics
+    assert res.metrics["n_docs"] == N_DOCS
+    assert res.metrics["n_duplicates"] == sum(
+        not r["is_canonical"] for r in res.assignments.collect()
+    )
+
+
+def test_resume_reports_stored_metrics(spark, docs, result):
+    """A resumed stage reports the metrics its computed lineage record
+    stored: the same candidate accounting and counts as the run that
+    computed them, with every stage flagged as resumed."""
+    res, run_dir = result
+    res2 = dedup(spark, docs, DedupConfig(), run_dir=run_dir)
+    for key, value in res.metrics.items():
+        assert res2.metrics[key] == value, key
+    stages = [k.removesuffix("_rows") for k in res.metrics if k.endswith("_rows")]
+    assert len(stages) == 9
+    assert all(res2.metrics[f"{s}_resumed"] for s in stages)
 
 
 def test_torn_stage_recomputed_on_resume(spark, docs, result, tmp_path):

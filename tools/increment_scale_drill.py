@@ -79,7 +79,7 @@ def prep(state_dir: str, corpus_path: str) -> dict:
 
         t0 = time.time()
         docs = spark.read.parquet(base_path)
-        res = dedup(spark, docs, DedupConfig(), collect_stats=False)
+        res = dedup(spark, docs, DedupConfig())
         res.assignments.write.mode("overwrite").parquet(
             os.path.join(bdir, "assignments.parquet")
         )

@@ -69,7 +69,7 @@ def worker(corpus_dir: str, master: str) -> None:
     docs = spark.read.parquet(os.path.join(corpus_dir, "documents.parquet"))
     n = docs.count()
     t0 = time.time()
-    res = dedup(spark, docs, DedupConfig(), collect_stats=False)
+    res = dedup(spark, docs, DedupConfig())
     res.assignments.write.format("noop").mode("overwrite").save()
     wall = time.time() - t0
     n_clusters = res.clusters.count()  # outside the timed window

@@ -135,7 +135,7 @@ def run_once(state_dir: str, n_docs: int) -> dict:
     spark.sparkContext.setLogLevel("ERROR")
     docs = spark.read.parquet(os.path.join(state_dir, "documents.parquet"))
     t0 = time.time()
-    res = dedup(spark, docs, DedupConfig(), collect_stats=False)
+    res = dedup(spark, docs, DedupConfig())
     res.assignments.write.mode("overwrite").parquet(
         os.path.join(state_dir, "assignments.parquet")
     )

@@ -125,7 +125,6 @@ def main() -> None:
         id_col=args.id_col,
         text_col=args.text_col,
         tiers=tuple(t.strip() for t in args.tiers.split(",") if t.strip()),
-        collect_stats=True,
     )
     inc.assignments.write.mode("overwrite").parquet(args.assignments_out)
     merges = inc.merges.collect()

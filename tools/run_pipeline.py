@@ -7,7 +7,7 @@ launch mode):
         --input  /data/documents.parquet \
         --run-dir /runs/dedup_2026_08_16 \
         --output /data/assignments.parquet \
-        [--tiers exact,minhash,simhash,substring] [--no-stats]
+        [--tiers exact,minhash,simhash,substring]
         [--config cfg.json]     # DedupConfig JSON (run_config.json format)
 
 Also runnable as plain `python tools/run_pipeline.py ...` (the session
@@ -63,7 +63,6 @@ def main() -> None:
     ap.add_argument("--tiers", default="exact,minhash,simhash,substring")
     ap.add_argument("--id-col", default="doc_id")
     ap.add_argument("--text-col", default="text")
-    ap.add_argument("--no-stats", action="store_true")
     ap.add_argument("--config", default=None, help="DedupConfig JSON file (the run_config.json format); default config otherwise")
     ap.add_argument("--cores", type=int, default=None, help="local cores (ignored under spark-submit)")
     args = ap.parse_args()
@@ -85,7 +84,6 @@ def main() -> None:
         tiers=tuple(t.strip() for t in args.tiers.split(",") if t.strip()),
         id_col=args.id_col,
         text_col=args.text_col,
-        collect_stats=not args.no_stats,
     )
     if args.output:
         res.assignments.write.mode("overwrite").parquet(args.output)

@@ -45,10 +45,7 @@ def worker(corpus_dir: str, cores: int) -> None:
     docs = spark.read.parquet(os.path.join(corpus_dir, "documents.parquet"))
     n = docs.count()
     t0 = time.time()
-    # collect_stats=False: throughput configuration — per-stage counts and
-    # candidate-metrics aggregations are driver actions that serialize
-    # the run (BENCH serial-time analysis); outputs are unaffected
-    res = dedup(spark, docs, DedupConfig(), collect_stats=False)
+    res = dedup(spark, docs, DedupConfig())
     res.assignments.write.format("noop").mode("overwrite").save()
     wall = time.time() - t0
     n_clusters = res.clusters.count()  # outside the timed window

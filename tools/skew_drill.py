@@ -88,9 +88,7 @@ def time_pipeline(spark, path: str, repeats: int):
     runs, res = [], None
     for _ in range(repeats):
         t0 = time.time()
-        res = dedup(
-            spark, spark.read.parquet(path), DedupConfig(), collect_stats=False
-        )
+        res = dedup(spark, spark.read.parquet(path), DedupConfig())
         res.assignments.write.format("noop").mode("overwrite").save()
         runs.append(round(time.time() - t0, 2))
     return runs, res
@@ -108,22 +106,15 @@ def candidate_metrics(spark, skew_path: str, cfg: DedupConfig) -> tuple[dict, in
     members = band_key_buckets(
         with_minhash(with_shingles(docs, cfg), cfg), cfg
     )
-    # reuse_input: metrics AND pairs are both acted on below — without
-    # the shared persist the shingle/minhash UDF pass over the whole
-    # corpus would execute twice
-    cand = bucket_pairs(
-        members, ["band_key"], cap=cfg.bucket_pair_cap, reuse_input=True
-    )
-    m = cand.metrics.collect()[0].asDict()
+    # one pass: the pairs count is the job that resolves the accounting
+    cand = bucket_pairs(members, ["band_key"], cap=cfg.bucket_pair_cap)
     n = cand.pairs.count()
-    if cand.shared is not None:
-        cand.shared.unpersist()
-    return m, n
+    return cand.accounting.get, n
 
 
 def swarm_cluster_count(spark, skew_path: str, n_docs: int, n_swarm: int) -> int:
     docs = spark.read.parquet(skew_path)
-    res = dedup(spark, docs, DedupConfig(), collect_stats=False)
+    res = dedup(spark, docs, DedupConfig())
     return (
         res.assignments.filter(res.assignments.doc_id >= n_docs - n_swarm)
         .select("cluster_id")

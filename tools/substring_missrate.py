@@ -22,7 +22,7 @@ experiment measures it:
 - Sweep span lengths 512 (the guarantee boundary), 768, 1024 to show
   how the miss rate decays once spans can hold more chunks.
 - One seed's corpus is additionally pushed through the REAL Spark
-  operator (`substring_edges`) to pin the python-level measurement to
+  operators (`substring_candidates` -> `verify_substring`) to pin the python-level measurement to
   the production path (caught sets must be identical).
 
 Writes BENCH/substring_missrate.json. tests/test_chunking.py bounds
@@ -130,7 +130,10 @@ def spark_crosscheck(cfg: DedupConfig, n_pairs: int = 150) -> dict:
     candidate predicate predicts."""
     import pandas as pd
 
-    from deduplication_spark.operators.substring import substring_edges
+    from deduplication_spark.operators.substring import (
+        substring_candidates,
+        verify_substring,
+    )
     from deduplication_spark.session import get_spark
 
     rng = random.Random(0xC0FFEE)
@@ -146,7 +149,7 @@ def spark_crosscheck(cfg: DedupConfig, n_pairs: int = 150) -> dict:
     spark = get_spark(app_name="substring_missrate")
     spark.sparkContext.setLogLevel("ERROR")
     docs = spark.createDataFrame(pd.DataFrame(rows))
-    edges, _ = substring_edges(docs, cfg)
+    edges = verify_substring(substring_candidates(docs, cfg).pairs, docs, cfg)
     found = {
         (min(r["a"], r["b"]), max(r["a"], r["b"])) for r in edges.collect()
     }
