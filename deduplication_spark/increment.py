@@ -24,12 +24,15 @@ transitive — the member may sit far from its canonical). Member rows
 are what the reference dictionary stores too: every distinct block,
 not one per run.
 
-Increment tiers: exact (hash join vs index + window-min within new) and
+Increment tiers: exact (hash join vs index + window-min within new),
 MinHash-LSH (band join over index ∪ new memberships, capped, estimate-
-screened, exact-Jaccard verified when `base_docs` is supplied). The
-SimHash and substring tiers are full-run-only by design: their recall
-overlaps MinHash-LSH almost entirely and a periodic full re-run picks
-up the residual long-span duplicates.
+screened, exact-Jaccard verified when `base_docs` is supplied) and,
+when asked for, SimHash (chunk-bucket join over index ∪ new, Hamming
+verified). Each runs the full pipeline's own enrichment, exact edges
+and decision procedure; only the bucket probe is increment-shaped
+(operators.candidates.probe_pairs). The substring tier is
+full-run-only by design: a periodic full re-run picks up the residual
+long-span duplicates.
 
 ID contract: new doc_ids must all be GREATER than every base member id
 (natural for append-only crawls; validated with one tiny aggregation).
@@ -44,24 +47,18 @@ from __future__ import annotations
 
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
-from .functions.hashing import make_enrich_udf
-from .operators.candidates import bucket_pairs
-from .operators.components import connected_components
-from .operators.exact import with_content_key
+from .functions.hashing import band_key_col
+from .io import ConfigMismatch
+from .operators.candidates import probe_pairs
+from .operators.components import component_assignments, connected_components
+from .operators.exact import exact_edges
 from .operators.minhash_lsh import band_key_buckets, minhash_near_edges
-
-INDEX_COLS = (
-    "member_id",
-    "cluster_id",
-    "content_hash",
-    "minhash",
-    "simhash",
-    "band_keys",  # optional precomputed LSH keys (index_from_enriched)
-)
+from .operators.simhash import simhash_chunk_buckets, verify_hamming
+from .pipeline import doc_texts, enrich
 
 
 def _sig_fingerprint(cfg: DedupConfig) -> str:
@@ -74,6 +71,19 @@ def _sig_fingerprint(cfg: DedupConfig) -> str:
         f"perm={cfg.num_perm};seed={cfg.hash_seed};k={cfg.shingle_k};"
         f"bands={cfg.bands};rows={cfg.rows_per_band};ckey=sha256/16"
     )
+
+
+def _check_pin(index: DataFrame, cfg: DedupConfig) -> str:
+    """cfg's signature fingerprint; ConfigMismatch if `index` is pinned
+    to another."""
+    fp = _sig_fingerprint(cfg)
+    existing = index.schema["minhash"].metadata.get("sig_cfg")
+    if existing is not None and existing != fp:
+        raise ConfigMismatch(
+            f"index is pinned to signature config [{existing}] but the "
+            f"current config fingerprints as [{fp}]"
+        )
+    return fp
 
 
 def pin_sig_config(index: DataFrame, cfg: DedupConfig) -> DataFrame:
@@ -89,16 +99,7 @@ def pin_sig_config(index: DataFrame, cfg: DedupConfig) -> DataFrame:
     back, pass the guard, and let LSH recall collapse silently, the
     exact failure the pin exists to catch. Raise BEFORE anything is
     persisted instead."""
-    fp = _sig_fingerprint(cfg)
-    existing = index.schema["minhash"].metadata.get("sig_cfg")
-    if existing is not None and existing != fp:
-        from .io import ConfigMismatch
-
-        raise ConfigMismatch(
-            f"index is pinned to signature config [{existing}] but the "
-            f"current config fingerprints as [{fp}]; refusing to persist "
-            "a re-stamped index"
-        )
+    fp = _check_pin(index, cfg)
     return index.select(
         *[
             F.col(c).alias("minhash", metadata={"sig_cfg": fp})
@@ -123,42 +124,6 @@ class IncrementResult:
     metrics: dict = field(default_factory=dict)
 
 
-def _enrich(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str,
-    text_col: str,
-    include_simhash: bool = False,
-) -> DataFrame:
-    """(doc_id, content_hash, minhash[, simhash]) — same fused
-    single-Arrow-pass kernel as the full pipeline, so increment
-    signatures are bit-equal to full-run signatures at the same
-    config. The simhash column (one extra bigint out of the SAME UDF
-    pass — zero additional Arrow round trips) is emitted only when the
-    simhash increment tier needs it."""
-    enr = make_enrich_udf(cfg.num_perm, cfg.hash_seed, cfg.shingle_k)
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    )
-    mh, sh = F.col("_e.minhash"), F.col("_e.simhash")
-    if cfg.min_doc_tokens > cfg.shingle_k:
-        # same codegen gate as pipeline.build_enriched: the
-        # "shorter docs -> exact tier only" contract is enforced at
-        # min_doc_tokens on both paths so signatures stay bit-equal
-        from .functions.text import token_count
-
-        gate = token_count(F.col("text")) >= cfg.min_doc_tokens
-        mh, sh = F.when(gate, mh), F.when(gate, sh)
-    cols = ["doc_id", "content_hash", mh.alias("minhash")]
-    if include_simhash:
-        cols.append(sh.alias("simhash"))
-    return (
-        with_content_key(base)
-        .withColumn("_e", enr(F.col("text")))
-        .select(*cols)
-    )
-
-
 def build_index(
     docs: DataFrame,
     assignments: DataFrame,
@@ -177,7 +142,7 @@ def build_index(
     zero UDF passes. The simhash column is included (8 bytes/row, ~1%
     index width) so the optional simhash increment tier can probe it."""
     return index_from_enriched(
-        _enrich(docs, cfg, id_col, text_col, include_simhash=True),
+        enrich(doc_texts(docs, cfg, id_col, text_col), cfg, True),
         assignments,
         cfg=cfg,
     )
@@ -213,44 +178,31 @@ def index_from_enriched(
     already covers every parameter band keys derive from, so a config
     drift still fails fast before a stale band_keys column could be
     probed."""
-    from .functions.hashing import band_key_col
-
-    minhash_col = (
-        F.col("minhash").alias(
-            "minhash", metadata={"sig_cfg": _sig_fingerprint(cfg)}
-        )
-        if cfg is not None
-        else F.col("minhash")
-    )
     has_sim = "simhash" in enriched.columns
     sig_cols = ["doc_id", "content_hash", "minhash"] + (
         ["simhash"] if has_sim else []
     )
     out_cols = [
         F.col("doc_id").alias("member_id"),
-        F.col("cluster_id"),
-        F.col("content_hash"),
-        minhash_col,
-    ] + ([F.col("simhash")] if has_sim else [])
-    if cfg is not None:
-        # NULL-guarded: xxhash64 SKIPS null arguments, so band_key_col
-        # over a NULL signature would emit identical non-null garbage
-        # keys for every short doc — one giant junk bucket per band.
-        # NULL keys instead; the probe's explode drops them (the same
-        # contract as band_key_buckets' isNotNull filter).
-        out_cols.append(
-            F.when(
-                F.col("minhash").isNotNull(),
-                band_key_col(
-                    "minhash", cfg.rows_per_band, cfg.bands, cfg.hash_seed
-                ),
-            ).alias("band_keys")
-        )
-    return (
-        enriched.select(*sig_cols)
-        .join(assignments.select("doc_id", "cluster_id"), "doc_id")
-        .select(*out_cols)
+        "cluster_id",
+        "content_hash",
+        "minhash",
+    ] + (["simhash"] if has_sim else [])
+    rows = enriched.select(*sig_cols).join(
+        assignments.select("doc_id", "cluster_id"), "doc_id"
     )
+    if cfg is None:
+        return rows.select(*out_cols)
+    # NULL-guarded: xxhash64 SKIPS null arguments, so band_key_col over a
+    # NULL signature would emit identical non-null garbage keys for every
+    # short doc — one giant junk bucket per band. NULL keys instead; the
+    # probe's explode drops them (the same contract as band_key_buckets'
+    # isNotNull filter).
+    band_keys = F.when(
+        F.col("minhash").isNotNull(),
+        band_key_col("minhash", cfg.rows_per_band, cfg.bands, cfg.hash_seed),
+    )
+    return pin_sig_config(rows.select(*out_cols, band_keys.alias("band_keys")), cfg)
 
 
 def dedup_increment(
@@ -288,7 +240,7 @@ def dedup_increment(
 
     `metrics` always carries `n_new_docs`, and for each candidate tier
     that runs its bucket accounting over the touched buckets
-    (`lsh_candidates`, `simhash_candidates`: n_buckets,
+    (`minhash_candidates`, `simhash_candidates`: n_buckets,
     n_capped_buckets, n_candidate_edges, dropped_pairs) — the same
     honest-skew accounting the full pipeline reports. It is observed by
     the jobs that materialize the candidate pairs, so it costs no job.
@@ -315,25 +267,10 @@ def dedup_increment(
     # --- signature-config guard (ConfigMismatch fail-fast, as for
     # resume): a num_perm/hash_seed/shingle_k drift vs the index-building
     # config makes signatures incomparable and LSH recall ~0, silently.
-    pinned = index.schema["minhash"].metadata.get("sig_cfg")
-    if pinned is not None and pinned != _sig_fingerprint(cfg):
-        from .io import ConfigMismatch
+    _check_pin(index, cfg)
 
-        raise ConfigMismatch(
-            f"increment index was built with signature config [{pinned}], "
-            f"got [{_sig_fingerprint(cfg)}]; refusing to probe"
-        )
-
-    n_part = int(
-        spark.conf.get("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
-    )
-    new_base = new_docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).repartition(n_part, "doc_id")
-
-    enriched = _enrich(
-        new_base, cfg, "doc_id", "text", include_simhash=carry_sim
-    ).localCheckpoint(eager=True)
+    new_base = doc_texts(new_docs, cfg, id_col, text_col)
+    enriched = enrich(new_base, cfg, True).localCheckpoint(eager=True)
 
     # --- ID contract: every new id above every base member id ----------
     bounds = (
@@ -369,15 +306,11 @@ def dedup_increment(
     if bounds["sig_lo"] is not None and (
         bounds["sig_lo"] != cfg.num_perm or bounds["sig_hi"] != cfg.num_perm
     ):
-        from .io import ConfigMismatch
-
         raise ConfigMismatch(
             f"index minhash width {bounds['sig_lo']}..{bounds['sig_hi']} "
             f"!= cfg.num_perm {cfg.num_perm}; signatures are incomparable"
         )
     if bounds["ch_len"] is not None and bounds["ch_len"] != 16:
-        from .io import ConfigMismatch
-
         raise ConfigMismatch(
             f"index content_hash is {bounds['ch_len']} bytes, expected the "
             "16-byte binary sha256 prefix (with_content_key); an index "
@@ -420,38 +353,13 @@ def dedup_increment(
     )
 
     # --- tier 1b: exact within the new batch (dictionary misses) -------
-    # NULL hashes (text IS NULL) are excluded exactly as in the full
-    # pipeline's exact tier: the window would group all NULL keys into
-    # one bogus duplicate cluster, and the index probe (an equi-join,
-    # which drops NULLs) would then disagree with it
-    w = Window.partitionBy("content_hash")
-    exact_new = (
-        enriched.select("doc_id", "content_hash")
-        .filter(F.col("content_hash").isNotNull())
-        .withColumn("a", F.min("doc_id").over(w))
-        .filter(F.col("doc_id") != F.col("a"))
-        .select("a", F.col("doc_id").alias("b"))
-    )
+    exact_new = exact_edges(enriched)
 
     near_frames: list[DataFrame] = []
     accounting = {}  # tier -> Observation on its bucket ranking
 
     if "minhash" in tiers:
         # --- tier 2: MinHash-LSH, probe-shaped -------------------------
-        # Only buckets TOUCHED by the new batch are examined: the
-        # index's band memberships are left-semi-joined on the new
-        # batch's distinct band keys BEFORE the capped window/expansion,
-        # so pure-old buckets (the overwhelming majority of a big index)
-        # are never sorted or pair-expanded — cost is O(|new| x bands)
-        # probe + the touched buckets, not O(|index| x bands) per
-        # increment. Result-identical to running over the full union:
-        # untouched buckets could only contribute old-old pairs, which
-        # the b >= lo filter discarded anyway (the base run already
-        # adjudicated them); touched buckets keep their full membership,
-        # so the capped expansion and chain links inside them are
-        # unchanged.
-        new_members = band_key_buckets(enriched, cfg)
-        touched = new_members.select("band_key").distinct()
         if "band_keys" in index.columns:
             # precomputed band keys (index_from_enriched, r06): the
             # probe reads the ~260 B/row band_keys column instead of
@@ -467,19 +375,14 @@ def dedup_increment(
                 index.select(F.col("member_id").alias("doc_id"), "minhash"),
                 cfg,
             )
-        idx_members = (
-            idx_bands.join(touched, "band_key", "left_semi")
-            # the USING-column join moves band_key to the front; re-pin
-            # the column ORDER before the positional union (union is by
-            # position — a swapped order would silently feed band keys
-            # into the doc_id column)
-            .select("doc_id", "band_key")
+        cand = probe_pairs(
+            band_key_buckets(enriched, cfg),
+            idx_bands,
+            ["band_key"],
+            cfg.bucket_pair_cap,
+            lo,
         )
-        cand = bucket_pairs(
-            idx_members.union(new_members), ["band_key"], cap=cfg.bucket_pair_cap
-        )
-        accounting["lsh_candidates"] = cand.accounting
-        lsh_pairs = cand.pairs.filter(F.col("b") >= lo)
+        accounting["minhash_candidates"] = cand.accounting
 
         sigs = index.select(
             F.col("member_id").alias("doc_id"), "minhash"
@@ -499,23 +402,17 @@ def dedup_increment(
         # ids once instead of streaming it through both estimate joins
         near_frames.append(
             minhash_near_edges(
-                lsh_pairs, sigs, cfg, texts=texts, prefilter_sigs=True
+                cand.pairs, sigs, cfg, texts=texts, prefilter_sigs=True
             )
         )
 
     if "simhash" in tiers:
         # --- tier 3: SimHash pigeonhole, probe-shaped ------------------
-        # Same probe shape as the LSH tier: only chunk buckets touched
-        # by the new batch are expanded (left-semi on the new batch's
-        # distinct (chunk_idx, chunk_val) keys), so steady-state cost
-        # is O(|new| x chunks), not O(|index| x chunks). Verification
-        # is the exact Hamming check (pure codegen) — identical
-        # decision procedure to the full pipeline's simhash tier.
-        from .operators.simhash import simhash_chunk_buckets, verify_hamming
-
-        # pigeonhole auto-flip at the size of the corpus the index and
-        # this batch make together — the full pipeline's rule, so the
-        # probe buckets like a full run over the same docs would
+        # Verification is the exact Hamming check, the full pipeline's
+        # simhash decision procedure. Pigeonhole auto-flip at the size
+        # of the corpus the index and this batch make together — the
+        # full pipeline's rule, so the probe buckets like a full run
+        # over the same docs would
         cfg_sim = replace(
             cfg,
             simhash_chunks=cfg.effective_simhash_chunks(
@@ -523,23 +420,17 @@ def dedup_increment(
             ),
         )
         idx_sim = index.select(F.col("member_id").alias("doc_id"), "simhash")
-        new_sim_b = simhash_chunk_buckets(enriched, cfg_sim)
-        touched_sim = new_sim_b.select("chunk_idx", "chunk_val").distinct()
-        idx_sim_b = (
-            simhash_chunk_buckets(idx_sim, cfg_sim)
-            .join(touched_sim, ["chunk_idx", "chunk_val"], "left_semi")
-            .select("doc_id", "chunk_idx", "chunk_val")
-        )
-        sim_cand = bucket_pairs(
-            idx_sim_b.union(new_sim_b.select("doc_id", "chunk_idx", "chunk_val")),
+        sim_cand = probe_pairs(
+            simhash_chunk_buckets(enriched, cfg_sim),
+            simhash_chunk_buckets(idx_sim, cfg_sim),
             ["chunk_idx", "chunk_val"],
-            cap=cfg.bucket_pair_cap,
+            cfg.bucket_pair_cap,
+            lo,
         )
         accounting["simhash_candidates"] = sim_cand.accounting
-        sim_pairs = sim_cand.pairs.filter(F.col("b") >= lo)
         sim_frame = idx_sim.union(enriched.select("doc_id", "simhash"))
         near_frames.append(
-            verify_hamming(sim_pairs, sim_frame, cfg).select("a", "b")
+            verify_hamming(sim_cand.pairs, sim_frame, cfg).select("a", "b")
         )
 
     # near edges touch old MEMBERS; lift them to their cluster id so the
@@ -568,14 +459,7 @@ def dedup_increment(
     # the components run materialized every candidate frame above
     metrics.update({k: o.get for k, o in accounting.items()})
 
-    assignments = (
-        enriched.select("doc_id")
-        .join(comp, enriched.doc_id == comp.node, "left")
-        .select(
-            "doc_id", F.coalesce("component", "doc_id").alias("cluster_id")
-        )
-        .withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
-    )
+    assignments = component_assignments(enriched, comp)
 
     # --- explicit merge report: base clusters bridged by a new doc -----
     # old nodes in the component graph are cluster ids (near edges are
@@ -589,39 +473,23 @@ def dedup_increment(
     )
 
     # --- updated index: remap merged base rows, append the new batch ---
-    # index schema is sticky: band_keys (like simhash) is carried iff
-    # the base index has it; appended rows derive theirs from the new
-    # batch's signatures with the same NULL guard as index_from_enriched
+    # index schema is sticky: simhash and band_keys are carried iff the
+    # base index has them; appended rows are built like any index rows
     carry_bands = "band_keys" in index.columns
-    sig_tail = ["content_hash", "minhash"] + (["simhash"] if carry_sim else [])
     idx_kept = index.join(
         merges, index.cluster_id == merges.old_cluster_id, "left"
     ).select(
         "member_id",
         F.coalesce("merged_into", "cluster_id").alias("cluster_id"),
-        *sig_tail,
+        "content_hash",
+        "minhash",
+        *(["simhash"] if carry_sim else []),
         *(["band_keys"] if carry_bands else []),
     )
-    new_tail = list(sig_tail)
-    if carry_bands:
-        from .functions.hashing import band_key_col
-
-        new_tail.append(
-            F.when(
-                F.col("minhash").isNotNull(),
-                band_key_col(
-                    "minhash", cfg.rows_per_band, cfg.bands, cfg.hash_seed
-                ),
-            ).alias("band_keys")
-        )
-    new_rows = (
-        assignments.select("doc_id", "cluster_id")
-        .join(enriched, "doc_id")
-        .select(
-            F.col("doc_id").alias("member_id"),
-            "cluster_id",
-            *new_tail,
-        )
+    new_rows = index_from_enriched(
+        enriched if carry_sim else enriched.drop("simhash"),
+        assignments,
+        cfg if carry_bands else None,
     )
     updated_index = idx_kept.union(new_rows)
 

@@ -123,6 +123,40 @@ def bucket_pairs(
     return CandidateResult(pairs=pairs, accounting=accounting)
 
 
+def probe_pairs(
+    new_members: DataFrame,
+    index_members: DataFrame,
+    key_cols: list[str],
+    cap: int,
+    lo,
+) -> CandidateResult:
+    """Probe-shaped `bucket_pairs` for an increment: (doc_id, *key)
+    memberships of a new batch against those of an index whose ids are
+    all below `lo` (a long or Column).
+
+    Only buckets TOUCHED by the new batch are examined: the index
+    memberships are left-semi-joined on the batch's distinct keys before
+    the capped window, so pure-old buckets (the overwhelming majority of
+    a big index) are never sorted or pair-expanded. Result-identical to
+    running over the full union: untouched buckets could only contribute
+    old-old pairs, which the `b >= lo` filter discards anyway (the base
+    run already adjudicated them); touched buckets keep their full
+    membership, so the capped expansion and chain links inside them are
+    unchanged. The accounting covers the touched buckets."""
+    cols = ["doc_id", *key_cols]
+    touched = new_members.select(*key_cols).distinct()
+    # the USING-column join moves the keys to the front; re-pin the
+    # column ORDER before the positional union (a swapped order would
+    # silently feed keys into the doc_id column)
+    index_touched = index_members.join(touched, key_cols, "left_semi").select(*cols)
+    cand = bucket_pairs(
+        index_touched.union(new_members.select(*cols)), key_cols, cap=cap
+    )
+    return CandidateResult(
+        pairs=cand.pairs.filter(F.col("b") >= lo), accounting=cand.accounting
+    )
+
+
 _EMPTY_RELATION_RULE = (
     "org.apache.spark.sql.execution.adaptive.AQEPropagateEmptyRelation"
 )

@@ -193,3 +193,15 @@ def connected_components(
         "node", F.col("node").alias("component")
     )
     return result.union(singles)
+
+
+def component_assignments(ids: DataFrame, comp: DataFrame) -> DataFrame:
+    """(doc_id, cluster_id, is_canonical) for every doc_id of `ids`,
+    from a `connected_components` frame (node, component). A doc on no
+    edge is its own cluster."""
+    ids = ids.select("doc_id")
+    return (
+        ids.join(comp, ids.doc_id == comp.node, "left")
+        .select("doc_id", F.coalesce("component", "doc_id").alias("cluster_id"))
+        .withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
+    )

@@ -70,16 +70,25 @@ def exact_assignments(
     )
 
 
-def exact_edges(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """Duplicate edges (src < dst) from the exact tier, for the shared
-    connected-components stage: each non-canonical doc links to its
-    cluster min. Star topology keeps edge count == duplicate count
-    (never the quadratic all-pairs within a group).
-    """
-    a = exact_assignments(docs, id_col, text_col)
+def exact_edges(enriched: DataFrame) -> DataFrame:
+    """(a, b) duplicate edges from (doc_id, content_hash): each doc links
+    to the min doc_id of its content. A window min, not groupBy +
+    collect_list: an exact-dup group can have millions of members at web
+    scale, and the sort-based window spills where a collected list would
+    not. Star topology keeps edge count == duplicate count (never the
+    quadratic all-pairs within a group).
+
+    A NULL hash (text IS NULL) must not elect duplicates: the window
+    groups NULL keys together, so without the filter every missing-text
+    doc would land in one bogus "exact duplicate" cluster, and the
+    increment's index equi-join (which drops NULLs) would disagree. The
+    full run's exact tier and the increment's within-batch tier both
+    call this, so they cannot drift apart."""
+    w = Window.partitionBy("content_hash")
     return (
-        a.filter(~F.col("is_canonical"))
-        .select(F.col("cluster_id").alias("src"), F.col(id_col).alias("dst"))
+        enriched.select("doc_id", "content_hash")
+        .filter(F.col("content_hash").isNotNull())
+        .withColumn("a", F.min("doc_id").over(w))
+        .filter(F.col("doc_id") != F.col("a"))
+        .select("a", F.col("doc_id").alias("b"))
     )

@@ -18,9 +18,10 @@ doc keeps Jaccard far below threshold). Two stages:
    full suffix array (monotonicity: any longer common span contains an
    L-gram).
 
-Scale: the verify join carries text for candidate pairs only (post-cap,
-post-anti-join against already-found edges in the pipeline), never for
-the full corpus.
+Scale: the verify join carries text for candidate pairs only (post-cap),
+never for the full corpus. The pipeline verifies every candidate pair,
+even one another tier already linked: an anti-join against the other
+tiers' edges would serialize the critical path behind them.
 """
 
 from __future__ import annotations

@@ -39,10 +39,12 @@ from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
+from .functions.hashing import make_enrich_udf
+from .functions.text import token_count
 from .io import MemoryStore, StageStore
 from .operators.candidates import bucket_pairs
-from .operators.components import connected_components
-from .operators.exact import with_content_key
+from .operators.components import component_assignments, connected_components
+from .operators.exact import exact_edges, with_content_key
 from .operators.minhash_lsh import band_key_buckets, minhash_near_edges
 from .operators.simhash import simhash_chunk_buckets, verify_hamming
 from .operators.substring import substring_candidates, verify_substring
@@ -70,6 +72,54 @@ class DedupResult:
                                        #  minhash[, simhash])
                                        # — feed increment.index_from_enriched
                                        # so index builds cost zero UDF passes
+
+
+def doc_texts(
+    docs: DataFrame, cfg: DedupConfig, id_col: str, text_col: str
+) -> DataFrame:
+    """(doc_id, text), hash-partitioned on doc_id before the UDF stages.
+
+    A parquet scan of one smallish file yields a handful of input
+    splits, starving the cores (and, at 100 TB, leaving residual skew
+    from file sizes); doc_id hash-partitioning spreads Arrow batches
+    evenly across workers."""
+    n_part = int(
+        docs.sparkSession.conf.get(
+            "spark.sql.shuffle.partitions", str(cfg.shuffle_partitions)
+        )
+    )
+    return docs.select(
+        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
+    ).repartition(n_part, "doc_id")
+
+
+def enrich(base: DataFrame, cfg: DedupConfig, signatures: bool) -> DataFrame:
+    """(doc_id, content_hash[, minhash, simhash]) from (doc_id, text).
+
+    The one enrichment of the full run, the increment and `build_index`,
+    so their signatures are bit-equal by construction. With `signatures`
+    the fused UDF computes shingles + MinHash + SimHash in ONE Arrow
+    round trip (the unfused chain ships shingle arrays to Python 3x);
+    both signatures are NULL for docs below `min_doc_tokens`. The text
+    never leaves: payloads stay in the source table."""
+    e = with_content_key(base)
+    if not signatures:
+        return e.drop("text")
+    enr = make_enrich_udf(cfg.num_perm, cfg.hash_seed, cfg.shingle_k)
+    mh, sh = F.col("_e.minhash"), F.col("_e.simhash")
+    if cfg.min_doc_tokens > cfg.shingle_k:
+        # the config contract ("shorter docs -> exact tier only") gates
+        # at min_doc_tokens, not just at the shingle width: the UDF
+        # NULLs signatures below shingle_k tokens (no shingles), but a
+        # config with min_doc_tokens > shingle_k needs this codegen gate
+        # or docs in [shingle_k, min_doc_tokens) would enter the
+        # similarity tiers anyway. Free at the default config (the
+        # branch is not taken).
+        gate = token_count(F.col("text")) >= cfg.min_doc_tokens
+        mh, sh = F.when(gate, mh), F.when(gate, sh)
+    return e.withColumn("_e", enr(F.col("text"))).select(
+        "doc_id", "content_hash", mh.alias("minhash"), sh.alias("simhash")
+    )
 
 
 def dedup(
@@ -143,47 +193,11 @@ def dedup(
                 metrics[f"{name}_resumed"] = True
         return df
 
-    # Explicit repartition before the UDF stages: a parquet scan of one
-    # smallish file yields a handful of input splits, starving local[32]
-    # (and, at 100 TB, leaving residual skew from file sizes). doc_id
-    # hash-partitioning spreads Arrow batches evenly across workers.
-    n_part = int(
-        spark.conf.get("spark.sql.shuffle.partitions", str(cfg.shuffle_partitions))
-    )
-    base = docs.select(
-        F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).repartition(n_part, "doc_id")
+    base = doc_texts(docs, cfg, id_col, text_col)
 
     # ---- enrich: one wide projection, snapshotted ----------------------
     def build_enriched() -> DataFrame:
-        e = with_content_key(base)
-        if {"minhash", "simhash"} & set(tiers):
-            # fused UDF: shingles + MinHash + SimHash in ONE Arrow round
-            # trip (the unfused chain ships shingle arrays to Python 3x)
-            from .functions.hashing import make_enrich_udf
-
-            enr = make_enrich_udf(cfg.num_perm, cfg.hash_seed, cfg.shingle_k)
-            mh, sh = F.col("_e.minhash"), F.col("_e.simhash")
-            if cfg.min_doc_tokens > cfg.shingle_k:
-                # the config contract ("shorter docs -> exact tier
-                # only") gates at min_doc_tokens, not just at the
-                # shingle width: the UDF naturally NULLs signatures
-                # below shingle_k tokens (no shingles), but a config
-                # with min_doc_tokens > shingle_k needs this explicit
-                # codegen gate or docs in [shingle_k, min_doc_tokens)
-                # would enter the similarity tiers anyway. Free at the
-                # default config (the branch is not taken).
-                from .functions.text import token_count
-
-                gate = token_count(F.col("text")) >= cfg.min_doc_tokens
-                mh, sh = F.when(gate, mh), F.when(gate, sh)
-            e = e.withColumn("_e", enr(F.col("text"))).select(
-                "doc_id",
-                "content_hash",
-                mh.alias("minhash"),
-                sh.alias("simhash"),
-            )
-        return e.drop("text")  # payloads never leave the source table
+        return enrich(base, cfg, bool({"minhash", "simhash"} & set(tiers)))
 
     # ---- tiers -> edges -------------------------------------------------
     # Tier concurrency (driver threads; Spark schedules concurrent jobs
@@ -199,26 +213,7 @@ def dedup(
     #    the substring tier's Python work).
     def run_exact() -> DataFrame:
         def build_exact() -> DataFrame:
-            # window min, not groupBy+collect_list: an exact-dup group can
-            # have millions of members at web scale; the sort-based window
-            # spills, a collected list would not. Star topology: edge count
-            # == duplicate count (never quadratic).
-            from pyspark.sql import Window
-
-            w = Window.partitionBy("content_hash")
-            return (
-                enriched.select("doc_id", "content_hash")
-                # a NULL hash (text IS NULL) must not elect duplicates:
-                # the window groups NULL keys TOGETHER, so without this
-                # filter every missing-text doc would land in one bogus
-                # "exact duplicate" cluster (and diverge from the
-                # increment path, whose index equi-join drops NULLs)
-                .filter(F.col("content_hash").isNotNull())
-                .withColumn("a", F.min("doc_id").over(w))
-                .filter(F.col("doc_id") != F.col("a"))
-                .select("a", F.col("doc_id").alias("b"))
-                .withColumn("tier", F.lit("exact"))
-            )
+            return exact_edges(enriched).withColumn("tier", F.lit("exact"))
 
         return _stage("edges_exact", build_exact)
 
@@ -350,15 +345,7 @@ def dedup(
             max_iterations=cfg.cc_max_iterations,
             checkpoint_mode=cfg.cc_checkpoint_mode,
         )
-        return (
-            base.select("doc_id")
-            .join(comp, base.doc_id == comp.node, "left")
-            .select(
-                "doc_id",
-                F.coalesce("component", "doc_id").alias("cluster_id"),
-            )
-            .withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
-        )
+        return component_assignments(base, comp)
 
     assignments = _stage(
         "assignments",

@@ -54,7 +54,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import DedupConfig
-from ..increment import dedup_increment
+from ..increment import dedup_increment, pin_sig_config
 
 INDEX_SCHEMA = (
     "member_id long, cluster_id long, content_hash binary, "
@@ -69,31 +69,23 @@ def empty_index(
 ) -> DataFrame:
     """A zero-row member index (cold start: no base corpus).
 
-    Pass `cfg` to pin the signature config on the minhash column
-    (exactly like increment.index_from_enriched) — then a restart that
-    probes persisted index versions with a DRIFTED config (hash_seed /
-    shingle_k / band layout) fails fast with ConfigMismatch instead of
-    silently collapsing LSH recall to exact-only.
+    Pass `cfg` to shape it like `increment.index_from_enriched(cfg=…)`:
+    the signature config is pinned on the minhash column, so a restart
+    that probes persisted index versions with a DRIFTED config
+    (hash_seed / shingle_k / band layout) fails fast with
+    ConfigMismatch instead of silently collapsing LSH recall to
+    exact-only; and the index carries `band_keys`, so every batch's
+    rows store their LSH keys and later probes read them instead of
+    re-deriving every member's keys.
 
     `with_simhash=True` adds the 8-byte simhash column so a cold-start
     stream can run the simhash increment tier (index schema is sticky
     across increments — the first batch decides it)."""
     schema = INDEX_SCHEMA + (", simhash long" if with_simhash else "")
-    df = spark.createDataFrame([], schema)
-    return _pin_sig(df, cfg) if cfg is not None else df
-
-
-def _pin_sig(index: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """Validate-then-stamp the signature-config pin — shared helper
-    (increment.pin_sig_config) so the streaming version writer and the
-    batch CLI can never drift in pin format; an existing mismatched pin
-    raises ConfigMismatch BEFORE anything is persisted (round-4
-    advice: a warm index pinned to a drifted config must not be
-    re-stamped, or a batch-0 restart would pass the guard and let LSH
-    recall collapse silently)."""
-    from ..increment import pin_sig_config
-
-    return pin_sig_config(index, cfg)
+    if cfg is None:
+        return spark.createDataFrame([], schema)
+    df = spark.createDataFrame([], schema + ", band_keys array<bigint>")
+    return pin_sig_config(df, cfg)
 
 
 @dataclass
@@ -214,7 +206,7 @@ def stream_dedup_increment(
                 # pin the signature config on the persisted version so a
                 # restart with a drifted config fails fast (the
                 # increment's ConfigMismatch guard reads this metadata)
-                _pin_sig(state.index, cfg).write.mode("overwrite").parquet(
+                pin_sig_config(state.index, cfg).write.mode("overwrite").parquet(
                     initial
                 )
             if want == -1 and had_initial:
@@ -288,7 +280,7 @@ def stream_dedup_increment(
         if index_dir is not None:
             # every persisted version carries the sig-config pin, even
             # when the run started from an unpinned in-memory index
-            _pin_sig(inc.index, cfg).write.mode("overwrite").parquet(
+            pin_sig_config(inc.index, cfg).write.mode("overwrite").parquet(
                 _version_path(index_dir, batch_id)
             )
             # read back: the persisted version is the lineage cut
@@ -297,7 +289,7 @@ def stream_dedup_increment(
             state.index = inc.index.localCheckpoint(eager=True)
         state.last_batch = batch_id
         # per-batch candidate accounting (dropped pairs etc.):
-        # state.batch_metrics[batch_id]["lsh_candidates"]
+        # state.batch_metrics[batch_id]["minhash_candidates"]
         state.batch_metrics[batch_id] = inc.metrics
 
     writer = stream.writeStream.foreachBatch(handle)

@@ -5,7 +5,11 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
 
-from deduplication_spark.operators.exact import exact_assignments, exact_edges
+from deduplication_spark.operators.exact import (
+    exact_assignments,
+    exact_edges,
+    with_content_key,
+)
 
 
 def test_exact_assignments_basic(spark):
@@ -22,7 +26,7 @@ def test_exact_assignments_basic(spark):
     assert rows[12]["cluster_id"] == 10 and not rows[12]["is_canonical"]
     assert rows[14]["cluster_id"] == 10
     assert rows[11]["cluster_id"] == 11 and rows[13]["cluster_id"] == 13
-    edges = {(r["src"], r["dst"]) for r in exact_edges(df).collect()}
+    edges = {(r["a"], r["b"]) for r in exact_edges(with_content_key(df)).collect()}
     assert edges == {(10, 12), (10, 14)}
 
 
@@ -46,7 +50,7 @@ def test_null_text_docs_are_singletons(spark):
         assert rows[null_doc]["cluster_id"] == null_doc, null_doc
         assert rows[null_doc]["is_canonical"], null_doc
     # edges: only the real duplicate pair, never NULL-NULL links
-    edges = {(r["src"], r["dst"]) for r in exact_edges(df).collect()}
+    edges = {(r["a"], r["b"]) for r in exact_edges(with_content_key(df)).collect()}
     assert edges == {(0, 2)}
 
 

@@ -232,16 +232,22 @@ def test_id_contract_enforced(spark, split, inc_run):
         dedup_increment(spark, overlapping, inc.index, cfg)
 
 
-def test_three_increment_chain_equals_full_run(spark, docs):
+@pytest.mark.parametrize(
+    "tiers",
+    [("exact", "minhash"), ("exact", "minhash", "simhash")],
+    ids=["minhash", "simhash"],
+)
+def test_three_increment_chain_equals_full_run(spark, docs, tiers):
     """Round-3 verdict item 4: the index's self-sustaining update
     contract, tested directly on the batch path (q_stream_near_dup
     proves the same through the streaming wrapper). Corpus split into
     4 id-quarters: full dedup on Q0, then THREE successive
     dedup_increment calls (index threaded through, base_docs = the
     accumulated prior text) must reproduce the one-shot full run's
-    partition exactly — same tiers (exact+minhash: the increment tier
-    set), exact verification everywhere, so edge adjudication is
-    batch-invariant."""
+    partition exactly — same tiers on both paths, exact verification
+    everywhere, so edge adjudication is batch-invariant. With
+    "simhash", the increment's chunk-bucket probe must find every pair
+    the full run's all-buckets SimHash tier finds."""
     cfg = DedupConfig()
     cuts = [0, 200, 400, 600, 10**9]
     parts = [
@@ -251,15 +257,17 @@ def test_three_increment_chain_equals_full_run(spark, docs):
         for i in range(4)
     ]
 
-    full = dedup(spark, docs, cfg, tiers=("exact", "minhash"))
+    full = dedup(spark, docs, cfg, tiers=tiers)
     want = {r["doc_id"]: r["cluster_id"] for r in full.assignments.collect()}
 
-    base = dedup(spark, parts[0], cfg, tiers=("exact", "minhash"))
+    base = dedup(spark, parts[0], cfg, tiers=tiers)
     index = index_from_enriched(base.enriched, base.assignments, cfg=cfg)
     got = {r["doc_id"]: r["cluster_id"] for r in base.assignments.collect()}
     seen = parts[0]
     for batch in parts[1:]:
-        inc = dedup_increment(spark, batch, index, cfg, base_docs=seen)
+        inc = dedup_increment(
+            spark, batch, index, cfg, base_docs=seen, tiers=tiers
+        )
         merge = {
             r["old_cluster_id"]: r["merged_into"] for r in inc.merges.collect()
         }
@@ -425,7 +433,7 @@ def test_increment_reports_candidate_accounting(spark, split, inc_run):
     cfg = DedupConfig()
     index = index_from_enriched(base_res.enriched, base_res.assignments, cfg=cfg)
     inc = dedup_increment(spark, new_df, index, cfg, base_docs=base_df)
-    m = inc.metrics["lsh_candidates"]
+    m = inc.metrics["minhash_candidates"]
     assert set(m) == {
         "n_buckets",
         "n_capped_buckets",
@@ -436,7 +444,7 @@ def test_increment_reports_candidate_accounting(spark, split, inc_run):
     # the fixture's index re-derives band keys from minhash (build_index)
     # where this one stores them: same buckets, same accounting, same result
     _, derived = inc_run
-    assert derived.metrics["lsh_candidates"] == m
+    assert derived.metrics["minhash_candidates"] == m
     a = sorted(map(tuple, inc.assignments.collect()))
     b = sorted(map(tuple, derived.assignments.collect()))
     assert a == b

@@ -300,9 +300,9 @@ def test_persisted_index_versions_pin_signature_config(spark, tmp_path):
     cfg = DedupConfig()
     p = str(tmp_path / "idx")
     # what stream_dedup_increment persists: a pinned version
-    from deduplication_spark.streaming.increment_stream import _pin_sig
+    from deduplication_spark.increment import pin_sig_config
 
-    _pin_sig(empty_index(spark), cfg).write.parquet(p)
+    pin_sig_config(empty_index(spark), cfg).write.parquet(p)
     restored = spark.read.parquet(p)
     assert restored.schema["minhash"].metadata.get("sig_cfg")
 
@@ -317,15 +317,30 @@ def test_persisted_index_versions_pin_signature_config(spark, tmp_path):
     assert res.assignments.count() == 1
 
 
+def _write_batch_files(spark, src, batches) -> None:
+    """One parquet file per pandas batch under `src`, with strictly
+    increasing mtimes so a maxFilesPerTrigger=1 file stream replays
+    them in order."""
+    import glob
+    import shutil
+
+    os.makedirs(src)
+    for i, pdf in enumerate(batches):
+        tmp = os.path.join(src, f"tmp_b{i}")
+        spark.createDataFrame(pdf).coalesce(1).write.parquet(tmp)
+        [f] = glob.glob(os.path.join(tmp, "part-*.parquet"))
+        dest = os.path.join(src, f"batch_{i}.parquet")
+        shutil.move(f, dest)
+        shutil.rmtree(tmp)
+        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
 def test_stream_simhash_tier_catches_residual_pair(spark, tmp_path):
     """tiers=(... "simhash") forwards to the per-batch prober: the
     kernel-searched residual pair (jaccard 0.783 -> minhash tier
     exact-verifies and REJECTS via docs_dir; hamming 3 -> simhash
     pigeonhole ACCEPTS) is caught across two microbatches from a
     cold simhash-carrying index."""
-    import glob
-    import shutil
-
     import pandas as pd
 
     toks = [f"t1158x{i}" for i in range(45)]
@@ -335,19 +350,10 @@ def test_stream_simhash_tier_catches_residual_pair(spark, tmp_path):
     doc_b = " ".join(var)
 
     src = str(tmp_path / "src")
-    os.makedirs(src)
-    batches = [
+    _write_batch_files(spark, src, [
         pd.DataFrame({"doc_id": [1, 2], "text": [doc_a, "unrelated filler doc text here"]}),
         pd.DataFrame({"doc_id": [10], "text": [doc_b]}),
-    ]
-    for i, pdf in enumerate(batches):
-        tmp = os.path.join(src, f"tmp_b{i}")
-        spark.createDataFrame(pdf).coalesce(1).write.parquet(tmp)
-        [f] = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dest = os.path.join(src, f"batch_{i}.parquet")
-        shutil.move(f, dest)
-        shutil.rmtree(tmp)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+    ])
 
     cfg = DedupConfig()
     state = StreamIncrementState(
@@ -382,35 +388,72 @@ def test_stream_simhash_tier_catches_residual_pair(spark, tmp_path):
     assert "simhash" in idx.columns and idx.count() == 3
 
 
+def test_cold_start_index_stores_band_keys(spark, tmp_path):
+    """A cold start with `cfg` stores band keys like a warm
+    index_from_enriched(cfg=...) index: the persisted batch=0 version
+    carries `band_keys`, non-null exactly for the docs with a
+    signature, so later batches probe stored keys instead of
+    re-deriving every member's."""
+    import pandas as pd
+
+    src = str(tmp_path / "src")
+    words = [f"w{i}" for i in range(60)]
+    _write_batch_files(spark, src, [
+        pd.DataFrame({
+            "doc_id": [1, 2, 3],
+            "text": [" ".join(words), " ".join(words[::-1]), "too short"],
+        }),
+    ])
+    cfg = DedupConfig()
+    state = StreamIncrementState(index=empty_index(spark, cfg=cfg))
+    q = stream_dedup_increment(
+        spark.readStream.schema("doc_id long, text string").parquet(src),
+        state,
+        assignments_dir=str(tmp_path / "assignments"),
+        index_dir=str(tmp_path / "index"),
+        cfg=cfg,
+        checkpoint_dir=str(tmp_path / "ckpt"),
+        trigger={"availableNow": True},
+    )
+    assert q.awaitTermination(300), "stream did not finish in time"
+    rows = spark.read.parquet(str(tmp_path / "index" / "batch=0")).collect()
+    assert {r["member_id"] for r in rows} == {1, 2, 3}
+    for r in rows:
+        assert (r["band_keys"] is not None) == (r["minhash"] is not None)
+        if r["band_keys"] is not None:
+            assert len(r["band_keys"]) == cfg.bands
+    assert sum(r["minhash"] is not None for r in rows) == 2
+
+
 def test_pin_sig_never_overwrites_a_drifted_pin(spark, tmp_path):
-    """Round-4 advice (medium): _pin_sig must VALIDATE an existing
+    """Round-4 advice (medium): pin_sig_config must VALIDATE an existing
     sig_cfg pin, never re-stamp it. Previously a warm index pinned
     with config A, streamed with drifted config B, had its batch=-1
     version written with B's fingerprint BEFORE dedup_increment's
     guard ran — the first run failed, but a restart of batch 0 read
     the forged pin, passed the guard, and LSH recall collapsed
     silently. Now the stamp itself raises, so nothing forged can ever
-    be persisted (every persisted version goes through _pin_sig)."""
+    be persisted (every persisted version goes through pin_sig_config)."""
+    from deduplication_spark.increment import pin_sig_config
     from deduplication_spark.io import ConfigMismatch
-    from deduplication_spark.streaming.increment_stream import _pin_sig
 
     warm_cfg = DedupConfig()
     drifted = DedupConfig(hash_seed=0xBAD5EED)
     warm = empty_index(spark, cfg=warm_cfg)
 
     with pytest.raises(ConfigMismatch, match="pinned to signature config"):
-        _pin_sig(warm, drifted)
+        pin_sig_config(warm, drifted)
 
     # same config re-stamps to the identical value — allowed
     p = str(tmp_path / "idx")
-    _pin_sig(warm, warm_cfg).write.parquet(p)
+    pin_sig_config(warm, warm_cfg).write.parquet(p)
     restored = spark.read.parquet(p)
     # and the round-tripped pin is likewise protected against drift
     with pytest.raises(ConfigMismatch, match="pinned to signature config"):
-        _pin_sig(restored, drifted)
+        pin_sig_config(restored, drifted)
     # an UNPINNED legacy index gets stamped (first-write path)
     unpinned = empty_index(spark)
-    assert _pin_sig(unpinned, warm_cfg).schema["minhash"].metadata["sig_cfg"]
+    assert pin_sig_config(unpinned, warm_cfg).schema["minhash"].metadata["sig_cfg"]
 
 
 def test_partial_initial_index_refuses_cold_overwrite(
