@@ -2,7 +2,6 @@ from deduplication_spark.functions.text import (
     normalized_tokens,
     shingle_hashes,
     token_count,
-    with_text_features,
 )
 from deduplication_spark.functions.hashing import (
     make_minhash_udf,
@@ -15,7 +14,6 @@ __all__ = [
     "normalized_tokens",
     "shingle_hashes",
     "token_count",
-    "with_text_features",
     "make_minhash_udf",
     "make_simhash_udf",
     "band_hash_col",

@@ -239,81 +239,3 @@ def make_shingle_count_udf(k: int, seed: int):
             np.seterr(**err)
 
     return shingle_count
-
-
-# ---------------------------------------------------------------------------
-# text-analysis features (training-data pipeline utilities)
-# ---------------------------------------------------------------------------
-
-_STOPWORDS = (
-    "the a an and or of to in is are was were be for on with as at by "
-    "from this that it not"
-).split()
-
-# Character n-gram cues for a tiny deterministic language-ID heuristic.
-# Real systems use fastText/CLD3; this is the SQL-expressible stand-in.
-_LANG_CUES = {
-    "en": [" the ", " and ", " of "],
-    "de": [" der ", " und ", " die "],
-    "es": [" el ", " la ", " que "],
-}
-
-
-def with_text_features(df, text_col: str = "text"):
-    """Adds token_count, char_count, punct_ratio, stopword_ratio,
-    quality_score, lang_guess, fingerprint64 — all built-in expressions.
-    """
-    t = F.col(text_col)
-    low = F.concat(F.lit(" "), F.lower(t), F.lit(" "))
-    toks = normalized_tokens(t)
-    n_tok = F.size(toks)
-    n_char = F.length(t)
-    punct = F.length(F.regexp_replace(t, r"[^\.,;:!\?'\"()\[\]]", ""))
-    # one membership pass, not one interpreted HOF traversal per
-    # stopword (25x fewer lambda evaluations; HOFs don't codegen)
-    stop_arr = F.array(*[F.lit(sw) for sw in _STOPWORDS])
-    stop_hits = F.size(F.filter(toks, lambda w: F.array_contains(stop_arr, w)))
-    lang_scores = {
-        lang: sum(
-            (
-                (F.length(low) - F.length(F.replace(low, F.lit(cue), F.lit(""))))
-                / F.lit(len(cue))
-                for cue in cues
-            ),
-            start=F.lit(0.0),
-        )
-        for lang, cues in _LANG_CUES.items()
-    }
-    best = F.greatest(*lang_scores.values())
-    # NULL text: every score is NULL, so `best <= 0` is NULL-false and
-    # the chain would fall through to 'en' — guard explicitly ('und',
-    # not English, for a missing document)
-    lang_guess = (
-        F.when(best.isNull() | (best <= 0), F.lit("und"))
-        .when(lang_scores["de"] == best, F.lit("de"))
-        .when(lang_scores["es"] == best, F.lit("es"))
-        .otherwise(F.lit("en"))
-    )
-    punct_ratio = F.when(n_char > 0, punct / n_char).otherwise(F.lit(0.0))
-    stop_ratio = F.when(n_tok > 0, stop_hits / n_tok).otherwise(F.lit(0.0))
-    # Heuristic quality: favor mid-length docs with normal punct/stopword
-    # mix. NULL text must score 0.0, not 1.0: F.least SKIPS NULLs, so
-    # least(1.0, NULL/100) is 1.0 and an unguarded product would rank a
-    # missing document above every real one (quality >= t filters would
-    # select empties first).
-    quality = F.when(t.isNull(), F.lit(0.0)).otherwise(
-        F.round(
-            F.least(F.lit(1.0), n_tok / F.lit(100.0))
-            * (F.lit(1.0) - punct_ratio),
-            6,
-        )
-    )
-    return (
-        df.withColumn("token_count", n_tok)
-        .withColumn("char_count", n_char)
-        .withColumn("punct_ratio", F.round(punct_ratio, 6))
-        .withColumn("stopword_ratio", F.round(stop_ratio, 6))
-        .withColumn("quality_score", quality)
-        .withColumn("lang_guess", lang_guess)
-        .withColumn("fingerprint64", F.xxhash64(t))
-    )

@@ -14,9 +14,10 @@ of the reference's insert-if-absent dictionary probe
 (/root/reference/src/dictionary.c:61-78): probe the existing dictionary
 first, extend it only with genuinely-new entries.
 
-The index has MEMBER granularity — one row per base document:
-(member_id, cluster_id, content_hash, minhash, simhash), ~1 KB/row,
-no text.
+The index has MEMBER granularity — one row per base document, one
+schema for every index (`INDEX_SCHEMA`): (member_id, cluster_id,
+content_hash, minhash, simhash, band_keys), ~1.3 KB/row, no text, and
+the signature-config pin on `minhash`.
 Per-cluster (canonical-only) indexing is NOT sufficient: a new doc's
 exact twin or >=0.8-Jaccard neighbor is often a non-canonical member
 whose own hash/signature must be probe-able (cluster membership is
@@ -89,9 +90,10 @@ def _check_pin(index: DataFrame, cfg: DedupConfig) -> str:
 def pin_sig_config(index: DataFrame, cfg: DedupConfig) -> DataFrame:
     """Attach the signature-config fingerprint as minhash column
     metadata (survives parquet round trips; `dedup_increment` validates
-    it before probing). ONE helper for every index-persisting surface —
-    the streaming increment's version writer and the batch CLI's
-    updated-index write — so the pin format cannot drift between them.
+    it before probing). ONE helper for every index-producing surface —
+    `index_from_enriched`, the index `dedup_increment` returns and the
+    stream's initial version — so the pin format cannot drift between
+    them. An index already pinned to cfg is returned as is.
 
     An EXISTING pin is validated, never overwritten (round-4 advice):
     stamping cfg's fingerprint over an index pinned with a different
@@ -100,6 +102,8 @@ def pin_sig_config(index: DataFrame, cfg: DedupConfig) -> DataFrame:
     exact failure the pin exists to catch. Raise BEFORE anything is
     persisted instead."""
     fp = _check_pin(index, cfg)
+    if index.schema["minhash"].metadata.get("sig_cfg") == fp:
+        return index
     return index.select(
         *[
             F.col(c).alias("minhash", metadata={"sig_cfg": fp})
@@ -115,13 +119,36 @@ class IncrementResult:
     assignments: DataFrame  # new batch: (doc_id, cluster_id, is_canonical)
     merges: DataFrame       # (old_cluster_id, merged_into) — base clusters
                             # bridged by a new doc; empty most increments
-    index: DataFrame        # updated member-level index incl. the new batch.
+    index: DataFrame        # updated member-level index incl. the new batch,
+                            # INDEX_SCHEMA, pinned to the increment's cfg.
                             # LAZY: when threading it through a LONG chain of
                             # increments, cut lineage every batch (write+read
                             # parquet — what streaming/increment_stream.py
                             # does — or localCheckpoint), else the logical
                             # plan deepens per batch (join + union each)
     metrics: dict = field(default_factory=dict)
+
+
+# The one member-index schema: every index `index_from_enriched`,
+# `build_index`, `empty_index` and `dedup_increment` produce has exactly
+# these columns. `band_keys` are the precomputed LSH band keys
+# (array<long>[bands], ~260 bytes/row, r06): stored once at build
+# time, so the probe explodes this 4x-narrower column
+# instead of re-deriving every member's keys from the ~1 KB minhash
+# column each increment. The sig_cfg pin covers every parameter band
+# keys derive from, so a config drift fails fast before stale keys
+# could be probed.
+INDEX_SCHEMA = (
+    "member_id long, cluster_id long, content_hash binary, "
+    "minhash array<bigint>, simhash bigint, band_keys array<bigint>"
+)
+
+
+def empty_index(spark: SparkSession) -> DataFrame:
+    """A zero-row member index (cold start: no base corpus). Unpinned:
+    an empty index is the one index `dedup_increment` accepts without a
+    sig_cfg pin, and the index it returns carries the pin."""
+    return spark.createDataFrame([], INDEX_SCHEMA)
 
 
 def build_index(
@@ -131,16 +158,15 @@ def build_index(
     id_col: str = "doc_id",
     text_col: str = "text",
 ) -> DataFrame:
-    """Member-level increment index from a full run's output: one row
-    per base doc — (member_id, cluster_id, content_hash, minhash).
+    """Member-level increment index (`INDEX_SCHEMA`) from a full run's
+    output: one row per base doc.
 
     This RECOMPUTES the enrichment UDF pass over the base corpus (the
     dominant cost — measured 157 s for 120k docs at local[32], more
     than the increment itself). When the base run's enriched stage is
     at hand — `DedupResult.enriched`, or the `enriched` snapshot of a
     `run_dir` StageStore — use `index_from_enriched` instead: a join,
-    zero UDF passes. The simhash column is included (8 bytes/row, ~1%
-    index width) so the optional simhash increment tier can probe it."""
+    zero UDF passes."""
     return index_from_enriched(
         enrich(doc_texts(docs, cfg, id_col, text_col), cfg, True),
         assignments,
@@ -149,50 +175,17 @@ def build_index(
 
 
 def index_from_enriched(
-    enriched: DataFrame,
-    assignments: DataFrame,
-    cfg: DedupConfig | None = None,
+    enriched: DataFrame, assignments: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
-    """Zero-recompute index build from a full run's enriched stage
-    ((doc_id, content_hash, minhash, ...) — e.g. `DedupResult.enriched`
-    or `StageStore.read("enriched")`) + its assignments.
+    """Zero-recompute index build (`INDEX_SCHEMA`) from a full run's
+    enriched stage ((doc_id, content_hash, minhash, simhash) — e.g.
+    `DedupResult.enriched` or `StageStore.read("enriched")`) + its
+    assignments.
 
-    When `cfg` is given, the signature config fingerprint is pinned as
-    column metadata on `minhash` (it survives a parquet round trip), so
-    `dedup_increment` can fail fast on a config mismatch — the DDP1
-    header check applied to the increment index.
-
-    When `enriched` carries a `simhash` column (the full pipeline's
-    enriched stage does), it is carried into the index (8 bytes/row)
-    so `dedup_increment(tiers=(..., "simhash"))` can probe it; an
-    index built without it simply cannot serve the simhash tier.
-
-    When `cfg` is given the index also gains `band_keys` — the
-    precomputed LSH band keys (array<long>[bands], ~260 bytes/row —
-    r06, guide §2.3/§6): the probe's dominant per-increment cost was
-    re-deriving every member's band keys from the ~1 KB minhash column
-    (full-column read + bands x |index| interpreted slice+hash evals,
-    EVERY increment). Stored once at build time, the probe reads only
-    this 4x-narrower column and explodes. NULL signature -> NULL keys
-    (short docs never enter the LSH tier, as before). The sig_cfg pin
-    already covers every parameter band keys derive from, so a config
-    drift still fails fast before a stale band_keys column could be
-    probed."""
-    has_sim = "simhash" in enriched.columns
-    sig_cols = ["doc_id", "content_hash", "minhash"] + (
-        ["simhash"] if has_sim else []
-    )
-    out_cols = [
-        F.col("doc_id").alias("member_id"),
-        "cluster_id",
-        "content_hash",
-        "minhash",
-    ] + (["simhash"] if has_sim else [])
-    rows = enriched.select(*sig_cols).join(
-        assignments.select("doc_id", "cluster_id"), "doc_id"
-    )
-    if cfg is None:
-        return rows.select(*out_cols)
+    The signature config fingerprint is pinned as column metadata on
+    `minhash` (it survives a parquet round trip), so `dedup_increment`
+    can fail fast on a config mismatch — the DDP1 header check applied
+    to the increment index."""
     # NULL-guarded: xxhash64 SKIPS null arguments, so band_key_col over a
     # NULL signature would emit identical non-null garbage keys for every
     # short doc — one giant junk bucket per band. NULL keys instead; the
@@ -202,7 +195,20 @@ def index_from_enriched(
         F.col("minhash").isNotNull(),
         band_key_col("minhash", cfg.rows_per_band, cfg.bands, cfg.hash_seed),
     )
-    return pin_sig_config(rows.select(*out_cols, band_keys.alias("band_keys")), cfg)
+    rows = enriched.select("doc_id", "content_hash", "minhash", "simhash").join(
+        assignments.select("doc_id", "cluster_id"), "doc_id"
+    )
+    return pin_sig_config(
+        rows.select(
+            F.col("doc_id").alias("member_id"),
+            "cluster_id",
+            "content_hash",
+            "minhash",
+            "simhash",
+            band_keys.alias("band_keys"),
+        ),
+        cfg,
+    )
 
 
 def dedup_increment(
@@ -224,10 +230,12 @@ def dedup_increment(
     with the same pigeonhole chunk bucketing as the full pipeline —
     it closes the residual recall gap for high-bit-agreement pairs
     whose Jaccard sits just under the LSH S-curve, for ~1% extra
-    index width. It requires an index whose rows carry `simhash`
-    (indexes from `build_index` / `index_from_enriched` over the
-    pipeline's enriched stage do). The substring tier remains
-    full-run-only by design.
+    index width. The substring tier remains full-run-only by design.
+
+    `index` must have every `INDEX_SCHEMA` column (ValueError otherwise)
+    and, unless it is empty, the sig_cfg pin of `index_from_enriched`
+    matching `cfg` (ConfigMismatch otherwise). The returned index is
+    `INDEX_SCHEMA`, pinned to `cfg`.
 
     `base_docs`: optional (doc_id, text) covering the base corpus. When
     given, borderline LSH candidates get the same exact-Jaccard
@@ -254,15 +262,13 @@ def dedup_increment(
             f"increment tiers must be a subset of {sorted(allowed)} "
             f"containing 'exact', got {tiers!r}"
         )
-    if "simhash" in tiers and "simhash" not in index.columns:
+    cols = [f.split()[0] for f in INDEX_SCHEMA.split(", ")]
+    missing = [c for c in cols if c not in index.columns]
+    if missing:
         raise ValueError(
-            "tiers includes 'simhash' but the index has no simhash "
-            "column — rebuild it with build_index/index_from_enriched "
-            "(the pipeline's enriched stage carries simhash)"
+            f"index lacks columns {missing} of INDEX_SCHEMA — rebuild it "
+            "with build_index/index_from_enriched"
         )
-    # index schema is sticky: once an index carries simhash, every
-    # appended row must too, or the next increment's union would break
-    carry_sim = "simhash" in index.columns
 
     # --- signature-config guard (ConfigMismatch fail-fast, as for
     # resume): a num_perm/hash_seed/shingle_k drift vs the index-building
@@ -284,7 +290,7 @@ def dedup_increment(
         .crossJoin(
             # legacy-shape guards on a BOUNDED sample (r06): an index
             # whose signatures have a different width than cfg.num_perm
-            # (unpinned legacy index), or a hex-string content_hash
+            # (a secondary check behind the pin), or a hex-string content_hash
             # (64 bytes — would join string==binary against the new
             # 16-byte key and silently match NOTHING), must fail fast.
             # Widths/key-shape are uniform per index by construction
@@ -303,6 +309,11 @@ def dedup_increment(
     )
     min_new, max_base = bounds["lo"], bounds["hi"]
     metrics["n_new_docs"] = bounds["n"]
+    if bounds["n_index"] and "sig_cfg" not in index.schema["minhash"].metadata:
+        raise ConfigMismatch(
+            f"index has {bounds['n_index']} rows but no signature config "
+            "pin on minhash — build it with build_index/index_from_enriched"
+        )
     if bounds["sig_lo"] is not None and (
         bounds["sig_lo"] != cfg.num_perm or bounds["sig_hi"] != cfg.num_perm
     ):
@@ -334,7 +345,7 @@ def dedup_increment(
         return IncrementResult(
             assignments=empty_assign,
             merges=empty_merges,
-            index=index,
+            index=pin_sig_config(index, cfg),
             metrics=metrics,
         )
     if max_base is not None and min_new is not None and min_new <= max_base:
@@ -360,21 +371,12 @@ def dedup_increment(
 
     if "minhash" in tiers:
         # --- tier 2: MinHash-LSH, probe-shaped -------------------------
-        if "band_keys" in index.columns:
-            # precomputed band keys (index_from_enriched, r06): the
-            # probe reads the ~260 B/row band_keys column instead of
-            # re-deriving every key from the ~1 KB minhash column —
-            # a 4x narrower scan and zero per-member hash evals per
-            # increment. explode drops the NULL arrays of short docs.
-            idx_bands = index.select(
-                F.col("member_id").alias("doc_id"),
-                F.explode("band_keys").alias("band_key"),
-            )
-        else:
-            idx_bands = band_key_buckets(
-                index.select(F.col("member_id").alias("doc_id"), "minhash"),
-                cfg,
-            )
+        # the index's stored band keys (INDEX_SCHEMA): explode drops
+        # the NULL arrays of short docs
+        idx_bands = index.select(
+            F.col("member_id").alias("doc_id"),
+            F.explode("band_keys").alias("band_key"),
+        )
         cand = probe_pairs(
             band_key_buckets(enriched, cfg),
             idx_bands,
@@ -473,9 +475,8 @@ def dedup_increment(
     )
 
     # --- updated index: remap merged base rows, append the new batch ---
-    # index schema is sticky: simhash and band_keys are carried iff the
-    # base index has them; appended rows are built like any index rows
-    carry_bands = "band_keys" in index.columns
+    # appended rows are built like any index rows. A union keeps only
+    # its first side's column metadata, so the result is re-pinned
     idx_kept = index.join(
         merges, index.cluster_id == merges.old_cluster_id, "left"
     ).select(
@@ -483,19 +484,14 @@ def dedup_increment(
         F.coalesce("merged_into", "cluster_id").alias("cluster_id"),
         "content_hash",
         "minhash",
-        *(["simhash"] if carry_sim else []),
-        *(["band_keys"] if carry_bands else []),
+        "simhash",
+        "band_keys",
     )
-    new_rows = index_from_enriched(
-        enriched if carry_sim else enriched.drop("simhash"),
-        assignments,
-        cfg if carry_bands else None,
-    )
-    updated_index = idx_kept.union(new_rows)
+    new_rows = index_from_enriched(enriched, assignments, cfg)
 
     return IncrementResult(
         assignments=assignments,
         merges=merges,
-        index=updated_index,
+        index=pin_sig_config(idx_kept.union(new_rows), cfg),
         metrics=metrics,
     )

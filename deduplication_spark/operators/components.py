@@ -85,21 +85,13 @@ def _signature(edges: DataFrame) -> tuple[int, int]:
 def connected_components(
     edges: DataFrame,
     max_iterations: int = 50,
-    check_every: int = 1,
     checkpoint_mode: str = "local",
 ) -> DataFrame:
     """Returns (node, component) for every node appearing in `edges`,
     component = min node id of the connected component.
 
-    `check_every` > 1 batches star rounds between checkpoint+signature
-    actions. Measured (45k edges / 96k nodes, local[8]): 1 -> ~7 s,
-    2 -> ~13 s, 3 -> ~80 s — KEEP 1. The star steps reference their
-    input 2-3x, so un-checkpointed chained rounds re-analyze/recompute
-    the subtree multiplicatively; per-round truncation is what keeps
-    each round O(edges). (A persist()-based variant that skips
-    truncation entirely hangs on exponential plan analysis; a lazy
-    localCheckpoint fused with the signature job measures the same as
-    eager — the materialization cost dominates, not the extra action.)
+    Every round is checkpointed: per-round truncation keeps each round
+    O(edges).
     """
     spark = edges.sparkSession
     # checkpoint_mode (r05 verdict #5): "local" = localCheckpoint
@@ -170,8 +162,6 @@ def connected_components(
     converged = False
     for i in range(max_iterations):
         e = _small_star(_large_star(e))
-        if (i + 1) % check_every and i != max_iterations - 1:
-            continue  # lineage grows ~4 shuffles per skipped check: fine
         e = _ckpt(e).toDF("src", "dst")
         sig = _signature(e)
         if sig == prev_sig:

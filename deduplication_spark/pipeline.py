@@ -69,7 +69,7 @@ class DedupResult:
     metrics: dict
     lineage: list[dict]
     enriched: DataFrame | None = None  # (doc_id, content_hash BINARY(16),
-                                       #  minhash[, simhash])
+                                       #  minhash, simhash)
                                        # — feed increment.index_from_enriched
                                        # so index builds cost zero UDF passes
 

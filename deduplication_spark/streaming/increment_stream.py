@@ -19,7 +19,7 @@ tier, cap, and metric of the batch path applies unchanged.
 Restart/replay contract (foreachBatch is AT-LEAST-ONCE; this module
 makes each batch idempotent instead of pretending exactly-once):
 
-- With `index_dir`, the index is versioned per batch
+- The index is versioned per batch under `index_dir`
   (`index_dir/batch=N` = the index AFTER batch N; the initial index is
   written as `batch=-1` — an Iceberg deployment would make these table
   snapshots). Batch N always probes version N-1 read from disk, and
@@ -27,10 +27,6 @@ makes each batch idempotent instead of pretending exactly-once):
   crash-restarted batch recomputes byte-identical results, and a
   restart needs only the same `checkpoint_dir` + `index_dir` (a fresh
   cold StreamIncrementState is fine).
-- Without `index_dir` (in-memory index only), a batch that cannot be
-  served from the live in-memory lineage (state.last_batch != N-1)
-  raises instead of silently probing a wrong index — restart requires
-  re-running from a fresh checkpoint.
 - Assignments/merges are written per batch to `<dir>/batch=N` with
   overwrite (partition discovery exposes `batch` as a column), so
   replays cannot duplicate rows.
@@ -55,37 +51,7 @@ from pyspark.sql.streaming import StreamingQuery
 
 from ..config import DedupConfig
 from ..increment import dedup_increment, pin_sig_config
-
-INDEX_SCHEMA = (
-    "member_id long, cluster_id long, content_hash binary, "
-    "minhash array<bigint>"
-)
-
-
-def empty_index(
-    spark: SparkSession,
-    cfg: DedupConfig | None = None,
-    with_simhash: bool = False,
-) -> DataFrame:
-    """A zero-row member index (cold start: no base corpus).
-
-    Pass `cfg` to shape it like `increment.index_from_enriched(cfg=…)`:
-    the signature config is pinned on the minhash column, so a restart
-    that probes persisted index versions with a DRIFTED config
-    (hash_seed / shingle_k / band layout) fails fast with
-    ConfigMismatch instead of silently collapsing LSH recall to
-    exact-only; and the index carries `band_keys`, so every batch's
-    rows store their LSH keys and later probes read them instead of
-    re-deriving every member's keys.
-
-    `with_simhash=True` adds the 8-byte simhash column so a cold-start
-    stream can run the simhash increment tier (index schema is sticky
-    across increments — the first batch decides it)."""
-    schema = INDEX_SCHEMA + (", simhash long" if with_simhash else "")
-    if cfg is None:
-        return spark.createDataFrame([], schema)
-    df = spark.createDataFrame([], schema + ", band_keys array<bigint>")
-    return pin_sig_config(df, cfg)
+from ..increment import empty_index  # noqa: F401  (cold-start state)
 
 
 @dataclass
@@ -128,8 +94,8 @@ def stream_dedup_increment(
     stream: DataFrame,
     state: StreamIncrementState,
     assignments_dir: str,
+    index_dir: str,
     merges_dir: str | None = None,
-    index_dir: str | None = None,
     docs_dir: str | None = None,
     cfg: DedupConfig | None = None,
     checkpoint_dir: str | None = None,
@@ -141,17 +107,15 @@ def stream_dedup_increment(
     """Start the streaming prober. Returns the StreamingQuery.
 
     `tiers` is forwarded to `dedup_increment` per microbatch (add
-    "simhash" for the pigeonhole tier — requires an index carrying the
-    simhash column, e.g. `empty_index(..., with_simhash=True)` for a
-    cold start or a pipeline-built warm index).
+    "simhash" for the pigeonhole tier).
 
     Each microbatch: dedup_increment(batch, index@N-1) -> overwrite the
     batch's (doc_id, cluster_id, is_canonical) under
     `assignments_dir/batch=N` (merge rows under `merges_dir/batch=N`
-    when given, index version under `index_dir/batch=N`), then advance
-    state. Initialize `state` with `empty_index` for a cold start or a
-    `build_index`/`index_from_enriched` frame to continue from a batch
-    run. Pass `index_dir` for restartability (see module docstring).
+    when given) and the index version under `index_dir/batch=N`, then
+    advance state. Initialize `state` with `empty_index` for a cold
+    start or a `build_index`/`index_from_enriched` frame to continue
+    from a batch run (see the module docstring for restarts).
 
     `docs_dir` is the streaming analog of `dedup_increment`'s
     `base_docs`: each batch's raw (doc_id, text) is persisted under
@@ -177,60 +141,49 @@ def stream_dedup_increment(
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
         # ---- resolve the index this batch must probe: version N-1 ----
-        if index_dir is not None:
-            want = batch_id - 1
-            initial = _version_path(index_dir, -1)
-            had_initial = os.path.exists(os.path.join(initial, "_SUCCESS"))
-            if not had_initial:
-                if (
-                    os.path.isdir(initial)
-                    and state.index.limit(1).count() == 0
-                ):
-                    # a batch=-1 DIRECTORY without _SUCCESS means a
-                    # prior run crashed mid-write of its initial index,
-                    # and the restart came up COLD (empty state). That
-                    # partial initial may have been a WARM-start index —
-                    # overwriting it with the empty one would
-                    # permanently classify every duplicate of the warm
-                    # base as unique, silently. A warm restart (non-
-                    # empty state.index) legitimately rewrites the
-                    # partial dir; a cold one must decide explicitly.
-                    raise RuntimeError(
-                        f"partial initial index at {initial} (no "
-                        "_SUCCESS — a previous run crashed before "
-                        "committing it) and this restart's state is "
-                        "EMPTY. Re-supply the original warm index in "
-                        "StreamIncrementState, or delete the partial "
-                        "directory for a genuine cold start."
-                    )
-                # pin the signature config on the persisted version so a
-                # restart with a drifted config fails fast (the
-                # increment's ConfigMismatch guard reads this metadata)
-                pin_sig_config(state.index, cfg).write.mode("overwrite").parquet(
-                    initial
+        want = batch_id - 1
+        initial = _version_path(index_dir, -1)
+        had_initial = os.path.exists(os.path.join(initial, "_SUCCESS"))
+        if not had_initial:
+            if (
+                os.path.isdir(initial)
+                and state.index.limit(1).count() == 0
+            ):
+                # a batch=-1 DIRECTORY without _SUCCESS means a
+                # prior run crashed mid-write of its initial index,
+                # and the restart came up COLD (empty state). That
+                # partial initial may have been a WARM-start index —
+                # overwriting it with the empty one would
+                # permanently classify every duplicate of the warm
+                # base as unique, silently. A warm restart (non-
+                # empty state.index) legitimately rewrites the
+                # partial dir; a cold one must decide explicitly.
+                raise RuntimeError(
+                    f"partial initial index at {initial} (no "
+                    "_SUCCESS — a previous run crashed before "
+                    "committing it) and this restart's state is "
+                    "EMPTY. Re-supply the original warm index in "
+                    "StreamIncrementState, or delete the partial "
+                    "directory for a genuine cold start."
                 )
-            if want == -1 and had_initial:
-                # restart of batch 0: the PERSISTED initial version is
-                # the source of truth — a cold StreamIncrementState
-                # (empty index) must not shadow a warm-start initial
-                # written by the original process
-                index_in = spark.read.parquet(initial)
-            elif state.last_batch == want:
-                # fast path: for want >= 0 the in-memory frame was read
-                # back from the persisted version, so memory == disk
-                index_in = state.index
-            else:  # restart or in-session replay: read the version
-                index_in = spark.read.parquet(_version_path(index_dir, want))
-        elif state.last_batch == batch_id - 1:
-            index_in = state.index
-        else:
-            raise RuntimeError(
-                f"batch {batch_id} needs index version {batch_id - 1} but "
-                f"in-memory state is at {state.last_batch} and no "
-                "index_dir was configured — cannot replay/restart "
-                "safely; pass index_dir (versioned index) or restart "
-                "from a fresh checkpoint"
+            # pin the signature config on the persisted version so a
+            # restart with a drifted config fails fast (the
+            # increment's ConfigMismatch guard reads this metadata)
+            pin_sig_config(state.index, cfg).write.mode("overwrite").parquet(
+                initial
             )
+        if want == -1 and had_initial:
+            # restart of batch 0: the PERSISTED initial version is
+            # the source of truth — a cold StreamIncrementState
+            # (empty index) must not shadow a warm-start initial
+            # written by the original process
+            index_in = spark.read.parquet(initial)
+        elif state.last_batch == want:
+            # fast path: for want >= 0 the in-memory frame was read
+            # back from the persisted version, so memory == disk
+            index_in = state.index
+        else:  # restart or in-session replay: read the version
+            index_in = spark.read.parquet(_version_path(index_dir, want))
 
         base_docs = None
         if docs_dir is not None:
@@ -277,16 +230,10 @@ def stream_dedup_increment(
             inc.merges.write.mode("overwrite").parquet(
                 os.path.join(merges_dir, f"batch={batch_id}")
             )
-        if index_dir is not None:
-            # every persisted version carries the sig-config pin, even
-            # when the run started from an unpinned in-memory index
-            pin_sig_config(inc.index, cfg).write.mode("overwrite").parquet(
-                _version_path(index_dir, batch_id)
-            )
-            # read back: the persisted version is the lineage cut
-            state.index = spark.read.parquet(_version_path(index_dir, batch_id))
-        else:
-            state.index = inc.index.localCheckpoint(eager=True)
+        # the increment's index carries the sig-config pin
+        inc.index.write.mode("overwrite").parquet(_version_path(index_dir, batch_id))
+        # read back: the persisted version is the lineage cut
+        state.index = spark.read.parquet(_version_path(index_dir, batch_id))
         state.last_batch = batch_id
         # per-batch candidate accounting (dropped pairs etc.):
         # state.batch_metrics[batch_id]["minhash_candidates"]

@@ -122,8 +122,8 @@ def test_init_and_probe_roundtrip(cli_run):
     for src, new in cli_run["truth"].items():
         assert inc.loc[new, "cluster_id"] == base.loc[src, "cluster_id"]
 
-    # updated index: base ∪ batch memberships, sig pin re-stamped so a
-    # chained probe still gets the ConfigMismatch guard
+    # updated index: base ∪ batch memberships, still pinned so a
+    # chained probe gets the ConfigMismatch guard
     sys.path.insert(0, REPO)
     from deduplication_spark.config import DedupConfig
     from deduplication_spark.increment import _sig_fingerprint

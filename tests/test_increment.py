@@ -16,8 +16,11 @@ from deduplication_spark.corpus import generate_corpus, write_corpus
 from deduplication_spark.increment import (
     build_index,
     dedup_increment,
+    empty_index,
     index_from_enriched,
+    pin_sig_config,
 )
+from deduplication_spark.io import ConfigMismatch
 from deduplication_spark.pipeline import dedup
 
 N_DOCS = 800
@@ -76,11 +79,64 @@ def test_index_from_enriched_matches_build_index(split, inc_run):
     base_res, _ = inc_run
     cfg = DedupConfig()
     a = build_index(base_df, base_res.assignments, cfg)
-    b = index_from_enriched(base_res.enriched, base_res.assignments)
-    cols = ["member_id", "cluster_id", "content_hash", "minhash"]
-    assert sorted(map(tuple, a.select(*cols).collect())) == sorted(
-        map(tuple, b.select(*cols).collect())
+    b = index_from_enriched(base_res.enriched, base_res.assignments, cfg)
+    cols = [
+        "member_id", "cluster_id", "content_hash", "minhash", "simhash", "band_keys"
+    ]
+    assert a.columns == b.columns == cols
+    assert sorted(map(tuple, a.collect())) == sorted(map(tuple, b.collect()))
+
+
+def test_empty_index_has_the_index_schema(spark, inc_run):
+    """A cold-start index and a built one are the same shape, so every
+    increment probes one index format."""
+    base_res, _ = inc_run
+    built = index_from_enriched(base_res.enriched, base_res.assignments, DedupConfig())
+
+    def shape(df):
+        return [(f.name, f.dataType.simpleString()) for f in df.schema]
+
+    assert shape(empty_index(spark)) == shape(built)
+
+
+def test_index_missing_a_column_is_refused(spark, inc_run):
+    """An index without stored band keys is refused, not probed a
+    second way."""
+    _, inc = inc_run
+    nxt = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [30_000], "text": ["missing column batch"]})
     )
+    with pytest.raises(ValueError, match=r"lacks columns \['band_keys'\]"):
+        dedup_increment(spark, nxt, inc.index.drop("band_keys"), DedupConfig())
+
+
+def test_unpinned_index_is_refused(spark, inc_run):
+    """A non-empty index without the sig_cfg pin cannot prove its
+    signatures are comparable, so the increment refuses it."""
+    _, inc = inc_run
+    unpinned = inc.index.withColumn(
+        "minhash", F.col("minhash").alias("minhash", metadata={})
+    )
+    assert "sig_cfg" not in unpinned.schema["minhash"].metadata
+    nxt = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [40_000], "text": ["unpinned index batch"]})
+    )
+    with pytest.raises(ConfigMismatch, match="no signature config pin"):
+        dedup_increment(spark, nxt, unpinned, DedupConfig())
+
+
+def test_cold_start_increment_returns_a_pinned_index(spark):
+    """The empty cold-start index is unpinned; the index the increment
+    returns carries the pin, so persisting it needs no re-stamp."""
+    from deduplication_spark.increment import _sig_fingerprint
+
+    cfg = DedupConfig()
+    batch = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2], "text": ["cold start doc", "another one"]})
+    )
+    inc = dedup_increment(spark, batch, empty_index(spark), cfg)
+    assert inc.index.schema["minhash"].metadata["sig_cfg"] == _sig_fingerprint(cfg)
+    assert inc.index.count() == 2
 
 
 def test_every_new_doc_assigned(split, inc_run):
@@ -184,8 +240,6 @@ def test_updated_index_drives_next_increment(spark, split, inc_run):
 def test_config_mismatch_fails_fast(spark, split, inc_run):
     """An index built at one signature config must refuse a probe at
     another (silently incomparable signatures -> recall ~0 otherwise)."""
-    from deduplication_spark.io import ConfigMismatch
-
     base_res, inc = inc_run
     pinned = index_from_enriched(
         base_res.enriched, base_res.assignments, cfg=DedupConfig()
@@ -197,13 +251,16 @@ def test_config_mismatch_fails_fast(spark, split, inc_run):
     with pytest.raises(ConfigMismatch, match="signature config"):
         dedup_increment(spark, nxt, pinned, drifted)
 
-    # width mismatch is caught even without the metadata pin
-    unpinned = inc.index.select(
-        "member_id", "cluster_id", "content_hash",
-        F.slice("minhash", 1, 64).alias("minhash"),
-    )
-    with pytest.raises(ConfigMismatch, match="minhash width"):
+    # a sliced index without the pin is refused for the missing pin ...
+    unpinned = inc.index.withColumn("minhash", F.slice("minhash", 1, 64))
+    with pytest.raises(ConfigMismatch, match="no signature config pin"):
         dedup_increment(spark, nxt, unpinned, DedupConfig())
+    # ... and with a pin that does not match its widths, by the sampled
+    # width guard
+    with pytest.raises(ConfigMismatch, match="minhash width"):
+        dedup_increment(
+            spark, nxt, pin_sig_config(unpinned, DedupConfig()), DedupConfig()
+        )
 
 
 def test_empty_batch_short_circuits(spark, split, inc_run):
@@ -441,8 +498,9 @@ def test_increment_reports_candidate_accounting(spark, split, inc_run):
         "dropped_pairs",
     }
     assert m["n_buckets"] > 0 and m["dropped_pairs"] >= 0
-    # the fixture's index re-derives band keys from minhash (build_index)
-    # where this one stores them: same buckets, same accounting, same result
+    # the fixture's index is recomputed by build_index, this one is
+    # built from the enriched stage: the same stored band keys, so the
+    # same buckets, accounting and result
     _, derived = inc_run
     assert derived.metrics["minhash_candidates"] == m
     a = sorted(map(tuple, inc.assignments.collect()))

@@ -168,42 +168,6 @@ def test_replay_is_idempotent(spark, docs, streamed):
     )
 
 
-def test_replay_without_index_dir_fails_fast(spark, docs):
-    """In-memory-only mode cannot serve a replayed/rewound batch — the
-    handler must raise, not silently probe a wrong index. Reaches the
-    guard through the real foreachBatch path: a fresh source dir with
-    an existing checkpoint-less cold state but a forced batch gap is
-    impossible to stage via the public API, so assert the guard
-    directly."""
-    state = StreamIncrementState(index=empty_index(spark), last_batch=0)
-    # handler closure is private; the guard condition is the contract:
-    # batch 2 needs last_batch == 1
-    with pytest.raises(Exception, match="index version|restart"):
-        # simulate: the module raises RuntimeError inside handle();
-        # exercise via a tiny availableNow run whose checkpoint starts
-        # at batch 0 while state claims batch 0 already done
-        import tempfile
-
-        work = tempfile.mkdtemp(prefix="graft_replay_guard_")
-        src = os.path.join(work, "src")
-        docs.filter(F.col("doc_id") < 50).coalesce(1).write.parquet(src)
-        stream = spark.readStream.schema(docs.schema).parquet(src)
-        q = stream_dedup_increment(
-            stream,
-            state,
-            assignments_dir=os.path.join(work, "assignments"),
-            checkpoint_dir=os.path.join(work, "ckpt"),
-            trigger={"availableNow": True},
-        )
-        try:
-            q.awaitTermination(120)
-        finally:
-            q.stop()
-        raise RuntimeError(
-            f"expected the stream to fail; exception? {q.exception()}"
-        )
-
-
 def test_resolved_assignments_applies_merges(spark):
     """A batch-2 bridge doc merging two earlier clusters: the merge is
     folded into resolved_assignments even though batch 0/1 rows were
@@ -340,7 +304,7 @@ def test_stream_simhash_tier_catches_residual_pair(spark, tmp_path):
     kernel-searched residual pair (jaccard 0.783 -> minhash tier
     exact-verifies and REJECTS via docs_dir; hamming 3 -> simhash
     pigeonhole ACCEPTS) is caught across two microbatches from a
-    cold simhash-carrying index."""
+    cold-start index."""
     import pandas as pd
 
     toks = [f"t1158x{i}" for i in range(45)]
@@ -356,9 +320,7 @@ def test_stream_simhash_tier_catches_residual_pair(spark, tmp_path):
     ])
 
     cfg = DedupConfig()
-    state = StreamIncrementState(
-        index=empty_index(spark, cfg=cfg, with_simhash=True)
-    )
+    state = StreamIncrementState(index=empty_index(spark))
     out = tmp_path
     stream = (
         spark.readStream.schema("doc_id long, text string")
@@ -389,8 +351,8 @@ def test_stream_simhash_tier_catches_residual_pair(spark, tmp_path):
 
 
 def test_cold_start_index_stores_band_keys(spark, tmp_path):
-    """A cold start with `cfg` stores band keys like a warm
-    index_from_enriched(cfg=...) index: the persisted batch=0 version
+    """A cold start stores band keys like a warm
+    index_from_enriched(...) index: the persisted batch=0 version
     carries `band_keys`, non-null exactly for the docs with a
     signature, so later batches probe stored keys instead of
     re-deriving every member's."""
@@ -405,7 +367,7 @@ def test_cold_start_index_stores_band_keys(spark, tmp_path):
         }),
     ])
     cfg = DedupConfig()
-    state = StreamIncrementState(index=empty_index(spark, cfg=cfg))
+    state = StreamIncrementState(index=empty_index(spark))
     q = stream_dedup_increment(
         spark.readStream.schema("doc_id long, text string").parquet(src),
         state,
@@ -439,7 +401,7 @@ def test_pin_sig_never_overwrites_a_drifted_pin(spark, tmp_path):
 
     warm_cfg = DedupConfig()
     drifted = DedupConfig(hash_seed=0xBAD5EED)
-    warm = empty_index(spark, cfg=warm_cfg)
+    warm = pin_sig_config(empty_index(spark), warm_cfg)
 
     with pytest.raises(ConfigMismatch, match="pinned to signature config"):
         pin_sig_config(warm, drifted)

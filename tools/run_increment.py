@@ -26,13 +26,9 @@ Then, per crawl increment:
 built from a non-default run (the pin raises ConfigMismatch
 otherwise — by design, a drifted config silently zeroes LSH recall).
 
-`--index-out` writes the UPDATED index (base ∪ new memberships) with
-the signature-config fingerprint re-pinned on the minhash column —
-the pin does not survive the union inside dedup_increment, and a
-future `probe` against an unpinned index would lose the
-ConfigMismatch fail-fast that protects LSH recall from silent config
-drift. Cluster merges caused by bridging docs are printed (and
-written next to the assignments), never applied silently.
+`--index-out` writes the UPDATED index (base ∪ new memberships).
+Cluster merges caused by bridging docs are printed (and written next
+to the assignments), never applied silently.
 
 Also runnable as plain `python tools/run_increment.py ...` (the local
 session factory ships the package via addPyFile when spark-submit
@@ -75,11 +71,7 @@ def main() -> None:
     args = ap.parse_args()
 
     from deduplication_spark.config import DedupConfig
-    from deduplication_spark.increment import (
-        dedup_increment,
-        index_from_enriched,
-        pin_sig_config,
-    )
+    from deduplication_spark.increment import dedup_increment, index_from_enriched
     from deduplication_spark.io import StageStore
 
     spark = resolve_session("dedup_increment", args.cores)
@@ -133,13 +125,7 @@ def main() -> None:
             args.assignments_out.rstrip("/") + "_merges"
         )
     if args.index_out:
-        # validate-then-stamp (shared pin_sig_config): dedup_increment
-        # already guarded the input pin in this same process, and the
-        # union inside it drops column metadata, so the updated index
-        # must be re-pinned before writing
-        pin_sig_config(inc.index, cfg).write.mode("overwrite").parquet(
-            args.index_out
-        )
+        inc.index.write.mode("overwrite").parquet(args.index_out)
     print(
         json.dumps(
             {
