@@ -10,7 +10,8 @@ src/dictionary.c:49-78) re-expressed Spark-first:
                     memcmp probe loop, dictionary.c:49-59)
 - near tiers      = MinHash-LSH banding, SimHash Hamming buckets,
                     content-defined chunk fingerprints (long verbatim spans)
-- clustering      = large-star/small-star connected components on DataFrames
+- clustering      = union-find connected components: a numpy kernel per
+                    edge partition, rounds re-keyed by node
 - canonical ID    = min(doc_id) per cluster (replaces first-occurrence ID,
                     dictionary.c:75-77 — Spark has no arrival order)
 - manifest        = assignments(doc_id, cluster_id, is_canonical)

@@ -55,7 +55,7 @@ from .config import DedupConfig
 from .functions.hashing import band_key_col
 from .io import ConfigMismatch
 from .operators.candidates import probe_pairs
-from .operators.components import component_assignments, connected_components
+from .operators.components import component_assignments, label_components
 from .operators.exact import exact_edges
 from .operators.minhash_lsh import band_key_buckets, minhash_near_edges
 from .operators.simhash import simhash_chunk_buckets, verify_hamming
@@ -246,7 +246,8 @@ def dedup_increment(
     full run. Documented trade for running increments without
     base-corpus access.
 
-    `metrics` always carries `n_new_docs`, and for each candidate tier
+    `metrics` always carries `n_new_docs`, `cc_rounds` (union-find
+    rounds of the components), and for each candidate tier
     that runs its bucket accounting over the touched buckets
     (`minhash_candidates`, `simhash_candidates`: n_buckets,
     n_capped_buckets, n_candidate_edges, dropped_pairs) — the same
@@ -453,11 +454,12 @@ def dedup_increment(
 
     # --- components over the increment edge set ------------------------
     edges = exact_old.union(exact_new).union(near_lifted)
-    comp = connected_components(
+    comp, metrics["cc_rounds"] = label_components(
         edges.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-        max_iterations=cfg.cc_max_iterations,
-        checkpoint_mode=cfg.cc_checkpoint_mode,
-    ).localCheckpoint(eager=True)
+        cfg.cc_max_iterations,
+        cfg.cc_checkpoint_mode,
+    )
+    comp = comp.localCheckpoint(eager=True)
     # the components run materialized every candidate frame above
     metrics.update({k: o.get for k, o in accounting.items()})
 

@@ -43,7 +43,7 @@ from .functions.hashing import make_enrich_udf
 from .functions.text import token_count
 from .io import MemoryStore, StageStore
 from .operators.candidates import bucket_pairs
-from .operators.components import component_assignments, connected_components
+from .operators.components import component_assignments, label_components
 from .operators.exact import exact_edges, with_content_key
 from .operators.minhash_lsh import band_key_buckets, minhash_near_edges
 from .operators.simhash import simhash_chunk_buckets, verify_hamming
@@ -59,7 +59,8 @@ class DedupResult:
     `metrics` is complete on every run, at no Spark job of its own:
     `{stage}_rows` for each stage, `{tier}_candidates` (n_buckets,
     n_capped_buckets, n_candidate_edges, dropped_pairs) for each capped
-    tier, `n_docs`, `n_duplicates`, `n_canonical`, `dup_ratio`, plus
+    tier, `cc_rounds` (union-find rounds of the components), `n_docs`,
+    `n_duplicates`, `n_canonical`, `dup_ratio`, plus
     `{stage}_resumed` for each stage a StageStore run read back (which
     reports the metrics its first computation stored)."""
 
@@ -158,8 +159,9 @@ def dedup(
     def _stage(name: str, build, *aggs) -> DataFrame:
         """Run-or-resume one stage; returns the materialized DataFrame.
 
-        build() returns the stage frame, or (frame, {metric: Observation})
-        for Observations deeper in its plan (bucket accounting). The row
+        build() returns the stage frame, or (frame, {metric: value}) where
+        a value is an Observation deeper in its plan (bucket accounting)
+        or a number build() already knows (CC rounds). The row
         count and `aggs` are observed on the frame handed to store.write,
         so every Observation resolves when that write returns. A resumed
         stage reports what its `computed` lineage record stored and runs
@@ -179,7 +181,13 @@ def dedup(
                 name,
                 frame.observe(rows, F.count(F.lit(1)).alias(f"{name}_rows"), *aggs),
             )
-            got = {**rows.get, **{k: o.get for k, o in observed.items()}}
+            got = {
+                **rows.get,
+                **{
+                    k: o.get if isinstance(o, Observation) else o
+                    for k, o in observed.items()
+                },
+            }
         with _mx:
             store.log_lineage(
                 name,
@@ -339,13 +347,13 @@ def dedup(
         edges = spark.createDataFrame([], "a long, b long, tier string")
 
     # ---- connected components -> assignments ---------------------------
-    def build_assignments() -> DataFrame:
-        comp = connected_components(
+    def build_assignments() -> tuple:
+        comp, rounds = label_components(
             edges.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-            max_iterations=cfg.cc_max_iterations,
-            checkpoint_mode=cfg.cc_checkpoint_mode,
+            cfg.cc_max_iterations,
+            cfg.cc_checkpoint_mode,
         )
-        return component_assignments(base, comp)
+        return component_assignments(base, comp), {"cc_rounds": rounds}
 
     assignments = _stage(
         "assignments",

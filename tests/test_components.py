@@ -5,7 +5,12 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from deduplication_spark.operators.components import connected_components
+from deduplication_spark.operators import components
+from deduplication_spark.operators.components import (
+    _uf_kernel,
+    connected_components,
+    label_components,
+)
 
 
 def _uf_oracle(edges, nodes):
@@ -131,3 +136,85 @@ def test_cc_reliable_checkpoint_mode_identical(spark, tmp_path):
 
     with pytest.raises(ValueError, match="checkpoint_mode"):
         connected_components(df, checkpoint_mode="bogus")
+
+
+# ---- the union-find kernel, called directly on pandas batches --------
+
+
+def _kernel(*batches):
+    """{node: root} from `_uf_kernel` over (src, dst) edge batches."""
+    frames = [pd.DataFrame(b, columns=["src", "dst"], dtype="int64") for b in batches]
+    out = list(_uf_kernel(iter(frames)))
+    got = pd.concat(out) if out else pd.DataFrame({"node": [], "root": []})
+    assert not got["node"].duplicated().any()
+    return dict(zip(got["node"].tolist(), got["root"].tolist()))
+
+
+def _kernel_vs_oracle(*batches):
+    edges = [tuple(e) for b in batches for e in b]
+    nodes = sorted({x for e in edges for x in e})
+    assert _kernel(*batches) == _uf_oracle(edges, nodes)
+
+
+def _permuted_chain(n, seed):
+    perm = np.random.default_rng(seed).permutation(n) * 7 + 3
+    edges = [(int(perm[i]), int(perm[i + 1])) for i in range(n - 1)]
+    return [edges[i] for i in np.random.default_rng(seed + 1).permutation(n - 1)]
+
+
+def test_kernel_empty():
+    assert _kernel() == {}
+    assert _kernel([]) == {}
+
+
+def test_kernel_duplicate_edges():
+    _kernel_vs_oracle([(1, 2), (2, 1), (1, 2), (5, 9), (9, 5)])
+
+
+def test_kernel_self_loop_only_node():
+    assert _kernel([(5, 5)]) == {5: 5}
+    assert _kernel([(1, 2), (2, 2), (7, 7)]) == {1: 1, 2: 1, 7: 7}
+
+
+def test_kernel_permuted_chain():
+    _kernel_vs_oracle(_permuted_chain(5000, 3))
+
+
+def test_kernel_star():
+    _kernel_vs_oracle([(1000 - i, 10**12) for i in range(1000)])
+
+
+def test_kernel_batches_in_one_partition():
+    chain = _permuted_chain(3000, 5)
+    _kernel_vs_oracle(chain[:1000], chain[1000:2000], [], chain[2000:])
+
+
+# ---- several union-find rounds: round 2+ and the label composition -----
+
+
+def _multi_round(spark, edges, n_part):
+    nodes = sorted({x for e in edges for x in e})
+    df = spark.createDataFrame(
+        pd.DataFrame(edges, columns=["src", "dst"])
+    ).repartition(n_part)
+    comp, rounds = label_components(df, 50, "local")
+    got = {r["node"]: r["component"] for r in comp.collect()}
+    assert got == _uf_oracle(edges, nodes)
+    return rounds
+
+
+def test_cc_multi_round(spark, monkeypatch):
+    """With a tiny EDGES_PER_TASK every partition is its own kernel
+    task, so local components only meet in later rounds."""
+    monkeypatch.setattr(components, "EDGES_PER_TASK", 50)
+    assert _multi_round(spark, _permuted_chain(2000, 9), 16) >= 2
+    star = [(int(x), 500) for x in np.random.default_rng(2).permutation(1000)]
+    assert _multi_round(spark, star, 16) >= 2
+    for seed, n_nodes, n_edges in [(0, 50, 40), (1, 200, 150), (2, 500, 700)]:
+        rng = np.random.default_rng(seed)
+        edges = [
+            (int(a), int(b))
+            for a, b in rng.integers(0, n_nodes, size=(n_edges, 2))
+            if a != b
+        ]
+        _multi_round(spark, edges, 13)

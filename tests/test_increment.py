@@ -508,6 +508,17 @@ def test_increment_reports_candidate_accounting(spark, split, inc_run):
     assert a == b
 
 
+def test_cc_rounds_reported(inc_run):
+    """Both paths report their union-find rounds; each graph here fits
+    one kernel task, so one round. A full run logs it on the
+    `assignments` lineage record, which a resume reads back."""
+    base_res, inc = inc_run
+    assert base_res.metrics["cc_rounds"] == 1
+    assert inc.metrics["cc_rounds"] == 1
+    rec = [r for r in base_res.lineage if r["stage"] == "assignments"]
+    assert rec[0]["metrics"]["cc_rounds"] == 1
+
+
 @pytest.mark.parametrize("flip_from,n_buckets", [(3, 56), (4, 4)])
 def test_increment_simhash_chunks_follow_corpus_size(spark, flip_from, n_buckets):
     """The simhash probe applies the pigeonhole auto-flip at the size of
