@@ -30,8 +30,7 @@ class DedupConfig:
     bands: int = 32
     rows_per_band: int = 4      # bands * rows_per_band == num_perm
 
-    # --- SimHash ---
-    simhash_bits: int = 64
+    # --- SimHash (64-bit fingerprints) ---
     hamming_radius: int = 3
     simhash_chunks: int = 4     # pigeonhole chunks; radius < chunks, 64 % chunks
                                 # == 0. Buckets key on every (chunks-radius)-
@@ -98,8 +97,9 @@ class DedupConfig:
                                 #  compressor.c:88-93: explicit, logged)
 
     # --- skew handling ---
-    bucket_pair_cap: int = 200  # buckets larger than this use star-linking
-                                # to the min doc_id instead of all-pairs
+    bucket_pair_cap: int = 200  # a bucket's first `cap` members (by doc_id)
+                                # get all pairs; each later member chain-links
+                                # to its predecessor (operators/candidates.py)
 
     # --- connected components ---
     cc_max_iterations: int = 50  # union-find rounds before RuntimeError
@@ -118,7 +118,6 @@ class DedupConfig:
 
     # --- execution ---
     shuffle_partitions: int = 32
-    arrow_max_records: int = 2048
 
     extra: dict = field(default_factory=dict)
 
@@ -145,8 +144,8 @@ class DedupConfig:
             raise ValueError(
                 "pigeonhole needs 0 <= hamming_radius < simhash_chunks"
             )
-        if self.simhash_bits % self.simhash_chunks != 0:
-            raise ValueError("simhash_chunks must divide simhash_bits")
+        if 64 % self.simhash_chunks != 0:
+            raise ValueError("simhash_chunks must divide 64")
         from math import comb
 
         n_combos = comb(self.simhash_chunks, self.simhash_chunks - self.hamming_radius)
@@ -159,8 +158,6 @@ class DedupConfig:
                 f"{n_combos} combinatorial bucket keys per doc (max 256); "
                 "use fewer chunks or a smaller radius"
             )
-        if self.simhash_bits != 64:
-            raise ValueError("only 64-bit SimHash is implemented")
         if not (0 < self.chunk_min_len <= self.chunk_avg_len <= self.chunk_max_len):
             raise ValueError("chunk lengths must satisfy min <= avg <= max")
         if self.chunk_avg_len & (self.chunk_avg_len - 1):

@@ -166,8 +166,8 @@ def shingle_hashes(text: Column | str, k: int, seed: int) -> Column:
     return make_shingle_udf(k, seed)(c)
 
 
-def gram_rows(df, k: int, seed: int, id_col: str = "doc_id", text_col: str = "text"):
-    """(id, text) frame -> exploded (id, n, g) gram-membership rows via
+def gram_rows(df, k: int, seed: int):
+    """(doc_id, text) frame -> exploded (doc_id, n, g) gram-membership rows via
     mapInPandas: one row per DISTINCT k-shingle per doc, with the doc's
     distinct-shingle count n riding along.
 
@@ -188,7 +188,7 @@ def gram_rows(df, k: int, seed: int, id_col: str = "doc_id", text_col: str = "te
     mul, add = shingle_hash_params(seed)
     schema = StructType(
         [
-            StructField(id_col, LongType()),
+            StructField("doc_id", LongType()),
             StructField("n", IntegerType()),
             StructField("g", LongType()),
         ]
@@ -198,13 +198,11 @@ def gram_rows(df, k: int, seed: int, id_col: str = "doc_id", text_col: str = "te
         err = np.seterr(over="ignore")
         try:
             for pdf in it:
-                sdoc, sh, n_rows = _shingle_flat(
-                    pdf[text_col], k, mul, add
-                )
+                sdoc, sh, n_rows = _shingle_flat(pdf["text"], k, mul, add)
                 counts = np.bincount(sdoc, minlength=n_rows)
                 yield pd.DataFrame(
                     {
-                        id_col: pdf[id_col].values[sdoc],
+                        "doc_id": pdf["doc_id"].values[sdoc],
                         "n": counts[sdoc].astype(np.int32),
                         "g": sh.view(np.int64),
                     }
@@ -212,7 +210,7 @@ def gram_rows(df, k: int, seed: int, id_col: str = "doc_id", text_col: str = "te
         finally:
             np.seterr(**err)
 
-    return df.select(id_col, text_col).mapInPandas(emit, schema)
+    return df.select("doc_id", "text").mapInPandas(emit, schema)
 
 
 def make_shingle_count_udf(k: int, seed: int):

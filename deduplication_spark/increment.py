@@ -397,17 +397,23 @@ def dedup_increment(
                     F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
                 )
             )
+        # the index's ~1 KB/row minhash column is the probe's dominant
+        # read: materialize the pairs and semi-join the signatures down
+        # to the ids they touch (ONE index scan), so both estimate
+        # joins read that small slice instead of the whole index.
+        # Result-identical: the joins only ever read those ids
+        pairs = cand.pairs.localCheckpoint(eager=True)
+        ids = (
+            pairs.select(F.col("a").alias("doc_id"))
+            .union(pairs.select(F.col("b").alias("doc_id")))
+            .distinct()
+        )
+        sigs = sigs.join(ids, "doc_id", "left_semi").localCheckpoint(eager=True)
         # the SAME decision procedure as the full pipeline (shared
         # helper — see minhash_near_edges); texts=None decides
         # borderline pairs by the estimate at the threshold (documented
-        # trade in the docstring). prefilter_sigs: the index minhash
-        # column is the probe's dominant read — slice it to the pair
-        # ids once instead of streaming it through both estimate joins
-        near_frames.append(
-            minhash_near_edges(
-                cand.pairs, sigs, cfg, texts=texts, prefilter_sigs=True
-            )
-        )
+        # trade in the docstring)
+        near_frames.append(minhash_near_edges(pairs, sigs, cfg, texts=texts))
 
     if "simhash" in tiers:
         # --- tier 3: SimHash pigeonhole, probe-shaped ------------------

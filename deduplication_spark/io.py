@@ -53,23 +53,25 @@ def _lineage_record(
     return rec
 
 
+def _require_local(path: str | None, what: str) -> None:
+    """ValueError naming `what` when `path` is a URI (s3://, hdfs://,
+    even file://). Resume, config pins and stream versions are resolved
+    with os.path, which reports every scheme-qualified path as missing:
+    a resume would silently recompute every stage and never check its
+    config, and a stream would overwrite its initial index each batch.
+    A remote deployment backs these dirs with Iceberg table snapshots
+    or mounts the store locally."""
+    if path is not None and "://" in path:
+        raise ValueError(
+            f"{what}={path!r}: URI schemes are not supported — this "
+            "store is resolved via the local filesystem (os.path); use a "
+            "plain local path or an Iceberg-backed deployment"
+        )
+
+
 class StageStore:
     def __init__(self, spark: SparkSession, run_dir: str, cfg: DedupConfig):
-        if "://" in run_dir:
-            # the resume contract (exists()/_SUCCESS) and the config
-            # pin are resolved via the LOCAL filesystem; with an
-            # s3://-style run_dir, os.makedirs would create a stray
-            # local directory literally named "s3:/...", exists() would
-            # always be False (every "resume" silently recomputes all
-            # stages), and a config drift would never raise. Loud beats
-            # silently-broken: a remote deployment backs stages with
-            # Iceberg snapshots (module docstring) or mounts the store.
-            raise ValueError(
-                f"run_dir={run_dir!r}: URI schemes are not supported — "
-                "StageStore resolves resume/config-pinning via the local "
-                "filesystem; use a plain local path or an Iceberg-backed "
-                "deployment"
-            )
+        _require_local(run_dir, "run_dir")
         self.spark = spark
         self.run_dir = run_dir
         self.cfg = cfg

@@ -5,7 +5,7 @@ similarity buckets (LSH bands, SimHash chunks, content chunks).
 
 Design (SURVEY.md §4.2 item 1):
 
-1. Rows arrive as (id, *key_cols) — one row per (doc, bucket) membership.
+1. Rows arrive as (doc_id, *key_cols) — one row per (doc, bucket) membership.
 2. A window over the bucket key ranks members by id. This is a sort-based
    shuffle: hot keys (boilerplate buckets at web scale) spill instead of
    OOM-ing a hash aggregate.
@@ -57,12 +57,10 @@ class CandidateResult:
 
 
 def bucket_pairs(
-    bucketed: DataFrame,
-    key_cols: list[str],
-    id_col: str = "doc_id",
-    cap: int = 200,
+    bucketed: DataFrame, key_cols: list[str], cap: int = 200
 ) -> CandidateResult:
-    """(id, *key) bucket memberships -> distinct candidate pairs (a, b), a<b.
+    """(doc_id, *key) bucket memberships -> distinct candidate pairs
+    (a, b), a<b.
 
     `cap` bounds the all-pairs expansion per bucket; the overflow is
     chain-linked (connectivity-preserving). The bucket accounting is an
@@ -72,7 +70,7 @@ def bucket_pairs(
     `accounting.get` only after such a job has run; it blocks until then.
     """
     _keep_deep_observations(bucketed.sparkSession)
-    w = Window.partitionBy(*key_cols).orderBy(id_col)
+    w = Window.partitionBy(*key_cols).orderBy("doc_id")
     # bucket size alongside the rank: both window functions share one
     # partition+sort pass (same window spec, whole-partition frame for
     # the count), so filtering singleton buckets costs nothing extra —
@@ -88,10 +86,10 @@ def bucket_pairs(
     )
     accounting = Observation()
     ranked = (
-        bucketed.select(id_col, *key_cols)
+        bucketed.select("doc_id", *key_cols)
         .withColumn("_rn", F.row_number().over(w))
         .withColumn("_m", F.count(F.lit(1)).over(wm))
-        .withColumn("_prev", F.lag(id_col).over(w))
+        .withColumn("_prev", F.lag("doc_id").over(w))
         .observe(
             accounting,
             F.count_if(first).alias("n_buckets"),
@@ -106,7 +104,7 @@ def bucket_pairs(
     head = (
         ranked.filter((F.col("_m") >= 2) & (F.col("_rn") <= cap))
         .groupBy(*key_cols)
-        .agg(F.sort_array(F.collect_list(id_col)).alias("_ids"))
+        .agg(F.sort_array(F.collect_list("doc_id")).alias("_ids"))
     )
     head_pairs = (
         head.filter(F.size("_ids") >= 2)
@@ -115,8 +113,8 @@ def bucket_pairs(
     )
 
     tail = ranked.filter(F.col("_rn") > cap).select(
-        F.least("_prev", id_col).alias("a"),
-        F.greatest("_prev", id_col).alias("b"),
+        F.least("_prev", "doc_id").alias("a"),
+        F.greatest("_prev", "doc_id").alias("b"),
     )
 
     pairs = head_pairs.union(tail).filter(F.col("a") != F.col("b")).distinct()
@@ -184,13 +182,10 @@ def _total(col):
 
 
 def estimate_prefilter(
-    pairs: DataFrame,
-    signatures: DataFrame,
-    id_col: str = "doc_id",
-    sig_col: str = "minhash",
-    min_estimate: float = 0.5,
+    pairs: DataFrame, signatures: DataFrame, min_estimate: float = 0.5
 ) -> DataFrame:
-    """Cheap MinHash-estimate screen before exact verification.
+    """Cheap MinHash-estimate screen before exact verification;
+    `signatures` = (doc_id, minhash).
 
     est = fraction of equal signature components (the MinHash Jaccard
     estimator, sigma = sqrt(j(1-j)/num_perm) ~ 0.035 at num_perm=128).
@@ -200,7 +195,7 @@ def estimate_prefilter(
     before the expensive shingle-array join: signatures are ~1 KB/row
     vs ~7 KB/row for shingle sets at 1k tokens.
     """
-    s = signatures.select(F.col(id_col).alias("_sid"), F.col(sig_col).alias("_sv"))
+    s = signatures.select(F.col("doc_id").alias("_sid"), F.col("minhash").alias("_sv"))
     eq = F.size(
         F.filter(
             F.zip_with("_sa", "_sb", lambda x, y: x == y), lambda m: m
@@ -216,20 +211,16 @@ def estimate_prefilter(
 
 
 def verify_jaccard(
-    pairs: DataFrame,
-    features: DataFrame,
-    id_col: str = "doc_id",
-    feature_col: str = "shingles",
-    threshold: float = 0.8,
+    pairs: DataFrame, features: DataFrame, threshold: float = 0.8
 ) -> DataFrame:
     """Exact set-Jaccard verification of candidate pairs.
 
-    `features[feature_col]` must be a DISTINCT-element array (shingle
-    hashes). Jaccard = |A∩B| / (|A|+|B|-|A∩B|) via array_intersect —
+    `features` = (doc_id, shingles), a DISTINCT-element array of shingle
+    hashes. Jaccard = |A∩B| / (|A|+|B|-|A∩B|) via array_intersect —
     built-in, codegen'd. Returns (a, b, jaccard) for pairs >= threshold.
 
     Scale note: two shuffle joins on the id; the feature table is
-    projected to (id, features) only, so the shuffle never carries text.
+    projected to (doc_id, shingles) only, so the shuffle never carries text.
     Run estimate_prefilter first when candidate volume is high.
 
     The pairs are explicitly repartitioned first: array_intersect cost is
@@ -239,9 +230,7 @@ def verify_jaccard(
     """
     spark = pairs.sparkSession
     pairs = pairs.repartition(2 * spark.sparkContext.defaultParallelism, "a")
-    f = features.select(
-        F.col(id_col).alias("_fid"), F.col(feature_col).alias("_fv")
-    )
+    f = features.select(F.col("doc_id").alias("_fid"), F.col("shingles").alias("_fv"))
     fa = f.select(F.col("_fid").alias("a"), F.col("_fv").alias("_va"))
     fb = f.select(F.col("_fid").alias("b"), F.col("_fv").alias("_vb"))
     inter = F.size(F.array_intersect("_va", "_vb"))

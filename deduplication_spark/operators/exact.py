@@ -22,12 +22,9 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
-def with_content_hash(df: DataFrame, text_col: str = "text") -> DataFrame:
-    return df.withColumn("content_hash", F.sha2(F.col(text_col), 256))
-
-
-def with_content_key(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """128-bit BINARY content key: the first 16 bytes of sha2-256.
+def with_content_key(df: DataFrame) -> DataFrame:
+    """Adds the 128-bit BINARY content key of `text`: the first 16
+    bytes of sha2-256.
 
     The pipeline-internal representation (exact-tier shuffle, increment
     index): equality-equivalent to the full hash at any realistic scale
@@ -36,14 +33,13 @@ def with_content_key(df: DataFrame, text_col: str = "text") -> DataFrame:
     key-width cut on the tier's only shuffle. User-facing surfaces
     (q_exact_dedup and its DuckDB oracle) keep the hex form."""
     return df.withColumn(
-        "content_hash", F.substring(F.unhex(F.sha2(F.col(text_col), 256)), 1, 16)
+        "content_hash", F.substring(F.unhex(F.sha2(F.col("text"), 256)), 1, 16)
     )
 
 
-def exact_assignments(
-    docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
-    """(doc_id, content_hash, cluster_id, is_canonical) — one row per doc.
+def exact_assignments(docs: DataFrame) -> DataFrame:
+    """(doc_id, content_hash, cluster_id, is_canonical) — one row per
+    (doc_id, text) doc; content_hash is the hex sha2-256 of the text.
 
     cluster_id = min(doc_id) over identical content; is_canonical marks the
     cluster representative (the dictionary entry, dictionary.c:61-78).
@@ -58,15 +54,14 @@ def exact_assignments(
     """
     w = Window.partitionBy("content_hash")
     return (
-        with_content_hash(docs.select(id_col, text_col), text_col)
-        .select(id_col, "content_hash")
+        docs.select("doc_id", F.sha2(F.col("text"), 256).alias("content_hash"))
         .withColumn(
             "cluster_id",
-            F.when(F.col("content_hash").isNull(), F.col(id_col)).otherwise(
-                F.min(id_col).over(w)
+            F.when(F.col("content_hash").isNull(), F.col("doc_id")).otherwise(
+                F.min("doc_id").over(w)
             ),
         )
-        .withColumn("is_canonical", F.col(id_col) == F.col("cluster_id"))
+        .withColumn("is_canonical", F.col("doc_id") == F.col("cluster_id"))
     )
 
 

@@ -33,12 +33,11 @@ from ..functions.text import shingle_hashes
 from .candidates import estimate_prefilter, verify_jaccard
 
 
-def with_shingles(
-    docs: DataFrame, cfg: DedupConfig, text_col: str = "text"
-) -> DataFrame:
-    """Adds `shingles` (distinct hashed k-grams; empty for short docs)."""
+def with_shingles(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
+    """Adds `shingles` of `text` (distinct hashed k-grams; empty for
+    short docs)."""
     return docs.withColumn(
-        "shingles", shingle_hashes(text_col, cfg.shingle_k, cfg.hash_seed)
+        "shingles", shingle_hashes("text", cfg.shingle_k, cfg.hash_seed)
     )
 
 
@@ -48,7 +47,7 @@ def with_minhash(docs_with_shingles: DataFrame, cfg: DedupConfig) -> DataFrame:
     return docs_with_shingles.withColumn("minhash", udf(F.col("shingles")))
 
 
-def band_buckets(docs_with_minhash: DataFrame, cfg: DedupConfig, id_col: str = "doc_id") -> DataFrame:
+def band_buckets(docs_with_minhash: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(doc_id, band_idx, band_hash) — one row per (doc, band).
 
     Short docs (NULL minhash — the partial-block analog,
@@ -58,7 +57,7 @@ def band_buckets(docs_with_minhash: DataFrame, cfg: DedupConfig, id_col: str = "
     return (
         docs_with_minhash.filter(F.col("minhash").isNotNull())
         .select(
-            id_col,
+            "doc_id",
             F.posexplode(
                 band_hash_col("minhash", cfg.rows_per_band, cfg.bands, cfg.hash_seed)
             ).alias("band_idx", "band_hash"),
@@ -66,9 +65,7 @@ def band_buckets(docs_with_minhash: DataFrame, cfg: DedupConfig, id_col: str = "
     )
 
 
-def band_key_buckets(
-    docs_with_minhash: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
-) -> DataFrame:
+def band_key_buckets(docs_with_minhash: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(doc_id, band_key) — compact membership frame for the candidate
     path: one combined 8-byte key per (doc, band) instead of the
     (band_idx, band_hash) pair `band_buckets` emits for inspection.
@@ -76,7 +73,7 @@ def band_key_buckets(
     rows), so key bytes per row are the scale lever; see
     functions.hashing.band_key_col for the collision analysis."""
     return docs_with_minhash.filter(F.col("minhash").isNotNull()).select(
-        id_col,
+        "doc_id",
         F.explode(
             band_key_col("minhash", cfg.rows_per_band, cfg.bands, cfg.hash_seed)
         ).alias("band_key"),
@@ -88,8 +85,6 @@ def minhash_near_edges(
     signatures: DataFrame,
     cfg: DedupConfig,
     texts: DataFrame | None = None,
-    id_col: str = "doc_id",
-    prefilter_sigs: bool = False,
 ) -> DataFrame:
     """Estimate-screen + verify candidate pairs -> (a, b) near edges.
 
@@ -108,35 +103,13 @@ def minhash_near_edges(
     at the threshold itself — unbiased, but a pair within ~sigma can
     flip vs a verified run (documented trade, increment.py).
 
-    `signatures` = (id_col, minhash); `texts` = (id_col, text) —
+    `signatures` = (doc_id, minhash); `texts` = (doc_id, text) —
     shingles are recomputed for the borderline DOCS only (storing them
     corpus-wide costs ~7 KB/row, rivaling the corpus itself).
-
-    `prefilter_sigs=True` (r06, the increment's probe path): when the
-    signature table is a LARGE stored index (~1 KB of minhash per row),
-    the two estimate joins would each stream the full table against the
-    broadcast pair set — twice the index's dominant column per
-    increment. Materialize the pairs, semi-join the signature table
-    down to just the ids the pairs touch (ONE index scan), checkpoint
-    that small slice, and let both estimate joins read the slice.
-    Result-identical (the joins only ever read those ids); off by
-    default because the full pipeline's signature frame is already a
-    small in-memory checkpoint where the extra pass is pure overhead.
     """
-    if prefilter_sigs:
-        pairs = pairs.localCheckpoint(eager=True)
-        ids = (
-            pairs.select(F.col("a").alias(id_col))
-            .union(pairs.select(F.col("b").alias(id_col)))
-            .distinct()
-        )
-        signatures = signatures.join(
-            ids, id_col, "left_semi"
-        ).localCheckpoint(eager=True)
     screened = estimate_prefilter(
         pairs,
         signatures,
-        id_col=id_col,
         min_estimate=max(
             0.0, cfg.jaccard_verify_threshold - cfg.est_reject_margin
         ),
@@ -151,8 +124,8 @@ def minhash_near_edges(
             ).select("a", "b")
         )
     border_ids = (
-        borderline.select(F.col("a").alias(id_col))
-        .union(borderline.select(F.col("b").alias(id_col)))
+        borderline.select(F.col("a").alias("doc_id"))
+        .union(borderline.select(F.col("b").alias("doc_id")))
         .distinct()
     )
     # eager checkpoint (r06): verify_jaccard joins this frame on BOTH
@@ -161,14 +134,13 @@ def minhash_near_edges(
     # full passes over the corpus text). The frame is tiny (borderline
     # docs only) — one materialization, two cheap reads.
     border_shingles = (
-        with_shingles(texts.join(border_ids, id_col), cfg)
-        .select(id_col, "shingles")
+        with_shingles(texts.join(border_ids, "doc_id"), cfg)
+        .select("doc_id", "shingles")
         .localCheckpoint(eager=True)
     )
     verified = verify_jaccard(
         borderline.select("a", "b"),
         border_shingles,
-        id_col=id_col,
         threshold=cfg.jaccard_verify_threshold,
     )
     return accepted.select("a", "b").union(verified.select("a", "b"))

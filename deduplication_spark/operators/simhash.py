@@ -33,9 +33,7 @@ def with_simhash(docs_with_shingles: DataFrame) -> DataFrame:
     return docs_with_shingles.withColumn("simhash", udf(F.col("shingles")))
 
 
-def simhash_chunk_buckets(
-    docs_with_simhash: DataFrame, cfg: DedupConfig, id_col: str = "doc_id"
-) -> DataFrame:
+def simhash_chunk_buckets(docs_with_simhash: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(doc_id, chunk_idx, chunk_val): COMBINATORIAL pigeonhole keys.
 
     Split the fingerprint into c = simhash_chunks equal chunks of
@@ -79,7 +77,7 @@ def simhash_chunk_buckets(
         return (
             docs_with_simhash.filter(sh.isNotNull())
             .select(
-                id_col,
+                "doc_id",
                 F.lit(0).alias("chunk_idx"),
                 sh.alias("chunk_val"),
             )
@@ -99,21 +97,18 @@ def simhash_chunk_buckets(
         )
     return (
         docs_with_simhash.filter(sh.isNotNull())
-        .select(id_col, F.explode(F.array(*keys)).alias("c"))
-        .select(id_col, F.col("c.chunk_idx"), F.col("c.chunk_val"))
+        .select("doc_id", F.explode(F.array(*keys)).alias("c"))
+        .select("doc_id", F.col("c.chunk_idx"), F.col("c.chunk_val"))
     )
 
 
 def verify_hamming(
-    pairs: DataFrame,
-    docs_with_simhash: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
+    pairs: DataFrame, docs_with_simhash: DataFrame, cfg: DedupConfig
 ) -> DataFrame:
     """(a, b, hamming) for pairs with Hamming(simhash_a, simhash_b) <=
     hamming_radius. bit_count(a XOR b) — pure codegen; the join sides
     carry only two longs per row."""
-    f = docs_with_simhash.select(F.col(id_col).alias("_id"), "simhash")
+    f = docs_with_simhash.select(F.col("doc_id").alias("_id"), "simhash")
     return (
         pairs.join(f.select(F.col("_id").alias("a"), F.col("simhash").alias("_sa")), "a")
         .join(f.select(F.col("_id").alias("b"), F.col("simhash").alias("_sb")), "b")

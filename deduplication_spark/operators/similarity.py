@@ -132,18 +132,28 @@ def cosine_topk(
         F.col(id_col).alias("query_id"),
         F.col(vec_col).cast("array<double>").alias("qv"),
     )
-    sims = with_cosine(
-        q.crossJoin(e).filter(F.col("neighbor_id") != F.col("query_id"))
-    ).filter(F.col("cos_sim").isNotNull())
-    # NULL-scored pairs (zero-norm/NaN/ragged) are dropped BEFORE the
-    # window: desc ordering sorts NULLs last but still ASSIGNS ranks,
-    # so without the filter unscoreable neighbors would pad a sparse
-    # query's top-k with NULL rows
+    return _top_k(
+        with_cosine(
+            q.crossJoin(e).filter(F.col("neighbor_id") != F.col("query_id"))
+        ),
+        k,
+    )
+
+
+def _top_k(sims: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cos_sim, rank): each query's k best
+    neighbors, ties broken by neighbor_id.
+
+    NULL-scored pairs (zero-norm/NaN/ragged) are dropped BEFORE the
+    window: desc ordering sorts NULLs last but still ASSIGNS ranks, so
+    without the filter unscoreable neighbors would pad a sparse query's
+    top-k with NULL rows."""
     w = Window.partitionBy("query_id").orderBy(
         F.col("cos_sim").desc(), F.col("neighbor_id")
     )
     return (
-        sims.withColumn("rank", F.row_number().over(w))
+        sims.filter(F.col("cos_sim").isNotNull())
+        .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "cos_sim", "rank")
     )
@@ -530,15 +540,7 @@ def ivf_topk(
         .join(e.select("neighbor_id", F.col("_v").alias("v")), "neighbor_id")
         .select("query_id", "qv", "neighbor_id", "v")
     )
-    sims = with_cosine_vec(cand).filter(F.col("cos_sim").isNotNull())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _top_k(with_cosine_vec(cand), k)
 
 
 def lsh_topk(
@@ -594,14 +596,4 @@ def lsh_topk(
         )
         .select("query_id", "qv", "neighbor_id", "v")
     )
-    # same NULL-drop as cosine_topk: unscoreable bucket-mates must not
-    # occupy rank slots
-    sims = with_cosine_vec(cand).filter(F.col("cos_sim").isNotNull())
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), F.col("neighbor_id")
-    )
-    return (
-        sims.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("query_id", "neighbor_id", "cos_sim", "rank")
-    )
+    return _top_k(with_cosine_vec(cand), k)

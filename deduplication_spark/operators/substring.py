@@ -130,38 +130,24 @@ def make_chunk_shape_udf(cfg: DedupConfig):
     return chunk_shape
 
 
-def chunk_buckets(
-    docs: DataFrame, cfg: DedupConfig, id_col: str = "doc_id", text_col: str = "text"
-) -> DataFrame:
+def chunk_buckets(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(doc_id, chunk_fp) memberships, distinct, chunks >= chunk_min_len
     only (sub-min forced-boundary fragments are too collision-prone as
     candidate keys)."""
     udf = make_chunk_udf(cfg)
     return (
-        docs.select(id_col, F.explode(udf(F.col(text_col))).alias("c"))
+        docs.select("doc_id", F.explode(udf(F.col("text"))).alias("c"))
         .filter(F.col("c.len") >= cfg.chunk_min_len)
-        .select(id_col, F.col("c.fp").alias("chunk_fp"))
+        .select("doc_id", F.col("c.fp").alias("chunk_fp"))
         .distinct()
     )
 
 
-def substring_candidates(
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> CandidateResult:
-    buckets = chunk_buckets(docs, cfg, id_col, text_col)
-    return bucket_pairs(buckets, ["chunk_fp"], id_col=id_col, cap=cfg.bucket_pair_cap)
+def substring_candidates(docs: DataFrame, cfg: DedupConfig) -> CandidateResult:
+    return bucket_pairs(chunk_buckets(docs, cfg), ["chunk_fp"], cap=cfg.bucket_pair_cap)
 
 
-def verify_substring(
-    pairs: DataFrame,
-    docs: DataFrame,
-    cfg: DedupConfig,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-) -> DataFrame:
+def verify_substring(pairs: DataFrame, docs: DataFrame, cfg: DedupConfig) -> DataFrame:
     """(a, b) pairs that share an exact substring of length >=
     substring_min_len (utf-8 byte-level; exact for ASCII text)."""
     L = cfg.substring_min_len
@@ -169,7 +155,7 @@ def verify_substring(
     # coalescing (see candidates.verify_jaccard)
     spark = pairs.sparkSession
     pairs = pairs.repartition(2 * spark.sparkContext.defaultParallelism, "a")
-    t = docs.select(F.col(id_col).alias("_id"), F.col(text_col).alias("_t"))
+    t = docs.select(F.col("doc_id").alias("_id"), F.col("text").alias("_t"))
     joined = (
         pairs.join(t.select(F.col("_id").alias("a"), F.col("_t").alias("_ta")), "a")
         .join(t.select(F.col("_id").alias("b"), F.col("_t").alias("_tb")), "b")

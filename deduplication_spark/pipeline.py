@@ -78,7 +78,9 @@ class DedupResult:
 def doc_texts(
     docs: DataFrame, cfg: DedupConfig, id_col: str, text_col: str
 ) -> DataFrame:
-    """(doc_id, text), hash-partitioned on doc_id before the UDF stages.
+    """(doc_id, text) from the user's (id_col, text_col), hash-partitioned
+    on doc_id before the UDF stages. Every operator below the entry
+    points reads `doc_id`/`text` only; user column names stop here.
 
     A parquet scan of one smallish file yields a handful of input
     splits, starving the cores (and, at 100 TB, leaving residual skew

@@ -52,6 +52,7 @@ from pyspark.sql.streaming import StreamingQuery
 from ..config import DedupConfig
 from ..increment import dedup_increment, pin_sig_config
 from ..increment import empty_index  # noqa: F401  (cold-start state)
+from ..io import _require_local
 
 
 @dataclass
@@ -66,28 +67,6 @@ class StreamIncrementState:
 
 def _version_path(index_dir: str, batch_id: int) -> str:
     return os.path.join(index_dir, f"batch={batch_id}")
-
-
-def _require_local(path: str | None, what: str) -> None:
-    """The restart/versioning source of truth in this module is
-    os.path.exists/isdir/listdir, which silently report 'missing' for
-    non-local URIs (s3://, hdfs://) — `had_initial` would be False on
-    every batch, batch=-1 overwritten each batch, and a restarted
-    batch 0 would probe the cold in-memory index instead of the
-    persisted warm initial. Fail fast the way io.py's lineage writer
-    explicitly skips remote run_dirs: a remote deployment should back
-    these dirs with Iceberg table snapshots (module docstring) or
-    mount the store locally."""
-    if path is None:
-        return
-    if "://" in path:
-        # even file:// would break: os.path.exists("file:///x") is False
-        raise ValueError(
-            f"{what}={path!r}: URI schemes are not supported — this "
-            "module resolves versions/restarts via the local filesystem "
-            "(os.path), which cannot see scheme-qualified stores; use a "
-            "plain local path, or an Iceberg-backed deployment"
-        )
 
 
 def stream_dedup_increment(
@@ -140,11 +119,9 @@ def stream_dedup_increment(
 
     def handle(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        # ---- resolve the index this batch must probe: version N-1 ----
-        want = batch_id - 1
+        # ---- ensure the initial version (batch=-1) is persisted ----
         initial = _version_path(index_dir, -1)
-        had_initial = os.path.exists(os.path.join(initial, "_SUCCESS"))
-        if not had_initial:
+        if not os.path.exists(os.path.join(initial, "_SUCCESS")):
             if (
                 os.path.isdir(initial)
                 and state.index.limit(1).count() == 0
@@ -172,18 +149,11 @@ def stream_dedup_increment(
             pin_sig_config(state.index, cfg).write.mode("overwrite").parquet(
                 initial
             )
-        if want == -1 and had_initial:
-            # restart of batch 0: the PERSISTED initial version is
-            # the source of truth — a cold StreamIncrementState
-            # (empty index) must not shadow a warm-start initial
-            # written by the original process
-            index_in = spark.read.parquet(initial)
-        elif state.last_batch == want:
-            # fast path: for want >= 0 the in-memory frame was read
-            # back from the persisted version, so memory == disk
-            index_in = state.index
-        else:  # restart or in-session replay: read the version
-            index_in = spark.read.parquet(_version_path(index_dir, want))
+        # batch N probes the PERSISTED version N-1, never memory: a
+        # first run, a restart with cold state and a replay all read
+        # the same bytes, so a warm initial written by an earlier
+        # process cannot be shadowed by this one's empty state
+        index_in = spark.read.parquet(_version_path(index_dir, batch_id - 1))
 
         base_docs = None
         if docs_dir is not None:
@@ -231,9 +201,13 @@ def stream_dedup_increment(
                 os.path.join(merges_dir, f"batch={batch_id}")
             )
         # the increment's index carries the sig-config pin
-        inc.index.write.mode("overwrite").parquet(_version_path(index_dir, batch_id))
-        # read back: the persisted version is the lineage cut
-        state.index = spark.read.parquet(_version_path(index_dir, batch_id))
+        version = _version_path(index_dir, batch_id)
+        inc.index.write.mode("overwrite").parquet(version)
+        # read back: the persisted version is the lineage cut. The
+        # schema just written is known, so the read runs no
+        # schema-inference job (the next batch's read of this version
+        # infers it from the files, as a restart must)
+        state.index = spark.read.schema(inc.index.schema).parquet(version)
         state.last_batch = batch_id
         # per-batch candidate accounting (dropped pairs etc.):
         # state.batch_metrics[batch_id]["minhash_candidates"]

@@ -255,3 +255,35 @@ def test_stage_store_config_pin_is_atomic_and_concurrent_lineage_intact(tmp_path
     assert len(lines) == 400
     for ln in lines:
         json.loads(ln)
+
+
+def test_uri_paths_are_refused_naming_the_argument(spark, tmp_path):
+    """Resume, config pins and stream versions are resolved with
+    os.path, which reports a scheme-qualified path as missing. Every
+    entry point that takes such a directory refuses a URI up front and
+    names the argument."""
+    from deduplication_spark.streaming.increment_stream import (
+        StreamIncrementState,
+        empty_index,
+        resolved_assignments,
+        stream_dedup_increment,
+    )
+
+    docs = spark.createDataFrame([(1, "a b c d e f")], "doc_id long, text string")
+    with pytest.raises(ValueError, match=r"run_dir='s3://"):
+        dedup(spark, docs, run_dir="s3://bucket/run")
+
+    (tmp_path / "src").mkdir()
+    stream = spark.readStream.schema(docs.schema).parquet(str(tmp_path / "src"))
+    with pytest.raises(ValueError, match=r"index_dir='file:///"):
+        stream_dedup_increment(
+            stream,
+            StreamIncrementState(index=empty_index(spark)),
+            assignments_dir=str(tmp_path / "assignments"),
+            index_dir="file:///tmp/index",
+        )
+
+    with pytest.raises(ValueError, match=r"merges_dir='s3://"):
+        resolved_assignments(
+            spark, str(tmp_path / "assignments"), merges_dir="s3://bucket/merges"
+        )
