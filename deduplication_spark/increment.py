@@ -59,7 +59,7 @@ from .operators.components import component_assignments, label_components
 from .operators.exact import exact_edges
 from .operators.minhash_lsh import band_key_buckets, minhash_near_edges
 from .operators.simhash import simhash_chunk_buckets, verify_hamming
-from .pipeline import doc_texts, enrich
+from .pipeline import _require_unique_ids, doc_texts, enrich
 
 
 def _sig_fingerprint(cfg: DedupConfig) -> str:
@@ -139,9 +139,34 @@ class IncrementResult:
 # keys derive from, so a config drift fails fast before stale keys
 # could be probed.
 INDEX_SCHEMA = (
-    "member_id long, cluster_id long, content_hash binary, "
+    "member_id bigint, cluster_id bigint, content_hash binary, "
     "minhash array<bigint>, simhash bigint, band_keys array<bigint>"
 )
+
+
+def _check_index(index: DataFrame, cfg: DedupConfig) -> None:
+    """The index contract, checked from the schema alone (no job):
+    every `INDEX_SCHEMA` column at its type, and no sig_cfg pin other
+    than cfg's (ConfigMismatch). Types compare as simpleString, which
+    leaves nullability out (a built index's band_keys is
+    containsNull=false). A hex-string content_hash (an older index
+    shape) is refused here: a string==binary probe would silently
+    match nothing."""
+    want = [f.split() for f in INDEX_SCHEMA.split(", ")]
+    have = {f.name: f.dataType.simpleString() for f in index.schema}
+    missing = [c for c, _ in want if c not in have]
+    if missing:
+        raise ValueError(
+            f"index lacks columns {missing} of INDEX_SCHEMA — rebuild it "
+            "with build_index/index_from_enriched"
+        )
+    wrong = [f"{c} {have[c]}" for c, t in want if have[c] != t]
+    if wrong:
+        raise ValueError(
+            f"index columns {wrong} do not match INDEX_SCHEMA "
+            f"({INDEX_SCHEMA}) — rebuild it with build_index/index_from_enriched"
+        )
+    _check_pin(index, cfg)
 
 
 def empty_index(spark: SparkSession) -> DataFrame:
@@ -232,8 +257,8 @@ def dedup_increment(
     whose Jaccard sits just under the LSH S-curve, for ~1% extra
     index width. The substring tier remains full-run-only by design.
 
-    `index` must have every `INDEX_SCHEMA` column (ValueError otherwise)
-    and, unless it is empty, the sig_cfg pin of `index_from_enriched`
+    `index` must have every `INDEX_SCHEMA` column at its type (ValueError
+    otherwise) and, unless it is empty, the sig_cfg pin of `index_from_enriched`
     matching `cfg` (ConfigMismatch otherwise). The returned index is
     `INDEX_SCHEMA`, pinned to `cfg`.
 
@@ -263,53 +288,50 @@ def dedup_increment(
             f"increment tiers must be a subset of {sorted(allowed)} "
             f"containing 'exact', got {tiers!r}"
         )
-    cols = [f.split()[0] for f in INDEX_SCHEMA.split(", ")]
-    missing = [c for c in cols if c not in index.columns]
-    if missing:
-        raise ValueError(
-            f"index lacks columns {missing} of INDEX_SCHEMA — rebuild it "
-            "with build_index/index_from_enriched"
-        )
-
-    # --- signature-config guard (ConfigMismatch fail-fast, as for
-    # resume): a num_perm/hash_seed/shingle_k drift vs the index-building
-    # config makes signatures incomparable and LSH recall ~0, silently.
-    _check_pin(index, cfg)
+    # --- index contract, incl. the signature-config guard
+    # (ConfigMismatch fail-fast, as for resume): a num_perm/hash_seed/
+    # shingle_k drift vs the index-building config makes signatures
+    # incomparable and LSH recall ~0, silently.
+    _check_index(index, cfg)
 
     new_base = doc_texts(new_docs, cfg, id_col, text_col)
     enriched = enrich(new_base, cfg, True).localCheckpoint(eager=True)
 
-    # --- ID contract: every new id above every base member id ----------
+    # --- ID contract: unique new ids, every one above every base member
+    # id. The one-row sides join as a cartesian product: a broadcast
+    # nested-loop join would run one broadcast job per side, more than
+    # the distinct count's extra shuffle stage costs
     bounds = (
-        enriched.agg(F.min("doc_id").alias("lo"), F.count(F.lit(1)).alias("n"))
+        enriched.agg(
+            F.min("doc_id").alias("lo"),
+            F.count(F.lit(1)).alias("n"),
+            F.count_distinct("doc_id").alias("d"),
+        )
         .crossJoin(
             index.agg(
                 F.max("member_id").alias("hi"),
                 F.count(F.lit(1)).alias("n_index"),
-            )
+            ).hint("shuffle_replicate_nl")
         )
         .crossJoin(
-            # legacy-shape guards on a BOUNDED sample (r06): an index
+            # legacy-shape guard on a BOUNDED sample (r06): an index
             # whose signatures have a different width than cfg.num_perm
-            # (a secondary check behind the pin), or a hex-string content_hash
-            # (64 bytes — would join string==binary against the new
-            # 16-byte key and silently match NOTHING), must fail fast.
-            # Widths/key-shape are uniform per index by construction
-            # (one enrich kernel wrote every row) and the sig_cfg pin
-            # above is the primary guard — scanning the FULL 1 KB/row
-            # minhash column just to take size() cost one whole-index
-            # read per increment, the single biggest base-coupled read
-            # of the probe path.
+            # (a secondary check behind the pin) must fail fast. Widths
+            # are uniform per index by construction (one enrich kernel
+            # wrote every row) and the sig_cfg pin above is the primary
+            # guard — scanning the FULL 1 KB/row minhash column just to
+            # take size() cost one whole-index read per increment, the
+            # single biggest base-coupled read of the probe path.
             index.limit(1024).agg(
                 F.min(F.size("minhash")).alias("sig_lo"),
                 F.max(F.size("minhash")).alias("sig_hi"),
-                F.max(F.octet_length("content_hash")).alias("ch_len"),
-            )
+            ).hint("shuffle_replicate_nl")
         )
         .first()
     )
     min_new, max_base = bounds["lo"], bounds["hi"]
     metrics["n_new_docs"] = bounds["n"]
+    _require_unique_ids(bounds["n"], bounds["d"])
     if bounds["n_index"] and "sig_cfg" not in index.schema["minhash"].metadata:
         raise ConfigMismatch(
             f"index has {bounds['n_index']} rows but no signature config "
@@ -321,13 +343,6 @@ def dedup_increment(
         raise ConfigMismatch(
             f"index minhash width {bounds['sig_lo']}..{bounds['sig_hi']} "
             f"!= cfg.num_perm {cfg.num_perm}; signatures are incomparable"
-        )
-    if bounds["ch_len"] is not None and bounds["ch_len"] != 16:
-        raise ConfigMismatch(
-            f"index content_hash is {bounds['ch_len']} bytes, expected the "
-            "16-byte binary sha256 prefix (with_content_key); an index "
-            "built by an older hex-string version must be rebuilt — a "
-            "string==binary probe would silently match nothing"
         )
     if bounds["n"] == 0:
         # empty increment: without this, lo falls back to 0 and the

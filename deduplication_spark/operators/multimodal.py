@@ -168,6 +168,30 @@ def byte_stride_resize(payload: bytes, factor: int) -> bytes:
     return payload[::factor]
 
 
+def _chunked(
+    df: DataFrame,
+    id_col: str,
+    payload_col: str,
+    batch_rows: int,
+    per_chunk: Callable[[pd.DataFrame], pd.DataFrame],
+    schema: str,
+) -> DataFrame:
+    """The one mapInPandas runner of the media operators: (id, payload)
+    spread by an id-keyed repartition, each Arrow batch re-chunked to
+    `batch_rows` inside the iterator (a partition of large payloads
+    never materializes at once), `per_chunk` applied to every chunk."""
+
+    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for frame in it:
+            for s in range(0, len(frame), batch_rows):
+                yield per_chunk(frame.iloc[s : s + batch_rows])
+
+    spread = df.select(id_col, payload_col).repartition(
+        2 * df.sparkSession.sparkContext.defaultParallelism, id_col
+    )
+    return spread.mapInPandas(run, schema)
+
+
 def sample_frames(
     df: DataFrame,
     n_frames: int = 4,
@@ -180,34 +204,25 @@ def sample_frames(
     (id, frame_idx, frame). The expansion happens inside the Arrow
     iterator (never a full-partition materialization); load is spread
     by an id-keyed repartition exactly as in extract_features."""
-    cols = [id_col, payload_col]
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for frame in it:
-            for s in range(0, len(frame), batch_rows):
-                chunk = frame.iloc[s : s + batch_rows]
-                ids, idxs, frames = [], [], []
-                for i, p in zip(
-                    chunk[id_col].astype("int64"), chunk[payload_col]
-                ):
-                    if p is None:  # missing media -> no frames, no crash
-                        continue
-                    for j, fr in enumerate(extractor(p, n_frames)):
-                        ids.append(i)
-                        idxs.append(j)
-                        frames.append(fr)
-                yield pd.DataFrame(
-                    {
-                        "id": pd.Series(ids, dtype="int64"),
-                        "frame_idx": pd.Series(idxs, dtype="int32"),
-                        "frame": pd.Series(frames, dtype=object),
-                    }
-                )
+    def frames_of(chunk: pd.DataFrame) -> pd.DataFrame:
+        ids, idxs, frames = [], [], []
+        for i, p in zip(chunk[id_col].astype("int64"), chunk[payload_col]):
+            if p is None:  # missing media -> no frames, no crash
+                continue
+            for j, fr in enumerate(extractor(p, n_frames)):
+                ids.append(i)
+                idxs.append(j)
+                frames.append(fr)
+        return pd.DataFrame(
+            {
+                "id": pd.Series(ids, dtype="int64"),
+                "frame_idx": pd.Series(idxs, dtype="int32"),
+                "frame": pd.Series(frames, dtype=object),
+            }
+        )
 
-    spread = df.select(*cols).repartition(
-        2 * df.sparkSession.sparkContext.defaultParallelism, id_col
-    )
-    return spread.mapInPandas(run, FRAME_SCHEMA)
+    return _chunked(df, id_col, payload_col, batch_rows, frames_of, FRAME_SCHEMA)
 
 
 def resize_media(
@@ -221,33 +236,26 @@ def resize_media(
     """Binary->binary resize plumbing: (id, payload, n_bytes) via
     mapInPandas with in-iterator re-chunking (same shape as
     extract_features; the resize kernel is the swappable stub)."""
-    cols = [id_col, payload_col]
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for frame in it:
-            for s in range(0, len(frame), batch_rows):
-                chunk = frame.iloc[s : s + batch_rows]
-                # NULL payload -> NULL output row (id preserved), same
-                # missing-media contract as extract_features
-                out = chunk[payload_col].map(
-                    lambda p: None if p is None else resizer(p, factor)
-                )
-                yield pd.DataFrame(
-                    {
-                        "id": chunk[id_col].astype("int64"),
-                        "payload": out,
-                        "n_bytes": pd.Series(
-                            [None if p is None else len(p) for p in out],
-                            dtype=object,
-                            index=chunk.index,
-                        ),
-                    }
-                )
+    def resized(chunk: pd.DataFrame) -> pd.DataFrame:
+        # NULL payload -> NULL output row (id preserved), same
+        # missing-media contract as extract_features
+        out = chunk[payload_col].map(
+            lambda p: None if p is None else resizer(p, factor)
+        )
+        return pd.DataFrame(
+            {
+                "id": chunk[id_col].astype("int64"),
+                "payload": out,
+                "n_bytes": pd.Series(
+                    [None if p is None else len(p) for p in out],
+                    dtype=object,
+                    index=chunk.index,
+                ),
+            }
+        )
 
-    spread = df.select(*cols).repartition(
-        2 * df.sparkSession.sparkContext.defaultParallelism, id_col
-    )
-    return spread.mapInPandas(run, RESIZE_SCHEMA)
+    return _chunked(df, id_col, payload_col, batch_rows, resized, RESIZE_SCHEMA)
 
 
 def extract_features(
@@ -267,38 +275,30 @@ def extract_features(
     stand-in otherwise.
     """
     decoder = decoder or default_decoder
-    cols = [id_col, payload_col]
 
-    def run(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for frame in it:
-            for s in range(0, len(frame), batch_rows):
-                chunk = frame.iloc[s : s + batch_rows]
-                payloads = chunk[payload_col]
-                # NULL payloads degrade to an all-NULL metadata row
-                # (id preserved) instead of a len(None) TypeError that
-                # kills the task — the pipeline stays total over tables
-                # with missing media
-                yield pd.DataFrame(
-                    {
-                        "id": chunk[id_col].astype("int64"),
-                        "n_bytes": pd.Series(
-                            [None if p is None else len(p) for p in payloads],
-                            dtype=object,
-                            index=chunk.index,
-                        ),
-                        "magic_hex": payloads.map(
-                            lambda p: None if p is None else p[:2].hex().upper()
-                        ),
-                        "modality": payloads.map(
-                            lambda p: None if p is None else sniff_modality(p)
-                        ),
-                        "feature": payloads.map(
-                            lambda p: None if p is None else decoder(p)
-                        ),
-                    }
-                )
+    def metadata(chunk: pd.DataFrame) -> pd.DataFrame:
+        payloads = chunk[payload_col]
+        # NULL payloads degrade to an all-NULL metadata row (id
+        # preserved) instead of a len(None) TypeError that kills the
+        # task — the pipeline stays total over tables with missing media
+        return pd.DataFrame(
+            {
+                "id": chunk[id_col].astype("int64"),
+                "n_bytes": pd.Series(
+                    [None if p is None else len(p) for p in payloads],
+                    dtype=object,
+                    index=chunk.index,
+                ),
+                "magic_hex": payloads.map(
+                    lambda p: None if p is None else p[:2].hex().upper()
+                ),
+                "modality": payloads.map(
+                    lambda p: None if p is None else sniff_modality(p)
+                ),
+                "feature": payloads.map(
+                    lambda p: None if p is None else decoder(p)
+                ),
+            }
+        )
 
-    spread = df.select(*cols).repartition(
-        2 * df.sparkSession.sparkContext.defaultParallelism, id_col
-    )
-    return spread.mapInPandas(run, META_SCHEMA)
+    return _chunked(df, id_col, payload_col, batch_rows, metadata, META_SCHEMA)

@@ -65,6 +65,19 @@ def with_cosine(pairs: DataFrame, a_col: str = "qv", b_col: str = "v") -> DataFr
     )
 
 
+def _lens(vals: np.ndarray) -> np.ndarray:
+    """Per-row vector width of an Arrow batch; -1 for NULL rows."""
+    return np.array([-1 if x is None else len(x) for x in vals], dtype=np.int64)
+
+
+def _width_groups(lens: np.ndarray) -> list[tuple[int, np.ndarray]]:
+    """(width, row positions) for each present vector width of a batch.
+    NULL (-1) and empty (0) rows belong to no group. The one grouping of
+    every Arrow-batched vector kernel here: a batch may mix widths, and
+    each width is stacked and multiplied on its own."""
+    return [(int(w), np.flatnonzero(lens == w)) for w in np.unique(lens[lens > 0])]
+
+
 def with_cosine_vec(
     pairs: DataFrame, a_col: str = "qv", b_col: str = "v"
 ) -> DataFrame:
@@ -72,24 +85,19 @@ def with_cosine_vec(
     HOF in the hot path. Used by the LSH scale paths, where results are
     approximate-by-construction; may differ from the fold version in the
     last ulp (summation order), invisible at round(4). (UDF built here,
-    not at module scope — pandas_udf needs an active session.)"""
+    not at module scope — pandas_udf needs an active session.)
+
+    Pairs are stacked per width group (`_width_groups`), so a batch
+    holding same-width pairs of several widths scores each group; a
+    ragged pair (two widths) belongs to no group."""
 
     @pandas_udf("double")
     def _cos_batch(qv: pd.Series, v: pd.Series) -> pd.Series:
         av, bv = qv.to_numpy(), v.to_numpy()
-        ok = np.array(
-            [
-                x is not None
-                and y is not None
-                and len(x) == len(y)
-                and len(x) > 0
-                for x, y in zip(av, bv)
-            ]
-        )
-        out = np.zeros(len(av))
-        if ok.any():
-            a = np.vstack(av[ok])
-            b = np.vstack(bv[ok])
+        la, lb = _lens(av), _lens(bv)
+        out = np.full(len(av), np.nan)
+        for _, rows in _width_groups(np.where(la == lb, la, -1)):
+            a, b = np.vstack(av[rows]), np.vstack(bv[rows])
             num = np.einsum("ij,ij->i", a, b)
             den = np.linalg.norm(a, axis=1) * np.linalg.norm(b, axis=1)
             # a zero vector would make 0/0 = NaN — and Spark orders NaN
@@ -99,14 +107,10 @@ def with_cosine_vec(
             # inf/inf quotient): any non-finite score must become SQL
             # NULL, never a NaN that outranks every real neighbor.
             nz = (den > 0) & np.isfinite(den) & np.isfinite(num)
-            cos = np.zeros(len(den))
-            cos[nz] = num[nz] / den[nz]
-            nz &= np.isfinite(cos)
-            cos[~nz] = 0.0
-            out[ok] = cos
-            ok[np.flatnonzero(ok)[~nz]] = False
-            if ok.all():  # fast path: no boxing on well-formed batches
-                return pd.Series(out)
+            out[rows[nz]] = num[nz] / den[nz]
+        ok = np.isfinite(out)
+        if ok.all():  # fast path: no boxing on well-formed batches
+            return pd.Series(out)
         # NULL/ragged/zero-norm pairs score SQL NULL — dropped by any
         # filter or ordering, like a null Catalyst fold
         return pd.Series(
@@ -114,6 +118,25 @@ def with_cosine_vec(
         )
 
     return pairs.withColumn("cos_sim", _cos_batch(F.col(a_col), F.col(b_col)))
+
+
+def _vectors(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
+    """(_id, _v): the id and the vector as array<double>, the one
+    projection every search path reads its inputs through."""
+    return df.select(
+        F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
+    )
+
+
+def _scored(pair_ids: DataFrame, left: DataFrame, right: DataFrame) -> DataFrame:
+    """Candidate pairs (left id, right id) with both vectors joined back
+    ONCE, as qv and v, and scored by `with_cosine_vec`. Candidate
+    exchanges (bucket joins, distincts) carry ids only; `left` and
+    `right` are `_vectors` frames."""
+    lid, rid = pair_ids.columns
+    return with_cosine_vec(
+        pair_ids.join(left.toDF(lid, "qv"), lid).join(right.toDF(rid, "v"), rid)
+    )
 
 
 def cosine_topk(
@@ -124,19 +147,11 @@ def cosine_topk(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Exact brute-force: (query_id, neighbor_id, cos_sim, rank)."""
-    e = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("v"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("qv"),
+    pairs = _vectors(queries, id_col, vec_col).toDF("query_id", "qv").crossJoin(
+        _vectors(embeddings, id_col, vec_col).toDF("neighbor_id", "v")
     )
     return _top_k(
-        with_cosine(
-            q.crossJoin(e).filter(F.col("neighbor_id") != F.col("query_id"))
-        ),
-        k,
+        with_cosine(pairs.filter(F.col("neighbor_id") != F.col("query_id"))), k
     )
 
 
@@ -184,78 +199,51 @@ def hyperplane_buckets(
     both sides of a self-join is one scan+BLAS pass, cheaper at scale
     than materializing a checkpoint barrier.
 
-    `dim` is optional: the hyperplanes are drawn from the seeded
-    generator INSIDE the UDF at the declared (or batch-majority)
-    vector width (deterministic — same seed, same width, same planes
-    in every batch; ~16k randoms, negligible per Arrow batch). No
-    driver-side `.first()` sniff needed. NULL and off-width rows
-    bucket to NULL and are dropped by the posexplode — malformed rows
-    degrade to "not bucketed" instead of crashing the Arrow batch.
+    `dim` is optional and only validates. The hyperplanes are drawn
+    from the seeded generator INSIDE the UDF at each row's own width
+    (deterministic — same seed, same width, same planes in every batch;
+    ~16k randoms, negligible per Arrow batch), so the result is
+    row-local: independent of batch/partition composition, and a
+    mixed-width table cannot bucket nondeterministically. No
+    driver-side `.first()` sniff needed. NULL and empty rows bucket to
+    NULL and are dropped by the posexplode — malformed rows degrade to
+    "not bucketed" instead of crashing the Arrow batch. Rows of
+    different widths share the bucket key space; a chance cross-width
+    collision becomes a candidate pair that the ragged-pair NULL in
+    with_cosine_vec then drops.
     """
     weights = 1 << np.arange(n_bits, dtype=np.int64)
 
     @pandas_udf("array<bigint>")
     def _buckets(vs: pd.Series) -> pd.Series:
-        if len(vs) == 0:
-            return pd.Series([], dtype=object)
         vals = vs.to_numpy()
-        lens = np.array([-1 if x is None else len(x) for x in vals])
-        good = lens[lens > 0]
-        if len(good) == 0:
-            return pd.Series([None] * len(vals), dtype=object)
-        widths = np.unique(good)
-        if dim is not None and (widths != dim).any():
+        groups = _width_groups(_lens(vals))
+        widths = [w for w, _ in groups]
+        if dim is not None and any(w != dim for w in widths):
             # a PRESENT vector whose width contradicts the declared dim
             # is a schema/config error (stale dim after a model swap) —
             # silently NULLing it would make a 100%-mismatch read as
             # "no neighbors found". NULL rows (missing data) degrade;
             # wrong-width data is loud. Callers with genuinely mixed
-            # widths leave dim unset for the per-width path below.
+            # widths leave dim unset.
             raise ValueError(
-                f"embeddings of width {widths.tolist()} contradict "
-                f"declared dim {dim}"
+                f"embeddings of width {widths} contradict declared dim {dim}"
             )
-
-        def packed_for(width: int, rows: np.ndarray) -> np.ndarray:
+        out = [None] * len(vals)
+        for width, rows in groups:
             planes = (
                 np.random.default_rng(seed)
                 .standard_normal((n_tables * n_bits, width))
                 .T
             )  # (width, T*B) — deterministic per (seed, width)
-            signs = (rows @ planes) >= 0  # one BLAS call per group
-            return (
+            signs = (np.vstack(vals[rows]) @ planes) >= 0  # one BLAS call
+            packed = (
                 signs.reshape(len(rows), n_tables, n_bits).astype(np.int64)
                 * weights
             ).sum(axis=2)
-
-        if dim is not None:
-            # declared dim: only matching rows bucket, the rest NULL
-            ok = lens == dim
-            if ok.all():  # fast path: well-formed batch, no row loop
-                return pd.Series(list(packed_for(dim, np.vstack(vals))))
-            out = [None] * len(vals)
-            if ok.any():
-                packed = packed_for(dim, np.vstack(vals[ok]))
-                for i, j in enumerate(np.flatnonzero(ok)):
-                    out[j] = packed[i]
-            return pd.Series(out, dtype=object)
-
-        # dim unset: bucket each row against ITS OWN width's plane set
-        # (planes are a function of (seed, width), so the result is
-        # row-local — independent of batch/partition composition; a
-        # mixed-width table cannot bucket nondeterministically). Rows
-        # of different widths share the bucket key space; a chance
-        # cross-width collision becomes a candidate pair that the
-        # ragged-pair NULL in with_cosine_vec then drops.
-        if len(widths) == 1 and (lens > 0).all():  # fast path
-            return pd.Series(
-                list(packed_for(int(widths[0]), np.vstack(vals)))
-            )
-        out = [None] * len(vals)
-        for width in widths:
-            ok = lens == width
-            packed = packed_for(int(width), np.vstack(vals[ok]))
-            for i, j in enumerate(np.flatnonzero(ok)):
+            if len(rows) == len(vals):  # uniform batch: no per-row scatter
+                return pd.Series(list(packed))
+            for i, j in enumerate(rows):
                 out[j] = packed[i]
         return pd.Series(out, dtype=object)
 
@@ -296,13 +284,13 @@ def cosine_near_dup(
     the collision probability (and thus recall) collapses, which is why
     the brute path stays the oracle.
     """
-    e = embeddings.select(
-        F.col(id_col).alias("_id"), F.col(vec_col).cast("array<double>").alias("_v")
-    )
+    e = _vectors(embeddings, id_col, vec_col)
     if method == "brute":
-        a = e.select(F.col("_id").alias("a_id"), F.col("_v").alias("qv"))
-        b = e.select(F.col("_id").alias("b_id"), F.col("_v").alias("v"))
-        cand = a.crossJoin(b).filter(F.col("a_id") < F.col("b_id"))
+        cand = with_cosine(
+            e.toDF("a_id", "qv")
+            .crossJoin(e.toDF("b_id", "v"))
+            .filter(F.col("a_id") < F.col("b_id"))
+        )
     elif method == "lsh":
         # ids + buckets ONLY in the self-join and distinct exchanges —
         # the same "ids and hashes only in shuffles" discipline as the
@@ -314,33 +302,17 @@ def cosine_near_dup(
             "_id", "table_idx", "bucket"
         )
         pair_ids = (
-            hb.select(F.col("_id").alias("a_id"), "table_idx", "bucket")
-            .join(
-                hb.select(F.col("_id").alias("b_id"), "table_idx", "bucket"),
-                ["table_idx", "bucket"],
-            )
+            hb.toDF("a_id", "table_idx", "bucket")
+            .join(hb.toDF("b_id", "table_idx", "bucket"), ["table_idx", "bucket"])
             .filter(F.col("a_id") < F.col("b_id"))
             .select("a_id", "b_id")
             .distinct()
         )
-        cand = (
-            pair_ids.join(
-                e.select(F.col("_id").alias("a_id"), F.col("_v").alias("qv")),
-                "a_id",
-            )
-            .join(
-                e.select(F.col("_id").alias("b_id"), F.col("_v").alias("v")),
-                "b_id",
-            )
-            .select("a_id", "qv", "b_id", "v")
-        )
+        cand = _scored(pair_ids, e, e)
     else:
         raise ValueError(f"unknown method {method!r}")
-    score = with_cosine if method == "brute" else with_cosine_vec
-    return (
-        score(cand)
-        .filter(F.round("cos_sim", 4) >= threshold)
-        .select("a_id", "b_id", F.round("cos_sim", 4).alias("cos_sim"))
+    return cand.filter(F.round("cos_sim", 4) >= threshold).select(
+        "a_id", "b_id", F.round("cos_sim", 4).alias("cos_sim")
     )
 
 
@@ -384,10 +356,7 @@ def _ivf_centroids(
     to unassigned, exactly like the LSH NULL-bucket path). Returns
     None when no usable vector exists."""
     rows = (
-        embeddings.select(
-            F.col(id_col).alias("_id"),
-            F.col(vec_col).cast("array<double>").alias("_v"),
-        )
+        _vectors(embeddings, id_col, vec_col)
         .filter(F.col("_v").isNotNull() & (F.size("_v") > 0))
         .orderBy(F.xxhash64(F.col("_id"), F.lit(seed)), F.col("_id"))
         .limit(n_list * max(train_factor, 1))
@@ -438,8 +407,7 @@ def _ivf_assign(vec_col, centroids: np.ndarray, m: int):
     @pandas_udf("array<int>")
     def _assign(vs: pd.Series) -> pd.Series:
         vals = vs.to_numpy()
-        lens = np.array([-1 if x is None else len(x) for x in vals])
-        ok = lens == d
+        ok = _lens(vals) == d
         if not ok.any():
             return pd.Series([None] * len(vals), dtype=object)
         v = np.vstack(vals[ok])
@@ -511,36 +479,23 @@ def ivf_topk(
                 F.lit(None).cast("int").alias("rank"),
             ).limit(0)
         )
-    e = embeddings.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col(vec_col).cast("array<double>").alias("_v"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.col(vec_col).cast("array<double>").alias("_qv"),
-    )
+    e, q = _vectors(embeddings, id_col, vec_col), _vectors(queries, id_col, vec_col)
     # corpus side: one list per vector (element_at on the m=1 array)
     el = e.select(
-        "neighbor_id",
+        F.col("_id").alias("neighbor_id"),
         F.element_at(_ivf_assign(F.col("_v"), c, 1), 1).alias("list_id"),
     ).filter(F.col("list_id").isNotNull())
     # query side: nprobe lists per query
     ql = q.select(
-        "query_id", _ivf_assign(F.col("_qv"), c, nprobe).alias("_lists")
-    ).select(
-        "query_id", F.explode("_lists").alias("list_id")
+        F.col("_id").alias("query_id"),
+        F.explode(_ivf_assign(F.col("_v"), c, nprobe)).alias("list_id"),
     )
     pair_ids = (
         ql.join(el, "list_id")
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
     )
-    cand = (
-        pair_ids.join(q.select("query_id", F.col("_qv").alias("qv")), "query_id")
-        .join(e.select("neighbor_id", F.col("_v").alias("v")), "neighbor_id")
-        .select("query_id", "qv", "neighbor_id", "v")
-    )
-    return _top_k(with_cosine_vec(cand), k)
+    return _top_k(_scored(pair_ids, q, e), k)
 
 
 def lsh_topk(
@@ -567,33 +522,18 @@ def lsh_topk(
     measured wall/recall/pair-volume trade for both families)."""
     # bucket join + distinct carry ids only (see cosine_near_dup);
     # vectors are joined back once per surviving (query, neighbor) pair
-    eb = hyperplane_buckets(embeddings, dim, n_tables, n_bits, seed, vec_col).select(
-        F.col(id_col).alias("neighbor_id"), "table_idx", "bucket"
-    )
-    qb = hyperplane_buckets(queries, dim, n_tables, n_bits, seed, vec_col).select(
-        F.col(id_col).alias("query_id"), "table_idx", "bucket"
+    e, q = _vectors(embeddings, id_col, vec_col), _vectors(queries, id_col, vec_col)
+    eb, qb = (
+        hyperplane_buckets(x, dim, n_tables, n_bits, seed, "_v").select(
+            "_id", "table_idx", "bucket"
+        )
+        for x in (e, q)
     )
     pair_ids = (
-        qb.join(eb, ["table_idx", "bucket"])
+        qb.toDF("query_id", "table_idx", "bucket")
+        .join(eb.toDF("neighbor_id", "table_idx", "bucket"), ["table_idx", "bucket"])
         .filter(F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id")
         .distinct()
     )
-    cand = (
-        pair_ids.join(
-            queries.select(
-                F.col(id_col).alias("query_id"),
-                F.col(vec_col).cast("array<double>").alias("qv"),
-            ),
-            "query_id",
-        )
-        .join(
-            embeddings.select(
-                F.col(id_col).alias("neighbor_id"),
-                F.col(vec_col).cast("array<double>").alias("v"),
-            ),
-            "neighbor_id",
-        )
-        .select("query_id", "qv", "neighbor_id", "v")
-    )
-    return _top_k(with_cosine_vec(cand), k)
+    return _top_k(_scored(pair_ids, q, e), k)

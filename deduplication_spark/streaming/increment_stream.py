@@ -50,7 +50,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.streaming import StreamingQuery
 
 from ..config import DedupConfig
-from ..increment import dedup_increment, pin_sig_config
+from ..increment import _check_index, dedup_increment
 from ..increment import empty_index  # noqa: F401  (cold-start state)
 from ..io import _require_local
 
@@ -105,11 +105,17 @@ def stream_dedup_increment(
     docstring documents). In production this is simply the crawl's
     document table; only the borderline sliver's texts are ever read.
     The FIRST batch has no prior store but still gets exact
-    verification: an empty base_docs frame is passed, so
-    `dedup_increment` verifies new-new borderline pairs against the
-    batch's own texts (texts = batch ∪ base) — with docs_dir set,
-    EVERY batch's decisions match the batch pipeline's, including
-    batch 0.
+    verification: its base is empty, so `dedup_increment` verifies
+    new-new borderline pairs against the batch's own texts (texts =
+    batch ∪ base). With docs_dir set, every batch's decisions match the
+    batch pipeline's on a cold start. A WARM start (state.index built
+    over a base corpus) matches only when the base texts are seeded
+    under `docs_dir/batch=-1` before the stream starts; otherwise
+    borderline pairs against the base are decided by the estimate.
+
+    The initial index is persisted as given after the schema and pin
+    checks of `dedup_increment`; a non-empty index without the sig_cfg
+    pin fails batch 0 ("no signature config pin").
     """
     cfg = cfg or DedupConfig()
     _require_local(index_dir, "index_dir")
@@ -143,12 +149,13 @@ def stream_dedup_increment(
                     "StreamIncrementState, or delete the partial "
                     "directory for a genuine cold start."
                 )
-            # pin the signature config on the persisted version so a
-            # restart with a drifted config fails fast (the
-            # increment's ConfigMismatch guard reads this metadata)
-            pin_sig_config(state.index, cfg).write.mode("overwrite").parquet(
-                initial
-            )
+            # the initial version is written as given: a drifted pin
+            # raises before anything is persisted, and an unpinned
+            # non-empty index is refused by batch 0's increment (only
+            # an index built by build_index/index_from_enriched carries
+            # the pin that proves its signatures comparable)
+            _check_index(state.index, cfg)
+            state.index.write.mode("overwrite").parquet(initial)
         # batch N probes the PERSISTED version N-1, never memory: a
         # first run, a restart with cold state and a replay all read
         # the same bytes, so a warm initial written by an earlier
@@ -157,27 +164,21 @@ def stream_dedup_increment(
 
         base_docs = None
         if docs_dir is not None:
-            prior = [
-                p
-                for p in (os.listdir(docs_dir) if os.path.isdir(docs_dir) else [])
-                if p.startswith("batch=")
-                and int(p.split("=")[1]) < batch_id
-            ]
-            if prior:
-                base_docs = spark.read.parquet(
-                    *[os.path.join(docs_dir, p) for p in prior]
-                ).select(id_col, text_col)
-            else:
-                # first batch: no prior store, but verification must
-                # still run — an EMPTY base frame makes dedup_increment
-                # exact-verify new-new borderline pairs against the
-                # batch's own texts (texts = batch ∪ base). Without
-                # this, batch 0's borderline pairs would be decided by
-                # the MinHash estimate while every later batch (and the
-                # batch pipeline) exact-verifies — a borderline pair in
-                # the first batch could flip vs ground truth.
-                base_docs = batch_df.select(id_col, text_col).limit(0)
-
+            # batch N's texts first, then every earlier batch (any seeded
+            # batch=-1 included) as the base: batch 0 reads an empty
+            # base, so its new-new borderline pairs still exact-verify
+            # against its own texts (texts = batch ∪ base). The schema
+            # is known, so the read runs no schema-inference job
+            texts = batch_df.select(id_col, text_col)
+            texts.write.mode("overwrite").parquet(
+                os.path.join(docs_dir, f"batch={batch_id}")
+            )
+            base_docs = (
+                spark.read.schema(texts.schema)
+                .parquet(docs_dir)
+                .where(F.col("batch") < batch_id)
+                .select(id_col, text_col)
+            )
         inc = dedup_increment(
             spark,
             batch_df,
@@ -188,10 +189,6 @@ def stream_dedup_increment(
             text_col=text_col,
             tiers=tiers,
         )
-        if docs_dir is not None:
-            batch_df.select(id_col, text_col).write.mode("overwrite").parquet(
-                os.path.join(docs_dir, f"batch={batch_id}")
-            )
         # per-batch overwrite => replays are idempotent, never append dups
         inc.assignments.write.mode("overwrite").parquet(
             os.path.join(assignments_dir, f"batch={batch_id}")

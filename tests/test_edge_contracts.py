@@ -125,6 +125,22 @@ def test_duplicate_doc_ids_fail_loudly(spark):
     assert res.assignments.count() == 2
 
 
+def test_unknown_tier_names_are_refused(spark, tmp_path):
+    """A typo'd tier name is refused, naming it, before the run_dir
+    store exists: otherwise the run goes ahead without that tier and
+    pins the typo into run_config.json."""
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2], "text": ["doc a", "doc b"]})
+    )
+    run_dir = tmp_path / "run"
+    with pytest.raises(ValueError, match="minhsh"):
+        dedup(
+            spark, df, DedupConfig(), run_dir=str(run_dir),
+            tiers=("exact", "minhsh"),
+        )
+    assert not run_dir.exists()
+
+
 def test_empty_corpus_dedup(spark):
     """Zero-row input flows through every tier and yields zero-row
     assignments/clusters (no crash, no phantom rows)."""

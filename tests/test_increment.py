@@ -317,6 +317,34 @@ def test_id_contract_enforced(spark, split, inc_run):
         dedup_increment(spark, overlapping, inc.index, cfg)
 
 
+def test_duplicate_ids_in_a_batch_are_refused(spark):
+    """The increment holds dedup()'s doc_id uniqueness contract, with
+    the same message: a batch with ids [10, 10, 11] would otherwise give
+    doc 10 two assignment rows and member 10 several index rows."""
+    batch = spark.createDataFrame(
+        pd.DataFrame(
+            {"doc_id": [10, 10, 11], "text": ["doc a", "doc b", "doc c"]}
+        )
+    )
+    with pytest.raises(ValueError, match="1 duplicate doc_id"):
+        dedup_increment(spark, batch, empty_index(spark), DedupConfig())
+
+
+def test_string_content_hash_index_is_refused(spark, inc_run):
+    """An index whose content_hash is a hex string (an older index
+    shape) is refused from its schema, empty or not: a string==binary
+    probe would silently match nothing."""
+    _, inc = inc_run
+    hexed = inc.index.withColumn("content_hash", F.hex("content_hash"))
+    assert hexed.schema["minhash"].metadata.get("sig_cfg")
+    nxt = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [50_000], "text": ["hex index batch"]})
+    )
+    for index in (hexed, hexed.limit(0)):
+        with pytest.raises(ValueError, match="content_hash string"):
+            dedup_increment(spark, nxt, index, DedupConfig())
+
+
 @pytest.mark.parametrize(
     "tiers",
     [("exact", "minhash"), ("exact", "minhash", "simhash")],

@@ -119,6 +119,39 @@ def test_mixed_widths_deterministic_and_stale_dim_fails(spark):
         ).collect()
 
 
+def test_two_width_corpus_scores_each_width(spark):
+    """A corpus of two vector widths, each with many planted pairs:
+    same-width pairs of BOTH widths meet in one Arrow batch of the
+    scoring UDF, which scores each width group on its own. The LSH
+    search paths return exactly the union of what each width returns
+    when run alone (a cross-width pair is ragged and never scores)."""
+    from deduplication_spark.operators.similarity import cosine_near_dup
+
+    rng = np.random.default_rng(11)
+    base = rng.standard_normal((20, 8))
+    near = base + 0.05 * rng.standard_normal((20, 8))
+    narrow = spark.createDataFrame(
+        [(5000 + i, base[i].tolist()) for i in range(20)]
+        + [(6000 + i, near[i].tolist()) for i in range(20)],
+        "vec_id long, embedding array<double>",
+    )
+    wide = spark.createDataFrame(_planted(20))
+    mix = wide.unionByName(narrow).repartition(2)
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    def near_dup(df):
+        return cosine_near_dup(df, 0.95, method="lsh")
+
+    def topk(df):
+        return lsh_topk(df, df, k=3)
+
+    for search in (near_dup, topk):
+        alone = sorted(rows(search(wide)) + rows(search(narrow)))
+        assert alone and rows(search(mix)) == alone
+
+
 def test_cosine_near_dup_lsh_matches_brute_at_high_threshold(spark):
     """Planted near-neighbors (noise=0.05 -> cos ~0.999) are the only
     pairs above 0.95; the LSH path must recover (almost) all of what

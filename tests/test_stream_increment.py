@@ -418,6 +418,52 @@ def test_pin_sig_never_overwrites_a_drifted_pin(spark, tmp_path):
     assert pin_sig_config(unpinned, warm_cfg).schema["minhash"].metadata["sig_cfg"]
 
 
+def test_stream_refuses_an_unpinned_warm_index(spark, docs, src_dir, tmp_path):
+    """A warm start from a non-empty index without the sig_cfg pin
+    fails batch 0, as `dedup_increment` refuses it: the stream writes
+    its initial version as given and never stamps a pin it cannot
+    vouch for. A drifted pin still fails before anything is written."""
+    from pyspark.errors.exceptions.captured import StreamingQueryException
+
+    from deduplication_spark.increment import index_from_enriched
+    from deduplication_spark.pipeline import dedup
+
+    cfg = DedupConfig()
+    base = docs.filter(F.col("doc_id") < 40).withColumn(
+        "doc_id", F.col("doc_id") - 1000
+    )
+    res = dedup(spark, base, cfg, tiers=("exact", "minhash"))
+    warm = index_from_enriched(res.enriched, res.assignments, cfg)
+    unpinned = warm.withColumn(
+        "minhash", F.col("minhash").alias("minhash", metadata={})
+    )
+
+    def start(index, out, run_cfg):
+        return stream_dedup_increment(
+            spark.readStream.schema(docs.schema)
+            .option("maxFilesPerTrigger", 1)
+            .parquet(src_dir),
+            StreamIncrementState(index=index),
+            assignments_dir=str(out / "assignments"),
+            index_dir=str(out / "index"),
+            cfg=run_cfg,
+            checkpoint_dir=str(out / "ckpt"),
+            trigger={"availableNow": True},
+        )
+
+    q = start(unpinned, tmp_path / "unpinned", cfg)
+    with pytest.raises(StreamingQueryException, match="no signature config pin"):
+        q.awaitTermination(120)
+        raise RuntimeError("query should have failed")  # pragma: no cover
+
+    drifted = DedupConfig(hash_seed=0xBAD5EED)
+    q = start(warm, tmp_path / "drifted", drifted)
+    with pytest.raises(StreamingQueryException, match="pinned to signature config"):
+        q.awaitTermination(120)
+        raise RuntimeError("query should have failed")  # pragma: no cover
+    assert not (tmp_path / "drifted" / "index" / "batch=-1").exists()
+
+
 def test_partial_initial_index_refuses_cold_overwrite(
     spark, docs, src_dir, tmp_path
 ):
