@@ -133,8 +133,8 @@ def cdc_chunks_batch(
     opposite regime from the minhash segments (~1k shingles) where
     per-doc blocks win by L2 residency. Here the gear sliding-window
     matmul and the prefix polynomial run ONCE over the whole
-    concatenated Arrow batch (the _shingle_batch pattern,
-    functions/text.py:57), and per-doc work shrinks to cut selection
+    concatenated Arrow batch (the one-buffer pattern of
+    text._shingle_flat), and per-doc work shrinks to cut selection
     over its ~len/avg_len anchor hits. Correctness of concatenating
     WITHOUT separators: a window hash is kept only when the window lies
     fully inside one doc (global window-end in [off+W-1, off+len-1]),

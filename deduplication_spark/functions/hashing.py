@@ -63,19 +63,26 @@ def _as_i64(v) -> np.ndarray:
     return a.astype(np.int64, copy=False)
 
 
+def _offsets(lengths: np.ndarray) -> np.ndarray:
+    """Start of each row's segment in the flat array — the one segment
+    layout of _segments and the enrich UDF."""
+    return np.cumsum(lengths) - lengths
+
+
+def _rows(values: np.ndarray, keep: np.ndarray, index: pd.Index) -> pd.Series:
+    """One object cell per row: values[i] as Python value(s), NULL
+    where keep[i] is False (the doc has no shingles) — the one per-row
+    emitter of the signature UDFs."""
+    cells = [v if k else None for v, k in zip(values.tolist(), keep.tolist())]
+    return pd.Series(cells, dtype=object, index=index)
+
+
 def _segments(series: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
     """Concatenate a Series of int64 arrays -> (flat_uint64, offsets, lengths)."""
     arrs = [_as_i64(v) for v in series]
     lengths = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=len(arrs))
-    flat = (
-        np.concatenate(arrs).view(np.uint64)
-        if len(arrs) and lengths.sum() > 0
-        else np.empty(0, dtype=np.uint64)
-    )
-    offsets = np.zeros(len(arrs), dtype=np.int64)
-    if len(arrs) > 1:
-        np.cumsum(lengths[:-1], out=offsets[1:])
-    return flat, offsets, lengths
+    flat = np.concatenate([_EMPTY_I64, *arrs]).view(np.uint64)
+    return flat, _offsets(lengths), lengths
 
 
 def _minhash_kernel(
@@ -147,16 +154,13 @@ def make_enrich_udf(num_perm: int, seed: int, shingle_k: int):
     The shingle sets themselves are NOT emitted: at ~1k tokens/doc they
     are ~7 KB/row — rivaling the corpus itself in checkpoint and Arrow
     traffic — and exact verification needs them only for the borderline
-    sliver of candidate pairs, for which the pipeline recomputes them
-    on demand (see pipeline.build_minhash).
+    sliver of candidate pairs, for which the tier recomputes them on
+    demand (see minhash_lsh.minhash_near_edges).
 
-    r06: the segment layout comes straight from `_shingle_flat` —
-    the previous chain materialized per-row Python shingle LISTS
-    (_shingle_batch) only for _segments to concatenate them back into
-    the flat array _shingle_flat had already produced (one list build
-    + one np.asarray per document, pure round-trip waste inside the
-    fused path). Signature values are bit-identical: same kernel, same
-    flat array, same ordering.
+    The segment layout comes straight from `_shingle_flat`'s flat
+    array; no per-row shingle list is built. Signature values equal
+    the unfused chain's bit for bit: same kernels, same flat array,
+    same ordering.
     """
     from .text import _shingle_flat, shingle_hash_params
 
@@ -165,40 +169,18 @@ def make_enrich_udf(num_perm: int, seed: int, shingle_k: int):
 
     @pandas_udf("struct<minhash:array<bigint>,simhash:bigint>")
     def enrich(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        err = np.seterr(over="ignore")
-        try:
-            for series in it:
-                sdoc, flat, n_rows = _shingle_flat(
-                    series, shingle_k, mul, add
-                )
-                lengths = np.bincount(sdoc, minlength=n_rows)
-                offsets = np.zeros(n_rows, dtype=np.int64)
-                if n_rows > 1:
-                    np.cumsum(lengths[:-1], out=offsets[1:])
-                sig, ne = _minhash_kernel(
-                    flat, offsets, lengths, a_all, b_all, num_perm
-                )
-                fp, _ = _simhash_kernel(flat, offsets, lengths)
-                sig64 = sig.astype(np.int64)
-                yield pd.DataFrame(
-                    {
-                        "minhash": pd.Series(
-                            [
-                                sig64[i].tolist() if ne[i] else None
-                                for i in range(n_rows)
-                            ],
-                            dtype=object,
-                            index=series.index,
-                        ),
-                        "simhash": pd.Series(
-                            [int(fp[i]) if ne[i] else None for i in range(n_rows)],
-                            dtype=object,
-                            index=series.index,
-                        ),
-                    }
-                )
-        finally:
-            np.seterr(**err)
+        for series in it:
+            sdoc, flat, n_rows = _shingle_flat(series, shingle_k, mul, add)
+            lengths = np.bincount(sdoc, minlength=n_rows)
+            offsets = _offsets(lengths)
+            sig, ne = _minhash_kernel(flat, offsets, lengths, a_all, b_all, num_perm)
+            fp, _ = _simhash_kernel(flat, offsets, lengths)
+            yield pd.DataFrame(
+                {
+                    "minhash": _rows(sig.astype(np.int64), ne, series.index),
+                    "simhash": _rows(fp, ne, series.index),
+                }
+            )
 
     return enrich
 
@@ -214,15 +196,8 @@ def make_minhash_udf(num_perm: int, seed: int):
     @pandas_udf("array<bigint>")
     def minhash_sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for series in it:
-            flat, offsets, lengths = _segments(series)
-            out, nonempty = _minhash_kernel(
-                flat, offsets, lengths, a_all, b_all, num_perm
-            )
-            sig = out.astype(np.int64)
-            yield pd.Series(
-                [sig[i].tolist() if nonempty[i] else None for i in range(len(series))],
-                dtype=object,
-            )
+            sig, ne = _minhash_kernel(*_segments(series), a_all, b_all, num_perm)
+            yield _rows(sig.astype(np.int64), ne, series.index)
 
     return minhash_sig
 
@@ -237,12 +212,8 @@ def make_simhash_udf():
     @pandas_udf("bigint")
     def simhash64(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
         for series in it:
-            flat, offsets, lengths = _segments(series)
-            fp, nonempty = _simhash_kernel(flat, offsets, lengths)
-            yield pd.Series(
-                [int(fp[i]) if nonempty[i] else None for i in range(len(series))],
-                dtype=object,
-            )
+            fp, ne = _simhash_kernel(*_segments(series))
+            yield _rows(fp, ne, series.index)
 
     return simhash64
 

@@ -107,27 +107,14 @@ def _shingle_batch(
 ) -> pd.Series:
     """One Arrow batch of texts -> per-row sorted distinct shingle hashes."""
     sdoc, sh, n_rows = _shingle_flat(series, k, mul, add)
-    if not len(sh):
-        return pd.Series(
-            [[] for _ in range(n_rows)], dtype=object, index=series.index
-        )
-    counts = np.bincount(sdoc, minlength=n_rows)
-    parts = np.split(sh.view(np.int64), np.cumsum(counts)[:-1])
+    ends = np.cumsum(np.bincount(sdoc, minlength=n_rows))[:-1]
+    parts = np.split(sh.view(np.int64), ends) if n_rows else []
     return pd.Series([p.tolist() for p in parts], dtype=object, index=series.index)
-
-
-def _shingle_count_batch(
-    series: pd.Series, k: int, mul: np.uint64, add: np.uint64
-) -> np.ndarray:
-    """Per-row DISTINCT shingle count — the count-only sibling of
-    `_shingle_batch` (same kernel, no per-row list materialization)."""
-    sdoc, _sh, n_rows = _shingle_flat(series, k, mul, add)
-    return np.bincount(sdoc, minlength=n_rows)
 
 
 def shingle_hash_params(seed: int) -> tuple[np.uint64, np.uint64]:
     """The (mul, add) shingle-hash draw — ONE derivation shared by
-    make_shingle_udf and the fused enrich UDF (hashing.make_enrich_udf)
+    shingle_hashes and the fused enrich UDF (hashing.make_enrich_udf)
     so the borderline-verify recompute path stays bit-identical with
     the signature path by construction."""
     rng = np.random.default_rng(seed ^ 0x5318)
@@ -136,34 +123,23 @@ def shingle_hash_params(seed: int) -> tuple[np.uint64, np.uint64]:
     return mul, add
 
 
-def make_shingle_udf(k: int, seed: int):
-    """pandas UDF: text -> array<bigint> of DISTINCT hashed k-word
-    shingles, sorted in UNSIGNED uint64 order (the emitted array<bigint>
-    view is therefore NOT ascending when hashes >= 2^63 map to negative
-    int64 — consumers are order-free set operations; do not
-    binary-search these arrays). Fewer than k tokens yields an EMPTY
-    array — the analog of the reference's dropped trailing partial
-    block (src/compressor.c:88-93): explicit, routed to the exact tier
-    only.
+def shingle_hashes(text: Column | str, k: int, seed: int) -> Column:
+    """Column of DISTINCT hashed k-word shingles (array<bigint>), sorted
+    in UNSIGNED uint64 order (the emitted array<bigint> view is
+    therefore NOT ascending when hashes >= 2^63 map to negative int64 —
+    consumers are order-free set operations; do not binary-search these
+    arrays). Fewer than k tokens yields an EMPTY array — the analog of
+    the reference's dropped trailing partial block
+    (src/compressor.c:88-93): explicit, routed to the exact tier only.
     """
     mul, add = shingle_hash_params(seed)
 
     @pandas_udf("array<bigint>")
     def shingles(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        err = np.seterr(over="ignore")
-        try:
-            for series in it:
-                yield _shingle_batch(series, k, mul, add)
-        finally:
-            np.seterr(**err)
+        for series in it:
+            yield _shingle_batch(series, k, mul, add)
 
-    return shingles
-
-
-def shingle_hashes(text: Column | str, k: int, seed: int) -> Column:
-    """Column of distinct hashed k-word shingles (see make_shingle_udf)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return make_shingle_udf(k, seed)(c)
+    return shingles(F.col(text) if isinstance(text, str) else text)
 
 
 def gram_rows(df, k: int, seed: int):
@@ -171,7 +147,7 @@ def gram_rows(df, k: int, seed: int):
     mapInPandas: one row per DISTINCT k-shingle per doc, with the doc's
     distinct-shingle count n riding along.
 
-    The fan-out sibling of make_shingle_udf for consumers that explode
+    The fan-out sibling of shingle_hashes for consumers that explode
     the shingle array anyway (the relational n-gram Jaccard query):
     emitting columnar numpy arrays straight into the Arrow batch skips
     the per-row Python list materialization AND the JVM-side explode
@@ -195,20 +171,16 @@ def gram_rows(df, k: int, seed: int):
     )
 
     def emit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        err = np.seterr(over="ignore")
-        try:
-            for pdf in it:
-                sdoc, sh, n_rows = _shingle_flat(pdf["text"], k, mul, add)
-                counts = np.bincount(sdoc, minlength=n_rows)
-                yield pd.DataFrame(
-                    {
-                        "doc_id": pdf["doc_id"].values[sdoc],
-                        "n": counts[sdoc].astype(np.int32),
-                        "g": sh.view(np.int64),
-                    }
-                )
-        finally:
-            np.seterr(**err)
+        for pdf in it:
+            sdoc, sh, n_rows = _shingle_flat(pdf["text"], k, mul, add)
+            counts = np.bincount(sdoc, minlength=n_rows)
+            yield pd.DataFrame(
+                {
+                    "doc_id": pdf["doc_id"].values[sdoc],
+                    "n": counts[sdoc].astype(np.int32),
+                    "g": sh.view(np.int64),
+                }
+            )
 
     return df.select("doc_id", "text").mapInPandas(emit, schema)
 
@@ -216,7 +188,7 @@ def gram_rows(df, k: int, seed: int):
 def make_shingle_count_udf(k: int, seed: int):
     """pandas UDF: text -> int DISTINCT-shingle count.
 
-    The column-pruned sibling of make_shingle_udf for consumers that
+    The column-pruned sibling of shingle_hashes for consumers that
     only read `size(shingles)` (e.g. the signature-shape oracle
     surface): Catalyst cannot prune columns through an opaque UDF
     (guide §4.1 applied to UDF *outputs*), so a count-only kernel skips
@@ -228,12 +200,9 @@ def make_shingle_count_udf(k: int, seed: int):
 
     @pandas_udf("int")
     def shingle_count(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        err = np.seterr(over="ignore")
-        try:
-            for series in it:
-                n = _shingle_count_batch(series, k, mul, add)
-                yield pd.Series(n.astype(np.int32), index=series.index)
-        finally:
-            np.seterr(**err)
+        for series in it:
+            sdoc, _sh, n_rows = _shingle_flat(series, k, mul, add)
+            n = np.bincount(sdoc, minlength=n_rows).astype(np.int32)
+            yield pd.Series(n, index=series.index)
 
     return shingle_count

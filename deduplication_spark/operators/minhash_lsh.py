@@ -5,13 +5,16 @@ Reference semantic being generalized: block byte-equality dedup
 (/root/reference/src/dictionary.c:49-78) relaxed from "identical bytes"
 to "shingle-set Jaccard >= threshold" (BASELINE.json north_star).
 
-Dataflow (one map stage + two shuffles before verification):
-  docs --[codegen: shingle_hashes]--> shingles
-       --[pandas UDF: minhash]-->   signature array<long>[num_perm]
-       --[codegen: band_hash_col]-> band hashes array<long>[bands]
-       --posexplode-->              (doc_id, band_idx, band_hash)
-       --bucket_pairs-->            candidate (a, b)
-       --verify_jaccard-->          edges (a, b, jaccard >= t)
+Pipeline dataflow:
+  docs --[pandas UDF: pipeline.enrich]--> minhash array<long>[num_perm]
+       --[codegen: band_key_col]-->       band keys array<long>[bands]
+       --explode-->                       (doc_id, band_key)
+       --bucket_pairs-->                  candidate (a, b)
+       --minhash_near_edges-->            estimate screen, then exact
+                                          Jaccard on the borderline only
+The inspection chain (with_shingles -> with_minhash -> band_buckets:
+shingle_hashes, the minhash UDF, band_hash_col, posexplode) computes
+the same signatures step by step.
 
 Probability a pair with Jaccard j becomes a candidate:
 1 - (1 - j^r)^b. At the default b=32, r=4: midpoint (1/32)^(1/4) ~ 0.42

@@ -14,8 +14,10 @@ concatenated value finds ALL pairs within radius, no probabilistic
 miss (unlike LSH banding). See simhash_chunk_buckets for the
 junk-collision math that picks 8 chunks over the legacy radius+1.
 
-All Catalyst built-ins except the fingerprint UDF itself
-(functions/hashing.py::make_simhash_udf).
+All Catalyst built-ins. The pipeline's fingerprints come from the
+fused enrich UDF (functions/hashing.py::make_enrich_udf);
+`with_simhash` (make_simhash_udf over explicit shingle arrays) is the
+inspection chain.
 """
 
 from __future__ import annotations

@@ -34,39 +34,45 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 
 from ..config import DedupConfig
+from ..functions.chunking import cdc_chunks_batch
 from .candidates import CandidateResult, bucket_pairs
 
 
+def _chunked(
+    it: Iterator[pd.Series], cfg: DedupConfig
+) -> Iterator[tuple[pd.Series, list]]:
+    """(texts, cdc_chunks_batch output) per Arrow batch — the one batch
+    runner of the chunk UDFs. Batch-global kernel: one gear matmul + one
+    prefix-poly per Arrow batch (the per-doc cdc_chunks call was numpy-
+    call-overhead-bound on ~1 KB web docs, measured 5x on the 1M-doc
+    cand_substring stage; bit-identical output, property-tested)."""
+    for series in it:
+        payloads = [t.encode("utf-8") if t is not None else None for t in series]
+        yield series, cdc_chunks_batch(
+            payloads, cfg.chunk_min_len, cfg.chunk_avg_len, cfg.chunk_max_len
+        )
+
+
 def make_chunk_udf(cfg: DedupConfig):
-    """pandas UDF: text -> array<struct<fp:bigint, len:int>> of CDC chunks.
+    """pandas UDF: text -> array<bigint>: the doc's DISTINCT fingerprints
+    of CDC chunks >= chunk_min_len (NULL for NULL text).
 
-    Chunks shorter than chunk_min_len exist only at forced boundaries;
-    all fingerprints are content-only (offset-independent).
+    Shorter chunks exist only at forced boundaries and are too
+    collision-prone as candidate keys; all fingerprints are content-only
+    (offset-independent). The UDF emits the bucket keys themselves, so
+    no chunk struct crosses into the JVM only to be filtered there.
     """
-    min_len, avg_len, max_len = cfg.chunk_min_len, cfg.chunk_avg_len, cfg.chunk_max_len
+    min_len = cfg.chunk_min_len
 
-    @pandas_udf("array<struct<fp:bigint,len:int>>")
+    @pandas_udf("array<bigint>")
     def cdc_chunk_fps(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        # batch-global kernel: one gear matmul + one prefix-poly per
-        # Arrow batch — the per-doc cdc_chunks call was numpy-call-
-        # overhead-bound on ~1 KB web docs (measured 5x on the 1M-doc
-        # cand_substring stage; bit-identical output, property-tested)
-        from deduplication_spark.functions.chunking import cdc_chunks_batch
-
-        for series in it:
-            payloads = [
-                t.encode("utf-8") if t is not None else None for t in series
+        for series, chunked in _chunked(it, cfg):
+            keys = [
+                None if c is None
+                else list(dict.fromkeys(fp for _s, ln, fp in c if ln >= min_len))
+                for c in chunked
             ]
-            chunked = cdc_chunks_batch(payloads, min_len, avg_len, max_len)
-            yield pd.Series(
-                [
-                    [(fp, ln) for (_s, ln, fp) in chunks]
-                    if chunks is not None
-                    else None
-                    for chunks in chunked
-                ],
-                dtype=object,
-            )
+            yield pd.Series(keys, dtype=object, index=series.index)
 
     return cdc_chunk_fps
 
@@ -87,20 +93,14 @@ def make_chunk_shape_udf(cfg: DedupConfig):
     realistic byte length (exact in float64 below 2^53)."""
     import math
 
-    min_len, avg_len, max_len = cfg.chunk_min_len, cfg.chunk_avg_len, cfg.chunk_max_len
+    min_len, max_len = cfg.chunk_min_len, cfg.chunk_max_len
 
     @pandas_udf(
         "struct<covered_bytes:bigint,max_len_ok:boolean,"
         "head_min_len_ok:boolean,n_chunks_bounded:boolean>"
     )
     def chunk_shape(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        from deduplication_spark.functions.chunking import cdc_chunks_batch
-
-        for series in it:
-            payloads = [
-                t.encode("utf-8") if t is not None else None for t in series
-            ]
-            chunked = cdc_chunks_batch(payloads, min_len, avg_len, max_len)
+        for series, chunked in _chunked(it, cfg):
             rows = []
             for chunks in chunked:
                 lens = (
@@ -131,16 +131,11 @@ def make_chunk_shape_udf(cfg: DedupConfig):
 
 
 def chunk_buckets(docs: DataFrame, cfg: DedupConfig) -> DataFrame:
-    """(doc_id, chunk_fp) memberships, distinct, chunks >= chunk_min_len
-    only (sub-min forced-boundary fragments are too collision-prone as
-    candidate keys)."""
-    udf = make_chunk_udf(cfg)
-    return (
-        docs.select("doc_id", F.explode(udf(F.col("text"))).alias("c"))
-        .filter(F.col("c.len") >= cfg.chunk_min_len)
-        .select("doc_id", F.col("c.fp").alias("chunk_fp"))
-        .distinct()
-    )
+    """(doc_id, chunk_fp) memberships, chunks >= chunk_min_len only;
+    distinct per doc_id because the UDF emits each doc's distinct keys
+    (dedup() makes doc_ids unique)."""
+    fps = make_chunk_udf(cfg)(F.col("text"))
+    return docs.select("doc_id", F.explode(fps).alias("chunk_fp"))
 
 
 def substring_candidates(docs: DataFrame, cfg: DedupConfig) -> CandidateResult:

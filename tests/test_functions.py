@@ -6,13 +6,12 @@ import pytest
 from pyspark.sql import functions as F
 
 from deduplication_spark.config import DedupConfig
-from deduplication_spark.functions import (
+from deduplication_spark.functions.hashing import (
     band_hash_col,
     make_minhash_udf,
     make_simhash_udf,
-    shingle_hashes,
-    token_count,
 )
+from deduplication_spark.functions.text import shingle_hashes, token_count
 
 CFG = DedupConfig()
 
@@ -218,3 +217,45 @@ def test_simhash_pigeonhole_exact_cover(spark, chunks, radius):
     }
     for a_id, b_id in pair_ids:
         assert keys[a_id] & keys[b_id], (a_id, b_id)
+
+
+def test_chunk_buckets_match_per_doc_reference(spark):
+    """chunk_buckets' (doc_id, chunk_fp) rows equal the per-doc cdc_chunks
+    reference filtered to chunks >= chunk_min_len, with no duplicate row
+    (the chunk UDF emits each doc's distinct keys), at the default Arrow
+    batch size and at 2. NULL, empty, whitespace-only and sub-min docs
+    emit nothing; a repeated interior chunk is emitted once."""
+    from deduplication_spark.functions.chunking import cdc_chunks
+    from deduplication_spark.operators.substring import chunk_buckets
+
+    rng = np.random.default_rng(3)
+    words = ["".join(rng.choice(list("abcdefghij"), size=int(n)))
+             for n in rng.integers(2, 9, size=550)]
+    block = " ".join(words[:150])
+    texts = {
+        0: None,
+        1: "",
+        2: " \t\n  ",
+        3: "too short",
+        4: f"head {block} mid {block} mid {block} tail",
+        5: " ".join(words[150:]),
+    }
+    lens = (CFG.chunk_min_len, CFG.chunk_avg_len, CFG.chunk_max_len)
+    ref = {
+        i: [fp for _s, ln, fp in cdc_chunks(t.encode(), *lens) if ln >= lens[0]]
+        for i, t in texts.items()
+        if t is not None
+    }
+    assert len(ref[4]) > len(set(ref[4])), "doc 4 must repeat an interior chunk"
+    want = {(i, fp) for i, fps in ref.items() for fp in fps}
+    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    default = spark.conf.get(key)
+    try:
+        for batch in (default, "2"):
+            spark.conf.set(key, batch)
+            rows = [tuple(r) for r in chunk_buckets(df, CFG).collect()]
+            assert len(rows) == len(set(rows)), batch
+            assert set(rows) == want, batch
+    finally:
+        spark.conf.set(key, default)

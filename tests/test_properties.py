@@ -42,7 +42,11 @@ from deduplication_spark.functions.hashing import (
     _segments,
     _simhash_kernel,
 )
-from deduplication_spark.functions.text import _shingle_batch, shingle_hash_params
+from deduplication_spark.functions.text import (
+    _shingle_batch,
+    _shingle_flat,
+    shingle_hash_params,
+)
 
 NUM_PERM = 16
 A_ALL, B_ALL = _perm_params(NUM_PERM, seed=42)
@@ -198,6 +202,35 @@ def test_shingle_batch_isolation(docs):
     together = _shingles(texts)
     alone = [_shingles([t])[0] for t in texts]
     assert together == alone
+
+
+any_texts = st.lists(
+    st.one_of(
+        st.none(),
+        st.just(""),
+        st.text(max_size=80),  # arbitrary unicode: non-ASCII, \s variants
+        st.tuples(st.integers(200, 5000), st.integers(1, 300)).map(
+            lambda t: " ".join(f"wörd{(i * 7919) % t[1]}" for i in range(t[0]))
+        ),
+    ),
+    min_size=0,
+    max_size=6,
+)
+
+
+@settings(max_examples=40, deadline=None)
+@given(any_texts, st.sampled_from([1, 3, 5]))
+def test_kernels_need_no_overflow_guard(texts, k):
+    """The text-to-hash kernels do whole-array uint arithmetic, which
+    wraps mod 2^64 (2^32) without a floating-point flag: none of them
+    raises under np.errstate(all="raise"), so the UDFs run them without
+    an np.seterr guard (only cdc_chunks' scalar loop needs one)."""
+    series = pd.Series(texts, dtype=object)
+    with np.errstate(all="raise"):
+        _shingle_flat(series, k, SH_MUL, SH_ADD)
+        flat, off, lens = _segments(_shingle_batch(series, k, SH_MUL, SH_ADD))
+        _minhash_kernel(flat, off, lens, A_ALL, B_ALL, NUM_PERM)
+        _simhash_kernel(flat, off, lens)
 
 
 # ---------------------------------------------------------- CDC / Rabin-Karp
