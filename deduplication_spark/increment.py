@@ -29,9 +29,11 @@ Increment tiers: exact (hash join vs index + window-min within new),
 MinHash-LSH (band join over index ∪ new memberships, capped, estimate-
 screened, exact-Jaccard verified when `base_docs` is supplied) and,
 when asked for, SimHash (chunk-bucket join over index ∪ new, Hamming
-verified). Each runs the full pipeline's own enrichment, exact edges
-and decision procedure; only the bucket probe is increment-shaped
-(operators.candidates.probe_pairs). The substring tier is
+verified). They run through the full pipeline's own stage runner and
+tier runners (`pipeline._Stages`, `pipeline._signature_tiers`) with
+the index as the one extra input: only the bucket probe is
+increment-shaped (operators.candidates.probe_pairs). A first run is
+the same probe over an empty index. The substring tier is
 full-run-only by design: a periodic full re-run picks up the residual
 long-span duplicates.
 
@@ -46,20 +48,24 @@ merges them; the merge is reported explicitly in
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field, replace
+from concurrent.futures import ThreadPoolExecutor
+from dataclasses import dataclass, field
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
 from .functions.hashing import band_key_col
-from .io import ConfigMismatch
-from .operators.candidates import probe_pairs
+from .io import ConfigMismatch, MemoryStore
 from .operators.components import component_assignments, label_components
-from .operators.exact import exact_edges
-from .operators.minhash_lsh import band_key_buckets, minhash_near_edges
-from .operators.simhash import simhash_chunk_buckets, verify_hamming
-from .pipeline import _require_unique_ids, doc_texts, enrich
+from .pipeline import (
+    _require_unique_ids,
+    _signature_tiers,
+    _Stages,
+    doc_texts,
+    enrich,
+)
 
 
 def _sig_fingerprint(cfg: DedupConfig) -> str:
@@ -271,16 +277,21 @@ def dedup_increment(
     full run. Documented trade for running increments without
     base-corpus access.
 
-    `metrics` always carries `n_new_docs`, `cc_rounds` (union-find
-    rounds of the components), and for each candidate tier
+    The tiers run through `pipeline._signature_tiers`, the full run's
+    tier runners, concurrently and as stages of `pipeline._Stages` (each
+    materialized once). `metrics` always carries `n_new_docs` and
+    `{stage}_rows` for each stage (`enriched`, `edges_exact`,
+    `cand_minhash`, `sigs_minhash`, `edges_minhash`, `edges_simhash`,
+    `components`, as the tiers run); `cc_rounds` (union-find
+    rounds of the components); and for each candidate tier
     that runs its bucket accounting over the touched buckets
     (`minhash_candidates`, `simhash_candidates`: n_buckets,
     n_capped_buckets, n_candidate_edges, dropped_pairs) — the same
-    honest-skew accounting the full pipeline reports. It is observed by
-    the jobs that materialize the candidate pairs, so it costs no job.
+    honest-skew accounting the full pipeline reports. All of it is
+    observed by the stage writes, so it costs no job. An empty batch
+    reports `enriched_rows` and `n_new_docs` only.
     """
     cfg = cfg or DedupConfig()
-    metrics: dict = {}
 
     allowed = {"exact", "minhash", "simhash"}
     if not set(tiers) <= allowed or "exact" not in tiers:
@@ -295,7 +306,9 @@ def dedup_increment(
     _check_index(index, cfg)
 
     new_base = doc_texts(new_docs, cfg, id_col, text_col)
-    enriched = enrich(new_base, cfg, True).localCheckpoint(eager=True)
+    stage = _Stages(MemoryStore(spark, cfg), {})
+    metrics = stage.metrics
+    enriched = stage("enriched", lambda: enrich(new_base, cfg, True))
 
     # --- ID contract: unique new ids, every one above every base member
     # id. The one-row sides join as a cartesian product: a broadcast
@@ -345,10 +358,9 @@ def dedup_increment(
             f"!= cfg.num_perm {cfg.num_perm}; signatures are incomparable"
         )
     if bounds["n"] == 0:
-        # empty increment: without this, lo falls back to 0 and the
-        # b >= lo filter stops excluding old-old pairs — the LSH tier
-        # would estimate-screen the whole base index against itself for
-        # a guaranteed no-op
+        # empty increment: the probe would find no pair (it only
+        # examines buckets the batch touches), so skip it and return
+        # the index object unchanged
         empty_assign = enriched.select(
             "doc_id",
             F.col("doc_id").alias("cluster_id"),
@@ -364,134 +376,54 @@ def dedup_increment(
             index=pin_sig_config(index, cfg),
             metrics=metrics,
         )
-    if max_base is not None and min_new is not None and min_new <= max_base:
+    if max_base is not None and min_new <= max_base:
         raise ValueError(
             f"increment ids must exceed base member ids "
             f"(min new {min_new} <= max base {max_base}); "
             "cluster-id stability relies on min-id election"
         )
-    lo = F.lit(min_new if min_new is not None else 0)
 
-    # --- tier 1a: exact probe vs index (the dictionary hit path) -------
-    exact_old = (
-        enriched.select("doc_id", "content_hash")
-        .join(index.select("cluster_id", "content_hash").distinct(), "content_hash")
-        .select(F.col("cluster_id").alias("a"), F.col("doc_id").alias("b"))
-    )
-
-    # --- tier 1b: exact within the new batch (dictionary misses) -------
-    exact_new = exact_edges(enriched)
-
-    near_frames: list[DataFrame] = []
-    accounting = {}  # tier -> Observation on its bucket ranking
-
-    if "minhash" in tiers:
-        # --- tier 2: MinHash-LSH, probe-shaped -------------------------
-        # the index's stored band keys (INDEX_SCHEMA): explode drops
-        # the NULL arrays of short docs
-        idx_bands = index.select(
-            F.col("member_id").alias("doc_id"),
-            F.explode("band_keys").alias("band_key"),
-        )
-        cand = probe_pairs(
-            band_key_buckets(enriched, cfg),
-            idx_bands,
-            ["band_key"],
-            cfg.bucket_pair_cap,
-            lo,
-        )
-        accounting["minhash_candidates"] = cand.accounting
-
-        sigs = index.select(
-            F.col("member_id").alias("doc_id"), "minhash"
-        ).union(enriched.select("doc_id", "minhash"))
-        texts = None
-        if base_docs is not None:
-            texts = new_base.union(
-                base_docs.select(
-                    F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-                )
+    texts = None
+    if base_docs is not None:
+        texts = new_base.union(
+            base_docs.select(
+                F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
             )
-        # the index's ~1 KB/row minhash column is the probe's dominant
-        # read: materialize the pairs and semi-join the signatures down
-        # to the ids they touch (ONE index scan), so both estimate
-        # joins read that small slice instead of the whole index.
-        # Result-identical: the joins only ever read those ids
-        pairs = cand.pairs.localCheckpoint(eager=True)
-        ids = (
-            pairs.select(F.col("a").alias("doc_id"))
-            .union(pairs.select(F.col("b").alias("doc_id")))
-            .distinct()
         )
-        sigs = sigs.join(ids, "doc_id", "left_semi").localCheckpoint(eager=True)
-        # the SAME decision procedure as the full pipeline (shared
-        # helper — see minhash_near_edges); texts=None decides
-        # borderline pairs by the estimate at the threshold (documented
-        # trade in the docstring)
-        near_frames.append(minhash_near_edges(pairs, sigs, cfg, texts=texts))
-
-    if "simhash" in tiers:
-        # --- tier 3: SimHash pigeonhole, probe-shaped ------------------
-        # Verification is the exact Hamming check, the full pipeline's
-        # simhash decision procedure. Pigeonhole auto-flip at the size
-        # of the corpus the index and this batch make together — the
-        # full pipeline's rule, so the probe buckets like a full run
-        # over the same docs would
-        cfg_sim = replace(
-            cfg,
-            simhash_chunks=cfg.effective_simhash_chunks(
-                bounds["n_index"] + bounds["n"]
-            ),
+    # the full run's tiers, probing the index; the SimHash auto-flip
+    # reads the size of the corpus the index and this batch make
+    # together, so the probe buckets like a full run over the same docs
+    with ThreadPoolExecutor(max_workers=3) as pool:
+        futures = _signature_tiers(
+            pool, stage, enriched, cfg, tiers, texts,
+            bounds["n_index"] + bounds["n"], index, min_new,
         )
-        idx_sim = index.select(F.col("member_id").alias("doc_id"), "simhash")
-        sim_cand = probe_pairs(
-            simhash_chunk_buckets(enriched, cfg_sim),
-            simhash_chunk_buckets(idx_sim, cfg_sim),
-            ["chunk_idx", "chunk_val"],
-            cfg.bucket_pair_cap,
-            lo,
-        )
-        accounting["simhash_candidates"] = sim_cand.accounting
-        sim_frame = idx_sim.union(enriched.select("doc_id", "simhash"))
-        near_frames.append(
-            verify_hamming(sim_cand.pairs, sim_frame, cfg).select("a", "b")
-        )
-
-    # near edges touch old MEMBERS; lift them to their cluster id so the
-    # component election lands on the stable existing id
-    if near_frames:
-        near = near_frames[0]
-        for nf in near_frames[1:]:
-            near = near.union(nf)
-        m2c = index.select(
-            F.col("member_id").alias("a"), F.col("cluster_id").alias("_c")
-        )
-        near_lifted = (
-            near.join(m2c, "a", "left")
-            .select(F.coalesce("_c", "a").alias("a"), "b")
-        )
-    else:
-        near_lifted = exact_new.limit(0)
+        edges = reduce(DataFrame.union, [f.result() for f in futures])
 
     # --- components over the increment edge set ------------------------
-    edges = exact_old.union(exact_new).union(near_lifted)
-    comp, metrics["cc_rounds"] = label_components(
-        edges.select(F.col("a").alias("src"), F.col("b").alias("dst")),
-        cfg.cc_max_iterations,
-        cfg.cc_checkpoint_mode,
+    # edges touch old MEMBERS; lift them to their cluster id so the
+    # component election lands on the stable existing id. A new id is
+    # no member, and a live cluster id is a member that maps to itself
+    m2c = index.select(F.col("member_id").alias("a"), F.col("cluster_id").alias("_c"))
+    lifted = edges.join(m2c, "a", "left").select(
+        F.coalesce("_c", "a").alias("src"), F.col("b").alias("dst")
     )
-    comp = comp.localCheckpoint(eager=True)
-    # the components run materialized every candidate frame above
-    metrics.update({k: o.get for k, o in accounting.items()})
 
+    def build_components() -> tuple:
+        comp, rounds = label_components(
+            lifted, cfg.cc_max_iterations, cfg.cc_checkpoint_mode
+        )
+        return comp, {"cc_rounds": rounds}
+
+    comp = stage("components", build_components)
     assignments = component_assignments(enriched, comp)
 
     # --- explicit merge report: base clusters bridged by a new doc -----
-    # old nodes in the component graph are cluster ids (near edges are
-    # lifted; exact_old emits cluster ids): any old node not electing
-    # itself was merged into another base cluster
+    # old nodes in the component graph are cluster ids (every edge is
+    # lifted): any old node not electing itself was merged into another
+    # base cluster
     merges = comp.filter(
-        (F.col("node") < lo) & (F.col("node") != F.col("component"))
+        (F.col("node") < min_new) & (F.col("node") != F.col("component"))
     ).select(
         F.col("node").alias("old_cluster_id"),
         F.col("component").alias("merged_into"),

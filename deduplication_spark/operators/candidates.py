@@ -219,9 +219,12 @@ def verify_jaccard(
     hashes. Jaccard = |A∩B| / (|A|+|B|-|A∩B|) via array_intersect —
     built-in, codegen'd. Returns (a, b, jaccard) for pairs >= threshold.
 
-    Scale note: two shuffle joins on the id; the feature table is
-    projected to (doc_id, shingles) only, so the shuffle never carries text.
-    Run estimate_prefilter first when candidate volume is high.
+    Scale note: the feature table is projected to (doc_id, shingles)
+    only and broadcast to both joins: callers pass a small materialized
+    frame (the borderline docs' shingle sets), and the pinned plan keeps
+    a call's job count fixed. Left to AQE, which side a join broadcast
+    depended on which shuffle finished first. Run estimate_prefilter
+    first when candidate volume is high.
 
     The pairs are explicitly repartitioned first: array_intersect cost is
     per-ROW, not per-byte, so AQE's byte-based partition coalescing
@@ -230,14 +233,15 @@ def verify_jaccard(
     """
     spark = pairs.sparkSession
     pairs = pairs.repartition(2 * spark.sparkContext.defaultParallelism, "a")
-    f = features.select(F.col("doc_id").alias("_fid"), F.col("shingles").alias("_fv"))
-    fa = f.select(F.col("_fid").alias("a"), F.col("_fv").alias("_va"))
-    fb = f.select(F.col("_fid").alias("b"), F.col("_fv").alias("_vb"))
-    inter = F.size(F.array_intersect("_va", "_vb"))
-    union = F.size("_va") + F.size("_vb") - inter
+    f = F.broadcast(
+        features.select(F.col("doc_id").alias("_fid"), F.col("shingles").alias("_fv"))
+    )
+    fa, fb = f.alias("fa"), f.alias("fb")
+    inter = F.size(F.array_intersect("fa._fv", "fb._fv"))
+    union = F.size("fa._fv") + F.size("fb._fv") - inter
     return (
-        pairs.join(fa, "a")
-        .join(fb, "b")
+        pairs.join(fa, F.col("a") == F.col("fa._fid"))
+        .join(fb, F.col("b") == F.col("fb._fid"))
         .withColumn(
             "jaccard",
             F.when(union > 0, inter / union).otherwise(F.lit(0.0)),

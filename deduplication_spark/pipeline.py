@@ -34,6 +34,7 @@ import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, replace
+from functools import reduce
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -42,7 +43,7 @@ from .config import DedupConfig
 from .functions.hashing import make_enrich_udf
 from .functions.text import token_count
 from .io import MemoryStore, StageStore
-from .operators.candidates import bucket_pairs
+from .operators.candidates import bucket_pairs, probe_pairs
 from .operators.components import component_assignments, label_components
 from .operators.exact import exact_edges, with_content_key
 from .operators.minhash_lsh import band_key_buckets, minhash_near_edges
@@ -137,6 +138,168 @@ def enrich(base: DataFrame, cfg: DedupConfig, signatures: bool) -> DataFrame:
     )
 
 
+class _Stages:
+    """The one stage runner of `dedup` and `dedup_increment`: `metrics`
+    collects what every stage reports."""
+
+    def __init__(self, store, metrics: dict):
+        self.store, self.metrics, self._mx = store, metrics, threading.Lock()
+
+    def __call__(self, name: str, build, *aggs) -> DataFrame:
+        """Run-or-resume one stage; returns the materialized DataFrame.
+
+        build() returns the stage frame, or (frame, {metric: value}) where
+        a value is an Observation deeper in its plan (bucket accounting)
+        or a number build() already knows (CC rounds). The row
+        count and `aggs` are observed on the frame handed to store.write,
+        so every Observation resolves when that write returns. A resumed
+        stage reports what its `computed` lineage record stored and runs
+        no job. Thread-safe: the Spark actions run concurrently, only the
+        store lookups and bookkeeping are serialized."""
+        t0 = time.time()
+        with self._mx:
+            got = self.store.computed(name)
+        resumed = got is not None
+        if resumed:
+            df = self.store.read(name)
+        else:
+            out = build()
+            frame, observed = out if isinstance(out, tuple) else (out, {})
+            rows = Observation()
+            df = self.store.write(
+                name,
+                frame.observe(rows, F.count(F.lit(1)).alias(f"{name}_rows"), *aggs),
+            )
+            got = {
+                **rows.get,
+                **{
+                    k: o.get if isinstance(o, Observation) else o
+                    for k, o in observed.items()
+                },
+            }
+        with self._mx:
+            self.store.log_lineage(
+                name,
+                "resumed" if resumed else "computed",
+                got[f"{name}_rows"],
+                int((time.time() - t0) * 1000),
+                None if resumed else got,
+            )
+            self.metrics.update(got)
+            if resumed:
+                self.metrics[f"{name}_resumed"] = True
+        return df
+
+
+def _signature_tiers(
+    pool, stage, enriched, cfg, tiers, texts, n_docs, index=None, lo=0
+) -> list:
+    """Submit the exact, MinHash and SimHash tiers of `tiers` to `pool`,
+    each as `stage` calls over `enriched`; the futures of their edge
+    frames (a, b, tier), in that order. The one tier path of `dedup`
+    and `dedup_increment`.
+
+    `texts` (doc_id, text) exact-verify the borderline MinHash pairs, or
+    None decides them by the estimate (minhash_near_edges). `n_docs` is
+    the corpus size the SimHash pigeonhole auto-flip reads
+    (config.effective_simhash_chunks).
+
+    With `index` (INDEX_SCHEMA, every member id below `lo`), the tiers
+    probe it: candidates come from `probe_pairs` over the index's band
+    keys and chunk buckets, the exact tier adds its dictionary hits
+    (cluster id, new doc), and an extra `sigs_minhash` stage slices the
+    signatures down to the ids the pairs touch."""
+
+    def candidates(new, idx, keys):
+        if index is None:
+            return bucket_pairs(new, keys, cap=cfg.bucket_pair_cap)
+        return probe_pairs(new, idx, keys, cfg.bucket_pair_cap, F.lit(lo))
+
+    def members(col):
+        return index.select(F.col("member_id").alias("doc_id"), col)
+
+    def run_exact() -> DataFrame:
+        def build() -> DataFrame:
+            edges = exact_edges(enriched)
+            if index is not None:
+                # the dictionary hit path: new docs whose content an
+                # index member already holds
+                edges = edges.union(
+                    enriched.select("doc_id", "content_hash")
+                    .join(
+                        index.select("cluster_id", "content_hash").distinct(),
+                        "content_hash",
+                    )
+                    .select(F.col("cluster_id").alias("a"), F.col("doc_id").alias("b"))
+                )
+            return edges.withColumn("tier", F.lit("exact"))
+
+        return stage("edges_exact", build)
+
+    def run_minhash() -> DataFrame:
+        def build_cand() -> tuple:
+            # the index's stored band keys (INDEX_SCHEMA): explode drops
+            # the NULL arrays of short docs
+            idx = None if index is None else members(
+                F.explode("band_keys").alias("band_key")
+            )
+            cand = candidates(band_key_buckets(enriched, cfg), idx, ["band_key"])
+            return cand.pairs, {"minhash_candidates": cand.accounting}
+
+        pairs = stage("cand_minhash", build_cand)
+        sigs = enriched.select("doc_id", "minhash")
+        if index is not None:
+            # the index's ~1 KB/row minhash column is the probe's
+            # dominant read: semi-join it down to the ids the pairs
+            # touch (ONE index scan), so both estimate joins read that
+            # small slice. Result-identical: they only read those ids
+            def build_sigs() -> DataFrame:
+                ids = pairs.select(F.col("a").alias("doc_id")).union(
+                    pairs.select(F.col("b").alias("doc_id"))
+                )
+                return members("minhash").union(sigs).join(
+                    ids.distinct(), "doc_id", "left_semi"
+                )
+
+            sigs = stage("sigs_minhash", build_sigs)
+
+        def build_minhash() -> DataFrame:
+            # estimate-screen + borderline exact verification: the ONE
+            # decision procedure; margins documented on DedupConfig
+            return minhash_near_edges(pairs, sigs, cfg, texts=texts).withColumn(
+                "tier", F.lit("minhash")
+            )
+
+        return stage("edges_minhash", build_minhash)
+
+    def run_simhash() -> DataFrame:
+        def build() -> tuple:
+            # pigeonhole auto-flip (config rule, r05 verdict #4): at
+            # >= simhash_auto_chunks_from docs the 16-bit single-chunk
+            # buckets saturate; flip to the 8-chunk combinatorial keys.
+            # Edge set unchanged wherever no cap engages (both settings
+            # are exact covers at the same radius; pytest-pinned).
+            sim_cfg = replace(cfg, simhash_chunks=cfg.effective_simhash_chunks(n_docs))
+            sims, idx = enriched.select("doc_id", "simhash"), None
+            if index is not None:
+                idx = simhash_chunk_buckets(members("simhash"), sim_cfg)
+                sims = members("simhash").union(sims)
+            cand = candidates(
+                simhash_chunk_buckets(enriched, sim_cfg), idx, ["chunk_idx", "chunk_val"]
+            )
+            # capped chunk buckets chain-link and DROP pairs, and that
+            # loss is reported like the other tiers' (candidates.py
+            # invariant): the accounting resolves in this stage's write
+            verified = verify_hamming(cand.pairs, sims, cfg)
+            edges = verified.select("a", "b").withColumn("tier", F.lit("simhash"))
+            return edges, {"simhash_candidates": cand.accounting}
+
+        return stage("edges_simhash", build)
+
+    runners = {"exact": run_exact, "minhash": run_minhash, "simhash": run_simhash}
+    return [pool.submit(run) for t, run in runners.items() if t in tiers]
+
+
 def dedup(
     spark: SparkSession,
     docs: DataFrame,
@@ -172,59 +335,10 @@ def dedup(
         store = StageStore(spark, run_dir, pin_cfg)
     else:
         store = MemoryStore(spark, cfg)
-    metrics: dict = {"tiers": list(tiers)}
-    _mx = threading.Lock()
-
-    def _stage(name: str, build, *aggs) -> DataFrame:
-        """Run-or-resume one stage; returns the materialized DataFrame.
-
-        build() returns the stage frame, or (frame, {metric: value}) where
-        a value is an Observation deeper in its plan (bucket accounting)
-        or a number build() already knows (CC rounds). The row
-        count and `aggs` are observed on the frame handed to store.write,
-        so every Observation resolves when that write returns. A resumed
-        stage reports what its `computed` lineage record stored and runs
-        no job. Thread-safe: the Spark actions run concurrently, only the
-        store lookups and bookkeeping are serialized."""
-        t0 = time.time()
-        with _mx:
-            got = store.computed(name)
-        resumed = got is not None
-        if resumed:
-            df = store.read(name)
-        else:
-            out = build()
-            frame, observed = out if isinstance(out, tuple) else (out, {})
-            rows = Observation()
-            df = store.write(
-                name,
-                frame.observe(rows, F.count(F.lit(1)).alias(f"{name}_rows"), *aggs),
-            )
-            got = {
-                **rows.get,
-                **{
-                    k: o.get if isinstance(o, Observation) else o
-                    for k, o in observed.items()
-                },
-            }
-        with _mx:
-            store.log_lineage(
-                name,
-                "resumed" if resumed else "computed",
-                got[f"{name}_rows"],
-                int((time.time() - t0) * 1000),
-                None if resumed else got,
-            )
-            metrics.update(got)
-            if resumed:
-                metrics[f"{name}_resumed"] = True
-        return df
+    stage = _Stages(store, {"tiers": list(tiers)})
+    metrics = stage.metrics
 
     base = doc_texts(docs, cfg, id_col, text_col)
-
-    # ---- enrich: one wide projection, snapshotted ----------------------
-    def build_enriched() -> DataFrame:
-        return enrich(base, cfg, bool({"minhash", "simhash"} & set(tiers)))
 
     # ---- tiers -> edges -------------------------------------------------
     # Tier concurrency (driver threads; Spark schedules concurrent jobs
@@ -238,73 +352,18 @@ def dedup(
     #  - exact / minhash / simhash are independent given `enriched` and
     #    run concurrently after it (JVM shuffle/join work overlapping
     #    the substring tier's Python work).
-    def run_exact() -> DataFrame:
-        def build_exact() -> DataFrame:
-            return exact_edges(enriched).withColumn("tier", F.lit("exact"))
-
-        return _stage("edges_exact", build_exact)
-
-    def run_minhash() -> DataFrame:
-        def build_cand() -> tuple:
-            cand = bucket_pairs(
-                band_key_buckets(enriched, cfg), ["band_key"], cap=cfg.bucket_pair_cap
-            )
-            return cand.pairs, {"minhash_candidates": cand.accounting}
-
-        mh_pairs = _stage("cand_minhash", build_cand)
-
-        def build_minhash() -> DataFrame:
-            # estimate-screen + borderline exact verification: the ONE
-            # shared decision procedure (minhash_near_edges — also the
-            # increment prober's, so full and incremental runs cannot
-            # desynchronize); margins documented on DedupConfig
-            return minhash_near_edges(
-                mh_pairs,
-                enriched.select("doc_id", "minhash"),
-                cfg,
-                texts=base,
-            ).withColumn("tier", F.lit("minhash"))
-
-        return _stage("edges_minhash", build_minhash)
-
-    def run_simhash() -> DataFrame:
-        def build_simhash() -> tuple:
-            # pigeonhole auto-flip (config rule, r05 verdict #4): at
-            # >= simhash_auto_chunks_from docs the 16-bit single-chunk
-            # buckets saturate; flip to the 8-chunk combinatorial keys.
-            # Corpus size comes from the already-running id-uniqueness
-            # guard job — no extra action. Edge set unchanged wherever
-            # no cap engages (both settings are exact covers at the
-            # same radius; pytest-pinned).
-            c_eff = cfg.effective_simhash_chunks(guard_future.result())
-            cand = bucket_pairs(
-                simhash_chunk_buckets(enriched, replace(cfg, simhash_chunks=c_eff)),
-                ["chunk_idx", "chunk_val"],
-                cap=cfg.bucket_pair_cap,
-            )
-            # capped chunk buckets chain-link and DROP pairs, and that
-            # loss is reported like the other tiers' (candidates.py
-            # invariant): the accounting resolves in this stage's write
-            verified = verify_hamming(
-                cand.pairs, enriched.select("doc_id", "simhash"), cfg
-            )
-            edges = verified.select("a", "b").withColumn("tier", F.lit("simhash"))
-            return edges, {"simhash_candidates": cand.accounting}
-
-        return _stage("edges_simhash", build_simhash)
-
     def run_substring_full() -> DataFrame:
         def build_cand() -> tuple:
             cand = substring_candidates(base, cfg)
             return cand.pairs, {"substring_candidates": cand.accounting}
 
-        ss_pairs = _stage("cand_substring", build_cand)
+        ss_pairs = stage("cand_substring", build_cand)
 
         def build_substring() -> DataFrame:
             verified = verify_substring(ss_pairs, base, cfg)
             return verified.select("a", "b").withColumn("tier", F.lit("substring"))
 
-        return _stage("edges_substring", build_substring)
+        return stage("edges_substring", build_substring)
 
     # 5 workers: 4 tier chains + the (tiny) id-uniqueness guard probe,
     # so the guard never queues a tier behind it
@@ -313,9 +372,13 @@ def dedup(
             pool.submit(run_substring_full) if "substring" in tiers else None
         )
 
-        # enrichment runs on the main thread, overlapped by the substring
-        # tier; the signature tiers start as soon as it lands
-        enriched = _stage("enriched", build_enriched)
+        # enrichment (one wide projection, snapshotted) runs on the main
+        # thread, overlapped by the substring tier; the signature tiers
+        # start as soon as it lands
+        enriched = stage(
+            "enriched",
+            lambda: enrich(base, cfg, bool({"minhash", "simhash"} & set(tiers))),
+        )
 
         # ID-uniqueness contract (`_require_unique_ids`): one tiny id-only
         # aggregation over the already-materialized enriched snapshot,
@@ -324,36 +387,27 @@ def dedup(
         # awaited with the tier futures below, so a violation still
         # fails the run loudly. (Observations cannot take its distinct
         # count: observe rejects DISTINCT aggregates.)
-        def _dup_id_guard() -> int:
+        def _dup_id_guard() -> None:
             row = enriched.agg(
                 F.count(F.lit(1)).alias("n"),
                 F.count_distinct(F.col("doc_id")).alias("d"),
             ).first()
             _require_unique_ids(row["n"], row["d"])
-            return row["n"]
 
-        # doubles as the corpus-size probe for the simhash pigeonhole
-        # auto-flip (config.effective_simhash_chunks) — zero extra jobs
         guard_future = pool.submit(_dup_id_guard)
 
-        sig_runners = {
-            "exact": run_exact, "minhash": run_minhash, "simhash": run_simhash
-        }
-        futures = {
-            t: pool.submit(sig_runners[t]) for t in tiers if t in sig_runners
-        }
-        results = {t: f.result() for t, f in futures.items()}
+        # the SimHash auto-flip reads the corpus size the enriched
+        # stage already observed
+        futures = _signature_tiers(
+            pool, stage, enriched, cfg, tiers, base, metrics["enriched_rows"]
+        )
+        edge_frames = [f.result() for f in futures]
         guard_future.result()
-        edge_frames = [
-            results[t] for t in ("exact", "minhash", "simhash") if t in results
-        ]
         if ss_future is not None:
             edge_frames.append(ss_future.result())
 
     if edge_frames:
-        edges = edge_frames[0]
-        for ef in edge_frames[1:]:
-            edges = edges.union(ef)
+        edges = reduce(DataFrame.union, edge_frames)
     else:
         edges = spark.createDataFrame([], "a long, b long, tier string")
 
@@ -366,7 +420,7 @@ def dedup(
         )
         return component_assignments(base, comp), {"cc_rounds": rounds}
 
-    assignments = _stage(
+    assignments = stage(
         "assignments",
         build_assignments,
         F.count_if(~F.col("is_canonical")).alias("n_duplicates"),
@@ -378,7 +432,7 @@ def dedup(
             (F.count(F.lit(1)) - 1).alias("n_duplicates"),
         )
 
-    clusters = _stage("clusters", build_clusters)
+    clusters = stage("clusters", build_clusters)
 
     n_docs, n_dup = metrics["assignments_rows"], metrics["n_duplicates"]
     metrics.update(

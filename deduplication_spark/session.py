@@ -9,6 +9,7 @@ both go through here so the two-parallelism scaling evidence
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -84,26 +85,43 @@ def get_spark(
     return spark
 
 
+def _package_zip() -> str:
+    """Zip this package's sources to a path named by their sha256 (and
+    the user) and return it. Rebuilt on every call, never reused by name: a zip keyed
+    by anything but its content (a PID recycles) can ship an older tree
+    to the workers while the driver runs this one. Built under a
+    temporary name and moved into place, so a concurrent process never
+    reads a half-written zip; its bytes are a function of the sources
+    (fixed entry times), so a replace under a live context that shipped
+    the same path changes nothing it fetches."""
+    pkg_dir = os.path.dirname(os.path.abspath(__file__))
+    files = {}
+    for root, _dirs, names in os.walk(pkg_dir):
+        for f in names:
+            if f.endswith(".py") and "__pycache__" not in root:
+                full = os.path.join(root, f)
+                with open(full, "rb") as fh:
+                    files[os.path.relpath(full, os.path.dirname(pkg_dir))] = fh.read()
+    digest = hashlib.sha256(repr(sorted(files.items())).encode()).hexdigest()
+    tmp_dir = tempfile.gettempdir()
+    fd, tmp = tempfile.mkstemp(prefix="deduplication_spark_", dir=tmp_dir)
+    with os.fdopen(fd, "wb") as fh, zipfile.ZipFile(fh, "w") as z:
+        for rel, data in sorted(files.items()):
+            z.writestr(zipfile.ZipInfo(rel, (1980, 1, 1, 0, 0, 0)), data)
+    # per user too: mkstemp's file is private, and a shared sticky temp
+    # dir refuses a replace of another user's file
+    zpath = os.path.join(tmp_dir, f"deduplication_spark_{os.getuid()}_{digest[:16]}.zip")
+    os.replace(tmp, zpath)
+    return zpath
+
+
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executors — the programmatic equivalent of
     ``spark-submit --py-files deduplication_spark.zip`` (north_rule launch
     mode). Without it, pandas-UDF closures that reference this module
     fail to unpickle on workers that don't share the driver's sys.path.
     """
-    pkg_dir = os.path.dirname(os.path.abspath(__file__))
-    zpath = os.path.join(
-        tempfile.gettempdir(), f"deduplication_spark_{os.getpid()}.zip"
-    )
-    if not os.path.exists(zpath):
-        with zipfile.ZipFile(zpath, "w") as z:
-            for root, _dirs, files in os.walk(pkg_dir):
-                if "__pycache__" in root:
-                    continue
-                for f in files:
-                    if f.endswith(".py"):
-                        full = os.path.join(root, f)
-                        rel = os.path.relpath(full, os.path.dirname(pkg_dir))
-                        z.write(full, rel)
+    zpath = _package_zip()
     try:
         spark.sparkContext.addPyFile(zpath)
     except Exception as e:  # noqa: BLE001

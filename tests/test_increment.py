@@ -292,8 +292,9 @@ def test_config_mismatch_fails_fast(spark, split, inc_run):
 
 
 def test_empty_batch_short_circuits(spark, split, inc_run):
-    """An empty increment returns instantly with the unchanged index —
-    no LSH self-screen of the base index against itself."""
+    """An empty increment skips the probe and returns the index object
+    unchanged. (The probe would find no pair anyway: it examines only
+    the buckets the batch touches.)"""
     _, new_df = split
     _, inc = inc_run
     empty = new_df.filter(F.lit(False))
@@ -362,20 +363,63 @@ def test_three_increment_chain_equals_full_run(spark, docs, tiers):
     "simhash", the increment's chunk-bucket probe must find every pair
     the full run's all-buckets SimHash tier finds."""
     cfg = DedupConfig()
+    parts = _quarters(docs)
+    want = _partition(dedup(spark, docs, cfg, tiers=tiers))
+
+    base = dedup(spark, parts[0], cfg, tiers=tiers)
+    index = index_from_enriched(base.enriched, base.assignments, cfg=cfg)
+    got = _chain(spark, cfg, tiers, index, _partition(base), parts)
+
+    assert got == want
+
+
+@pytest.mark.parametrize(
+    "tiers",
+    [("exact", "minhash"), ("exact", "minhash", "simhash")],
+    ids=["minhash", "simhash"],
+)
+def test_cold_start_chain_equals_full_run(spark, docs, tiers):
+    """A first run is the probe over an empty index: the chain above,
+    started from `empty_index` instead of a full run on Q0, reproduces
+    the one-shot partition. Its first batch (base_docs empty, so
+    borderline pairs exact-verify) reports the candidate accounting of
+    `dedup` on Q0: one tier path, every bucket touched."""
+    cfg = DedupConfig()
+    parts = _quarters(docs)
+    want = _partition(dedup(spark, docs, cfg, tiers=tiers))
+
+    q0 = dedup(spark, parts[0], cfg, tiers=tiers)
+    first = dedup_increment(
+        spark, parts[0], empty_index(spark), cfg,
+        base_docs=parts[0].limit(0), tiers=tiers,
+    )
+    for k in ("minhash_candidates", "simhash_candidates"):
+        assert first.metrics.get(k) == q0.metrics.get(k), k
+    assert _partition(first) == _partition(q0)
+    got = _chain(spark, cfg, tiers, first.index, _partition(first), parts)
+
+    assert got == want
+
+
+def _quarters(docs):
+    """The corpus split into 4 id-quarters."""
     cuts = [0, 200, 400, 600, 10**9]
-    parts = [
+    return [
         docs.filter(
             (F.col("doc_id") >= cuts[i]) & (F.col("doc_id") < cuts[i + 1])
         )
         for i in range(4)
     ]
 
-    full = dedup(spark, docs, cfg, tiers=tiers)
-    want = {r["doc_id"]: r["cluster_id"] for r in full.assignments.collect()}
 
-    base = dedup(spark, parts[0], cfg, tiers=tiers)
-    index = index_from_enriched(base.enriched, base.assignments, cfg=cfg)
-    got = {r["doc_id"]: r["cluster_id"] for r in base.assignments.collect()}
+def _partition(res) -> dict[int, int]:
+    return {r["doc_id"]: r["cluster_id"] for r in res.assignments.collect()}
+
+
+def _chain(spark, cfg, tiers, index, got, parts) -> dict[int, int]:
+    """`got` (the partition of parts[0]) advanced by one dedup_increment
+    per later part, the index threaded through, base_docs = the
+    accumulated prior text, and each merge log folded in."""
     seen = parts[0]
     for batch in parts[1:]:
         inc = dedup_increment(
@@ -385,13 +429,10 @@ def test_three_increment_chain_equals_full_run(spark, docs, tiers):
             r["old_cluster_id"]: r["merged_into"] for r in inc.merges.collect()
         }
         got = {d: merge.get(c, c) for d, c in got.items()}
-        got.update(
-            {r["doc_id"]: r["cluster_id"] for r in inc.assignments.collect()}
-        )
+        got.update(_partition(inc))
         index = inc.index
         seen = seen.union(batch)
-
-    assert got == want
+    return got
 
 
 def test_merge_chain_spans_batches(spark):

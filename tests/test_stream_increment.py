@@ -21,37 +21,40 @@ N_DOCS = 600
 BATCHES = [(0, 200), (200, 400), (400, 600)]
 
 
+def _stage_batches(src: str, frames) -> None:
+    """One parquet file per pandas frame, `src/batch_{i}.parquet`,
+    written the way `write_corpus` writes the corpus. Spark's file
+    stream orders by MODIFICATION TIME, not name, so each file gets an
+    explicit, strictly increasing mtime: a maxFilesPerTrigger=1 stream
+    replays the frames in order."""
+    os.makedirs(src, exist_ok=True)
+    for i, pdf in enumerate(frames):
+        dest = os.path.join(src, f"batch_{i}.parquet")
+        pdf.to_parquet(
+            dest, index=False, coerce_timestamps="us", allow_truncated_timestamps=True
+        )
+        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+
+
 @pytest.fixture(scope="module")
-def docs(spark, tmp_path_factory):
+def corpus():
+    return generate_corpus(N_DOCS)
+
+
+@pytest.fixture(scope="module")
+def docs(spark, corpus, tmp_path_factory):
     d = tmp_path_factory.mktemp("stream_inc_corpus")
-    write_corpus(generate_corpus(N_DOCS), str(d))
+    write_corpus(corpus, str(d))
     return spark.read.parquet(str(d / "documents.parquet"))
 
 
 @pytest.fixture(scope="module")
-def src_dir(docs, tmp_path_factory):
-    """One parquet part file per batch, written in id order so the file
-    stream (maxFilesPerTrigger=1) replays the batches monotonically."""
+def src_dir(corpus, tmp_path_factory):
+    """One parquet file per batch, in id order, so the file stream
+    (maxFilesPerTrigger=1) replays the batches monotonically."""
     d = str(tmp_path_factory.mktemp("stream_inc_src"))
-    for i, (lo, hi) in enumerate(BATCHES):
-        part = docs.filter(
-            (F.col("doc_id") >= lo) & (F.col("doc_id") < hi)
-        ).coalesce(1)
-        part.write.parquet(os.path.join(d, f"tmp_b{i}"))
-        # move the single part file into the source dir under an
-        # id-ordered name; the dir itself is the streaming source
-        import glob
-        import shutil
-
-        [f] = glob.glob(os.path.join(d, f"tmp_b{i}", "part-*.parquet"))
-        dest = os.path.join(d, f"batch_{i}.parquet")
-        shutil.move(f, dest)
-        shutil.rmtree(os.path.join(d, f"tmp_b{i}"))
-        # Spark's file stream orders by MODIFICATION TIME, not name;
-        # moves preserve the tmp part files' mtimes, which on a coarse-
-        # granularity filesystem can tie or invert — pin explicit
-        # strictly-increasing mtimes so the batch order is deliberate
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
+    ids = corpus.documents["doc_id"]
+    _stage_batches(d, [corpus.documents[(ids >= lo) & (ids < hi)] for lo, hi in BATCHES])
     return d
 
 
@@ -185,20 +188,11 @@ def test_resolved_assignments_applies_merges(spark):
     B = " ".join(f"b{i}" for i in range(40))
     work = tempfile.mkdtemp(prefix="graft_merge_test_")
     src = os.path.join(work, "src")
-    os.makedirs(src)
-    frames = [
+    _stage_batches(src, [
         pd.DataFrame({"doc_id": [1], "text": [X + " " + A]}),
         pd.DataFrame({"doc_id": [2], "text": [X + " " + B]}),
         pd.DataFrame({"doc_id": [10], "text": [X]}),
-    ]
-    for i, f in enumerate(frames):
-        tmp = os.path.join(work, f"tmp_{i}")
-        spark.createDataFrame(f).coalesce(1).write.parquet(tmp)
-        import glob
-        import shutil
-
-        [p] = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        shutil.move(p, os.path.join(src, f"batch_{i}.parquet"))
+    ])
     schema = spark.read.parquet(src).schema
     state = StreamIncrementState(index=empty_index(spark))
     q = stream_dedup_increment(
@@ -281,24 +275,6 @@ def test_persisted_index_versions_pin_signature_config(spark, tmp_path):
     assert res.assignments.count() == 1
 
 
-def _write_batch_files(spark, src, batches) -> None:
-    """One parquet file per pandas batch under `src`, with strictly
-    increasing mtimes so a maxFilesPerTrigger=1 file stream replays
-    them in order."""
-    import glob
-    import shutil
-
-    os.makedirs(src)
-    for i, pdf in enumerate(batches):
-        tmp = os.path.join(src, f"tmp_b{i}")
-        spark.createDataFrame(pdf).coalesce(1).write.parquet(tmp)
-        [f] = glob.glob(os.path.join(tmp, "part-*.parquet"))
-        dest = os.path.join(src, f"batch_{i}.parquet")
-        shutil.move(f, dest)
-        shutil.rmtree(tmp)
-        os.utime(dest, (1_700_000_000 + i, 1_700_000_000 + i))
-
-
 def test_stream_simhash_tier_catches_residual_pair(spark, tmp_path):
     """tiers=(... "simhash") forwards to the per-batch prober: the
     kernel-searched residual pair (jaccard 0.783 -> minhash tier
@@ -314,7 +290,7 @@ def test_stream_simhash_tier_catches_residual_pair(spark, tmp_path):
     doc_b = " ".join(var)
 
     src = str(tmp_path / "src")
-    _write_batch_files(spark, src, [
+    _stage_batches(src, [
         pd.DataFrame({"doc_id": [1, 2], "text": [doc_a, "unrelated filler doc text here"]}),
         pd.DataFrame({"doc_id": [10], "text": [doc_b]}),
     ])
@@ -360,7 +336,7 @@ def test_cold_start_index_stores_band_keys(spark, tmp_path):
 
     src = str(tmp_path / "src")
     words = [f"w{i}" for i in range(60)]
-    _write_batch_files(spark, src, [
+    _stage_batches(src, [
         pd.DataFrame({
             "doc_id": [1, 2, 3],
             "text": [" ".join(words), " ".join(words[::-1]), "too short"],
