@@ -116,9 +116,6 @@ class DedupConfig:
     #                round. Identical output (pytest-pinned).
     cc_checkpoint_mode: str = "local"
 
-    # --- execution ---
-    shuffle_partitions: int = 32
-
     extra: dict = field(default_factory=dict)
 
     def __post_init__(self) -> None:

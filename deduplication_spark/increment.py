@@ -60,6 +60,7 @@ from .functions.hashing import band_key_col
 from .io import ConfigMismatch, MemoryStore
 from .operators.components import component_assignments, label_components
 from .pipeline import (
+    _job_tag,
     _require_unique_ids,
     _signature_tiers,
     _Stages,
@@ -199,7 +200,7 @@ def build_index(
     `run_dir` StageStore — use `index_from_enriched` instead: a join,
     zero UDF passes."""
     return index_from_enriched(
-        enrich(doc_texts(docs, cfg, id_col, text_col), cfg, True),
+        enrich(doc_texts(docs, id_col, text_col), cfg, True),
         assignments,
         cfg=cfg,
     )
@@ -305,7 +306,7 @@ def dedup_increment(
     # incomparable and LSH recall ~0, silently.
     _check_index(index, cfg)
 
-    new_base = doc_texts(new_docs, cfg, id_col, text_col)
+    new_base = doc_texts(new_docs, id_col, text_col)
     stage = _Stages(MemoryStore(spark, cfg), {})
     metrics = stage.metrics
     enriched = stage("enriched", lambda: enrich(new_base, cfg, True))
@@ -314,34 +315,35 @@ def dedup_increment(
     # id. The one-row sides join as a cartesian product: a broadcast
     # nested-loop join would run one broadcast job per side, more than
     # the distinct count's extra shuffle stage costs
-    bounds = (
-        enriched.agg(
-            F.min("doc_id").alias("lo"),
-            F.count(F.lit(1)).alias("n"),
-            F.count_distinct("doc_id").alias("d"),
+    with _job_tag(spark, "bounds"):
+        bounds = (
+            enriched.agg(
+                F.min("doc_id").alias("lo"),
+                F.count(F.lit(1)).alias("n"),
+                F.count_distinct("doc_id").alias("d"),
+            )
+            .crossJoin(
+                index.agg(
+                    F.max("member_id").alias("hi"),
+                    F.count(F.lit(1)).alias("n_index"),
+                ).hint("shuffle_replicate_nl")
+            )
+            .crossJoin(
+                # legacy-shape guard on a BOUNDED sample (r06): an index
+                # whose signatures have a different width than cfg.num_perm
+                # (a secondary check behind the pin) must fail fast. Widths
+                # are uniform per index by construction (one enrich kernel
+                # wrote every row) and the sig_cfg pin above is the primary
+                # guard — scanning the FULL 1 KB/row minhash column just to
+                # take size() cost one whole-index read per increment, the
+                # single biggest base-coupled read of the probe path.
+                index.limit(1024).agg(
+                    F.min(F.size("minhash")).alias("sig_lo"),
+                    F.max(F.size("minhash")).alias("sig_hi"),
+                ).hint("shuffle_replicate_nl")
+            )
+            .first()
         )
-        .crossJoin(
-            index.agg(
-                F.max("member_id").alias("hi"),
-                F.count(F.lit(1)).alias("n_index"),
-            ).hint("shuffle_replicate_nl")
-        )
-        .crossJoin(
-            # legacy-shape guard on a BOUNDED sample (r06): an index
-            # whose signatures have a different width than cfg.num_perm
-            # (a secondary check behind the pin) must fail fast. Widths
-            # are uniform per index by construction (one enrich kernel
-            # wrote every row) and the sig_cfg pin above is the primary
-            # guard — scanning the FULL 1 KB/row minhash column just to
-            # take size() cost one whole-index read per increment, the
-            # single biggest base-coupled read of the probe path.
-            index.limit(1024).agg(
-                F.min(F.size("minhash")).alias("sig_lo"),
-                F.max(F.size("minhash")).alias("sig_hi"),
-            ).hint("shuffle_replicate_nl")
-        )
-        .first()
-    )
     min_new, max_base = bounds["lo"], bounds["hi"]
     metrics["n_new_docs"] = bounds["n"]
     _require_unique_ids(bounds["n"], bounds["d"])

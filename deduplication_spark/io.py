@@ -80,11 +80,8 @@ class StageStore:
         self._pin_config()
 
     # -- run config (DDP1-header analog) ------------------------------
-    def _config_path(self) -> str:
-        return os.path.join(self.run_dir, "run_config.json")
-
     def _pin_config(self) -> None:
-        p = self._config_path()
+        p = os.path.join(self.run_dir, "run_config.json")
         if os.path.exists(p):
             with open(p) as f:
                 persisted = f.read()
@@ -136,11 +133,6 @@ class StageStore:
         driver — no Spark job, no data scan. At 100 TB this is the same
         O(files) metadata walk Iceberg's manifest write performs."""
         d = self.path(name)
-        if not os.path.isdir(d):
-            # defensive: __init__ rejects URI-scheme run_dirs outright
-            # (resume/config-pin are local-FS only; Iceberg manifests
-            # would own lineage on a remote deployment)
-            return
         try:
             import pyarrow.parquet as pq
 

@@ -146,8 +146,12 @@ def verify_substring(pairs: DataFrame, docs: DataFrame, cfg: DedupConfig) -> Dat
     """(a, b) pairs that share an exact substring of length >=
     substring_min_len (utf-8 byte-level; exact for ASCII text)."""
     L = cfg.substring_min_len
-    # per-row Rabin-Karp cost, not per-byte: defeat AQE byte-based
-    # coalescing (see candidates.verify_jaccard)
+    # per-row Rabin-Karp cost, not per-byte: spread the pairs past AQE's
+    # byte-based coalescing (see candidates.verify_jaccard). That sets
+    # the verify parallelism only while the pairs stream through the
+    # joins. When AQE broadcasts them (a BroadcastExchange over this
+    # Exchange, as at 1,000 short docs), the UDF runs on the streamed
+    # text side's partitions, which pipeline.doc_texts sizes by bytes.
     spark = pairs.sparkSession
     pairs = pairs.repartition(2 * spark.sparkContext.defaultParallelism, "a")
     t = docs.select(F.col("doc_id").alias("_id"), F.col("text").alias("_t"))

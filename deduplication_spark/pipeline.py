@@ -33,6 +33,7 @@ from __future__ import annotations
 import threading
 import time
 from concurrent.futures import ThreadPoolExecutor
+from contextlib import contextmanager
 from dataclasses import dataclass, replace
 from functools import reduce
 
@@ -65,6 +66,19 @@ def _require_unique_ids(n: int, n_distinct: int) -> None:
         )
 
 
+@contextmanager
+def _job_tag(spark: SparkSession, name: str):
+    """Tag every Spark job this thread starts inside the block with
+    `name`, so an event log reads as the pipeline's stages. Tags are
+    per thread: each tier thread tags its own jobs, and perfbench's
+    job groups are left alone."""
+    spark.sparkContext.addJobTag(name)
+    try:
+        yield
+    finally:
+        spark.sparkContext.removeJobTag(name)
+
+
 @dataclass
 class DedupResult:
     """One dedup() run.
@@ -88,25 +102,25 @@ class DedupResult:
                                        # so index builds cost zero UDF passes
 
 
-def doc_texts(
-    docs: DataFrame, cfg: DedupConfig, id_col: str, text_col: str
-) -> DataFrame:
+def doc_texts(docs: DataFrame, id_col: str, text_col: str) -> DataFrame:
     """(doc_id, text) from the user's (id_col, text_col), hash-partitioned
     on doc_id before the UDF stages. Every operator below the entry
     points reads `doc_id`/`text` only; user column names stop here.
 
-    A parquet scan of one smallish file yields a handful of input
-    splits, starving the cores (and, at 100 TB, leaving residual skew
-    from file sizes); doc_id hash-partitioning spreads Arrow batches
-    evenly across workers."""
-    n_part = int(
-        docs.sparkSession.conf.get(
-            "spark.sql.shuffle.partitions", str(cfg.shuffle_partitions)
-        )
-    )
+    The hash partitioning spreads Arrow batches evenly across workers (a
+    parquet scan of one smallish file yields a handful of input splits)
+    and co-locates duplicate ids. The partition COUNT is AQE's: it
+    coalesces this shuffle by bytes, and every stage that reads the
+    frame inherits the result (enrich, CDC, the text side of the verify
+    joins, the StageStore snapshots). At Spark's defaults that is one
+    partition under 1 MB of text, one per core from ~4 MB, and 64 MB
+    partitions at scale, never more than spark.sql.shuffle.partitions.
+    A fixed count starts one Python task per partition however few
+    documents it holds, and each costs 0.25-0.4 s (measured on a 4-core
+    host), which made small corpora task-bound."""
     return docs.select(
         F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
-    ).repartition(n_part, "doc_id")
+    ).repartition("doc_id")
 
 
 def enrich(base: DataFrame, cfg: DedupConfig, signatures: bool) -> DataFrame:
@@ -154,29 +168,31 @@ class _Stages:
         count and `aggs` are observed on the frame handed to store.write,
         so every Observation resolves when that write returns. A resumed
         stage reports what its `computed` lineage record stored and runs
-        no job. Thread-safe: the Spark actions run concurrently, only the
-        store lookups and bookkeeping are serialized."""
+        no job. Every job the stage starts carries `name` as its job tag.
+        Thread-safe: the Spark actions run concurrently, only the store
+        lookups and bookkeeping are serialized."""
         t0 = time.time()
         with self._mx:
             got = self.store.computed(name)
         resumed = got is not None
-        if resumed:
-            df = self.store.read(name)
-        else:
-            out = build()
-            frame, observed = out if isinstance(out, tuple) else (out, {})
-            rows = Observation()
-            df = self.store.write(
-                name,
-                frame.observe(rows, F.count(F.lit(1)).alias(f"{name}_rows"), *aggs),
-            )
-            got = {
-                **rows.get,
-                **{
-                    k: o.get if isinstance(o, Observation) else o
-                    for k, o in observed.items()
-                },
-            }
+        with _job_tag(self.store.spark, name):
+            if resumed:
+                df = self.store.read(name)
+            else:
+                out = build()
+                frame, observed = out if isinstance(out, tuple) else (out, {})
+                rows = Observation()
+                df = self.store.write(
+                    name,
+                    frame.observe(rows, F.count(F.lit(1)).alias(f"{name}_rows"), *aggs),
+                )
+                got = {
+                    **rows.get,
+                    **{
+                        k: o.get if isinstance(o, Observation) else o
+                        for k, o in observed.items()
+                    },
+                }
         with self._mx:
             self.store.log_lineage(
                 name,
@@ -338,7 +354,7 @@ def dedup(
     stage = _Stages(store, {"tiers": list(tiers)})
     metrics = stage.metrics
 
-    base = doc_texts(docs, cfg, id_col, text_col)
+    base = doc_texts(docs, id_col, text_col)
 
     # ---- tiers -> edges -------------------------------------------------
     # Tier concurrency (driver threads; Spark schedules concurrent jobs
@@ -388,10 +404,11 @@ def dedup(
         # fails the run loudly. (Observations cannot take its distinct
         # count: observe rejects DISTINCT aggregates.)
         def _dup_id_guard() -> None:
-            row = enriched.agg(
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct(F.col("doc_id")).alias("d"),
-            ).first()
+            with _job_tag(spark, "dup_id_guard"):
+                row = enriched.agg(
+                    F.count(F.lit(1)).alias("n"),
+                    F.count_distinct(F.col("doc_id")).alias("d"),
+                ).first()
             _require_unique_ids(row["n"], row["d"])
 
         guard_future = pool.submit(_dup_id_guard)

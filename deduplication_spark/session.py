@@ -27,10 +27,12 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) a SparkSession.
 
-    ``cores`` is the local parallelism; shuffle partitions default to
-    2x cores so every core has work even with one straggler, without
-    drowning small inputs in task overhead. On a real cluster this
-    would be executors*cores*2 (AQE coalesces the excess).
+    ``cores`` is the local parallelism. ``shuffle_partitions`` (default
+    2x cores) is only the initial width of each shuffle: AQE coalesces
+    every exchange by bytes after its map stage, so a small input runs
+    as few tasks as its bytes need, and this count is the most any
+    exchange, the pipeline's text shuffle included, runs at. On a real
+    cluster it would be executors*cores*2.
     """
     if master is None:
         master = f"local[{cores}]" if cores else "local[*]"

@@ -113,6 +113,29 @@ def test_metrics_same_in_every_mode(spark, docs, result):
     )
 
 
+def test_task_sizing_never_changes_the_answer(spark, docs):
+    """AQE sizes the text stages by their bytes (`pipeline.doc_texts`);
+    with its coalescing off every shuffle runs at
+    spark.sql.shuffle.partitions. The answer is the same either way, and
+    with it on, the enriched stage runs in fewer partitions."""
+    key = "spark.sql.adaptive.coalescePartitions.enabled"
+    saved = spark.conf.get(key)
+    runs = {}
+    try:
+        for on in ("false", "true"):
+            spark.conf.set(key, on)
+            runs[on] = dedup(spark, docs, DedupConfig())
+    finally:
+        spark.conf.set(key, saved)
+    fixed, sized = runs["false"], runs["true"]
+    for frame in ("assignments", "clusters"):
+        rows = [sorted(map(tuple, getattr(r, frame).collect())) for r in (fixed, sized)]
+        assert rows[0] == rows[1], frame
+    assert fixed.metrics == sized.metrics
+    n_part = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    assert sized.enriched.rdd.getNumPartitions() < n_part
+
+
 def test_resume_reports_stored_metrics(spark, docs, result):
     """A resumed stage reports the metrics its computed lineage record
     stored: the same candidate accounting and counts as the run that

@@ -171,12 +171,10 @@ def test_replay_is_idempotent(spark, docs, streamed):
     )
 
 
-def test_resolved_assignments_applies_merges(spark):
+def test_resolved_assignments_applies_merges(spark, tmp_path):
     """A batch-2 bridge doc merging two earlier clusters: the merge is
     folded into resolved_assignments even though batch 0/1 rows were
     written before the merge existed."""
-    import tempfile
-
     import pandas as pd
 
     from deduplication_spark.streaming.increment_stream import (
@@ -186,7 +184,7 @@ def test_resolved_assignments_applies_merges(spark):
     X = " ".join(f"w{i}" for i in range(200))
     A = " ".join(f"a{i}" for i in range(40))
     B = " ".join(f"b{i}" for i in range(40))
-    work = tempfile.mkdtemp(prefix="graft_merge_test_")
+    work = str(tmp_path)
     src = os.path.join(work, "src")
     _stage_batches(src, [
         pd.DataFrame({"doc_id": [1], "text": [X + " " + A]}),
