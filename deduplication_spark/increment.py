@@ -38,7 +38,8 @@ full-run-only by design: a periodic full re-run picks up the residual
 long-span duplicates.
 
 ID contract: new doc_ids must all be GREATER than every base member id
-(natural for append-only crawls; validated with one tiny aggregation).
+(natural for append-only crawls): the enriched stage observes the
+batch's min id, and one small query reads the index's max member id.
 Connected components elects the min id per component, so a component
 touching an existing cluster keeps that cluster's id — assignments are
 STABLE across increments. A new doc bridging two existing clusters
@@ -60,8 +61,8 @@ from .functions.hashing import band_key_col
 from .io import ConfigMismatch, MemoryStore
 from .operators.components import component_assignments, label_components
 from .pipeline import (
+    _enriched,
     _job_tag,
-    _require_unique_ids,
     _signature_tiers,
     _Stages,
     doc_texts,
@@ -283,14 +284,15 @@ def dedup_increment(
     materialized once). `metrics` always carries `n_new_docs` and
     `{stage}_rows` for each stage (`enriched`, `edges_exact`,
     `cand_minhash`, `sigs_minhash`, `edges_minhash`, `edges_simhash`,
-    `components`, as the tiers run); `cc_rounds` (union-find
+    `components`, as the tiers run); `doc_ids` (min, duplicates: the
+    batch's doc_id facts, `pipeline._enriched`); `cc_rounds` (union-find
     rounds of the components); and for each candidate tier
     that runs its bucket accounting over the touched buckets
     (`minhash_candidates`, `simhash_candidates`: n_buckets,
     n_capped_buckets, n_candidate_edges, dropped_pairs) — the same
     honest-skew accounting the full pipeline reports. All of it is
     observed by the stage writes, so it costs no job. An empty batch
-    reports `enriched_rows` and `n_new_docs` only.
+    reports `enriched_rows`, `doc_ids` and `n_new_docs` only.
     """
     cfg = cfg or DedupConfig()
 
@@ -309,24 +311,21 @@ def dedup_increment(
     new_base = doc_texts(new_docs, id_col, text_col)
     stage = _Stages(MemoryStore(spark, cfg), {})
     metrics = stage.metrics
-    enriched = stage("enriched", lambda: enrich(new_base, cfg, True))
+    # the new side of the ID contract (unique ids, their min) is checked
+    # and observed by the enriched stage's own write
+    enriched = _enriched(stage, new_base, cfg, True)
+    min_new = metrics["doc_ids"]["min"]
+    n_new = metrics["n_new_docs"] = metrics["enriched_rows"]
 
-    # --- ID contract: unique new ids, every one above every base member
-    # id. The one-row sides join as a cartesian product: a broadcast
-    # nested-loop join would run one broadcast job per side, more than
-    # the distinct count's extra shuffle stage costs
+    # --- the index side: every new id above every base member id, the
+    # pin, the width sample. The two one-row aggregates join as a
+    # cartesian product: a broadcast nested-loop join would run a
+    # broadcast job of its own
     with _job_tag(spark, "bounds"):
         bounds = (
-            enriched.agg(
-                F.min("doc_id").alias("lo"),
-                F.count(F.lit(1)).alias("n"),
-                F.count_distinct("doc_id").alias("d"),
-            )
-            .crossJoin(
-                index.agg(
-                    F.max("member_id").alias("hi"),
-                    F.count(F.lit(1)).alias("n_index"),
-                ).hint("shuffle_replicate_nl")
+            index.agg(
+                F.max("member_id").alias("hi"),
+                F.count(F.lit(1)).alias("n_index"),
             )
             .crossJoin(
                 # legacy-shape guard on a BOUNDED sample (r06): an index
@@ -344,9 +343,6 @@ def dedup_increment(
             )
             .first()
         )
-    min_new, max_base = bounds["lo"], bounds["hi"]
-    metrics["n_new_docs"] = bounds["n"]
-    _require_unique_ids(bounds["n"], bounds["d"])
     if bounds["n_index"] and "sig_cfg" not in index.schema["minhash"].metadata:
         raise ConfigMismatch(
             f"index has {bounds['n_index']} rows but no signature config "
@@ -359,7 +355,7 @@ def dedup_increment(
             f"index minhash width {bounds['sig_lo']}..{bounds['sig_hi']} "
             f"!= cfg.num_perm {cfg.num_perm}; signatures are incomparable"
         )
-    if bounds["n"] == 0:
+    if n_new == 0:
         # empty increment: the probe would find no pair (it only
         # examines buckets the batch touches), so skip it and return
         # the index object unchanged
@@ -378,10 +374,10 @@ def dedup_increment(
             index=pin_sig_config(index, cfg),
             metrics=metrics,
         )
-    if max_base is not None and min_new <= max_base:
+    if bounds["hi"] is not None and min_new <= bounds["hi"]:
         raise ValueError(
             f"increment ids must exceed base member ids "
-            f"(min new {min_new} <= max base {max_base}); "
+            f"(min new {min_new} <= max base {bounds['hi']}); "
             "cluster-id stability relies on min-id election"
         )
 
@@ -398,7 +394,7 @@ def dedup_increment(
     with ThreadPoolExecutor(max_workers=3) as pool:
         futures = _signature_tiers(
             pool, stage, enriched, cfg, tiers, texts,
-            bounds["n_index"] + bounds["n"], index, min_new,
+            bounds["n_index"] + n_new, index, min_new,
         )
         edges = reduce(DataFrame.union, [f.result() for f in futures])
 

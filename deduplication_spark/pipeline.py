@@ -37,13 +37,13 @@ from contextlib import contextmanager
 from dataclasses import dataclass, replace
 from functools import reduce
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession, Window
 from pyspark.sql import functions as F
 
 from .config import DedupConfig
 from .functions.hashing import make_enrich_udf
 from .functions.text import token_count
-from .io import MemoryStore, StageStore
+from .io import ConfigMismatch, MemoryStore, StageStore
 from .operators.candidates import bucket_pairs, probe_pairs
 from .operators.components import component_assignments, label_components
 from .operators.exact import exact_edges, with_content_key
@@ -52,18 +52,6 @@ from .operators.simhash import simhash_chunk_buckets, verify_hamming
 from .operators.substring import substring_candidates, verify_substring
 
 ALL_TIERS = ("exact", "minhash", "simhash", "substring")
-
-
-def _require_unique_ids(n: int, n_distinct: int) -> None:
-    """The doc_id uniqueness contract of `dedup` and `dedup_increment`:
-    duplicate doc_ids would silently corrupt min-id election and gather
-    joins (two rows claim the same identity)."""
-    if n != n_distinct:
-        raise ValueError(
-            f"{n - n_distinct} duplicate doc_id value(s) in the input; "
-            "doc_id must be unique (cluster ids ARE doc ids — a "
-            "duplicated id merges unrelated rows silently)"
-        )
 
 
 @contextmanager
@@ -86,8 +74,9 @@ class DedupResult:
     `metrics` is complete on every run, at no Spark job of its own:
     `{stage}_rows` for each stage, `{tier}_candidates` (n_buckets,
     n_capped_buckets, n_candidate_edges, dropped_pairs) for each capped
-    tier, `cc_rounds` (union-find rounds of the components), `n_docs`,
-    `n_duplicates`, `n_canonical`, `dup_ratio`, plus
+    tier, `cc_rounds` (union-find rounds of the components), `doc_ids`
+    (min, duplicates: the input's doc_id facts `_enriched` checks),
+    `n_docs`, `n_duplicates`, `n_canonical`, `dup_ratio`, plus
     `{stage}_resumed` for each stage a StageStore run read back (which
     reports the metrics its first computation stored)."""
 
@@ -205,6 +194,46 @@ class _Stages:
             if resumed:
                 self.metrics[f"{name}_resumed"] = True
         return df
+
+
+def _enriched(stage, base, cfg, signatures: bool) -> DataFrame:
+    """The `enriched` stage of `dedup` and `dedup_increment`, and their
+    doc_id contract: every id present and unique (cluster ids ARE doc
+    ids — a duplicated id merges unrelated rows silently).
+
+    The stage's write observes `doc_ids` on the rows it reads: `min`,
+    the smallest id, and `duplicates`, the rows past the first of their
+    id plus every NULL id (the window puts all NULL ids in one partition
+    whose first row numbers 1). It costs no job; a violation raises
+    right after the write, before any tier starts. The window sits below
+    the enrich UDF, on `doc_texts`' hash partitioning by doc_id, so it
+    adds a sort and no exchange: above the UDF the partitioning is
+    unknown and Spark would shuffle the rows again."""
+
+    def build() -> tuple:
+        ids = Observation()
+        first = F.row_number().over(Window.partitionBy("doc_id").orderBy("doc_id")) == 1
+        checked = base.withColumn("_dup", ~first | F.col("doc_id").isNull()).observe(
+            ids, F.min("doc_id").alias("min"), F.count_if("_dup").alias("duplicates")
+        )
+        return enrich(checked.drop("_dup"), cfg, signatures), {"doc_ids": ids}
+
+    enriched = stage("enriched", build)
+    ids = stage.metrics.get("doc_ids")
+    if ids is None:
+        # only a resume can lack it: a StageStore record written before
+        # the stage observed its ids
+        raise ConfigMismatch(
+            f"run_dir {stage.store.run_dir} holds an enriched stage without "
+            "the doc_id facts it now records; start a fresh run_dir"
+        )
+    if ids["duplicates"]:
+        raise ValueError(
+            f"{ids['duplicates']} duplicate doc_id value(s) in the input; "
+            "doc_id must be unique (cluster ids ARE doc ids — a "
+            "duplicated id merges unrelated rows silently)"
+        )
+    return enriched
 
 
 def _signature_tiers(
@@ -381,37 +410,18 @@ def dedup(
 
         return stage("edges_substring", build_substring)
 
-    # 5 workers: 4 tier chains + the (tiny) id-uniqueness guard probe,
-    # so the guard never queues a tier behind it
-    with ThreadPoolExecutor(max_workers=5) as pool:
+    # 4 workers: one per tier chain
+    with ThreadPoolExecutor(max_workers=4) as pool:
         ss_future = (
             pool.submit(run_substring_full) if "substring" in tiers else None
         )
 
         # enrichment (one wide projection, snapshotted) runs on the main
         # thread, overlapped by the substring tier; the signature tiers
-        # start as soon as it lands
-        enriched = stage(
-            "enriched",
-            lambda: enrich(base, cfg, bool({"minhash", "simhash"} & set(tiers))),
+        # start as soon as it lands and its doc_id check passes
+        enriched = _enriched(
+            stage, base, cfg, bool({"minhash", "simhash"} & set(tiers))
         )
-
-        # ID-uniqueness contract (`_require_unique_ids`): one tiny id-only
-        # aggregation over the already-materialized enriched snapshot,
-        # submitted to the tier pool so the probe overlaps tier work
-        # instead of serializing the critical path; its result is
-        # awaited with the tier futures below, so a violation still
-        # fails the run loudly. (Observations cannot take its distinct
-        # count: observe rejects DISTINCT aggregates.)
-        def _dup_id_guard() -> None:
-            with _job_tag(spark, "dup_id_guard"):
-                row = enriched.agg(
-                    F.count(F.lit(1)).alias("n"),
-                    F.count_distinct(F.col("doc_id")).alias("d"),
-                ).first()
-            _require_unique_ids(row["n"], row["d"])
-
-        guard_future = pool.submit(_dup_id_guard)
 
         # the SimHash auto-flip reads the corpus size the enriched
         # stage already observed
@@ -419,7 +429,6 @@ def dedup(
             pool, stage, enriched, cfg, tiers, base, metrics["enriched_rows"]
         )
         edge_frames = [f.result() for f in futures]
-        guard_future.result()
         if ss_future is not None:
             edge_frames.append(ss_future.result())
 

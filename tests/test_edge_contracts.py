@@ -15,7 +15,9 @@
   output like NaN/zero-norm ones.
 """
 
+import json
 import math
+import re
 
 import pandas as pd
 import pytest
@@ -23,6 +25,7 @@ from pyspark.sql import functions as F
 
 from deduplication_spark.config import DedupConfig
 from deduplication_spark.increment import dedup_increment, index_from_enriched
+from deduplication_spark.io import ConfigMismatch
 from deduplication_spark.pipeline import dedup
 
 
@@ -109,20 +112,40 @@ def test_duplicate_doc_ids_fail_loudly(spark):
     """Round-5 contract decision: doc_id uniqueness is a validated
     precondition — cluster ids ARE doc ids, so a duplicated id would
     silently merge unrelated rows. Every dedup() call runs the guard
-    and raises."""
-    df = spark.createDataFrame(
-        pd.DataFrame(
-            {"doc_id": [1, 1, 2], "text": ["doc a", "doc b", "doc c"]}
+    and raises. A NULL id counts as a duplicate: the check's window
+    puts all NULL ids in one partition, where the first numbers 1."""
+    for ids in ([1, 1, 2], [None, 2, 3]):
+        df = spark.createDataFrame(
+            list(zip(ids, ["doc a", "doc b", "doc c"])), "doc_id long, text string"
         )
-    )
-    with pytest.raises(ValueError, match="duplicate doc_id"):
-        dedup(spark, df, DedupConfig(), tiers=("exact",))
+        with pytest.raises(ValueError, match="^1 duplicate doc_id"):
+            dedup(spark, df, DedupConfig(), tiers=("exact",))
     # unique ids pass the same gate
     ok = spark.createDataFrame(
         pd.DataFrame({"doc_id": [1, 2], "text": ["doc a", "doc b"]})
     )
     res = dedup(spark, ok, DedupConfig(), tiers=("exact",))
     assert res.assignments.count() == 2
+
+
+def test_enriched_record_without_doc_id_facts_refuses_resume(spark, tmp_path):
+    """A run_dir whose `enriched` lineage record predates the observed
+    doc_id facts cannot prove its ids unique: the resume refuses it,
+    naming the run_dir, instead of failing on the missing key or
+    skipping the check."""
+    df = spark.createDataFrame(
+        pd.DataFrame({"doc_id": [1, 2], "text": ["doc a", "doc b"]})
+    )
+    run_dir = tmp_path / "run"
+    dedup(spark, df, DedupConfig(), run_dir=str(run_dir), tiers=("exact",))
+    lineage = run_dir / "lineage.jsonl"
+    recs = [json.loads(line) for line in lineage.read_text().splitlines()]
+    for rec in recs:
+        if rec["stage"] == "enriched":
+            del rec["metrics"]["doc_ids"]
+    lineage.write_text("".join(json.dumps(r) + "\n" for r in recs))
+    with pytest.raises(ConfigMismatch, match=re.escape(f"run_dir {run_dir} ") + ".*fresh"):
+        dedup(spark, df, DedupConfig(), run_dir=str(run_dir), tiers=("exact",))
 
 
 def test_unknown_tier_names_are_refused(spark, tmp_path):

@@ -321,14 +321,14 @@ def test_id_contract_enforced(spark, split, inc_run):
 def test_duplicate_ids_in_a_batch_are_refused(spark):
     """The increment holds dedup()'s doc_id uniqueness contract, with
     the same message: a batch with ids [10, 10, 11] would otherwise give
-    doc 10 two assignment rows and member 10 several index rows."""
-    batch = spark.createDataFrame(
-        pd.DataFrame(
-            {"doc_id": [10, 10, 11], "text": ["doc a", "doc b", "doc c"]}
+    doc 10 two assignment rows and member 10 several index rows. A NULL
+    id is refused the same way."""
+    for ids in ([10, 10, 11], [None, 10, 11]):
+        batch = spark.createDataFrame(
+            list(zip(ids, ["doc a", "doc b", "doc c"])), "doc_id long, text string"
         )
-    )
-    with pytest.raises(ValueError, match="1 duplicate doc_id"):
-        dedup_increment(spark, batch, empty_index(spark), DedupConfig())
+        with pytest.raises(ValueError, match="^1 duplicate doc_id"):
+            dedup_increment(spark, batch, empty_index(spark), DedupConfig())
 
 
 def test_string_content_hash_index_is_refused(spark, inc_run):

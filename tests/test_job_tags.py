@@ -12,8 +12,8 @@ from tools.stage_tags import per_stage
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 DEDUP_TAGS = {
-    "enriched", "dup_id_guard", "edges_exact", "cand_minhash", "edges_minhash",
-    "edges_simhash", "cand_substring", "edges_substring", "assignments", "clusters",
+    "enriched", "edges_exact", "cand_minhash", "edges_minhash", "edges_simhash",
+    "cand_substring", "edges_substring", "assignments", "clusters",
 }
 INCREMENT_TAGS = {
     "enriched", "bounds", "edges_exact", "cand_minhash", "sigs_minhash",
