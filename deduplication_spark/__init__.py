@@ -19,8 +19,8 @@ src/dictionary.c:49-78) re-expressed Spark-first:
 - self-describing = run_config persisted next to every output
                     (replaces the DDP1 header, compressor.c:30-39)
 
-Everything is pyspark.sql DataFrame + vectorized pandas/Arrow UDFs; no
-per-row Python, no RDDs.
+Everything is pyspark.sql DataFrame + vectorized Arrow UDFs over numpy
+buffers; no per-row Python, no RDDs, and no pandas on the workers.
 """
 
 from deduplication_spark.config import DedupConfig

@@ -1,4 +1,4 @@
-"""MinHash / SimHash signatures — numpy-vectorized pandas UDFs.
+"""MinHash / SimHash signatures — numpy-vectorized Arrow UDFs.
 
 These are the operations Catalyst genuinely can't express efficiently
 (a 128-way min over a universal-hash family per row). The kernels work
@@ -25,10 +25,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
+
+from .arrow import array, lists, segments
 
 def _perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     """Multiply-add family over the uint32 ring (odd multiplier).
@@ -45,44 +47,25 @@ def _perm_params(num_perm: int, seed: int) -> tuple[np.ndarray, np.ndarray]:
     return a, b
 
 
-_EMPTY_I64 = np.empty(0, dtype=np.int64)
-
-
-def _as_i64(v) -> np.ndarray:
-    """Row coercion for _segments: a NULL row behaves as empty (the
-    UDFs then emit NULL per their docstrings, instead of a TypeError
-    killing the whole Spark stage), and NULL array elements (None from
-    Arrow object arrays, NaN from float promotion) are dropped."""
-    if v is None:
-        return _EMPTY_I64
-    a = np.asarray(v)
-    if a.dtype == object or a.dtype.kind == "f":
-        return np.asarray(
-            [x for x in a if x is not None and x == x], dtype=np.int64
-        )
-    return a.astype(np.int64, copy=False)
-
-
 def _offsets(lengths: np.ndarray) -> np.ndarray:
     """Start of each row's segment in the flat array — the one segment
     layout of _segments and the enrich UDF."""
     return np.cumsum(lengths) - lengths
 
 
-def _rows(values: np.ndarray, keep: np.ndarray, index: pd.Index) -> pd.Series:
-    """One object cell per row: values[i] as Python value(s), NULL
-    where keep[i] is False (the doc has no shingles) — the one per-row
-    emitter of the signature UDFs."""
-    cells = [v if k else None for v, k in zip(values.tolist(), keep.tolist())]
-    return pd.Series(cells, dtype=object, index=index)
+def _segments(arr: pa.Array) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """A list<bigint> column -> (flat_uint64, offsets, lengths). A NULL row
+    behaves as empty (the UDFs then emit NULL per their docstrings) and
+    NULL array elements are dropped."""
+    flat, lengths = segments(arr)
+    return flat.view(np.uint64), _offsets(lengths), lengths
 
 
-def _segments(series: pd.Series) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Concatenate a Series of int64 arrays -> (flat_uint64, offsets, lengths)."""
-    arrs = [_as_i64(v) for v in series]
-    lengths = np.fromiter((len(a) for a in arrs), dtype=np.int64, count=len(arrs))
-    flat = np.concatenate([_EMPTY_I64, *arrs]).view(np.uint64)
-    return flat, _offsets(lengths), lengths
+def _signatures(sig: np.ndarray, nonempty: np.ndarray) -> pa.Array:
+    """The (n, num_perm) signature matrix as array<bigint> rows, NULL
+    where the doc has no shingles."""
+    lengths = np.where(nonempty, sig.shape[1], 0)
+    return lists(lengths, sig[nonempty].astype(np.int64).ravel(), nonempty)
 
 
 def _minhash_kernel(
@@ -167,53 +150,51 @@ def make_enrich_udf(num_perm: int, seed: int, shingle_k: int):
     mul, add = shingle_hash_params(seed)
     a_all, b_all = _perm_params(num_perm, seed)
 
-    @pandas_udf("struct<minhash:array<bigint>,simhash:bigint>")
-    def enrich(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for series in it:
-            sdoc, flat, n_rows = _shingle_flat(series, shingle_k, mul, add)
+    @arrow_udf("struct<minhash:array<bigint>,simhash:bigint>")
+    def enrich(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for texts in it:
+            sdoc, flat, n_rows = _shingle_flat(texts, shingle_k, mul, add)
             lengths = np.bincount(sdoc, minlength=n_rows)
             offsets = _offsets(lengths)
             sig, ne = _minhash_kernel(flat, offsets, lengths, a_all, b_all, num_perm)
             fp, _ = _simhash_kernel(flat, offsets, lengths)
-            yield pd.DataFrame(
-                {
-                    "minhash": _rows(sig.astype(np.int64), ne, series.index),
-                    "simhash": _rows(fp, ne, series.index),
-                }
+            yield pa.StructArray.from_arrays(
+                [_signatures(sig, ne), array(pa.int64(), fp, ne)],
+                names=["minhash", "simhash"],
             )
 
     return enrich
 
 
 def make_minhash_udf(num_perm: int, seed: int):
-    """Returns a pandas UDF: array<bigint> shingles -> array<bigint> signature.
+    """Returns an Arrow UDF: array<bigint> shingles -> array<bigint> signature.
 
     Empty shingle sets (short docs — the partial-block analog) yield NULL,
     which downstream tiers filter out explicitly.
     """
     a_all, b_all = _perm_params(num_perm, seed)
 
-    @pandas_udf("array<bigint>")
-    def minhash_sig(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in it:
-            sig, ne = _minhash_kernel(*_segments(series), a_all, b_all, num_perm)
-            yield _rows(sig.astype(np.int64), ne, series.index)
+    @arrow_udf("array<bigint>")
+    def minhash_sig(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for shingles in it:
+            sig, ne = _minhash_kernel(*_segments(shingles), a_all, b_all, num_perm)
+            yield _signatures(sig, ne)
 
     return minhash_sig
 
 
 def make_simhash_udf():
-    """Returns a pandas UDF: array<bigint> shingles -> bigint simhash64.
+    """Returns an Arrow UDF: array<bigint> shingles -> bigint simhash64.
 
     Classic Charikar SimHash over the 64 bits of each shingle hash:
     bit b of the fingerprint is 1 iff more than half the shingles have
     bit b set. Empty shingle sets yield NULL.
     """
-    @pandas_udf("bigint")
-    def simhash64(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in it:
-            fp, ne = _simhash_kernel(*_segments(series))
-            yield _rows(fp, ne, series.index)
+    @arrow_udf("bigint")
+    def simhash64(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for shingles in it:
+            fp, ne = _simhash_kernel(*_segments(shingles))
+            yield array(pa.int64(), fp, ne)
 
     return simhash64
 

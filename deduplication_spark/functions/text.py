@@ -4,7 +4,7 @@ The reference's dedup unit is a fixed-size byte block
 (/root/reference/src/compressor.c:105-107); ours is a document, and the
 sub-document unit is the k-shingle set.
 
-Shingling is a *batch-vectorized* pandas UDF, not a Catalyst expression:
+Shingling is a *batch-vectorized* Arrow UDF, not a Catalyst expression:
 the natural `transform(sequence(...), i -> xxhash64(slice(tokens,...)))`
 formulation is a higher-order function, which Catalyst evaluates
 INTERPRETED (no whole-stage codegen) with an O(k) array copy per
@@ -13,9 +13,9 @@ concatenates the whole Arrow batch into ONE byte buffer and computes
 every token boundary, token hash (prefix polynomial algebra over the
 uint64 ring — see functions/chunking.py) and k-gram combine
 (sliding-window matmul) with whole-batch numpy calls; per-row Python
-touches nothing but the final list split. This is the
-"vectorized pandas/Arrow UDFs (no per-row Python)" contract from
-BASELINE.json's input_hint.
+touches nothing but the text decode, and the shingle arrays leave as
+one flat Arrow buffer. This is the "vectorized pandas/Arrow UDFs (no
+per-row Python)" contract from BASELINE.json's input_hint.
 
 Scale note: only hashed longs ever leave the UDF — token strings never
 enter a shuffle.
@@ -26,11 +26,12 @@ from __future__ import annotations
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import Column
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
+from .arrow import array, lists, valid, values
 from .chunking import _prefix_poly
 
 # ---------------------------------------------------------------------------
@@ -55,7 +56,7 @@ _SHINGLE_COMBINE = np.uint64(0xFF51AFD7ED558CCD | 1)  # odd
 
 
 def _shingle_flat(
-    series: pd.Series, k: int, mul: np.uint64, add: np.uint64
+    texts: pa.Array, k: int, mul: np.uint64, add: np.uint64
 ) -> tuple[np.ndarray, np.ndarray, int]:
     """One Arrow batch of texts -> deduped (doc_idx, shingle_hash) arrays.
 
@@ -63,9 +64,9 @@ def _shingle_flat(
     distinct shingle hashes (uint64), sorted (doc, unsigned hash). The
     kernel shared by the array-emitting and count-only UDF variants —
     one implementation so the two can never drift."""
-    n_rows = len(series)
+    n_rows = len(texts)
     bufs = [
-        ("" if t is None else t).lower().encode("utf-8") for t in series
+        ("" if t is None else t).lower().encode("utf-8") for t in texts.to_pylist()
     ]
     # one buffer; docs separated by a space so tokens never cross docs
     buf = np.frombuffer(b" ".join(bufs), dtype=np.uint8)
@@ -103,13 +104,11 @@ def _shingle_flat(
 
 
 def _shingle_batch(
-    series: pd.Series, k: int, mul: np.uint64, add: np.uint64
-) -> pd.Series:
+    texts: pa.Array, k: int, mul: np.uint64, add: np.uint64
+) -> pa.Array:
     """One Arrow batch of texts -> per-row sorted distinct shingle hashes."""
-    sdoc, sh, n_rows = _shingle_flat(series, k, mul, add)
-    ends = np.cumsum(np.bincount(sdoc, minlength=n_rows))[:-1]
-    parts = np.split(sh.view(np.int64), ends) if n_rows else []
-    return pd.Series([p.tolist() for p in parts], dtype=object, index=series.index)
+    sdoc, sh, n_rows = _shingle_flat(texts, k, mul, add)
+    return lists(np.bincount(sdoc, minlength=n_rows), sh.view(np.int64))
 
 
 def shingle_hash_params(seed: int) -> tuple[np.uint64, np.uint64]:
@@ -134,17 +133,17 @@ def shingle_hashes(text: Column | str, k: int, seed: int) -> Column:
     """
     mul, add = shingle_hash_params(seed)
 
-    @pandas_udf("array<bigint>")
-    def shingles(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in it:
-            yield _shingle_batch(series, k, mul, add)
+    @arrow_udf("array<bigint>")
+    def shingles(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for texts in it:
+            yield _shingle_batch(texts, k, mul, add)
 
     return shingles(F.col(text) if isinstance(text, str) else text)
 
 
 def gram_rows(df, k: int, seed: int):
     """(doc_id, text) frame -> exploded (doc_id, n, g) gram-membership rows via
-    mapInPandas: one row per DISTINCT k-shingle per doc, with the doc's
+    mapInArrow: one row per DISTINCT k-shingle per doc, with the doc's
     distinct-shingle count n riding along.
 
     The fan-out sibling of shingle_hashes for consumers that explode
@@ -170,23 +169,25 @@ def gram_rows(df, k: int, seed: int):
         ]
     )
 
-    def emit(it: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in it:
-            sdoc, sh, n_rows = _shingle_flat(pdf["text"], k, mul, add)
+    def emit(it: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
+        for batch in it:
+            ids = batch.column("doc_id")
+            sdoc, sh, n_rows = _shingle_flat(batch.column("text"), k, mul, add)
             counts = np.bincount(sdoc, minlength=n_rows)
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"].values[sdoc],
-                    "n": counts[sdoc].astype(np.int32),
-                    "g": sh.view(np.int64),
-                }
+            yield pa.RecordBatch.from_arrays(
+                [
+                    array(pa.int64(), values(ids, np.int64)[sdoc], valid(ids)[sdoc]),
+                    array(pa.int32(), counts[sdoc].astype(np.int32)),
+                    array(pa.int64(), sh.view(np.int64)),
+                ],
+                names=["doc_id", "n", "g"],
             )
 
-    return df.select("doc_id", "text").mapInPandas(emit, schema)
+    return df.select("doc_id", "text").mapInArrow(emit, schema)
 
 
 def make_shingle_count_udf(k: int, seed: int):
-    """pandas UDF: text -> int DISTINCT-shingle count.
+    """Arrow UDF: text -> int DISTINCT-shingle count.
 
     The column-pruned sibling of shingle_hashes for consumers that
     only read `size(shingles)` (e.g. the signature-shape oracle
@@ -198,11 +199,10 @@ def make_shingle_count_udf(k: int, seed: int):
     construction."""
     mul, add = shingle_hash_params(seed)
 
-    @pandas_udf("int")
-    def shingle_count(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series in it:
-            sdoc, _sh, n_rows = _shingle_flat(series, k, mul, add)
-            n = np.bincount(sdoc, minlength=n_rows).astype(np.int32)
-            yield pd.Series(n, index=series.index)
+    @arrow_udf("int")
+    def shingle_count(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for texts in it:
+            sdoc, _sh, n_rows = _shingle_flat(texts, k, mul, add)
+            yield array(pa.int32(), np.bincount(sdoc, minlength=n_rows).astype(np.int32))
 
     return shingle_count

@@ -24,9 +24,11 @@ import math
 from collections.abc import Iterator
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+from ..functions.arrow import array, values
 
 # One kernel task per this many edges. The kernel labels 4M random
 # edges in ~1.8 s on a 4-core host, while every Python task carries
@@ -35,7 +37,7 @@ from pyspark.sql import functions as F
 EDGES_PER_TASK = 2_000_000
 
 
-def _uf_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+def _uf_kernel(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.RecordBatch]:
     """(node, root) for every node of one partition's (src, dst) edges,
     root = min node of the node's component within the partition.
 
@@ -43,15 +45,15 @@ def _uf_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     unique nodes (so the min label is the min node); each pass hooks
     every edge's larger label onto its smaller one and compresses by
     pointer jumping, until both endpoints of every edge agree."""
-    frames = list(batches)
-    if not frames:
+    batches = list(batches)
+    if not batches:
         return
-    e = pd.concat(frames)
-    n = len(e)
-    nodes, inv = np.unique(
-        np.concatenate([e["src"].to_numpy(np.int64), e["dst"].to_numpy(np.int64)]),
-        return_inverse=True,
+    src, dst = (
+        np.concatenate([values(b.column(c), np.int64) for b in batches])
+        for c in ("src", "dst")
     )
+    n = len(src)
+    nodes, inv = np.unique(np.concatenate([src, dst]), return_inverse=True)
     u, v = inv[:n], inv[n:]
     lab = np.arange(len(nodes))
     while True:
@@ -68,7 +70,10 @@ def _uf_kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
                 break
             lab = nxt
         u, v = u[diff], v[diff]
-    yield pd.DataFrame({"node": nodes, "root": nodes[lab]})
+    yield pa.RecordBatch.from_arrays(
+        [array(pa.int64(), nodes), array(pa.int64(), nodes[lab])],
+        names=["node", "root"],
+    )
 
 
 def label_components(
@@ -122,7 +127,7 @@ def label_components(
     for i in range(1, max_iterations + 1):
         per_node, n_links = _ckpt(
             e.coalesce(max(1, math.ceil(n_edges / EDGES_PER_TASK)))
-            .mapInPandas(_uf_kernel, "node long, root long")
+            .mapInArrow(_uf_kernel, "node long, root long")
             .groupBy("node")
             .agg(F.min("root").alias("root"), F.collect_set("root").alias("roots")),
             F.sum(F.size("roots") - 1),

@@ -6,7 +6,7 @@ Reference semantic being generalized: block byte-equality dedup
 to "shingle-set Jaccard >= threshold" (BASELINE.json north_star).
 
 Pipeline dataflow:
-  docs --[pandas UDF: pipeline.enrich]--> minhash array<long>[num_perm]
+  docs --[Arrow UDF: pipeline.enrich]-->  minhash array<long>[num_perm]
        --[codegen: band_key_col]-->       band keys array<long>[bands]
        --explode-->                       (doc_id, band_key)
        --bucket_pairs-->                  candidate (a, b)

@@ -10,8 +10,8 @@ doc keeps Jaccard far below threshold). Two stages:
    so a groupBy(chunk_fp) bucket join finds them. Same skew-capped
    bucket_pairs machinery as the LSH tier (giant buckets = boilerplate).
 2. **Verification** — exact common-substring test at L = substring_min_len
-   via Rabin-Karp L-gram fingerprint intersection (vectorized numpy in a
-   pandas UDF; a pair passes iff the docs share some length-L substring).
+   via Rabin-Karp L-gram fingerprint intersection (vectorized numpy in an
+   Arrow UDF; a pair passes iff the docs share some length-L substring).
    This replaces the SURVEY's per-group suffix-array sketch with an
    equivalent-semantics, fully-vectorizable check: "exists common
    substring >= L" needs only ONE fingerprint-set intersection, not the
@@ -26,35 +26,39 @@ tiers' edges would serialize the critical path behind them.
 
 from __future__ import annotations
 
+import math
 from collections.abc import Iterator
+from itertools import chain
 
-import pandas as pd
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.functions import pandas_udf
+from pyspark.sql.functions import arrow_udf
 
 from ..config import DedupConfig
-from ..functions.chunking import cdc_chunks_batch
+from ..functions.arrow import array, lists
+from ..functions.chunking import cdc_chunks_batch, has_common_gram
 from .candidates import CandidateResult, bucket_pairs
 
 
-def _chunked(
-    it: Iterator[pd.Series], cfg: DedupConfig
-) -> Iterator[tuple[pd.Series, list]]:
-    """(texts, cdc_chunks_batch output) per Arrow batch — the one batch
+def _chunked(it: Iterator[pa.Array], cfg: DedupConfig) -> Iterator[list]:
+    """cdc_chunks_batch output per Arrow batch of texts — the one batch
     runner of the chunk UDFs. Batch-global kernel: one gear matmul + one
     prefix-poly per Arrow batch (the per-doc cdc_chunks call was numpy-
     call-overhead-bound on ~1 KB web docs, measured 5x on the 1M-doc
     cand_substring stage; bit-identical output, property-tested)."""
-    for series in it:
-        payloads = [t.encode("utf-8") if t is not None else None for t in series]
-        yield series, cdc_chunks_batch(
+    for texts in it:
+        payloads = [
+            t.encode("utf-8") if t is not None else None for t in texts.to_pylist()
+        ]
+        yield cdc_chunks_batch(
             payloads, cfg.chunk_min_len, cfg.chunk_avg_len, cfg.chunk_max_len
         )
 
 
 def make_chunk_udf(cfg: DedupConfig):
-    """pandas UDF: text -> array<bigint>: the doc's DISTINCT fingerprints
+    """Arrow UDF: text -> array<bigint>: the doc's DISTINCT fingerprints
     of CDC chunks >= chunk_min_len (NULL for NULL text).
 
     Shorter chunks exist only at forced boundaries and are too
@@ -64,21 +68,26 @@ def make_chunk_udf(cfg: DedupConfig):
     """
     min_len = cfg.chunk_min_len
 
-    @pandas_udf("array<bigint>")
-    def cdc_chunk_fps(it: Iterator[pd.Series]) -> Iterator[pd.Series]:
-        for series, chunked in _chunked(it, cfg):
+    @arrow_udf("array<bigint>")
+    def cdc_chunk_fps(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for chunked in _chunked(it, cfg):
             keys = [
-                None if c is None
+                [] if c is None
                 else list(dict.fromkeys(fp for _s, ln, fp in c if ln >= min_len))
                 for c in chunked
             ]
-            yield pd.Series(keys, dtype=object, index=series.index)
+            n = len(keys)
+            yield lists(
+                np.fromiter(map(len, keys), np.int64, n),
+                np.fromiter(chain.from_iterable(keys), np.int64),
+                np.fromiter((c is not None for c in chunked), bool, n),
+            )
 
     return cdc_chunk_fps
 
 
 def make_chunk_shape_udf(cfg: DedupConfig):
-    """pandas UDF: text -> struct<covered_bytes:bigint, max_len_ok:boolean,
+    """Arrow UDF: text -> struct<covered_bytes:bigint, max_len_ok:boolean,
     head_min_len_ok:boolean, n_chunks_bounded:boolean> — the chunk-geometry
     invariants of q_cdc_chunks computed INSIDE the chunk UDF pass.
 
@@ -91,40 +100,32 @@ def make_chunk_shape_udf(cfg: DedupConfig):
     the arithmetic mirrors the Catalyst expressions exactly:
     ceil/floor over float division matches Spark's double `/` for any
     realistic byte length (exact in float64 below 2^53)."""
-    import math
-
     min_len, max_len = cfg.chunk_min_len, cfg.chunk_max_len
+    names = ["covered_bytes", "max_len_ok", "head_min_len_ok", "n_chunks_bounded"]
 
-    @pandas_udf(
+    @arrow_udf(
         "struct<covered_bytes:bigint,max_len_ok:boolean,"
         "head_min_len_ok:boolean,n_chunks_bounded:boolean>"
     )
-    def chunk_shape(it: Iterator[pd.Series]) -> Iterator[pd.DataFrame]:
-        for series, chunked in _chunked(it, cfg):
-            rows = []
+    def chunk_shape(it: Iterator[pa.Array]) -> Iterator[pa.Array]:
+        for chunked in _chunked(it, cfg):
+            cols = [[], [], [], []]
             for chunks in chunked:
                 lens = (
                     [ln for (_s, ln, _fp) in chunks] if chunks is not None else []
                 )
                 s, n = sum(lens), len(lens)
-                rows.append(
-                    (
-                        s,
-                        all(ln <= max_len for ln in lens),
-                        all(ln >= min_len for ln in lens[:-1]),
-                        n >= math.ceil(s / max_len)
-                        and n <= math.floor((s - 1) / min_len) + 1,
-                    )
+                cols[0].append(s)
+                cols[1].append(all(ln <= max_len for ln in lens))
+                cols[2].append(all(ln >= min_len for ln in lens[:-1]))
+                cols[3].append(
+                    n >= math.ceil(s / max_len)
+                    and n <= math.floor((s - 1) / min_len) + 1
                 )
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "covered_bytes",
-                    "max_len_ok",
-                    "head_min_len_ok",
-                    "n_chunks_bounded",
-                ],
-                index=series.index,
+            yield pa.StructArray.from_arrays(
+                [array(pa.int64(), np.array(cols[0], dtype=np.int64))]
+                + [array(pa.bool_(), np.array(c, dtype=bool)) for c in cols[1:]],
+                names=names,
             )
 
     return chunk_shape
@@ -160,23 +161,18 @@ def verify_substring(pairs: DataFrame, docs: DataFrame, cfg: DedupConfig) -> Dat
         .join(t.select(F.col("_id").alias("b"), F.col("_t").alias("_tb")), "b")
     )
 
-    @pandas_udf("boolean")
-    def shares_long_span(it: Iterator[pd.DataFrame]) -> Iterator[pd.Series]:
-        from deduplication_spark.functions.chunking import has_common_gram
-
-        for frame in it:
-            ta, tb = frame.iloc[:, 0], frame.iloc[:, 1]
-            yield pd.Series(
-                [
-                    has_common_gram(x.encode("utf-8"), y.encode("utf-8"), L)
-                    if x is not None and y is not None
-                    else False
-                    for x, y in zip(ta, tb)
-                ]
-            )
+    @arrow_udf("boolean")
+    def shares_long_span(ta: pa.Array, tb: pa.Array) -> pa.Array:
+        ok = (
+            x is not None
+            and y is not None
+            and has_common_gram(x.encode("utf-8"), y.encode("utf-8"), L)
+            for x, y in zip(ta.to_pylist(), tb.to_pylist())
+        )
+        return array(pa.bool_(), np.fromiter(ok, bool, len(ta)))
 
     return (
-        joined.withColumn("_ok", shares_long_span(F.struct("_ta", "_tb")))
+        joined.withColumn("_ok", shares_long_span("_ta", "_tb"))
         .filter(F.col("_ok"))
         .select("a", "b")
     )

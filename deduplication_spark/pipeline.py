@@ -32,7 +32,7 @@ from __future__ import annotations
 
 import threading
 import time
-from concurrent.futures import ThreadPoolExecutor
+from concurrent.futures import ThreadPoolExecutor, wait
 from contextlib import contextmanager
 from dataclasses import dataclass, replace
 from functools import reduce
@@ -147,6 +147,12 @@ class _Stages:
 
     def __init__(self, store, metrics: dict):
         self.store, self.metrics, self._mx = store, metrics, threading.Lock()
+        self._refused = False
+
+    def refuse(self) -> None:
+        """Start no further stage of this call."""
+        with self._mx:
+            self._refused = True
 
     def __call__(self, name: str, build, *aggs) -> DataFrame:
         """Run-or-resume one stage; returns the materialized DataFrame.
@@ -162,6 +168,8 @@ class _Stages:
         lookups and bookkeeping are serialized."""
         t0 = time.time()
         with self._mx:
+            if self._refused:
+                raise RuntimeError(f"stage {name} not started: its call was refused")
             got = self.store.computed(name)
         resumed = got is not None
         with _job_tag(self.store.spark, name):
@@ -194,6 +202,19 @@ class _Stages:
             if resumed:
                 self.metrics[f"{name}_resumed"] = True
         return df
+
+
+def _cancel_until_done(spark: SparkSession, future, tags: tuple[str, ...]) -> None:
+    """Cancel the jobs tagged `tags` until `future` ends. One cancel is
+    not enough: a stage between two of its jobs submits the next one
+    after it. Tags are shared by name, so in a session that runs calls
+    concurrently a stage of that name in another call is cancelled
+    too."""
+    while True:
+        for tag in tags:
+            spark.sparkContext.cancelJobsWithTag(tag)
+        if wait([future], timeout=0.1).done:
+            return
 
 
 def _enriched(stage, base, cfg, signatures: bool) -> DataFrame:
@@ -411,18 +432,29 @@ def dedup(
         return stage("edges_substring", build_substring)
 
     # 4 workers: one per tier chain
-    with ThreadPoolExecutor(max_workers=4) as pool:
-        ss_future = (
-            pool.submit(run_substring_full) if "substring" in tiers else None
-        )
-
+    pool = ThreadPoolExecutor(max_workers=4)
+    ss_future = pool.submit(run_substring_full) if "substring" in tiers else None
+    try:
         # enrichment (one wide projection, snapshotted) runs on the main
         # thread, overlapped by the substring tier; the signature tiers
         # start as soon as it lands and its doc_id check passes
         enriched = _enriched(
             stage, base, cfg, bool({"minhash", "simhash"} & set(tiers))
         )
-
+    except BaseException:
+        # a refused (or failed) call returns now: the substring chain
+        # starts no further stage, a daemon thread cancels its jobs
+        # until it ends, and the pool is left without waiting for it
+        stage.refuse()
+        if ss_future is not None:
+            threading.Thread(
+                target=_cancel_until_done,
+                args=(spark, ss_future, ("cand_substring", "edges_substring")),
+                daemon=True,
+            ).start()
+        pool.shutdown(wait=False, cancel_futures=True)
+        raise
+    with pool:
         # the SimHash auto-flip reads the corpus size the enriched
         # stage already observed
         futures = _signature_tiers(

@@ -1,8 +1,8 @@
 """SparkSession factory.
 
 Single place that pins the execution knobs that matter at 100 TB:
-AQE (runtime re-plan + skew-join backstop), Arrow batching for pandas
-UDFs, and shuffle partitioning scaled with parallelism. Tests and bench
+AQE (runtime re-plan + skew-join backstop), Arrow batching for the
+Arrow UDFs, and shuffle partitioning scaled with parallelism. Tests and bench
 both go through here so the two-parallelism scaling evidence
 (local[8] vs local[32], BASELINE.md) uses identical configs.
 """
@@ -12,6 +12,7 @@ from __future__ import annotations
 import hashlib
 import os
 import tempfile
+import time
 import zipfile
 
 from pyspark.sql import SparkSession
@@ -95,7 +96,8 @@ def _package_zip() -> str:
     temporary name and moved into place, so a concurrent process never
     reads a half-written zip; its bytes are a function of the sources
     (fixed entry times), so a replace under a live context that shipped
-    the same path changes nothing it fetches."""
+    the same path changes nothing it fetches. This user's zips of other
+    sources are removed once a day old, so edited trees leave no pile."""
     pkg_dir = os.path.dirname(os.path.abspath(__file__))
     files = {}
     for root, _dirs, names in os.walk(pkg_dir):
@@ -112,15 +114,25 @@ def _package_zip() -> str:
             z.writestr(zipfile.ZipInfo(rel, (1980, 1, 1, 0, 0, 0)), data)
     # per user too: mkstemp's file is private, and a shared sticky temp
     # dir refuses a replace of another user's file
-    zpath = os.path.join(tmp_dir, f"deduplication_spark_{os.getuid()}_{digest[:16]}.zip")
+    prefix = f"deduplication_spark_{os.getuid()}_"
+    zpath = os.path.join(tmp_dir, f"{prefix}{digest[:16]}.zip")
     os.replace(tmp, zpath)
+    stale = time.time() - 24 * 3600
+    for name in os.listdir(tmp_dir):
+        path = os.path.join(tmp_dir, name)
+        if name.startswith(prefix) and name.endswith(".zip") and path != zpath:
+            try:  # another process may remove it first
+                if os.stat(path).st_mtime < stale:
+                    os.remove(path)
+            except FileNotFoundError:
+                pass
     return zpath
 
 
 def _ship_package(spark: SparkSession) -> None:
     """Ship this package to executors — the programmatic equivalent of
     ``spark-submit --py-files deduplication_spark.zip`` (north_rule launch
-    mode). Without it, pandas-UDF closures that reference this module
+    mode). Without it, UDF closures that reference this module
     fail to unpickle on workers that don't share the driver's sys.path.
     """
     zpath = _package_zip()
@@ -131,12 +143,12 @@ def _ship_package(spark: SparkSession) -> None:
         # live context (idempotent no-op). Anything else (zip reaped
         # from tmp, partial write from a crashed earlier run) would
         # otherwise surface much later as an opaque unpickling error
-        # inside a worker-side pandas UDF — make it visible now.
+        # inside a worker-side UDF — make it visible now.
         if "same path" not in str(e) and "already" not in str(e).lower():
             import warnings
 
             warnings.warn(
                 f"addPyFile({zpath}) failed: {e!r} — executors may not "
-                "receive the package; pandas UDFs can fail to unpickle",
+                "receive the package; UDFs can fail to unpickle",
                 stacklevel=2,
             )

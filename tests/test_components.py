@@ -3,6 +3,7 @@
 
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 import pytest
 
 from deduplication_spark.operators import components
@@ -138,16 +139,22 @@ def test_cc_reliable_checkpoint_mode_identical(spark, tmp_path):
         connected_components(df, checkpoint_mode="bogus")
 
 
-# ---- the union-find kernel, called directly on pandas batches --------
+# ---- the union-find kernel, called directly on Arrow batches ---------
 
 
 def _kernel(*batches):
     """{node: root} from `_uf_kernel` over (src, dst) edge batches."""
-    frames = [pd.DataFrame(b, columns=["src", "dst"], dtype="int64") for b in batches]
-    out = list(_uf_kernel(iter(frames)))
-    got = pd.concat(out) if out else pd.DataFrame({"node": [], "root": []})
-    assert not got["node"].duplicated().any()
-    return dict(zip(got["node"].tolist(), got["root"].tolist()))
+    schema = pa.schema([("src", pa.int64()), ("dst", pa.int64())])
+    arrow = [
+        pa.RecordBatch.from_pylist([{"src": s, "dst": d} for s, d in b], schema=schema)
+        for b in batches
+    ]
+    out = list(_uf_kernel(iter(arrow)))
+    assert all(o.schema.names == ["node", "root"] for o in out)
+    nodes = [n for o in out for n in o.column("node").to_pylist()]
+    roots = [r for o in out for r in o.column("root").to_pylist()]
+    assert len(set(nodes)) == len(nodes)
+    return dict(zip(nodes, roots))
 
 
 def _kernel_vs_oracle(*batches):
@@ -218,3 +225,18 @@ def test_cc_multi_round(spark, monkeypatch):
             if a != b
         ]
         _multi_round(spark, edges, 13)
+
+
+def test_kernel_reads_sliced_batches():
+    """Batches that are slices of one buffer (nonzero Arrow offsets) give
+    the kernel their own rows only."""
+    chain = _permuted_chain(300, 7)
+    whole = pa.RecordBatch.from_arrays(
+        [pa.array([s for s, _ in chain], pa.int64()), pa.array([d for _, d in chain], pa.int64())],
+        names=["src", "dst"],
+    )
+    out = list(_uf_kernel(iter([whole.slice(0, 100), whole.slice(100, 150), whole.slice(250)])))
+    got = {n: r for o in out for n, r in zip(o.column("node").to_pylist(), o.column("root").to_pylist())}
+    assert got == _kernel(chain)
+    head = list(_uf_kernel(iter([whole.slice(0, 100)])))[0]
+    assert head.column("node").to_pylist() == sorted({x for e in chain[:100] for x in e})

@@ -128,6 +128,43 @@ def test_duplicate_doc_ids_fail_loudly(spark):
     assert res.assignments.count() == 2
 
 
+def test_a_refused_call_cancels_its_substring_chain(spark, monkeypatch):
+    """The substring chain starts before the doc_id check. A call refused
+    for a duplicated id raises without waiting for it: the chain's running
+    job is cancelled, no further stage starts, and no job is left
+    running. The chain is stalled for 60 s on one doc here, so a call
+    that waits for it misses the time bound."""
+    import time
+
+    from deduplication_spark import pipeline
+
+    @F.udf("string")
+    def stall(doc_id, text):
+        if doc_id == 0:
+            time.sleep(60)
+        return text
+
+    real = pipeline.substring_candidates
+    monkeypatch.setattr(
+        pipeline,
+        "substring_candidates",
+        lambda docs, cfg: real(docs.withColumn("text", stall("doc_id", "text")), cfg),
+    )
+    words = " ".join(f"w{j}" for j in range(40))
+    df = spark.createDataFrame(
+        [(i, f"doc {i} {words}") for i in [*range(30), 7]], "doc_id long, text string"
+    )
+    t0 = time.time()
+    with pytest.raises(ValueError, match="^1 duplicate doc_id"):
+        dedup(spark, df, DedupConfig())
+    assert time.time() - t0 < 30
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.time() + 10
+    while tracker.getActiveJobsIds() and time.time() < deadline:
+        time.sleep(0.2)
+    assert tracker.getActiveJobsIds() == []
+
+
 def test_enriched_record_without_doc_id_facts_refuses_resume(spark, tmp_path):
     """A run_dir whose `enriched` lineage record predates the observed
     doc_id facts cannot prove its ids unique: the resume refuses it,

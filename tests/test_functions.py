@@ -1,7 +1,8 @@
-"""Unit tests for text/hash primitives (SURVEY.md §5.2 layer 1)."""
+"""Unit tests for text/hash primitives (SURVEY.md §5.2 layer 1). Inputs
+are Arrow tables, as the UDFs read them."""
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 import pytest
 from pyspark.sql import functions as F
 
@@ -19,7 +20,7 @@ CFG = DedupConfig()
 @pytest.fixture(scope="module")
 def docs(spark):
     return spark.createDataFrame(
-        pd.DataFrame(
+        pa.table(
             {
                 "doc_id": [0, 1, 2, 3, 4],
                 "text": [
@@ -55,7 +56,7 @@ def test_shingle_hashes_known_counts(spark, docs):
 def test_shingle_hashes_overlap_near_dup(spark):
     base = " ".join(f"w{i}" for i in range(100))
     edited = " ".join(f"w{i}" if i != 50 else "X" for i in range(100))
-    df = spark.createDataFrame(pd.DataFrame({"text": [base, edited]}))
+    df = spark.createDataFrame(pa.table({"text": [base, edited]}))
     rows = df.select(
         shingle_hashes("text", 5, CFG.hash_seed).alias("sh")
     ).collect()
@@ -70,7 +71,7 @@ def test_minhash_deterministic_and_jaccard_estimate(spark):
     # construct pair with known ~0.8 token overlap
     other = list(base[:320]) + [f"u{i}" for i in range(80)]
     df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [0, 1], "text": [" ".join(base), " ".join(other)]})
+        pa.table({"doc_id": [0, 1], "text": [" ".join(base), " ".join(other)]})
     )
     sh = df.select(
         "doc_id", shingle_hashes("text", 5, CFG.hash_seed).alias("sh")
@@ -112,8 +113,15 @@ def test_signature_udfs_null_rows_degrade(spark):
     )
 
     df = spark.createDataFrame(
-        [(0, [11, 22, 33]), (1, None), (2, []), (3, [11, None, 33])],
-        "doc_id long, sh array<bigint>",
+        pa.table(
+            {
+                "doc_id": [0, 1, 2, 3, 4],
+                "sh": pa.array(
+                    [[11, 22, 33], None, [], [11, None, 33], [11, 33]],
+                    pa.list_(pa.int64()),
+                ),
+            }
+        )
     )
     mh = make_minhash_udf(16, CFG.hash_seed)
     sh = make_simhash_udf()
@@ -129,6 +137,7 @@ def test_signature_udfs_null_rows_degrade(spark):
     # superset's signature components are <= the subset's (min over
     # more draws), and the row still yields a full-width signature
     assert rows[3]["sig"] is not None and len(rows[3]["sig"]) == 16
+    assert rows[3]["sig"] == rows[4]["sig"] and rows[3]["fp"] == rows[4]["fp"]
 
 
 def test_simhash_monotone_in_edits(spark):
@@ -141,7 +150,7 @@ def test_simhash_monotone_in_edits(spark):
         return " ".join(t)
 
     df = spark.createDataFrame(
-        pd.DataFrame({"doc_id": [0, 1, 2], "text": [edit(0), edit(2), edit(15)]})
+        pa.table({"doc_id": [0, 1, 2], "text": [edit(0), edit(2), edit(15)]})
     )
     sh = df.select("doc_id", shingle_hashes("text", 5, CFG.hash_seed).alias("sh"))
     simh = make_simhash_udf()
@@ -208,13 +217,11 @@ def test_simhash_pigeonhole_exact_cover(spark, chunks, radius):
         pair_ids.append((nid, nid + 1))
         nid += 2
     df = spark.createDataFrame(
-        pd.DataFrame(rows, columns=["doc_id", "simhash"])
+        pa.table({"doc_id": [r[0] for r in rows], "simhash": [r[1] for r in rows]})
     )
-    b = simhash_chunk_buckets(df, cfg).toPandas()
-    keys = {
-        i: set(map(tuple, g[["chunk_idx", "chunk_val"]].values))
-        for i, g in b.groupby("doc_id")
-    }
+    keys = {}
+    for r in simhash_chunk_buckets(df, cfg).collect():
+        keys.setdefault(r["doc_id"], set()).add((r["chunk_idx"], r["chunk_val"]))
     for a_id, b_id in pair_ids:
         assert keys[a_id] & keys[b_id], (a_id, b_id)
 
@@ -248,7 +255,9 @@ def test_chunk_buckets_match_per_doc_reference(spark):
     }
     assert len(ref[4]) > len(set(ref[4])), "doc 4 must repeat an interior chunk"
     want = {(i, fp) for i, fps in ref.items() for fp in fps}
-    df = spark.createDataFrame(list(texts.items()), "doc_id long, text string")
+    df = spark.createDataFrame(
+        pa.table({"doc_id": list(texts), "text": pa.array(list(texts.values()), pa.string())})
+    )
     key = "spark.sql.execution.arrow.maxRecordsPerBatch"
     default = spark.conf.get(key)
     try:

@@ -7,7 +7,8 @@ with shrinking:
 - MinHash: order/multiplicity invariance, the union == elementwise-min
   law (the property that makes banding sound), and batch-segmentation
   invariance (signatures must not depend on how Arrow batches split
-  rows — the exact bug class `_segments`'s offset math could harbor).
+  rows, or on a batch being a slice of a larger one — the exact bug
+  class `_segments`'s offset math could harbor).
 - SimHash: singleton identity, order invariance, uniform-multiplicity
   invariance, batch-segmentation invariance.
 - Shingles: whitespace/case normalization, distinct+sorted output,
@@ -19,6 +20,9 @@ with shrinking:
   equality buckets rely on; reference analog: positional blocks at
   src/compressor.c:105-107 cannot resync, CDC must).
 
+The kernels take and return Arrow arrays at the UDF boundary
+(functions/arrow.py), so the inputs here are Arrow arrays too.
+
 All kernels are deterministic (seeded families), so every property is
 exact — no statistical assertions, no flakiness.
 """
@@ -26,7 +30,7 @@ exact — no statistical assertions, no flakiness.
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
+import pyarrow as pa
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
@@ -36,10 +40,12 @@ from deduplication_spark.functions.chunking import (
     gram_hashes,
     has_common_gram,
 )
+from deduplication_spark.functions.arrow import LONGS, segments
 from deduplication_spark.functions.hashing import (
     _minhash_kernel,
     _perm_params,
     _segments,
+    _signatures,
     _simhash_kernel,
 )
 from deduplication_spark.functions.text import (
@@ -57,16 +63,23 @@ shingle_ids = st.integers(min_value=-(2**63), max_value=2**63 - 1)
 shingle_lists = st.lists(shingle_ids, min_size=0, max_size=40)
 
 
-def _minhash_rows(rows: list[list[int] | None]) -> list[np.ndarray | None]:
-    flat, off, lens = _segments(pd.Series(rows, dtype=object))
+def _longs(rows: list[list[int | None] | None]) -> pa.Array:
+    return pa.array(rows, type=pa.list_(pa.int64()))
+
+
+def _minhash_rows(rows) -> list[np.ndarray | None]:
+    """Signatures of `rows` (Python lists, or an array<bigint> column)."""
+    arr = rows if isinstance(rows, pa.Array) else _longs(rows)
+    flat, off, lens = _segments(arr)
     sig, ne = _minhash_kernel(flat, off, lens, A_ALL, B_ALL, NUM_PERM)
-    return [sig[i].copy() if ne[i] else None for i in range(len(rows))]
+    return [sig[i].copy() if ne[i] else None for i in range(len(arr))]
 
 
-def _simhash_rows(rows: list[list[int] | None]) -> list[int | None]:
-    flat, off, lens = _segments(pd.Series(rows, dtype=object))
+def _simhash_rows(rows) -> list[int | None]:
+    arr = rows if isinstance(rows, pa.Array) else _longs(rows)
+    flat, off, lens = _segments(arr)
     fp, ne = _simhash_kernel(flat, off, lens)
-    return [int(fp[i]) if ne[i] else None for i in range(len(rows))]
+    return [int(fp[i]) if ne[i] else None for i in range(len(arr))]
 
 
 # ---------------------------------------------------------------- MinHash
@@ -102,27 +115,59 @@ def test_minhash_union_is_elementwise_min(a, b):
 @settings(max_examples=40, deadline=None)
 @given(st.lists(shingle_lists, min_size=1, max_size=6))
 def test_minhash_batch_segmentation_invariant(rows):
-    """One batch of n docs == n batches of 1 doc: signatures must not
-    depend on how rows are packed into Arrow batches (offset math)."""
+    """One batch of n docs == n batches of 1 doc == n one-row slices of
+    the batch: signatures must not depend on how rows are packed into
+    Arrow batches (offset math)."""
     together = _minhash_rows(rows)
     alone = [_minhash_rows([r])[0] for r in rows]
-    for t, a in zip(together, alone):
+    arr = _longs(rows)
+    sliced = [_minhash_rows(arr.slice(i, 1))[0] for i in range(len(rows))]
+    for t, a, s in zip(together, alone, sliced):
         if t is None:
-            assert a is None
+            assert a is None and s is None
         else:
-            assert np.array_equal(t, a)
+            assert np.array_equal(t, a) and np.array_equal(t, s)
 
 
 def test_minhash_null_rows_do_not_disturb_neighbors():
-    """None / empty / NaN-bearing rows map to NULL signatures and leave
-    adjacent rows' signatures bit-identical (NULL routing contract)."""
-    rows = [[1, 2, 3], None, [], [7], [np.nan, 5.0]]
+    """NULL / empty / NULL-element rows map to NULL signatures where no
+    element is left, and leave adjacent rows' signatures bit-identical
+    (NULL routing contract)."""
+    rows = [[1, 2, 3], None, [], [7], [None, 5], [None]]
     got = _minhash_rows(rows)
-    assert got[1] is None and got[2] is None
+    assert got[1] is None and got[2] is None and got[5] is None
     assert np.array_equal(got[0], _minhash_rows([[1, 2, 3]])[0])
     assert np.array_equal(got[3], _minhash_rows([[7]])[0])
-    # NaN elements are dropped, not hashed
+    # NULL elements are dropped, not hashed
     assert np.array_equal(got[4], _minhash_rows([[5]])[0])
+
+
+def test_null_row_spanning_values_reads_as_empty():
+    """Arrow lets a NULL list row span child values; they are not the
+    row's elements, and a slice that starts mid-buffer reads the same."""
+    offsets = pa.py_buffer(np.array([0, 2, 4, 5], dtype=np.int32))
+    bitmap = pa.py_buffer(np.packbits([1, 0, 1], bitorder="little"))
+    child = pa.array([1, 2, 3, 4, 5], type=pa.int64())
+    arr = pa.Array.from_buffers(LONGS, 3, [bitmap, offsets], children=[child])
+    assert arr.to_pylist() == [[1, 2], None, [5]]
+    flat, lengths = segments(arr)
+    assert flat.tolist() == [1, 2, 5] and lengths.tolist() == [2, 0, 1]
+    flat, lengths = segments(arr.slice(1))
+    assert flat.tolist() == [5] and lengths.tolist() == [0, 1]
+
+
+@settings(max_examples=40, deadline=None)
+@given(st.lists(st.one_of(st.none(), shingle_lists), min_size=0, max_size=6))
+def test_signature_rows_round_trip(rows):
+    """The emitted array<bigint> column holds each row's signature as
+    int64s, NULL where the row has no shingles."""
+    arr = _longs(rows)
+    flat, off, lens = _segments(arr)
+    sig, ne = _minhash_kernel(flat, off, lens, A_ALL, B_ALL, NUM_PERM)
+    out = _signatures(sig, ne)
+    assert out.type == LONGS
+    want = [s.astype(np.int64).tolist() if s is not None else None for s in _minhash_rows(arr)]
+    assert out.to_pylist() == want
 
 
 # ---------------------------------------------------------------- SimHash
@@ -155,7 +200,9 @@ def test_simhash_order_and_uniform_multiplicity_invariant(xs, r, rnd):
 def test_simhash_batch_segmentation_invariant(rows):
     together = _simhash_rows(rows)
     alone = [_simhash_rows([r])[0] for r in rows]
-    assert together == alone
+    arr = _longs(rows)
+    sliced = [_simhash_rows(arr.slice(i, 1))[0] for i in range(len(rows))]
+    assert together == alone == sliced
 
 
 # ---------------------------------------------------------------- Shingles
@@ -167,7 +214,7 @@ ws_char = st.sampled_from([" ", "\t", "\n", "\r", "\x0b", "\x0c"])
 
 
 def _shingles(texts: list[str | None], k: int = 3) -> list[list[int]]:
-    return list(_shingle_batch(pd.Series(texts, dtype=object), k, SH_MUL, SH_ADD))
+    return _shingle_batch(pa.array(texts, type=pa.string()), k, SH_MUL, SH_ADD).to_pylist()
 
 
 @settings(max_examples=60, deadline=None)
@@ -197,11 +244,16 @@ def test_shingle_count_bound_distinct_sorted(ws, k):
 @given(st.lists(words, min_size=1, max_size=5))
 def test_shingle_batch_isolation(docs):
     """Batching docs together never leaks tokens across doc boundaries:
-    same shingles as processing each doc alone."""
+    same shingles as processing each doc alone, or a one-row slice."""
     texts = [" ".join(d) for d in docs]
     together = _shingles(texts)
     alone = [_shingles([t])[0] for t in texts]
-    assert together == alone
+    arr = pa.array(texts, type=pa.string())
+    sliced = [
+        _shingle_batch(arr.slice(i, 1), 3, SH_MUL, SH_ADD).to_pylist()[0]
+        for i in range(len(texts))
+    ]
+    assert together == alone == sliced
 
 
 any_texts = st.lists(
@@ -225,10 +277,10 @@ def test_kernels_need_no_overflow_guard(texts, k):
     wraps mod 2^64 (2^32) without a floating-point flag: none of them
     raises under np.errstate(all="raise"), so the UDFs run them without
     an np.seterr guard (only cdc_chunks' scalar loop needs one)."""
-    series = pd.Series(texts, dtype=object)
+    arr = pa.array(texts, type=pa.string())
     with np.errstate(all="raise"):
-        _shingle_flat(series, k, SH_MUL, SH_ADD)
-        flat, off, lens = _segments(_shingle_batch(series, k, SH_MUL, SH_ADD))
+        _shingle_flat(arr, k, SH_MUL, SH_ADD)
+        flat, off, lens = _segments(_shingle_batch(arr, k, SH_MUL, SH_ADD))
         _minhash_kernel(flat, off, lens, A_ALL, B_ALL, NUM_PERM)
         _simhash_kernel(flat, off, lens)
 
