@@ -30,10 +30,10 @@ MinHash-LSH (band join over index ∪ new memberships, capped, estimate-
 screened, exact-Jaccard verified when `base_docs` is supplied) and,
 when asked for, SimHash (chunk-bucket join over index ∪ new, Hamming
 verified). They run through the full pipeline's own stage runner and
-tier runners (`pipeline._Stages`, `pipeline._signature_tiers`) with
-the index as the one extra input: only the bucket probe is
-increment-shaped (operators.candidates.probe_pairs). A first run is
-the same probe over an empty index. The substring tier is
+tier run (`pipeline._Stages`, `pipeline._Tiers`) with the index as
+the one extra input: only the bucket probe is increment-shaped
+(operators.candidates.probe_pairs). A first run is the same probe
+over an empty index. The substring tier is
 full-run-only by design: a periodic full re-run picks up the residual
 long-span duplicates.
 
@@ -49,9 +49,7 @@ merges them; the merge is reported explicitly in
 
 from __future__ import annotations
 
-from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass, field
-from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -60,14 +58,7 @@ from .config import DedupConfig
 from .functions.hashing import band_key_col
 from .io import ConfigMismatch, MemoryStore
 from .operators.components import component_assignments, label_components
-from .pipeline import (
-    _enriched,
-    _job_tag,
-    _signature_tiers,
-    _Stages,
-    doc_texts,
-    enrich,
-)
+from .pipeline import _enriched, _job_tag, _Stages, _Tiers, doc_texts, enrich
 
 
 def _sig_fingerprint(cfg: DedupConfig) -> str:
@@ -279,9 +270,10 @@ def dedup_increment(
     full run. Documented trade for running increments without
     base-corpus access.
 
-    The tiers run through `pipeline._signature_tiers`, the full run's
-    tier runners, concurrently and as stages of `pipeline._Stages` (each
-    materialized once). `metrics` always carries `n_new_docs` and
+    The tiers run through `pipeline._Tiers`, the full run's tier run,
+    concurrently and as stages of `pipeline._Stages` (each materialized
+    once); a refused bound or a failing tier stops the call's other
+    tiers and raises at once. `metrics` always carries `n_new_docs` and
     `{stage}_rows` for each stage (`enriched`, `edges_exact`,
     `cand_minhash`, `sigs_minhash`, `edges_minhash`, `edges_simhash`,
     `components`, as the tiers run); `doc_ids` (min, duplicates: the
@@ -311,76 +303,6 @@ def dedup_increment(
     new_base = doc_texts(new_docs, id_col, text_col)
     stage = _Stages(MemoryStore(spark, cfg), {})
     metrics = stage.metrics
-    # the new side of the ID contract (unique ids, their min) is checked
-    # and observed by the enriched stage's own write
-    enriched = _enriched(stage, new_base, cfg, True)
-    min_new = metrics["doc_ids"]["min"]
-    n_new = metrics["n_new_docs"] = metrics["enriched_rows"]
-
-    # --- the index side: every new id above every base member id, the
-    # pin, the width sample. The two one-row aggregates join as a
-    # cartesian product: a broadcast nested-loop join would run a
-    # broadcast job of its own
-    with _job_tag(spark, "bounds"):
-        bounds = (
-            index.agg(
-                F.max("member_id").alias("hi"),
-                F.count(F.lit(1)).alias("n_index"),
-            )
-            .crossJoin(
-                # legacy-shape guard on a BOUNDED sample (r06): an index
-                # whose signatures have a different width than cfg.num_perm
-                # (a secondary check behind the pin) must fail fast. Widths
-                # are uniform per index by construction (one enrich kernel
-                # wrote every row) and the sig_cfg pin above is the primary
-                # guard — scanning the FULL 1 KB/row minhash column just to
-                # take size() cost one whole-index read per increment, the
-                # single biggest base-coupled read of the probe path.
-                index.limit(1024).agg(
-                    F.min(F.size("minhash")).alias("sig_lo"),
-                    F.max(F.size("minhash")).alias("sig_hi"),
-                ).hint("shuffle_replicate_nl")
-            )
-            .first()
-        )
-    if bounds["n_index"] and "sig_cfg" not in index.schema["minhash"].metadata:
-        raise ConfigMismatch(
-            f"index has {bounds['n_index']} rows but no signature config "
-            "pin on minhash — build it with build_index/index_from_enriched"
-        )
-    if bounds["sig_lo"] is not None and (
-        bounds["sig_lo"] != cfg.num_perm or bounds["sig_hi"] != cfg.num_perm
-    ):
-        raise ConfigMismatch(
-            f"index minhash width {bounds['sig_lo']}..{bounds['sig_hi']} "
-            f"!= cfg.num_perm {cfg.num_perm}; signatures are incomparable"
-        )
-    if n_new == 0:
-        # empty increment: the probe would find no pair (it only
-        # examines buckets the batch touches), so skip it and return
-        # the index object unchanged
-        empty_assign = enriched.select(
-            "doc_id",
-            F.col("doc_id").alias("cluster_id"),
-            F.lit(True).alias("is_canonical"),
-        )
-        empty_merges = index.select(
-            F.col("cluster_id").alias("old_cluster_id"),
-            F.col("cluster_id").alias("merged_into"),
-        ).filter(F.lit(False))
-        return IncrementResult(
-            assignments=empty_assign,
-            merges=empty_merges,
-            index=pin_sig_config(index, cfg),
-            metrics=metrics,
-        )
-    if bounds["hi"] is not None and min_new <= bounds["hi"]:
-        raise ValueError(
-            f"increment ids must exceed base member ids "
-            f"(min new {min_new} <= max base {bounds['hi']}); "
-            "cluster-id stability relies on min-id election"
-        )
-
     texts = None
     if base_docs is not None:
         texts = new_base.union(
@@ -388,15 +310,82 @@ def dedup_increment(
                 F.col(id_col).alias("doc_id"), F.col(text_col).alias("text")
             )
         )
-    # the full run's tiers, probing the index; the SimHash auto-flip
-    # reads the size of the corpus the index and this batch make
-    # together, so the probe buckets like a full run over the same docs
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futures = _signature_tiers(
-            pool, stage, enriched, cfg, tiers, texts,
-            bounds["n_index"] + n_new, index, min_new,
-        )
-        edges = reduce(DataFrame.union, [f.result() for f in futures])
+    # one tier run, as dedup()'s: a refused bound or a failing tier
+    # leaves through its one exit path
+    with _Tiers(stage, new_base, cfg, tiers) as run:
+        # the new side of the ID contract (unique ids, their min) is checked
+        # and observed by the enriched stage's own write
+        enriched = _enriched(stage, new_base, cfg, True)
+        min_new = metrics["doc_ids"]["min"]
+        n_new = metrics["n_new_docs"] = metrics["enriched_rows"]
+
+        # --- the index side: every new id above every base member id, the
+        # pin, the width sample. The two one-row aggregates join as a
+        # cartesian product: a broadcast nested-loop join would run a
+        # broadcast job of its own
+        with _job_tag(spark, "bounds"):
+            bounds = (
+                index.agg(
+                    F.max("member_id").alias("hi"),
+                    F.count(F.lit(1)).alias("n_index"),
+                )
+                .crossJoin(
+                    # legacy-shape guard on a BOUNDED sample (r06): an index
+                    # whose signatures have a different width than cfg.num_perm
+                    # (a secondary check behind the pin) must fail fast. Widths
+                    # are uniform per index by construction (one enrich kernel
+                    # wrote every row) and the sig_cfg pin above is the primary
+                    # guard — scanning the FULL 1 KB/row minhash column just to
+                    # take size() cost one whole-index read per increment, the
+                    # single biggest base-coupled read of the probe path.
+                    index.limit(1024).agg(
+                        F.min(F.size("minhash")).alias("sig_lo"),
+                        F.max(F.size("minhash")).alias("sig_hi"),
+                    ).hint("shuffle_replicate_nl")
+                )
+                .first()
+            )
+        if bounds["n_index"] and "sig_cfg" not in index.schema["minhash"].metadata:
+            raise ConfigMismatch(
+                f"index has {bounds['n_index']} rows but no signature config "
+                "pin on minhash — build it with build_index/index_from_enriched"
+            )
+        if bounds["sig_lo"] is not None and (
+            bounds["sig_lo"] != cfg.num_perm or bounds["sig_hi"] != cfg.num_perm
+        ):
+            raise ConfigMismatch(
+                f"index minhash width {bounds['sig_lo']}..{bounds['sig_hi']} "
+                f"!= cfg.num_perm {cfg.num_perm}; signatures are incomparable"
+            )
+        if n_new == 0:
+            # empty increment: the probe would find no pair (it only
+            # examines buckets the batch touches), so skip it and return
+            # the index object unchanged
+            empty_assign = enriched.select(
+                "doc_id",
+                F.col("doc_id").alias("cluster_id"),
+                F.lit(True).alias("is_canonical"),
+            )
+            empty_merges = index.select(
+                F.col("cluster_id").alias("old_cluster_id"),
+                F.col("cluster_id").alias("merged_into"),
+            ).filter(F.lit(False))
+            return IncrementResult(
+                assignments=empty_assign,
+                merges=empty_merges,
+                index=pin_sig_config(index, cfg),
+                metrics=metrics,
+            )
+        if bounds["hi"] is not None and min_new <= bounds["hi"]:
+            raise ValueError(
+                f"increment ids must exceed base member ids "
+                f"(min new {min_new} <= max base {bounds['hi']}); "
+                "cluster-id stability relies on min-id election"
+            )
+        # the full run's tiers, probing the index; the SimHash auto-flip
+        # reads the size of the corpus the index and this batch make
+        # together, so the probe buckets like a full run over the same docs
+        edges = run.edges(enriched, texts, bounds["n_index"] + n_new, index, min_new)
 
     # --- components over the increment edge set ------------------------
     # edges touch old MEMBERS; lift them to their cluster id so the

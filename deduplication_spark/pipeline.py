@@ -24,15 +24,18 @@ Scale shape: one fused enrich UDF pass (signatures only — shingle sets
 are never materialized; borderline verification re-shingles just its
 docs), then each tier shuffles only ids + hashes. Text enters exactly
 two joins: substring verification (post-cap candidates) and borderline
-re-shingling. Tiers run as concurrent driver jobs; the substring chain
-overlaps enrichment itself.
+re-shingling. Tiers run as concurrent driver jobs through one tier run
+(`_Tiers`, shared with `dedup_increment`); the substring chain overlaps
+enrichment itself, and a refusal or a failing tier cancels the call's
+jobs and raises at once.
 """
 
 from __future__ import annotations
 
 import threading
 import time
-from concurrent.futures import ThreadPoolExecutor, wait
+import uuid
+from concurrent.futures import FIRST_EXCEPTION, ThreadPoolExecutor, wait
 from contextlib import contextmanager
 from dataclasses import dataclass, replace
 from functools import reduce
@@ -143,11 +146,14 @@ def enrich(base: DataFrame, cfg: DedupConfig, signatures: bool) -> DataFrame:
 
 class _Stages:
     """The one stage runner of `dedup` and `dedup_increment`: `metrics`
-    collects what every stage reports."""
+    collects what every stage reports. Every job of a stage carries the
+    call's own tag `call` next to its stage name, so cancelling that
+    tag stops this call's jobs and no other call's in the session."""
 
     def __init__(self, store, metrics: dict):
         self.store, self.metrics, self._mx = store, metrics, threading.Lock()
         self._refused = False
+        self.call = f"dedup-call-{uuid.uuid4().hex}"
 
     def refuse(self) -> None:
         """Start no further stage of this call."""
@@ -163,7 +169,8 @@ class _Stages:
         count and `aggs` are observed on the frame handed to store.write,
         so every Observation resolves when that write returns. A resumed
         stage reports what its `computed` lineage record stored and runs
-        no job. Every job the stage starts carries `name` as its job tag.
+        no job. Every job the stage starts carries `name` and the call
+        tag as its job tags.
         Thread-safe: the Spark actions run concurrently, only the store
         lookups and bookkeeping are serialized."""
         t0 = time.time()
@@ -172,7 +179,8 @@ class _Stages:
                 raise RuntimeError(f"stage {name} not started: its call was refused")
             got = self.store.computed(name)
         resumed = got is not None
-        with _job_tag(self.store.spark, name):
+        spark = self.store.spark
+        with _job_tag(spark, name), _job_tag(spark, self.call):
             if resumed:
                 df = self.store.read(name)
             else:
@@ -204,16 +212,13 @@ class _Stages:
         return df
 
 
-def _cancel_until_done(spark: SparkSession, future, tags: tuple[str, ...]) -> None:
-    """Cancel the jobs tagged `tags` until `future` ends. One cancel is
-    not enough: a stage between two of its jobs submits the next one
-    after it. Tags are shared by name, so in a session that runs calls
-    concurrently a stage of that name in another call is cancelled
-    too."""
+def _cancel_until_done(spark: SparkSession, tag: str, futures: list) -> None:
+    """Cancel the jobs tagged `tag` until every one of `futures` ends.
+    One cancel is not enough: a stage between two of its jobs submits
+    the next one after it."""
     while True:
-        for tag in tags:
-            spark.sparkContext.cancelJobsWithTag(tag)
-        if wait([future], timeout=0.1).done:
+        spark.sparkContext.cancelJobsWithTag(tag)
+        if not wait(futures, timeout=0.1).not_done:
             return
 
 
@@ -257,113 +262,171 @@ def _enriched(stage, base, cfg, signatures: bool) -> DataFrame:
     return enriched
 
 
-def _signature_tiers(
-    pool, stage, enriched, cfg, tiers, texts, n_docs, index=None, lo=0
-) -> list:
-    """Submit the exact, MinHash and SimHash tiers of `tiers` to `pool`,
-    each as `stage` calls over `enriched`; the futures of their edge
-    frames (a, b, tier), in that order. The one tier path of `dedup`
-    and `dedup_increment`.
+class _Tiers:
+    """The tier run of one `dedup` or `dedup_increment` call, as a
+    context manager: the call's one pool and its four tier runners, each
+    a chain of `stage` calls.
 
-    `texts` (doc_id, text) exact-verify the borderline MinHash pairs, or
-    None decides them by the estimate (minhash_near_edges). `n_docs` is
-    the corpus size the SimHash pigeonhole auto-flip reads
-    (config.effective_simhash_chunks).
+    Entering submits the substring chain (CDC candidates over `base`'s
+    raw text -> Rabin-Karp verify), so it overlaps enrichment. `edges`
+    submits the signature tiers and waits for every tier. An exception
+    that leaves the block (a refused doc_id contract, a refused index
+    bound, a failing tier) takes the one exit path: no further stage of
+    the call starts, a daemon thread cancels the call's jobs until its
+    tiers end, and the block is left without waiting for them."""
 
-    With `index` (INDEX_SCHEMA, every member id below `lo`), the tiers
-    probe it: candidates come from `probe_pairs` over the index's band
-    keys and chunk buckets, the exact tier adds its dictionary hits
-    (cluster id, new doc), and an extra `sigs_minhash` stage slices the
-    signatures down to the ids the pairs touch."""
+    def __init__(self, stage, base, cfg, tiers):
+        self.stage, self.base, self.cfg, self.tiers = stage, base, cfg, tiers
 
-    def candidates(new, idx, keys):
-        if index is None:
-            return bucket_pairs(new, keys, cap=cfg.bucket_pair_cap)
-        return probe_pairs(new, idx, keys, cfg.bucket_pair_cap, F.lit(lo))
+    def __enter__(self):
+        self.pool = ThreadPoolExecutor(max_workers=4)  # one per tier
+        self.futures = []
+        if "substring" in self.tiers:
+            self.futures.append(self.pool.submit(self._substring))
+        return self
 
-    def members(col):
-        return index.select(F.col("member_id").alias("doc_id"), col)
+    def __exit__(self, kind, exc, tb) -> None:
+        failed = kind is not None
+        if failed:
+            self.stage.refuse()
+            threading.Thread(
+                target=_cancel_until_done,
+                args=(self.stage.store.spark, self.stage.call, self.futures),
+                daemon=True,
+            ).start()
+        self.pool.shutdown(wait=not failed, cancel_futures=failed)
 
-    def run_exact() -> DataFrame:
-        def build() -> DataFrame:
-            edges = exact_edges(enriched)
-            if index is not None:
-                # the dictionary hit path: new docs whose content an
-                # index member already holds
-                edges = edges.union(
-                    enriched.select("doc_id", "content_hash")
-                    .join(
-                        index.select("cluster_id", "content_hash").distinct(),
-                        "content_hash",
-                    )
-                    .select(F.col("cluster_id").alias("a"), F.col("doc_id").alias("b"))
-                )
-            return edges.withColumn("tier", F.lit("exact"))
+    def _substring(self) -> DataFrame:
+        stage, base, cfg = self.stage, self.base, self.cfg
 
-        return stage("edges_exact", build)
-
-    def run_minhash() -> DataFrame:
         def build_cand() -> tuple:
-            # the index's stored band keys (INDEX_SCHEMA): explode drops
-            # the NULL arrays of short docs
-            idx = None if index is None else members(
-                F.explode("band_keys").alias("band_key")
-            )
-            cand = candidates(band_key_buckets(enriched, cfg), idx, ["band_key"])
-            return cand.pairs, {"minhash_candidates": cand.accounting}
+            cand = substring_candidates(base, cfg)
+            return cand.pairs, {"substring_candidates": cand.accounting}
 
-        pairs = stage("cand_minhash", build_cand)
-        sigs = enriched.select("doc_id", "minhash")
-        if index is not None:
-            # the index's ~1 KB/row minhash column is the probe's
-            # dominant read: semi-join it down to the ids the pairs
-            # touch (ONE index scan), so both estimate joins read that
-            # small slice. Result-identical: they only read those ids
-            def build_sigs() -> DataFrame:
-                ids = pairs.select(F.col("a").alias("doc_id")).union(
-                    pairs.select(F.col("b").alias("doc_id"))
+        pairs = stage("cand_substring", build_cand)
+
+        def build_substring() -> DataFrame:
+            verified = verify_substring(pairs, base, cfg)
+            return verified.select("a", "b").withColumn("tier", F.lit("substring"))
+
+        return stage("edges_substring", build_substring)
+
+    def edges(self, enriched, texts, n_docs, index=None, lo=0) -> DataFrame:
+        """The union (a, b, tier) of every tier's edges, or the empty
+        frame when no tier runs. Submits the exact, MinHash and SimHash
+        tiers of the run over `enriched`, then waits for every tier; the
+        first tier to fail raises its error at once.
+
+        `texts` (doc_id, text) exact-verify the borderline MinHash pairs,
+        or None decides them by the estimate (minhash_near_edges).
+        `n_docs` is the corpus size the SimHash pigeonhole auto-flip
+        reads (config.effective_simhash_chunks).
+
+        With `index` (INDEX_SCHEMA, every member id below `lo`), the
+        tiers probe it: candidates come from `probe_pairs` over the
+        index's band keys and chunk buckets, the exact tier adds its
+        dictionary hits (cluster id, new doc), and an extra
+        `sigs_minhash` stage slices the signatures down to the ids the
+        pairs touch."""
+        stage, cfg = self.stage, self.cfg
+
+        def candidates(new, idx, keys):
+            if index is None:
+                return bucket_pairs(new, keys, cap=cfg.bucket_pair_cap)
+            return probe_pairs(new, idx, keys, cfg.bucket_pair_cap, F.lit(lo))
+
+        def members(col):
+            return index.select(F.col("member_id").alias("doc_id"), col)
+
+        def run_exact() -> DataFrame:
+            def build() -> DataFrame:
+                edges = exact_edges(enriched)
+                if index is not None:
+                    # the dictionary hit path: new docs whose content an
+                    # index member already holds
+                    edges = edges.union(
+                        enriched.select("doc_id", "content_hash")
+                        .join(
+                            index.select("cluster_id", "content_hash").distinct(),
+                            "content_hash",
+                        )
+                        .select(F.col("cluster_id").alias("a"), F.col("doc_id").alias("b"))
+                    )
+                return edges.withColumn("tier", F.lit("exact"))
+
+            return stage("edges_exact", build)
+
+        def run_minhash() -> DataFrame:
+            def build_cand() -> tuple:
+                # the index's stored band keys (INDEX_SCHEMA): explode drops
+                # the NULL arrays of short docs
+                idx = None if index is None else members(
+                    F.explode("band_keys").alias("band_key")
                 )
-                return members("minhash").union(sigs).join(
-                    ids.distinct(), "doc_id", "left_semi"
-                )
+                cand = candidates(band_key_buckets(enriched, cfg), idx, ["band_key"])
+                return cand.pairs, {"minhash_candidates": cand.accounting}
 
-            sigs = stage("sigs_minhash", build_sigs)
-
-        def build_minhash() -> DataFrame:
-            # estimate-screen + borderline exact verification: the ONE
-            # decision procedure; margins documented on DedupConfig
-            return minhash_near_edges(pairs, sigs, cfg, texts=texts).withColumn(
-                "tier", F.lit("minhash")
-            )
-
-        return stage("edges_minhash", build_minhash)
-
-    def run_simhash() -> DataFrame:
-        def build() -> tuple:
-            # pigeonhole auto-flip (config rule, r05 verdict #4): at
-            # >= simhash_auto_chunks_from docs the 16-bit single-chunk
-            # buckets saturate; flip to the 8-chunk combinatorial keys.
-            # Edge set unchanged wherever no cap engages (both settings
-            # are exact covers at the same radius; pytest-pinned).
-            sim_cfg = replace(cfg, simhash_chunks=cfg.effective_simhash_chunks(n_docs))
-            sims, idx = enriched.select("doc_id", "simhash"), None
+            pairs = stage("cand_minhash", build_cand)
+            sigs = enriched.select("doc_id", "minhash")
             if index is not None:
-                idx = simhash_chunk_buckets(members("simhash"), sim_cfg)
-                sims = members("simhash").union(sims)
-            cand = candidates(
-                simhash_chunk_buckets(enriched, sim_cfg), idx, ["chunk_idx", "chunk_val"]
-            )
-            # capped chunk buckets chain-link and DROP pairs, and that
-            # loss is reported like the other tiers' (candidates.py
-            # invariant): the accounting resolves in this stage's write
-            verified = verify_hamming(cand.pairs, sims, cfg)
-            edges = verified.select("a", "b").withColumn("tier", F.lit("simhash"))
-            return edges, {"simhash_candidates": cand.accounting}
+                # the index's ~1 KB/row minhash column is the probe's
+                # dominant read: semi-join it down to the ids the pairs
+                # touch (ONE index scan), so both estimate joins read that
+                # small slice. Result-identical: they only read those ids
+                def build_sigs() -> DataFrame:
+                    ids = pairs.select(F.col("a").alias("doc_id")).union(
+                        pairs.select(F.col("b").alias("doc_id"))
+                    )
+                    return members("minhash").union(sigs).join(
+                        ids.distinct(), "doc_id", "left_semi"
+                    )
 
-        return stage("edges_simhash", build)
+                sigs = stage("sigs_minhash", build_sigs)
 
-    runners = {"exact": run_exact, "minhash": run_minhash, "simhash": run_simhash}
-    return [pool.submit(run) for t, run in runners.items() if t in tiers]
+            def build_minhash() -> DataFrame:
+                # estimate-screen + borderline exact verification: the ONE
+                # decision procedure; margins documented on DedupConfig
+                return minhash_near_edges(pairs, sigs, cfg, texts=texts).withColumn(
+                    "tier", F.lit("minhash")
+                )
+
+            return stage("edges_minhash", build_minhash)
+
+        def run_simhash() -> DataFrame:
+            def build() -> tuple:
+                # pigeonhole auto-flip (config rule, r05 verdict #4): at
+                # >= simhash_auto_chunks_from docs the 16-bit single-chunk
+                # buckets saturate; flip to the 8-chunk combinatorial keys.
+                # Edge set unchanged wherever no cap engages (both settings
+                # are exact covers at the same radius; pytest-pinned).
+                sim_cfg = replace(cfg, simhash_chunks=cfg.effective_simhash_chunks(n_docs))
+                sims, idx = enriched.select("doc_id", "simhash"), None
+                if index is not None:
+                    idx = simhash_chunk_buckets(members("simhash"), sim_cfg)
+                    sims = members("simhash").union(sims)
+                cand = candidates(
+                    simhash_chunk_buckets(enriched, sim_cfg), idx, ["chunk_idx", "chunk_val"]
+                )
+                # capped chunk buckets chain-link and DROP pairs, and that
+                # loss is reported like the other tiers' (candidates.py
+                # invariant): the accounting resolves in this stage's write
+                verified = verify_hamming(cand.pairs, sims, cfg)
+                edges = verified.select("a", "b").withColumn("tier", F.lit("simhash"))
+                return edges, {"simhash_candidates": cand.accounting}
+
+            return stage("edges_simhash", build)
+
+        runners = {"exact": run_exact, "minhash": run_minhash, "simhash": run_simhash}
+        # the substring chain's edges come last in the union
+        self.futures = [
+            self.pool.submit(run) for t, run in runners.items() if t in self.tiers
+        ] + self.futures
+        wait(self.futures, return_when=FIRST_EXCEPTION)
+        # every tier has ended, or one has failed and raises here at once
+        frames = [f.result() for f in self.futures if f.done()]
+        if not frames:
+            return stage.store.spark.createDataFrame([], "a long, b long, tier string")
+        return reduce(DataFrame.union, frames)
 
 
 def dedup(
@@ -418,56 +481,16 @@ def dedup(
     #  - exact / minhash / simhash are independent given `enriched` and
     #    run concurrently after it (JVM shuffle/join work overlapping
     #    the substring tier's Python work).
-    def run_substring_full() -> DataFrame:
-        def build_cand() -> tuple:
-            cand = substring_candidates(base, cfg)
-            return cand.pairs, {"substring_candidates": cand.accounting}
-
-        ss_pairs = stage("cand_substring", build_cand)
-
-        def build_substring() -> DataFrame:
-            verified = verify_substring(ss_pairs, base, cfg)
-            return verified.select("a", "b").withColumn("tier", F.lit("substring"))
-
-        return stage("edges_substring", build_substring)
-
-    # 4 workers: one per tier chain
-    pool = ThreadPoolExecutor(max_workers=4)
-    ss_future = pool.submit(run_substring_full) if "substring" in tiers else None
-    try:
-        # enrichment (one wide projection, snapshotted) runs on the main
+    with _Tiers(stage, base, cfg, tiers) as run:
+        # enrichment (one wide projection, snapshotted) runs on this
         # thread, overlapped by the substring tier; the signature tiers
         # start as soon as it lands and its doc_id check passes
         enriched = _enriched(
             stage, base, cfg, bool({"minhash", "simhash"} & set(tiers))
         )
-    except BaseException:
-        # a refused (or failed) call returns now: the substring chain
-        # starts no further stage, a daemon thread cancels its jobs
-        # until it ends, and the pool is left without waiting for it
-        stage.refuse()
-        if ss_future is not None:
-            threading.Thread(
-                target=_cancel_until_done,
-                args=(spark, ss_future, ("cand_substring", "edges_substring")),
-                daemon=True,
-            ).start()
-        pool.shutdown(wait=False, cancel_futures=True)
-        raise
-    with pool:
         # the SimHash auto-flip reads the corpus size the enriched
         # stage already observed
-        futures = _signature_tiers(
-            pool, stage, enriched, cfg, tiers, base, metrics["enriched_rows"]
-        )
-        edge_frames = [f.result() for f in futures]
-        if ss_future is not None:
-            edge_frames.append(ss_future.result())
-
-    if edge_frames:
-        edges = reduce(DataFrame.union, edge_frames)
-    else:
-        edges = spark.createDataFrame([], "a long, b long, tier string")
+        edges = run.edges(enriched, base, metrics["enriched_rows"])
 
     # ---- connected components -> assignments ---------------------------
     def build_assignments() -> tuple:

@@ -165,6 +165,112 @@ def test_a_refused_call_cancels_its_substring_chain(spark, monkeypatch):
     assert tracker.getActiveJobsIds() == []
 
 
+def _stall_substring(monkeypatch, stall) -> None:
+    """Feed the substring chain its text through the `stall` UDF
+    (doc_id, text) -> text."""
+    from deduplication_spark import pipeline
+
+    real = pipeline.substring_candidates
+    monkeypatch.setattr(
+        pipeline,
+        "substring_candidates",
+        lambda docs, cfg: real(docs.withColumn("text", stall("doc_id", "text")), cfg),
+    )
+
+
+def _assert_no_active_job_within(spark, seconds: float) -> None:
+    import time
+
+    tracker = spark.sparkContext.statusTracker()
+    deadline = time.time() + seconds
+    while tracker.getActiveJobsIds() and time.time() < deadline:
+        time.sleep(0.2)
+    assert tracker.getActiveJobsIds() == []
+
+
+def test_a_failing_tier_returns_at_once(spark, monkeypatch):
+    """A tier that fails ends its call through the same exit as a
+    refusal: the error reaches the caller at once, the call's other
+    tiers are cancelled and no job is left running. The substring chain
+    is stalled for 60 s on one doc here, so a call that waits for every
+    tier misses the time bound."""
+    import time
+
+    from deduplication_spark import pipeline
+
+    @F.udf("string")
+    def stall(doc_id, text):
+        if doc_id == 0:
+            time.sleep(60)
+        return text
+
+    def fail(enriched):
+        raise RuntimeError("the exact tier failed")
+
+    _stall_substring(monkeypatch, stall)
+    monkeypatch.setattr(pipeline, "exact_edges", fail)
+    words = " ".join(f"w{j}" for j in range(40))
+    df = spark.createDataFrame(
+        [(i, f"doc {i} {words}") for i in range(30)], "doc_id long, text string"
+    )
+    t0 = time.time()
+    with pytest.raises(RuntimeError, match="^the exact tier failed$"):
+        dedup(spark, df, DedupConfig())
+    assert time.time() - t0 < 30
+    _assert_no_active_job_within(spark, 10)
+
+
+def test_a_refused_call_cancels_only_its_own_jobs(spark, monkeypatch, tmp_path):
+    """Two calls share a session. The first runs in a thread, and its
+    substring chain stalls for 20 s on one doc. Meanwhile a second call
+    is refused for a duplicated id and cancels its own jobs. The first
+    call's stalled job is not among them, so it still returns its
+    assignments."""
+    import os
+    import threading
+    import time
+
+    stalled = str(tmp_path / "stalled")
+
+    @F.udf("string")
+    def stall(doc_id, text):
+        # once: a later job of the chain reads the doc without stalling
+        if doc_id == 1000 and not os.path.exists(stalled):
+            open(stalled, "w").close()
+            time.sleep(20)
+        return text
+
+    _stall_substring(monkeypatch, stall)
+    words = " ".join(f"w{j}" for j in range(40))
+    schema = "doc_id long, text string"
+    first = spark.createDataFrame(
+        [(1000 + i, f"doc {i} {words}") for i in range(30)], schema
+    )
+    refused = spark.createDataFrame(
+        [(i, f"doc {i} {words}") for i in [*range(30), 7]], schema
+    )
+    out = {}
+
+    def run_first():
+        try:
+            out["rows"] = dedup(spark, first, DedupConfig()).assignments.count()
+        except Exception as e:
+            out["error"] = repr(e)[:500]
+
+    thread = threading.Thread(target=run_first)
+    thread.start()
+    deadline = time.time() + 120
+    while not os.path.exists(stalled) and time.time() < deadline:
+        time.sleep(0.1)
+    assert os.path.exists(stalled), "the first call's substring chain never ran"
+    with pytest.raises(ValueError, match="^1 duplicate doc_id"):
+        dedup(spark, refused, DedupConfig())
+    thread.join(timeout=180)
+    assert not thread.is_alive()
+    assert out == {"rows": 30}
+    _assert_no_active_job_within(spark, 10)
+
+
 def test_enriched_record_without_doc_id_facts_refuses_resume(spark, tmp_path):
     """A run_dir whose `enriched` lineage record predates the observed
     doc_id facts cannot prove its ids unique: the resume refuses it,

@@ -3,11 +3,12 @@ its pipeline stage as a job tag (`pipeline._job_tag`), so an event log
 reads as the pipeline."""
 
 import glob
+import json
 import os
 import subprocess
 import sys
 
-from tools.stage_tags import per_stage
+from tools.stage_tags import _tags, per_stage
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -74,3 +75,26 @@ def test_every_job_of_a_call_carries_its_stage_tag(tmp_path):
     # tags as their comma-joined pair: either breaks the equality
     calls = per_stage(log)
     assert [set(c) for c in calls] == [DEDUP_TAGS, INCREMENT_TAGS]
+    # the substring chain overlaps enrichment: the dedup() call's first
+    # cand_substring job starts before its last enriched job ends
+    starts, ends = _job_events(log)
+    assert starts["cand_substring"] < ends["enriched"]
+
+
+def _job_events(log_file: str) -> tuple[dict, dict]:
+    """Event-log line numbers of the first JobStart and the last JobEnd
+    of each stage tag, for the jobs before the second marker (the
+    dedup() call)."""
+    tag_of, starts, ends = {}, {}, {}
+    with open(log_file) as f:
+        for n, line in enumerate(f):
+            ev = json.loads(line)
+            if ev["Event"] == "SparkListenerJobStart":
+                tag = _tags(ev.get("Properties"))
+                if tag == "call-1":
+                    break
+                tag_of[ev["Job ID"]] = tag
+                starts.setdefault(tag, n)
+            elif ev["Event"] == "SparkListenerJobEnd" and ev["Job ID"] in tag_of:
+                ends[tag_of[ev["Job ID"]]] = n
+    return starts, ends

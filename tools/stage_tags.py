@@ -30,10 +30,12 @@ from deduplication_spark.session import get_spark  # noqa: E402
 
 
 def _tags(props: dict | None) -> str:
-    """The pipeline's tag of a job; Spark's own tags (session, execution,
-    broadcast run ids) are dropped."""
+    """The pipeline's stage tag of a job; Spark's own tags (session,
+    execution, broadcast run ids) and the call tag every stage job also
+    carries (`pipeline._Stages.call`) are dropped."""
     tags = (props or {}).get("spark.job.tags", "").split(",")
-    ours = sorted(t for t in tags if t and not t.startswith(("spark-", "broadcast ")))
+    drop = ("spark-", "broadcast ", "dedup-call-")
+    ours = sorted(t for t in tags if t and not t.startswith(drop))
     return ",".join(ours) or "(untagged)"
 
 
