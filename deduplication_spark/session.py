@@ -5,6 +5,14 @@ AQE (runtime re-plan + skew-join backstop), Arrow batching for the
 Arrow UDFs, and shuffle partitioning scaled with parallelism. Tests and bench
 both go through here so the two-parallelism scaling evidence
 (local[8] vs local[32], BASELINE.md) uses identical configs.
+
+It also sets up the Python workers. Every session ships this package
+as a zip named by its sources (``_ship_package``). A local session
+starts its workers through ``daemon/deduplication_spark_daemon.py``
+(``_worker_conf``), so they import pyspark and py4j from the
+interpreter's own install instead of from Spark's archives: no daemon
+compiles pyspark from source, and no task re-reads the archives'
+directories when pyspark calls ``importlib.invalidate_caches()``.
 """
 
 from __future__ import annotations
@@ -64,7 +72,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.ui.enabled", "false")
     )
-    for k, v in (extra_conf or {}).items():
+    for k, v in _worker_conf(master, extra_conf).items():
         b = b.config(k, v)
     spark = b.getOrCreate()
     # getOrCreate IGNORES builder configs when a session already exists
@@ -86,6 +94,25 @@ def get_spark(
         )
     _ship_package(spark)
     return spark
+
+
+# the directory of the worker daemon module alone: the package directory
+# itself must not go on the workers' path (its io.py shadows the stdlib's)
+DAEMON_DIR = os.path.join(os.path.dirname(os.path.abspath(__file__)), "daemon")
+
+
+def _worker_conf(master: str, extra_conf: dict[str, str] | None) -> dict[str, str]:
+    """``extra_conf`` plus, for a local master, whose workers share this
+    filesystem, the daemon that starts them on the interpreter's own
+    pyspark (``daemon/deduplication_spark_daemon.py``). A caller's
+    ``spark.executorEnv.PYTHONPATH`` is joined with the daemon's
+    directory, not replaced by it, and a caller's daemon module wins."""
+    conf = dict(extra_conf or {})
+    if master.startswith("local"):
+        conf.setdefault("spark.python.daemon.module", "deduplication_spark_daemon")
+        key = "spark.executorEnv.PYTHONPATH"
+        conf[key] = os.pathsep.join(filter(None, (conf.get(key), DAEMON_DIR)))
+    return conf
 
 
 def _package_zip() -> str:

@@ -1,9 +1,14 @@
-"""The package shipped to the Python workers (session._ship_package) is
-the tree the driver runs, whatever zips sit in the temp dir."""
+"""The Python workers a session starts: the package shipped to them
+(session._ship_package) is the tree the driver runs, whatever zips sit
+in the temp dir, and a local session's workers import pyspark from the
+interpreter's own install (session._worker_conf)."""
 
 import os
 import subprocess
 import sys
+import zipfile
+
+import pytest
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
@@ -83,9 +88,10 @@ def test_package_zips_of_other_sources_are_removed_after_a_day(tmp_path, monkeyp
     )
 
 
-# Runs in a fresh process on one task slot, so the check below lands on
-# a Python worker that ran the pipeline's UDFs (workers are reused).
-PANDAS_FREE = """
+# Runs in a fresh process on one task slot, so the checks below land on
+# a Python worker that ran the pipeline's UDFs (workers are reused). The
+# caller's own worker path (a directory with a marker module) rides along.
+DEDUP_WORKER = """
 import sys
 import numpy as np
 import pyarrow as pa
@@ -94,7 +100,11 @@ from pyspark.sql import functions as F
 from deduplication_spark import dedup, get_spark
 from deduplication_spark.corpus import generate_corpus
 
-spark = get_spark(cores=1, shuffle_partitions=1)
+spark = get_spark(
+    cores=1,
+    shuffle_partitions=1,
+    extra_conf={{"spark.executorEnv.PYTHONPATH": {marker_dir!r}}},
+)
 docs = spark.createDataFrame(
     generate_corpus(200, seed=2, max_tokens=300).documents[["doc_id", "text"]]
 )
@@ -102,25 +112,45 @@ res = dedup(spark, docs)
 print("DOCS", res.metrics["n_docs"])
 
 
-@F.arrow_udf("boolean")
-def has_pandas(ids: pa.Array) -> pa.Array:
-    bits = np.packbits(np.full(len(ids), "pandas" in sys.modules), bitorder="little")
-    return pa.Array.from_buffers(pa.bool_(), len(ids), [None, pa.py_buffer(bits)])
+@F.arrow_udf("string")
+def worker(ids: pa.Array) -> pa.Array:
+    import os
+    import zipimport
+
+    import pyspark
+
+    import dedup_marker
+
+    facts = [
+        f"PANDAS {{'pandas' in sys.modules}}",  # before pa.array below loads it
+        f"PYSPARK {{pyspark.__file__}}",
+        "ZIPS " + " ".join(sorted({{
+            os.path.basename(v.archive)
+            for v in sys.path_importer_cache.values()
+            if isinstance(v, zipimport.zipimporter)
+        }})),
+        f"MARKER {{dedup_marker.VALUE}}",
+    ]
+    return pa.array(["\\n".join(facts)] * len(ids), pa.string())
 
 
-print("PANDAS", spark.range(1).select(has_pandas("id")).first()[0])
+print(spark.range(1).select(worker("id")).first()[0])
 spark.stop()
 """
 
 
-def test_workers_of_a_dedup_call_never_load_pandas(tmp_path):
-    """Every UDF of the pipeline is an Arrow UDF over numpy buffers, and
-    no module the package root imports loads pandas: after a dedup()
-    with all four tiers, the worker it ran on has not imported it."""
+@pytest.fixture(scope="module")
+def dedup_worker(tmp_path_factory):
+    """The lines a fresh process prints after one dedup() with all four
+    tiers and one probe UDF on the worker that ran it."""
+    tmp_path = tmp_path_factory.mktemp("dedup_worker")
+    marker_dir = tmp_path / "marker"
+    marker_dir.mkdir()
+    (marker_dir / "dedup_marker.py").write_text('VALUE = "caller path"\n')
     env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
     env["TMPDIR"] = str(tmp_path)
     out = subprocess.run(
-        [sys.executable, "-c", PANDAS_FREE.format(repo=REPO)],
+        [sys.executable, "-c", DEDUP_WORKER.format(repo=REPO, marker_dir=str(marker_dir))],
         cwd=tmp_path,
         env=env,
         capture_output=True,
@@ -128,6 +158,107 @@ def test_workers_of_a_dedup_call_never_load_pandas(tmp_path):
         timeout=600,
     )
     assert out.returncode == 0, out.stderr[-2000:]
-    lines = out.stdout.splitlines()
-    assert "DOCS 200" in lines
-    assert "PANDAS False" in lines
+    return out.stdout.splitlines()
+
+
+def test_workers_of_a_dedup_call_never_load_pandas(dedup_worker):
+    """Every UDF of the pipeline is an Arrow UDF over numpy buffers, and
+    no module the package root imports loads pandas: after a dedup()
+    with all four tiers, the worker it ran on has not imported it."""
+    assert "DOCS 200" in dedup_worker
+    assert "PANDAS False" in dedup_worker
+
+
+def test_workers_of_a_dedup_call_import_pyspark_from_its_install(dedup_worker):
+    """A local session's workers run pyspark from the interpreter's own
+    install, not from Spark's archives: the worker that ran a dedup()
+    holds no zip importer but the shipped package zip's, so no task
+    re-reads an archive's directory. A caller's own worker path is kept
+    next to the daemon's."""
+    facts = dict(line.split(" ", 1) for line in dedup_worker if " " in line)
+    assert os.path.isfile(facts["PYSPARK"]), facts["PYSPARK"]
+    assert all(z.startswith("deduplication_spark_") for z in facts["ZIPS"].split()), facts
+    assert facts["MARKER"] == "caller path"
+
+
+def _zip(path, files):
+    with zipfile.ZipFile(path, "w") as z:
+        for name, data in files.items():
+            z.writestr(name, data)
+    return str(path)
+
+
+def _package(root, name, version):
+    pkg = root / name
+    pkg.mkdir(parents=True)
+    (pkg / "__init__.py").write_text("")
+    (pkg / "version.py").write_text(f"__version__: str = {version!r}\n")
+
+
+def test_worker_path_drops_only_the_archives_the_install_holds(tmp_path):
+    """The daemon's path rule: Spark's jar and the pyspark and py4j
+    archives of the installed versions go; an archive of another version
+    and a caller's own zip or directory stay, in their order."""
+    from deduplication_spark.daemon.deduplication_spark_daemon import worker_path
+
+    site = str(tmp_path / "site")
+    _package(tmp_path / "site", "pyspark", "4.1.2")
+    _package(tmp_path / "site", "py4j", "0.10.9.9")
+
+    def archive(name, package, version):
+        return _zip(tmp_path / name, {
+            f"{package}/__init__.py": "",
+            f"{package}/version.py": f"__version__ = '{version}'\n",
+        })
+
+    pyspark_zip = archive("pyspark.zip", "pyspark", "4.1.2")
+    py4j_zip = archive("py4j-0.10.9.9-src.zip", "py4j", "0.10.9.9")
+    old_pyspark = archive("pyspark-old.zip", "pyspark", "3.5.0")
+    old_py4j = archive("py4j-0.10.9.7-src.zip", "py4j", "0.10.9.7")
+    jar = _zip(tmp_path / "spark-core.jar", {"org/apache/spark/X.class": b"\xca\xfe"})
+    own_zip = _zip(tmp_path / "own.zip", {"own.py": "X = 1\n"})
+    own_dir = str(tmp_path / "own")
+    os.mkdir(own_dir)
+
+    # Spark's own path, then a caller's entries
+    assert worker_path([pyspark_zip, py4j_zip, jar, own_zip, own_dir], [site]) == [
+        own_zip, own_dir
+    ]
+    # archives of other versions stay; the jar goes all the same
+    assert worker_path([old_pyspark, old_py4j, jar, own_zip], [site]) == [
+        old_pyspark, old_py4j, own_zip
+    ]
+    # a matching archive stays when another version's archive would
+    # take its place, and when a caller's directory of another version
+    # comes first
+    assert worker_path([pyspark_zip, old_pyspark], [site]) == [pyspark_zip, old_pyspark]
+    _package(tmp_path / "own", "pyspark", "3.5.0")
+    assert worker_path([pyspark_zip, own_dir], [site]) == [pyspark_zip, own_dir]
+    # without a directory install, Spark's zips stay
+    spark_zips = [pyspark_zip, py4j_zip, own_zip]
+    assert worker_path(spark_zips, [str(tmp_path / "empty")]) == spark_zips
+
+
+def test_the_daemon_is_set_for_local_masters_only():
+    """Local masters (their workers share this filesystem) start the
+    workers through the daemon module, and a caller's worker path is
+    joined with its directory; any other master gets the caller's conf
+    as it is."""
+    from deduplication_spark.session import DAEMON_DIR, _worker_conf
+
+    caller = {"spark.executorEnv.PYTHONPATH": "/caller/lib", "spark.x": "1"}
+    for master in ("local", "local[4]", "local-cluster[2,1,1024]"):
+        assert _worker_conf(master, None) == {
+            "spark.python.daemon.module": "deduplication_spark_daemon",
+            "spark.executorEnv.PYTHONPATH": DAEMON_DIR,
+        }
+        assert _worker_conf(master, caller) == {
+            "spark.x": "1",
+            "spark.python.daemon.module": "deduplication_spark_daemon",
+            "spark.executorEnv.PYTHONPATH": os.pathsep.join(["/caller/lib", DAEMON_DIR]),
+        }
+    for master in ("spark://host:7077", "yarn", "k8s://https://host:443"):
+        assert _worker_conf(master, None) == {}
+        assert _worker_conf(master, caller) == caller
+    # the directory goes on the workers' path: nothing else may sit there
+    assert set(os.listdir(DAEMON_DIR)) - {"__pycache__"} == {"deduplication_spark_daemon.py"}
